@@ -443,45 +443,27 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace/quality stats plus the BPE-ish pre-tokenizer count
     (GPT-2 pattern sans whitespace runs, lookahead-free so Java regex and
     DuckDB's RE2 agree match-for-match). Integer components come from ONE
-    Arrow map (``text_core_arrow`` — the HOF token filters and
-    regexp_replace string builds ran interpreted at 28-37k rows/s per 8
-    cores); every ratio/round is the SAME codegen float math as the
-    column twins, so the oracle match is structural. Parity tests:
-    tests/test_textcore.py. (The r2 ``bpe_tokens``, ``lang_id`` and
+    Arrow map (``text_core_arrow``); every ratio/round is codegen float
+    math over those integers (``text_stat_cols``), so the oracle match
+    is structural. (The r2 ``bpe_tokens``, ``lang_id`` and
     ``fingerprint`` entries merged in here — driver-gate slot budget;
     all three are per-doc scalars over the same table, so one gated
     query covers them column-for-column.)"""
     doc = _docs(spark, sf_dir)
     core = TS.text_core_arrow(doc.select("doc_id", "text"))
     t = F.col("text")
-    n_tok, n_ch = F.col("n_tokens"), F.col("n_chars")
-    punct = F.when(n_ch == 0, F.lit(0.0)).otherwise(
-        F.col("nonclean_chars").cast("double") / n_ch.cast("double")
-    )
-    stop = F.when(n_tok == 0, F.lit(0.0)).otherwise(
-        F.col("stop_hits").cast("double") / n_tok.cast("double")
-    )
-    mean_tok = F.when(n_tok == 0, F.lit(0.0)).otherwise(
-        F.col("nonws_chars").cast("double") / n_tok.cast("double")
-    )
-    nd = n_tok.cast("double")
-    len_term = F.least(nd / F.lit(100.0), F.lit(1.0))
-    stop_term = F.least(stop * F.lit(4.0), F.lit(1.0))
-    punct_term = F.lit(1.0) - F.least(punct * F.lit(5.0), F.lit(1.0))
-    quality = F.round((len_term + stop_term + punct_term) / F.lit(3.0), 6)
+    st = TS.text_stat_cols()
     return core.select(
         "doc_id",
-        n_tok.cast("long").alias("n_tokens"),
+        F.col("n_tokens").cast("long").alias("n_tokens"),
         TS.bpe_token_count(t).cast("long").alias("n_bpe"),
-        n_ch.cast("long").alias("n_chars_txt"),
-        F.round(punct, 6).alias("punct_r"),
-        F.round(stop, 6).alias("stop_r"),
-        F.round(mean_tok, 6).alias("mean_tok"),
-        quality.alias("quality"),
-        TS.lang_id_from_scores(
-            {lang: F.col(f"s_{lang}") for lang in TS.LANG_STOPWORDS}
-        ).alias("lang_pred"),
-        TS.fingerprint(t).alias("fp"),
+        F.col("n_chars").cast("long").alias("n_chars_txt"),
+        F.round(st["punct_ratio"], 6).alias("punct_r"),
+        F.round(st["stop_ratio"], 6).alias("stop_r"),
+        F.round(st["mean_token_len"], 6).alias("mean_tok"),
+        st["quality"].alias("quality"),
+        st["lang"].alias("lang_pred"),
+        TS.fingerprint_fast(t).alias("fp"),
     )
 
 
@@ -708,7 +690,7 @@ def q_webpages_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "url",
         F.unix_timestamp("warc_ts").alias("ts_epoch"),
         "lang",
-        TS.fingerprint(F.col("text")).alias("fp"),
+        TS.fingerprint_fast(F.col("text")).alias("fp"),
         F.octet_length("html").cast("long").alias("n_bytes"),
     )
 
@@ -900,8 +882,8 @@ _SQL_SPHERE_CTES_FLIP = f"""
 
 
 def _s2_sql(source: str, level: int, keep: list[str]) -> str:
-    """Generated DuckDB twin of ``with_s2_cell`` (geom/s2.py) — bit-exact
-    by the module's determinism contract."""
+    """Generated DuckDB twin of ``with_s2_cell_arrow`` (geom/s2.py) —
+    bit-exact by the module's determinism contract."""
     from geotables_jl_spark.geom.s2 import s2_cell_sql
 
     return s2_cell_sql(source, "px", "py", "pz", level, keep=keep)
@@ -910,12 +892,12 @@ def _s2_sql(source: str, level: int, keep: list[str]) -> str:
 def q_s2_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2 cell rollup — the north rule's "H3/S2 index" as the global
     tiling key: pages carry a direction vector, get their LEAF-side cell
-    at level 12 (``with_s2_cell``, pure codegen), snap to level 4 by
-    parent bit math (``s2_parent_col`` — proven equal to direct level-4
+    at level 12 (``with_s2_cell_arrow``), snap to level 4 by parent bit
+    math (``s2_parent_col`` — proven equal to direct level-4
     assignment), and roll up doc count + char mass per cell. At 10^12
     rows the level-k cell is the Iceberg partition / bucketing key; this
-    plan is scan → one Arrow map (vectorized numpy LUT fold, bit-equal to
-    the codegen twin) → one map-side-combinable groupBy."""
+    plan is scan → one Arrow map (vectorized numpy LUT fold) → one
+    map-side-combinable groupBy."""
     from geotables_jl_spark.geom.s2 import s2_parent_col, with_s2_cell_arrow
 
     d = with_s2_cell_arrow(_docs_xyz(spark, sf_dir), 12, out="s2_12", xyz=("px", "py", "pz"))
@@ -1002,10 +984,8 @@ def q_s2_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition quality signals (duplicate-line fraction,
     most-common word/2-gram char mass) — exact integers, one Arrow map
-    stage (factorize/bincount numpy kernel), map-only at any scale. The
-    whole-row column-math twin (``repetition_stats_cols``) is what the
-    SQL oracle replays; parity is property-tested in
-    tests/test_repetition.py (the HOF fold runs ~20× slower per row)."""
+    stage (factorize/bincount numpy kernel), map-only at any scale,
+    replayed by the SQL oracle with list/unnest group counts."""
     d = _docs(spark, sf_dir)
     return TS.repetition_stats_arrow(d.select("doc_id", "text"))
 

@@ -1,14 +1,20 @@
 """Text analysis for web-scale training-data pipelines.
 
-Everything here is pure JVM column expressions (``pyspark.sql.functions``
-— split/filter/aggregate/regexp) so the hot path stays inside
-whole-stage codegen: language-ID (stopword-hit heuristic), quality
-scoring (length / punctuation / stopword ratios), token counting, and a
-polynomial rolling-hash document fingerprint. Each is deliberately
-ANSI-SQL-expressible so the DuckDB oracle can replay it exactly.
+One production arm per signal, each map-only at any scale:
 
-At 100 TB these are map-only stages fused into the scan — no shuffle, no
-Python, no UDF.
+- ``text_core_arrow`` — ONE Arrow map emitting the integer text-stat
+  components (chars, tokens, stopword and per-language hits);
+  :func:`text_stat_cols` rebuilds the ratios, quality score and
+  language id from those integers in codegen.
+- ``repetition_stats_arrow`` — the Gopher repetition signals.
+- ``shingles_fast`` / ``fingerprint_fast`` — word n-gram shingles and
+  the polynomial rolling-hash fingerprint, Arrow-batched.
+- ``bpe_token_count`` — JVM regexp pre-tokenizer count.
+
+Every signal is exact integer math (floats only in the codegen tail),
+so the DuckDB oracle replays it bit-for-bit. Tokenization follows
+Spark's ``split(trim(text), '\\s+')``: SQL trim strips spaces only and
+Java's ASCII ``\\s`` class splits, boundary empties included.
 """
 
 from __future__ import annotations
@@ -34,16 +40,6 @@ FP_MOD = 1_000_000_007
 FP_BASE = 31
 
 
-def tokens(text: Column) -> Column:
-    """Whitespace tokenization: array of non-empty tokens."""
-    return F.split(F.trim(text), r"\s+")
-
-
-def token_count(text: Column) -> Column:
-    """Number of whitespace-separated tokens (0 for empty/blank text)."""
-    return F.when(F.trim(text) == "", F.lit(0)).otherwise(F.size(tokens(text)))
-
-
 # GPT-2-style pre-tokenizer pattern, restricted to constructs RE2 also
 # supports (no lookahead): contractions, space-prefixed letter runs,
 # space-prefixed digit runs, space-prefixed punctuation runs. Whitespace
@@ -67,84 +63,17 @@ def bpe_token_count(text: Column) -> Column:
     return F.size(bpe_tokens(text))
 
 
-def _count_in(arr: Column, words: list[str]) -> Column:
-    lit_arr = F.array(*[F.lit(w) for w in words])
-    return F.size(F.filter(arr, lambda t: F.array_contains(lit_arr, F.lower(t))))
-
-
-def stopword_ratio(text: Column, words: list[str] | None = None) -> Column:
-    """Fraction of tokens that are stopwords (NULL-safe, 0 for empty)."""
-    toks = tokens(text)
-    n = token_count(text)
-    hits = _count_in(toks, words or QUALITY_STOPWORDS)
-    return F.when(n == 0, F.lit(0.0)).otherwise(hits.cast("double") / n.cast("double"))
-
-
-def punct_ratio(text: Column) -> Column:
-    """Fraction of characters that are not alphanumeric or space."""
-    n = F.length(text)
-    clean = F.length(F.regexp_replace(text, "[^0-9A-Za-z ]", ""))
-    return F.when(n == 0, F.lit(0.0)).otherwise((n - clean).cast("double") / n.cast("double"))
-
-
-def mean_token_len(text: Column) -> Column:
-    # sum of token lengths == count of non-whitespace chars: one compiled
-    # regex pass instead of an interpreted per-token fold (the fold ran at
-    # ~100k lambda evals/s and dominated the text-stats stage)
-    n = token_count(text)
-    total = F.length(F.regexp_replace(text, r"\s", ""))
-    return F.when(n == 0, F.lit(0.0)).otherwise(total.cast("double") / n.cast("double"))
-
-
-def quality_score(text: Column) -> Column:
-    """Deterministic [0, 1] quality heuristic: rewards mid-length docs with
-    some stopwords and low punctuation noise (Gopher-rule-style gates
-    without the thresholds — continuous version for ranking/filtering)."""
-    n = token_count(text).cast("double")
-    len_term = F.least(n / F.lit(100.0), F.lit(1.0))
-    stop_term = F.least(stopword_ratio(text) * F.lit(4.0), F.lit(1.0))
-    punct_term = F.lit(1.0) - F.least(punct_ratio(text) * F.lit(5.0), F.lit(1.0))
-    return F.round((len_term + stop_term + punct_term) / F.lit(3.0), 6)
-
-
-def lang_scores(text: Column) -> dict[str, Column]:
-    """Stopword-hit count per candidate language."""
-    toks = tokens(text)
-    return {lang: _count_in(toks, words) for lang, words in LANG_STOPWORDS.items()}
-
-
-def lang_id(text: Column) -> Column:
-    """argmax language by stopword hits; ties broken by the fixed language
-    order en > es > fr > de; no hits at all → 'und' (undetermined)."""
-    return lang_id_from_scores(lang_scores(text))
-
-
-def fingerprint(text: Column) -> Column:
-    """Polynomial rolling-hash fingerprint over the character codes:
-
-        fp = fold(chars, 0, (acc, c) -> (acc * 31 + ascii(c)) mod 1e9+7)
-
-    Pure column math (split + aggregate) — exact integer arithmetic, so
-    any engine reproduces it bit-for-bit. Used for cheap content identity
-    at scale (doc-level dedup key that survives storage format changes).
-    """
-    chars = F.split(text, "")
-    return F.aggregate(
-        chars,
-        F.lit(0).cast("long"),
-        lambda acc, c: (acc * F.lit(FP_BASE) + F.ascii(c)) % F.lit(FP_MOD),
-    )
-
-
 def fingerprint_fast(text: Column) -> Column:
-    """Arrow-vectorized twin of :func:`fingerprint` — identical values.
+    """Polynomial rolling-hash fingerprint over the character codepoints:
 
-    The column-expression version folds an interpreted lambda per
-    character (~100k evals/s); this one Horner-evaluates the whole batch
-    in numpy: rows are LEFT-padded with zeros into one codepoint matrix
+        fp = fold(chars, 0, (acc, c) -> (acc * 31 + codepoint(c)) mod 1e9+7)
+
+    Cheap content identity at scale (a doc-level dedup key that survives
+    storage format changes); NULL text → NULL. Arrow-batched Horner in
+    numpy: rows are LEFT-padded with zeros into one codepoint matrix
     (leading zeros don't change the polynomial), then one vectorized
     ``acc = (acc*31 + col) % p`` pass per character position. Exact
-    integer math — bit-identical to the SQL form and the DuckDB oracle.
+    integer math — bit-identical to the DuckDB oracle on non-empty text.
     """
     import numpy as np
     import pandas as pd
@@ -152,58 +81,32 @@ def fingerprint_fast(text: Column) -> Column:
 
     @pandas_udf("long")
     def _fp(s):  # no annotations: `from __future__ import annotations` stringizes them
-        vals = s.fillna("").to_numpy()
-        n = len(vals)
-        if n == 0:
-            return pd.Series([], dtype="int64")
-        arrs = [np.frombuffer(t.encode("utf-32-le"), dtype=np.uint32) for t in vals]
+        arrs = [np.frombuffer(t.encode("utf-32-le"), dtype=np.uint32) for t in s.fillna("")]
         L = max((len(a) for a in arrs), default=0)
-        if L == 0:
-            return pd.Series(np.zeros(n, dtype=np.int64))
-        M = np.zeros((n, L), dtype=np.uint64)
+        M = np.zeros((len(arrs), L), dtype=np.uint64)
         for i, a in enumerate(arrs):
             if len(a):
                 M[i, L - len(a):] = a
-        acc = np.zeros(n, dtype=np.uint64)
+        acc = np.zeros(len(arrs), dtype=np.uint64)
         base = np.uint64(FP_BASE)
         mod = np.uint64(FP_MOD)
         for j in range(L):
             acc = (acc * base + M[:, j]) % mod  # acc*31+c < 2^35: no overflow
-        return pd.Series(acc.astype(np.int64))
+        out = pd.array(acc.astype(np.int64), dtype="Int64")
+        out[s.isna().to_numpy()] = None
+        return pd.Series(out)
 
     return _fp(text)
 
 
-def shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles (the MinHash/Jaccard unit).
-
-    transform over a 0..len-n sequence + slice + concat_ws — JVM only.
-    Documents shorter than n tokens produce their full token string as a
-    single shingle (so short docs still participate).
-
-    This is the SQL-oracle reference form; the dedup hot paths call
-    :func:`shingles_fast`, whose bit-parity with this expression is
-    property-pinned in tests/test_textcore.py.
-    """
-    toks = tokens(text)
-    cnt = F.size(toks)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(cnt - F.lit(n - 1), F.lit(1))),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-    )
-    return F.array_distinct(grams)
-
-
 def shingles_fast(text: Column, n: int = 3) -> Column:
-    """Arrow twin of :func:`shingles` — bit-identical output, built for
-    the hot path. The JVM form's transform/slice/concat_ws lambdas are
-    INTERPRETED per shingle (~75k shingles/s/core measured at sf0.1 —
-    the dominant cost of every MinHash/Jaccard/SimHash query); this one
-    is plain Python string ops over Arrow batches. Parity contract
-    (pinned in tests/test_textcore.py): trim strips ASCII spaces only,
-    split uses Java's ASCII ``\\s+`` with limit -1 (leading/trailing
-    empty tokens kept exactly as Spark's ``split`` keeps them), short
-    docs yield their full token string, first-occurrence-order dedup."""
+    """Distinct word n-gram shingles (the MinHash/Jaccard unit), built
+    for the hot path: plain Python string ops over Arrow batches. Spark
+    ``split`` semantics: trim strips ASCII spaces only, split uses
+    Java's ASCII ``\\s+`` with limit -1 (leading/trailing empty tokens
+    kept), documents shorter than ``n`` tokens yield their full token
+    string as a single shingle (so short docs still participate), NULL
+    text yields ``['']``, first-occurrence-order dedup."""
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
 
@@ -219,9 +122,6 @@ def shingles_fast(text: Column, n: int = 3) -> Column:
         out = []
         for t in s:
             if t is None:
-                # JVM parity: trim/split of NULL is NULL, size(NULL)=-1 →
-                # one sequence slot, concat_ws over a NULL array is '' —
-                # so shingles(NULL) is [''] (NOT NULL)
                 out.append([""])
                 continue
             toks = ws.split(t.strip(" "))
@@ -237,94 +137,8 @@ def shingles_fast(text: Column, n: int = 3) -> Column:
 # Models" quality heuristics) — the duplicate-line / most-common-n-gram
 # family used to filter boilerplate-heavy web pages. All exact integers
 # (numerator/denominator separately) so the DuckDB oracle matches
-# bit-for-bit with no float-fold concerns; all whole-row column math
-# (higher-order functions, JVM-side) — map-only at any scale.
+# bit-for-bit with no float-fold concerns — map-only at any scale.
 # ---------------------------------------------------------------------------
-
-
-def _lines(text: Column) -> Column:
-    return F.split(text, "\n")
-
-
-def _run_fold(arr: Column, per_item: str = "max_mass") -> Column:
-    """Fold a SORTED array into run statistics without the O(n²)
-    distinct×filter scan: state walks equal-element runs.
-
-    per_item="max_mass": max over classes of count*length (the Gopher
-    "fraction of characters in the most common n-gram" numerator).
-    per_item="dup_mass": Σ over classes with count>1 of count*length
-    ("fraction of characters in duplicate lines" numerator, counting
-    every occurrence).
-    """
-    sorted_ = F.array_sort(arr)
-    zero = F.lit(0).cast("long")
-    init = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        zero.alias("run"),
-        zero.alias("acc"),
-    )
-
-    def merge(st, w):
-        is_run = w.eqNullSafe(st["prev"])
-        run = F.when(is_run, st["run"] + 1).otherwise(F.lit(1).cast("long"))
-        ln = F.length(w).cast("long")
-        if per_item == "max_mass":
-            acc = F.greatest(st["acc"], run * ln)
-        else:  # dup_mass: a run reaching 2 retro-charges both occurrences
-            acc = st["acc"] + F.when(run == 2, 2 * ln).when(run > 2, ln).otherwise(zero)
-        return F.struct(w.alias("prev"), run.alias("run"), acc.alias("acc"))
-
-    return F.aggregate(sorted_, init, merge, lambda st: st["acc"])
-
-
-def _dup_count_fold(arr: Column) -> Column:
-    """Number of elements of a SORTED array belonging to classes with
-    count > 1 (counting every occurrence)."""
-    sorted_ = F.array_sort(arr)
-    zero = F.lit(0).cast("long")
-    init = F.struct(F.lit(None).cast("string").alias("prev"), zero.alias("run"), zero.alias("acc"))
-
-    def merge(st, w):
-        is_run = w.eqNullSafe(st["prev"])
-        run = F.when(is_run, st["run"] + 1).otherwise(F.lit(1).cast("long"))
-        acc = st["acc"] + F.when(run == 2, F.lit(2).cast("long")).when(run > 2, F.lit(1).cast("long")).otherwise(zero)
-        return F.struct(w.alias("prev"), run.alias("run"), acc.alias("acc"))
-
-    return F.aggregate(sorted_, init, merge, lambda st: st["acc"])
-
-
-def repetition_stats_cols(text: Column) -> dict[str, Column]:
-    """Exact-integer repetition signals per document:
-
-    - n_lines / n_dup_lines / dup_line_chars / line_chars — duplicate-line
-      fraction numerators & denominators (a line is duplicate when its
-      exact string occurs >1 time in the doc; chars count every
-      occurrence)
-    - n_words / word_chars / top_word_chars — most-common-word char mass
-    - top_bigram_chars — most-common word-2-gram char mass (the bigram
-      string includes its single joining space)
-    """
-    lines = _lines(text)
-    words = F.filter(tokens(text), lambda t: t != "")
-    nw = F.size(words).cast("long")
-    bigrams = F.when(
-        nw >= 2,
-        F.transform(
-            F.sequence(F.lit(1), (nw - 1).cast("int")),
-            lambda i: F.concat_ws(" ", F.element_at(words, i), F.element_at(words, i + 1)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    zero = F.lit(0).cast("long")
-    return {
-        "n_lines": F.size(lines).cast("long"),
-        "n_dup_lines": _dup_count_fold(lines),
-        "dup_line_chars": _run_fold(lines, "dup_mass"),
-        "line_chars": F.aggregate(lines, zero, lambda acc, x: acc + F.length(x).cast("long")),
-        "n_words": nw,
-        "word_chars": F.aggregate(words, zero, lambda acc, x: acc + F.length(x).cast("long")),
-        "top_word_chars": _run_fold(words, "max_mass"),
-        "top_bigram_chars": _run_fold(bigrams, "max_mass"),
-    }
 
 
 #: Java regex \s (no UNICODE_CHARACTER_CLASS): the exact whitespace class
@@ -338,12 +152,18 @@ REPETITION_COLS = (
 
 
 def _repetition_batch(texts):
-    """Vectorized numpy twin of ``repetition_stats_cols`` for one Arrow
-    batch: class counting via factorize + lexsort-run detection, bigram
-    classes as integer code pairs (words carry no whitespace, so the
-    pair uniquely determines the joined string). Returns a dict of 8
-    int64 arrays; exact-parity contract is property-tested in
-    tests/test_repetition.py."""
+    """Repetition signals for one Arrow batch: class counting via
+    factorize + lexsort-run detection, bigram classes as integer code
+    pairs (words carry no whitespace, so the pair uniquely determines
+    the joined string). Returns a dict of 8 int64 arrays:
+
+    - n_lines / n_dup_lines / dup_line_chars / line_chars — lines split
+      on ``\\n``; a line is duplicate when its exact string occurs >1
+      time in the doc (counts and chars include every occurrence);
+    - n_words / word_chars / top_word_chars — non-empty Java-``\\s``
+      words and the most-common word's char mass (count × length);
+    - top_bigram_chars — most-common word-2-gram char mass (the bigram
+      string includes its single joining space)."""
     import itertools
 
     import numpy as np
@@ -429,18 +249,17 @@ TEXT_CORE_COLS = ("n_chars", "nonws_chars", "nonclean_chars", "n_tokens", "stop_
 
 
 def _text_core_batch(texts, lang_words: dict[str, list[str]], quality_words: list[str]):
-    """Integer components for one Arrow batch. Exact-parity contracts
-    with the column twins (tests/test_textcore.py):
+    """Integer components for one Arrow batch, each equal to a Spark SQL
+    expression the DuckDB oracle replays:
 
     - n_chars = length(text) (codepoints);
     - nonws_chars = length(regexp_replace(text, '\\s', '')) — count of
       chars outside Java's \\s class;
-    - nonclean_chars = chars outside [0-9A-Za-z ] (punct_ratio's
-      numerator);
-    - n_tokens = token_count(): 0 when trim(text) == '' (SQL trim —
-      SPACES only), else size(split(trim(text), '\\s+')) INCLUDING the
-      leading empty a non-space whitespace prefix produces (quirk
-      parity);
+    - nonclean_chars = chars outside [0-9A-Za-z ] (the punctuation
+      ratio's numerator);
+    - n_tokens: 0 when trim(text) == '' (SQL trim — SPACES only), else
+      size(split(trim(text), '\\s+')) INCLUDING the leading empty a
+      non-space whitespace prefix produces;
     - stop_hits / per-language hits: tokens whose lower() equals a list
       word (empties never match, so counts are filter-invariant).
     """
@@ -466,7 +285,7 @@ def _text_core_batch(texts, lang_words: dict[str, list[str]], quality_words: lis
             tok_lists.append([])
             continue
         toks = ws.split(trimmed)
-        n_tok[i] = len(toks)  # keeps boundary empties — column-twin parity
+        n_tok[i] = len(toks)  # keeps boundary empties, as Spark's split does
         tok_lists.append([w for w in toks if w])  # empties never hit a stopword
     out["n_tokens"] = n_tok
 
@@ -495,14 +314,12 @@ def _text_core_batch(texts, lang_words: dict[str, list[str]], quality_words: lis
 def text_core_arrow(df, text_col: str = "text", keep: tuple[str, ...] = ("doc_id",)):
     """ONE Arrow map emitting the integer text-stat components
     (``TEXT_CORE_COLS`` + per-language ``s_<lang>`` hit counts) plus the
-    pass-through text column. The HOF column twins (``token_count``,
-    ``stopword_ratio``'s filter, ``lang_scores``) evaluate interpreted —
-    they disable whole-stage codegen for their stage; measured 37k
-    rows/s (lang_id) / 28k rows/s (punct_ratio's regexp_replace string
-    build) per 8 cores vs ~1M rows/s through this kernel. Ratios,
-    quality score and rounding are NOT computed here — callers rebuild
-    them in codegen from the integers, so DuckDB-oracle bit-exactness is
-    structural. Null text → all-null components (twin parity)."""
+    pass-through text column, ~1M rows/s per 8 cores (the equivalent
+    higher-order-function columns evaluated interpreted at 28-37k
+    rows/s). Ratios, quality score and rounding are NOT computed here —
+    :func:`text_stat_cols` rebuilds them in codegen from the integers,
+    so DuckDB-oracle bit-exactness is structural. Null text → all-null
+    components."""
     import pandas as pd
 
     fields = {f.name: f.dataType.simpleString() for f in df.schema.fields}
@@ -535,9 +352,10 @@ def text_core_arrow(df, text_col: str = "text", keep: tuple[str, ...] = ("doc_id
 
 
 def lang_id_from_scores(scores: dict[str, Column]) -> Column:
-    """argmax language from per-language hit-count COLUMNS — the exact
-    tie/zero logic of :func:`lang_id`, reusable over precomputed counts
-    (e.g. ``text_core_arrow``'s ``s_<lang>`` integers)."""
+    """argmax language from per-language stopword-hit count COLUMNS
+    (e.g. ``text_core_arrow``'s ``s_<lang>`` integers); ties broken by
+    the fixed language order en > es > fr > de; no hits at all → 'und'
+    (undetermined)."""
     order = list(LANG_STOPWORDS)
     best_lang = F.lit("und")
     best_score = F.lit(0)
@@ -551,14 +369,48 @@ def lang_id_from_scores(scores: dict[str, Column]) -> Column:
     return F.when(any_hits > 0, best_lang).otherwise(F.lit("und"))
 
 
+def text_stat_cols() -> dict[str, Column]:
+    """Float text stats over ``text_core_arrow``'s integer columns, in
+    codegen:
+
+    - punct_ratio — non-[0-9A-Za-z ] chars / chars;
+    - stop_ratio — quality-stopword hits / tokens;
+    - mean_token_len — non-whitespace chars / tokens;
+    - quality — deterministic [0, 1] heuristic rewarding mid-length docs
+      with some stopwords and low punctuation noise (Gopher-rule-style
+      gates without the thresholds), rounded to 6 places;
+    - lang — :func:`lang_id_from_scores` over the ``s_<lang>`` hits.
+
+    Ratios are 0 for empty text / zero tokens."""
+    n_tok, n_ch = F.col("n_tokens"), F.col("n_chars")
+    punct = F.when(n_ch == 0, F.lit(0.0)).otherwise(
+        F.col("nonclean_chars").cast("double") / n_ch.cast("double")
+    )
+    stop = F.when(n_tok == 0, F.lit(0.0)).otherwise(
+        F.col("stop_hits").cast("double") / n_tok.cast("double")
+    )
+    mean_tok = F.when(n_tok == 0, F.lit(0.0)).otherwise(
+        F.col("nonws_chars").cast("double") / n_tok.cast("double")
+    )
+    len_term = F.least(n_tok.cast("double") / F.lit(100.0), F.lit(1.0))
+    stop_term = F.least(stop * F.lit(4.0), F.lit(1.0))
+    punct_term = F.lit(1.0) - F.least(punct * F.lit(5.0), F.lit(1.0))
+    return {
+        "punct_ratio": punct,
+        "stop_ratio": stop,
+        "mean_token_len": mean_tok,
+        "quality": F.round((len_term + stop_term + punct_term) / F.lit(3.0), 6),
+        "lang": lang_id_from_scores({lang: F.col(f"s_{lang}") for lang in LANG_STOPWORDS}),
+    }
+
+
 def repetition_stats_arrow(df, text_col: str = "text", keep: tuple[str, ...] = ("doc_id",)):
-    """Arrow-batched twin of ``repetition_stats_cols``: one mapInPandas
-    stage computing all 8 Gopher repetition signals per row with
-    factorize/bincount/lexsort numpy (no per-element interpreted fold).
-    Bit-identical to the column version (null text rows yield all-null
-    stats, matching the HOF columns' null propagation); ~20× its per-row
-    throughput — the column twin is what the DuckDB oracle replays.
-    Map-only at any scale, same plan class as the kNN kernel."""
+    """One mapInPandas stage computing all 8 Gopher repetition signals
+    (``REPETITION_COLS``, see :func:`_repetition_batch`) per row with
+    factorize/bincount/lexsort numpy — ~20× the per-row throughput of
+    an interpreted higher-order-function fold. Exact integers, replayed
+    bit-for-bit by the DuckDB oracle. Map-only at any scale, same plan
+    class as the kNN kernel."""
     import pandas as pd
 
     fields = {f.name: f.dataType.simpleString() for f in df.schema.fields}
@@ -577,9 +429,8 @@ def repetition_stats_arrow(df, text_col: str = "text", keep: tuple[str, ...] = (
             res = pdf[list(keep)].copy()
             for c in REPETITION_COLS:
                 col = pd.array(stats[c], dtype="Int64")
-                # null text → NULL stats, except top_bigram_chars: the
-                # column twin's when(nw>=2).otherwise(empty) swallows
-                # the NULL size into the empty-array branch → fold = 0
+                # null text → NULL stats, except top_bigram_chars = 0
+                # (a NULL text has no bigram, like any doc of < 2 words)
                 if null.any() and c != "top_bigram_chars":
                     col[null] = None
                 res[c] = col

@@ -1,19 +1,15 @@
 """S2 cell ids — the sphere-correct global tiling named by the north rule
-("H3/S2 index"), implemented three times from the published algorithm
-(S2 geometry library docs/papers; quadratic projection + Hilbert curve)
-and cross-checked bit-for-bit:
+("H3/S2 index"), implemented from the published algorithm (S2 geometry
+library docs/papers; quadratic projection + Hilbert curve) as one
+production kernel plus two references, cross-checked bit-for-bit:
 
-1. ``with_s2_cell`` — pure Spark column expressions (zero Python in the
-   hot path): the 100 TB path. Face/uv/st run in whole-stage codegen;
-   the Hilbert fold runs 4 bits per step against a 1024-entry
-   constant-folded lookup array inside a single ``aggregate()``
-   higher-order function (one lambda body for all 8 steps — an unrolled
-   projection chain makes Catalyst inline a copy of the uv/sqrt tree
-   per step and codegen compile time explodes).
-2. ``s2_cell_from_xyz_np`` — vectorized numpy twin for Arrow kernels and
-   tests (same 4-bit LUT).
-3. ``s2_cell_sql`` — generated ANSI SQL (chained CTEs, one 2-bit Hilbert
+1. ``s2_cell_from_xyz_np`` — vectorized numpy kernel folding the
+   Hilbert curve 4 bits per step against a 1024-entry lookup table;
+   ``with_s2_cell_arrow`` runs it as one Arrow map stage (the 100 TB
+   path).
+2. ``s2_cell_sql`` — generated ANSI SQL (chained CTEs, one 2-bit Hilbert
    step per level) runnable by DuckDB: the driver-oracle twin.
+3. ``s2_cell_scalar`` — per-level pure-Python reference for tests.
 
 Determinism contract (what makes a bit-exact SQL oracle possible): from a
 direction vector (x, y, z) the cell id needs only abs/compare (exact),
@@ -351,139 +347,9 @@ def s2_cap_cells_np(x, y, z, chord, level: int) -> tuple[np.ndarray, np.ndarray]
 
 
 # ---------------------------------------------------------------------------
-# Spark columns (the 100 TB path — all whole-stage codegen)
+# Spark (the 100 TB path — one Arrow map for the cell id, codegen bit math
+# for parents and tokens)
 # ---------------------------------------------------------------------------
-
-_LUT_LIT = None
-
-
-def _lut_lit() -> Column:
-    global _LUT_LIT
-    if _LUT_LIT is None:
-        # one py4j call (a 1024-element F.array(*lits) costs ~20 s of
-        # driver round-trips); constant-folds to a single array literal
-        _LUT_LIT = F.lit([int(v) for v in LUT4.tolist()])
-    return _LUT_LIT
-
-
-def _st_col(u: Column) -> Column:
-    return F.when(u >= 0, F.lit(0.5) * F.sqrt(F.lit(1.0) + F.lit(3.0) * u)).otherwise(
-        F.lit(1.0) - F.lit(0.5) * F.sqrt(F.lit(1.0) - F.lit(3.0) * u)
-    )
-
-
-def _ij_col(s: Column) -> Column:
-    scaled = F.floor(s * F.lit(float(1 << MAX_LEVEL)))
-    return F.least(F.greatest(scaled, F.lit(0)), F.lit((1 << MAX_LEVEL) - 1)).cast("long")
-
-
-def with_s2_cell(
-    df: DataFrame,
-    level: int,
-    out: str = "s2_cell",
-    xyz: tuple[str, str, str] | None = None,
-    latlon: tuple[str, str] | None = None,
-) -> DataFrame:
-    """Add an int64 S2 cell-id column. ``xyz`` names three direction
-    columns (bit-exact, oracle-able); ``latlon`` names (lat, lon) degree
-    columns (engine-trig convenience). Zero-vector rows get NULL.
-
-    Plan shape: one projection chain, all codegen — at 10^12 rows this
-    fuses into the scan; the cell id is the Iceberg-style partition /
-    bucketing key for everything downstream.
-    """
-    if not 0 <= level <= MAX_LEVEL:
-        raise ValueError(f"level must be in [0, {MAX_LEVEL}]")
-    if (xyz is None) == (latlon is None):
-        raise ValueError("pass exactly one of xyz=('x','y','z') or latlon=('lat','lon')")
-    pre = "__s2_"
-    if latlon is not None:
-        lat, lon = (F.radians(F.col(c).cast("double")) for c in latlon)
-        df = df.withColumns({
-            pre + "x": F.cos(lat) * F.cos(lon),
-            pre + "y": F.cos(lat) * F.sin(lon),
-            pre + "z": F.sin(lat),
-        })
-        xs, ys, zs = pre + "x", pre + "y", pre + "z"
-    else:
-        xs, ys, zs = xyz
-    x, y, z = F.col(xs).cast("double"), F.col(ys).cast("double"), F.col(zs).cast("double")
-    ax, ay, az = F.abs(x), F.abs(y), F.abs(z)
-    f0 = F.when(ax > ay, F.when(ax > az, F.lit(0)).otherwise(F.lit(2))).otherwise(
-        F.when(ay > az, F.lit(1)).otherwise(F.lit(2))
-    )
-    comp = F.when(f0 == 0, x).when(f0 == 1, y).otherwise(z)
-    df = df.withColumn(pre + "f", F.when(comp == 0, F.lit(None)).when(comp < 0, f0 + 3).otherwise(f0))
-    face = F.col(pre + "f")
-    # every taken branch has a provably nonzero denominator (the face's
-    # major component); NULL face (zero vector) takes no branch, which
-    # keeps ANSI mode's divide-by-zero check happy
-    u = (
-        F.when(face == 0, y / x).when(face == 1, -x / y).when(face == 2, -x / z)
-        .when(face == 3, z / x).when(face == 4, z / y).when(face == 5, -y / z)
-    )
-    v = (
-        F.when(face == 0, z / x).when(face == 1, z / y).when(face == 2, -y / z)
-        .when(face == 3, y / x).when(face == 4, -x / y).when(face == 5, -x / z)
-    )
-    df = df.withColumns({pre + "i": _ij_col(_st_col(u)), pre + "j": _ij_col(_st_col(v))})
-    i, j = F.col(pre + "i"), F.col(pre + "j")
-    # Hilbert fold as ONE aggregate() higher-order function: the state
-    # struct (ir, jr, o, p) walks the 8 four-bit steps with the lambda
-    # body built exactly once. An unrolled withColumns chain here is a
-    # correctness-equivalent trap: Catalyst inlines each step into the
-    # next (the refs are single-use, so CollapseProject fires) and the
-    # codegen tree grows a copy of the face/u/v/sqrt sub-tree per step —
-    # observed 25+ min of driver-side StringBuilder churn per query.
-    # aggregate() keeps the plan linear; eval is JVM-interpreted over a
-    # constant-folded LUT literal, no Python anywhere.
-    mask32 = F.lit((1 << 32) - 1).cast("long")
-    init = F.struct(
-        i.alias("ir"),  # i,j occupy bits 0..29; treated as 32-bit padded
-        j.alias("jr"),
-        face.bitwiseAND(F.lit(1)).cast("long").alias("o"),
-        F.lit(0).cast("long").alias("p"),
-    )
-
-    def _step(st: Column, _: Column) -> Column:
-        ni = F.shiftright(st["ir"], 28).bitwiseAND(F.lit(15))
-        nj = F.shiftright(st["jr"], 28).bitwiseAND(F.lit(15))
-        key = F.shiftleft(st["o"], 8).bitwiseOR(F.shiftleft(ni, 4)).bitwiseOR(nj)
-        val = F.element_at(_lut_lit(), (key + 1).cast("int"))
-        return F.struct(
-            F.shiftleft(st["ir"], 4).bitwiseAND(mask32).alias("ir"),
-            F.shiftleft(st["jr"], 4).bitwiseAND(mask32).alias("jr"),
-            val.bitwiseAND(F.lit(3)).cast("long").alias("o"),
-            F.shiftleft(st["p"], 8).bitwiseOR(F.shiftright(val, 2).cast("long")).alias("p"),
-        )
-
-    pos = F.aggregate(
-        F.sequence(F.lit(1), F.lit(8)), init, _step, lambda st: st["p"]
-    )
-    df = df.withColumn(pre + "p", pos)
-    # signed face base avoids 64-bit overflow checks: faces 4,5 wrap negative
-    base = (F.when(face >= 4, face - 8).otherwise(face)).cast("long") * F.lit(1 << 61).cast("long")
-    drop = 2 * (MAX_LEVEL - level)
-    pos_l = F.shiftright(F.col(pre + "p"), drop)
-    cell = base + F.shiftleft(pos_l, drop + 1) + F.lit(1 << drop).cast("long")
-    # NULL face (zero vector), NULL coords, and non-finite coords all
-    # have no cell. Neither slips out on its own: a NULL/NaN coordinate
-    # still picks a face (NULL/NaN comparisons are falsy, so an
-    # otherwise-branch fires) and the ij clamp's greatest(NULL, 0)
-    # swallows the NULL into 0 — emitting a deterministic-garbage id
-    # without this. ±Inf must be masked here too: abs(inf) comparisons
-    # are TRUE, so an infinite coordinate picks a real face and clamps
-    # to a valid-looking edge cell, while the Arrow twin's isfinite
-    # mask yields NULL — the bit-parity contract requires NULL on both.
-    inf = F.lit(float("inf"))
-    bad = (
-        face.isNull()
-        | x.isNull() | y.isNull() | z.isNull()
-        | F.isnan(x) | F.isnan(y) | F.isnan(z)
-        | (F.abs(x) == inf) | (F.abs(y) == inf) | (F.abs(z) == inf)
-    )
-    df = df.withColumn(out, F.when(bad, F.lit(None).cast("long")).otherwise(cell))
-    return df.drop(*[c for c in df.columns if c.startswith(pre)])
 
 
 def with_s2_cell_arrow(
@@ -492,15 +358,14 @@ def with_s2_cell_arrow(
     out: str = "s2_cell",
     xyz: tuple[str, str, str] = ("x", "y", "z"),
 ) -> DataFrame:
-    """Arrow-kernel twin of :func:`with_s2_cell`: one mapInPandas stage
-    running the vectorized numpy LUT fold (``s2_cell_from_xyz_np``),
-    bit-identical to the codegen column on any IEEE-754 platform
-    (property-tested in tests/test_s2.py) at ~6× its per-row throughput —
-    the codegen twin's ``aggregate()`` Hilbert fold is JVM-interpreted
-    per row and its large expression tree costs seconds of variable
-    plan/JIT overhead per query. Zero-vector, NULL-coordinate, and
-    NaN-coordinate rows get NULL, matching the column version. All input
-    columns pass through."""
+    """Add an int64 S2 cell-id column computed from the three direction
+    columns ``xyz``: one mapInPandas stage running the vectorized numpy
+    LUT fold (``s2_cell_from_xyz_np``) — bit-exact and oracle-able (see
+    the determinism contract above). Zero-vector, NULL-coordinate and
+    non-finite-coordinate rows get NULL. All input columns pass through;
+    at 10^12 rows the cell id is the Iceberg-style partition / bucketing
+    key for everything downstream. For (lat, lon) degree input, go
+    through ``geojoin_s2.s2_point_prep(latlon=...)`` first."""
     if not 0 <= level <= MAX_LEVEL:
         raise ValueError(f"level must be in [0, {MAX_LEVEL}]")
     import pandas as pd
@@ -516,8 +381,7 @@ def with_s2_cell_arrow(
             x, y, z = (pdf[c].to_numpy(dtype="float64") for c in (xc, yc, zc))
             # NULL coords arrive as NaN through to_numpy and would pass a
             # pure !=0 guard (NaN != 0 is True) into the LUT fold, yielding
-            # an arbitrary cell where the codegen twin yields NULL — mask
-            # non-finite rows too so the twins stay bit-identical
+            # an arbitrary cell — mask non-finite rows too
             ok = ((x != 0) | (y != 0) | (z != 0)) & (
                 np.isfinite(x) & np.isfinite(y) & np.isfinite(z)
             )

@@ -8,8 +8,9 @@ Five families, each with a distinct scale profile:
   index (explode → equi-join on shingle → pair counts → Jaccard). The
   classic posting-list self-join; frequent-shingle pruning bounds the
   quadratic blowup at scale.
-- ``minhash_lsh_pairs``: MinHash signatures (xxhash64 family, seeded —
-  deterministic across runs/parallelism) → banded LSH buckets →
+- ``minhash_lsh_pairs``: MinHash signatures (crc32-based Arrow kernel,
+  seeded permutation family — deterministic across runs/parallelism)
+  → banded LSH buckets →
   candidate pairs → exact Jaccard verification. The 100 TB path: cost is
   O(docs × perms) + bucket joins, never all-pairs.
 - ``simhash_pairs``: 64-bit SimHash per doc (JVM bit math over shingle
@@ -47,8 +48,6 @@ def dedup_exact_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
             F.min(id_col).alias("keeper_id"),
             F.count(F.lit(1)).alias("dup_count"),
         )
-        # fast twin: bit-identical to fingerprint() (pytest-verified incl.
-        # non-BMP), Arrow-batched Horner vs ~100k interpreted evals/s
         .withColumn("fp", fingerprint_fast(F.col(text_col)))
         .select("keeper_id", "dup_count", "fp")
     )
@@ -221,37 +220,6 @@ def _shingle_sets(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFram
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_perm: int = 64,
-    shingle_n: int = 3,
-    shingled: DataFrame | None = None,
-) -> DataFrame:
-    """(id, s0..s{num_perm-1}) MinHash signature columns.
-
-    Scale-shaped plan: explode shingles → hash each shingle string ONCE
-    (codegen'd xxhash64 on rows, not interpreted array lambdas) → apply
-    the permutation family as static integer column math → one
-    map-side-combinable ``groupBy(id).agg(min...)``. Cost is
-    O(shingles) string hashes + O(shingles × num_perm) compiled integer
-    ops; the only shuffle is the partial-aggregated groupBy.
-
-    ``shingled``: optional pre-computed (and typically persisted)
-    :func:`_shingle_sets` frame; identical math, shared scan."""
-    if shingled is None:
-        shingled = _shingle_sets(df, id_col, text_col, shingle_n)
-    sh = shingled.select("__id", F.explode("__shset").alias("__sh"))
-    h = sh.withColumn("__h", F.pmod(F.xxhash64("__sh"), F.lit(_MINHASH_P)))
-    consts = _perm_constants(num_perm)
-    aggs = [
-        F.min(F.pmod(F.col("__h") * F.lit(a) + F.lit(b), F.lit(_MINHASH_P))).alias(f"s{i}")
-        for i, (a, b) in enumerate(consts)
-    ]
-    return h.groupBy("__id").agg(*aggs)
-
-
 def minhash_signatures_arrow(
     df: DataFrame | None,
     id_col: str = "__id",
@@ -260,22 +228,21 @@ def minhash_signatures_arrow(
     shingle_n: int = 3,
     shingled: DataFrame | None = None,
 ) -> DataFrame:
-    """MAP-ONLY MinHash signatures: one Arrow kernel computes each
-    doc's full signature from its distinct-shingle array — no shingle
-    explode, no groupBy, zero shuffle (vs :func:`minhash_signatures`,
-    whose exploded-row pipeline pays an O(shingles)-row codegen pass +
-    a partial-aggregated exchange). Per batch: flatten the shingle
-    arrays, crc32 every shingle (zlib — one C call per string), then
-    one ``(a·h+b) mod p`` pass + ``np.minimum.reduceat`` per
-    permutation over doc boundaries.
+    """(__id, s0..s{num_perm-1}) MinHash signatures, MAP-ONLY: one
+    Arrow kernel computes each doc's full signature from its
+    distinct-shingle array — no shingle explode, no groupBy, zero
+    shuffle (it scales and runs better than an explode+groupBy
+    pipeline; BENCH.md has the pinned scaling rows). Per batch:
+    flatten the shingle arrays, crc32 every shingle (zlib — one C call
+    per string), then one ``(a·h+b) mod p`` pass +
+    ``np.minimum.reduceat`` per permutation over doc boundaries.
 
-    Same deterministic permutation family as the JVM path but a crc32
-    base hash instead of Spark's ``xxhash64`` (not expressible inside
-    numpy), so the two paths emit DIFFERENT — equally valid — signature
-    values: banded candidate recall carries the standard minhash
-    guarantee either way, and downstream exact-Jaccard verification
-    owns precision. Docs with zero shingles emit no row (parity with
-    the groupBy form, whose empty docs have no exploded rows)."""
+    Banded candidate recall carries the standard minhash guarantee, and
+    downstream exact-Jaccard verification owns precision. Docs with
+    zero shingles emit no row.
+
+    ``shingled``: optional pre-computed (and typically persisted)
+    :func:`_shingle_sets` frame; identical math, shared scan."""
     if shingled is None:
         shingled = _shingle_sets(df, id_col, text_col, shingle_n)
     consts = _perm_constants(num_perm)
@@ -403,10 +370,9 @@ def minhash_lsh_pairs(
     shingling map runs once instead of once per consumer.
 
     ``signatures``: optional pre-computed signature frame
-    (``__id, s0..s{num_perm-1}``) — e.g.
-    :func:`minhash_signatures_arrow`'s map-only kernel, or yesterday's
-    persisted signatures in an incremental pipeline; replaces the
-    default JVM signature pipeline wholesale.
+    (``__id, s0..s{num_perm-1}``) — e.g. yesterday's persisted
+    signatures in an incremental pipeline; replaces the default
+    :func:`minhash_signatures_arrow` over the shingle sets.
     """
     if num_perm % bands != 0:
         raise ValueError("num_perm must be divisible by bands")
@@ -416,7 +382,7 @@ def minhash_lsh_pairs(
     sig = (
         signatures
         if signatures is not None
-        else minhash_signatures(df, id_col, text_col, num_perm, shingle_n, shingled=shingled)
+        else minhash_signatures_arrow(df, id_col, text_col, num_perm, shingle_n, shingled=shingled)
     )
     # ONE packed 64-bit bucket key per band: the band id is the first
     # xxhash64 argument, so equal signature slices in DIFFERENT bands
@@ -1140,16 +1106,10 @@ def dedup_clusters(
     comes back — nothing stays pinned for the caller."""
     shingled = _shingle_sets(df, id_col, text_col, shingle_n).persist()
     try:
-        # map-only Arrow signature kernel over the shared shingle sets:
-        # the closure consumer doesn't need signature-value parity with
-        # the JVM pipeline (verification is exact-Jaccard either way),
-        # and dropping the explode+groupBy stage halves the edge-feed
-        # cost (VERDICT r4 'Next round' #6)
-        sig = minhash_signatures_arrow(None, num_perm=num_perm, shingled=shingled)
         pairs = minhash_lsh_pairs(
             df, id_col, text_col, threshold=threshold, num_perm=num_perm,
             bands=bands, shingle_n=shingle_n, pair_mode=pair_mode,
-            max_bucket=max_bucket, shingled=shingled, signatures=sig,
+            max_bucket=max_bucket, shingled=shingled,
         )
         comp = connected_components(
             pairs, small_graph_max=small_graph_max, checkpoint_dir=checkpoint_dir

@@ -595,9 +595,7 @@ def _score(c: Column) -> Column:
     )
 
 
-def _knn_round_numpy(
-    remaining: DataFrame, bc, radius: int, k: int, exact: bool = False
-) -> DataFrame:
+def _knn_round_numpy(remaining: DataFrame, bc, radius: int, k: int) -> DataFrame:
     """MAP-ONLY kNN pass for a broadcast-able right side — the 100 TB
     shape of the north-star job (10^12-row page stream vs a directory
     table). The whole right side rides to every worker as plain numpy
@@ -608,7 +606,7 @@ def _knn_round_numpy(
     pass is a pure map over the scan, so throughput scales linearly
     with executors (the north rule's scaling criterion).
 
-    ``exact=True`` runs ``score_batch_exact``: certification, radius
+    The kernel is ``score_batch_exact``: certification, radius
     escalation and the brute-force outlier tail all happen INSIDE the
     kernel against the already-resident broadcast index, so the whole
     kNN job is ONE Spark stage — no driver rounds, no persisted
@@ -630,9 +628,8 @@ def _knn_round_numpy(
     def _iter(batches):
         import pyarrow as pa
 
-        from geotables_jl_spark.geom.knn_kernel import score_batch, score_batch_exact
+        from geotables_jl_spark.geom.knn_kernel import score_batch_exact
 
-        kernel = score_batch_exact if exact else score_batch
         idx = bc.value
         for rb in batches:
             if rb.num_rows == 0:
@@ -642,7 +639,7 @@ def _knn_round_numpy(
             def col(nm, dt):
                 return rb.column(name_i[nm]).to_numpy(zero_copy_only=False).astype(dt, copy=False)
 
-            cols, offsets, ridv, distv = kernel(
+            cols, offsets, ridv, distv = score_batch_exact(
                 col(_LID, np.int64),
                 col("__lx", np.float64),
                 col("__ly", np.float64),
@@ -784,7 +781,7 @@ def knn_pairs(
 
     Scale shape (the north rule's scaling criterion): round 1 is sized
     from density stats to certify ~99% of rows in ONE pass, and for a
-    broadcast-able right side that pass is MAP-ONLY (``_knn_round_map``)
+    broadcast-able right side that pass is MAP-ONLY (``_knn_round_numpy``)
     — no shuffle, no groupBy, no window over the big left stream, so
     throughput scales linearly with executors. Later rounds touch only
     the persisted (tiny) remainder; the full input is never persisted."""
@@ -884,7 +881,7 @@ def knn_pairs(
         # single narrow map over the left scan, the shape that scales
         # linearly with executors (round-1's loop measured 0.45
         # efficiency; a pure map measures like the intersects join).
-        out = _pairs_from_kernel(_knn_round_numpy(remaining, bc, radius0, k, exact=True))
+        out = _pairs_from_kernel(_knn_round_numpy(remaining, bc, radius0, k))
         out = out.select(_LID, _RID, "__dist", "__rank")
         if extra:
             payload = F.broadcast(df2.select(F.col(ROW_ID).alias(_RID), *extra))

@@ -4,17 +4,17 @@ brute-force nested loops over ``intersects``/kNN) as the mandated
 two-stage cell-indexed broadcast-or-shuffle join:
 
 1. **filter** — candidate pairs by S2 cell equality: ONE side carries
-   its single level-k cell (pure JVM codegen,
-   ``geom/s2.with_s2_cell``); the OTHER side explodes to the rigorous
+   its single level-k cell (one Arrow map,
+   ``geom/s2.with_s2_cell_arrow``); the OTHER side explodes to the rigorous
    cap cover of the search radius (vectorized numpy Arrow kernel,
    ``geom/s2.s2_cap_cells_np``). Which side explodes is the key
    web-scale knob (``expand=``): if ``dist(l, r) <= chord`` then each
    point lies in the other's cap, so covering EITHER side's caps while
    the other keeps its single cell finds every qualifying pair — and
    the single-cell side meets each cover at most once, so no dedup
-   either way. Explode the SMALL side: the 10^12-row side then never
-   leaves JVM codegen (scan → cell id → hash join → chord² refine),
-   and the ~10-25× cover blow-up lands on the side that fits in a
+   either way. Explode the SMALL side: the 10^12-row side then takes
+   one narrow map (scan → cell id → hash join → chord² refine), and
+   the ~10-25× cover blow-up lands on the side that fits in a
    broadcast. Optional explicit salting splits pathological cells
    (megacities at web scale) beyond what AQE's skew-join handles.
 2. **refine** — exact chord-distance predicate in whole-stage codegen
@@ -69,7 +69,8 @@ def s2_point_prep(
     is normalized with the exact expression ``c / sqrt(x²+y²+z²)`` (one
     formula shared with the SQL oracle twins — bit-exact); ``latlon``
     uses engine trig (see geom/s2.py docstring for the 1-ulp caveat).
-    Zero vectors yield NULL and are dropped."""
+    Only rows with a finite, non-zero direction are kept: NULL, NaN and
+    infinite coordinates and zero vectors are dropped."""
     if (xyz is None) == (latlon is None):
         raise ValueError("pass exactly one of xyz= or latlon=")
     if latlon is not None:
@@ -81,14 +82,19 @@ def s2_point_prep(
             F.sin(lat).alias("nz"),
             *keep,
         )
-        return out
+        # nx = cos(lat)·cos(lon) is NULL iff lat or lon is NULL and NaN
+        # iff either is NaN/±Inf; finite angles never give the zero vector
+        return out.where(F.col("nx").isNotNull() & ~F.isnan("nx"))
     x, y, z = (F.col(c).cast("double") for c in xyz)
     nrm = F.sqrt(x * x + y * y + z * z)
+    # Spark orders NaN above every number, so `nrm > 0` alone lets NaN
+    # through; infinite coordinates make the norm infinite or NaN
+    ok = (nrm > 0) & (nrm < F.lit(float("inf")))
     return df.select(
         F.col(id_col),
-        F.when(nrm > 0, x / nrm).alias("nx"),
-        F.when(nrm > 0, y / nrm).alias("ny"),
-        F.when(nrm > 0, z / nrm).alias("nz"),
+        F.when(ok, x / nrm).alias("nx"),
+        F.when(ok, y / nrm).alias("ny"),
+        F.when(ok, z / nrm).alias("nz"),
         *keep,
     ).where(F.col("nx").isNotNull())
 
@@ -133,35 +139,11 @@ def _cover_explode(side: DataFrame, chord: float, level: int, tag: str) -> DataF
     return src.mapInPandas(_iter, schema=schema)
 
 
-def _cell_side(side: DataFrame, level: int, tag: str, engine: str = "arrow") -> DataFrame:
+def _cell_side(side: DataFrame, level: int, tag: str) -> DataFrame:
     """Single level-``level`` cell per point of a ``_tagged`` side — the
-    stage the 10^12-row side takes. ``engine='arrow'`` (default) runs
-    the vectorized numpy LUT kernel in one Arrow map stage (~6× the
-    throughput of the SQL twin, whose ``aggregate()`` Hilbert fold is
-    JVM-interpreted per row); ``engine='codegen'`` keeps the pure-SQL
-    expression (no Python worker anywhere — oracle replays and
-    restricted clusters). Both are bit-identical on any IEEE-754
-    platform (property-tested in tests/test_s2.py)."""
-    if engine == "codegen":
-        s = s2.with_s2_cell(side, level, out="__cell", xyz=(tag + "x", tag + "y", tag + "z"))
-        return s.where(F.col("__cell").isNotNull())
-    idc, xc, yc, zc = tag + "id", tag + "x", tag + "y", tag + "z"
-    src = side.select(idc, xc, yc, zc)
-    schema = f"{idc} long, {xc} double, {yc} double, {zc} double, __cell long"
-
-    def _iter(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x, y, z = (pdf[c].to_numpy() for c in (xc, yc, zc))
-            ok = (x != 0) | (y != 0) | (z != 0)  # codegen emits NULL here
-            if not ok.all():
-                pdf = pdf.iloc[np.flatnonzero(ok)].reset_index(drop=True)
-                x, y, z = x[ok], y[ok], z[ok]
-            pdf["__cell"] = s2.s2_cell_from_xyz_np(x, y, z, level)
-            yield pdf
-
-    return src.mapInPandas(_iter, schema=schema)
+    stage the 10^12-row side takes (one Arrow map)."""
+    s = s2.with_s2_cell_arrow(side, level, out="__cell", xyz=(tag + "x", tag + "y", tag + "z"))
+    return s.where(F.col("__cell").isNotNull())
 
 
 def _topk_stream(cand: DataFrame, k: int, cert2: float | None = None) -> DataFrame:
@@ -295,7 +277,7 @@ def _expand_mode(expand: str | None, broadcast_right: bool | None) -> str:
 def _cell_pair(left_t: DataFrame, right_t: DataFrame, chord: float, level: int,
                expand: str) -> tuple[DataFrame, DataFrame]:
     """(l, r) keyed by __cell: ``expand`` names the side that explodes
-    to the cap cover; the other carries its one codegen cell. Either
+    to the cap cover; the other carries its one cell. Either
     orientation finds every pair with dist <= chord exactly once: the
     single-cell point lies inside the other's cap, so its cell is in
     that cap's rigorous cover — and it has only one cell, so the pair
@@ -319,7 +301,7 @@ def s2_dwithin_join(
     chord = 2·sin(angle/2)). Inputs are ``s2_point_prep`` outputs with
     columns (lid|rid, nx, ny, nz).
 
-    Plan: one side → single cell id (codegen), the other (``expand``,
+    Plan: one side → single cell id (Arrow map), the other (``expand``,
     default: the small/broadcast side) → cap-cover explode (Arrow);
     equi-join on cell (broadcast if ``broadcast_right``, else shuffle
     with optional ``salt``-way hot-cell splitting); exact chord² refine
@@ -448,7 +430,7 @@ def s2_knn_join(
 
     ``expand`` picks the cover-explode side per the module docstring;
     the default explodes the right when ``broadcast_right`` (web scale:
-    10^12 query pages stay in codegen, the directory pays the ~10-25×
+    10^12 query pages take one cell each, the directory pays the ~10-25×
     cover and is still broadcastable), else the left (small query side
     against a huge shuffled corpus)."""
     if chord0 is None:

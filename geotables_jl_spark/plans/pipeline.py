@@ -106,40 +106,22 @@ def geotag_pipeline(
     out["dedup"] = pipe.stage("dedup", _dedup, deps=["extract"], params={"v": 1})
 
     # 3. text stats (+ optional quality floor) — ONE Arrow map for the
-    # integer components (text_core_arrow; the HOF column twins run
-    # interpreted), ratios/round/argmax rebuilt in codegen with the
-    # twins' exact float math (value parity: tests/test_textcore.py)
+    # integer components (text_core_arrow), quality and language id
+    # rebuilt from them in codegen (text_stat_cols)
     def _stats() -> DataFrame:
         core = T.text_core_arrow(
             out["dedup"].select("row_id", "url", "lat", "lon", "text"),
             keep=("row_id", "url", "lat", "lon"),
         )
-        n_tok, n_ch = F.col("n_tokens"), F.col("n_chars")
-        punct = F.when(n_ch == 0, F.lit(0.0)).otherwise(
-            F.col("nonclean_chars").cast("double") / n_ch.cast("double")
-        )
-        stop = F.when(n_tok == 0, F.lit(0.0)).otherwise(
-            F.col("stop_hits").cast("double") / n_tok.cast("double")
-        )
-        quality = F.round(
-            (
-                F.least(n_tok.cast("double") / F.lit(100.0), F.lit(1.0))
-                + F.least(stop * F.lit(4.0), F.lit(1.0))
-                + (F.lit(1.0) - F.least(punct * F.lit(5.0), F.lit(1.0)))
-            )
-            / F.lit(3.0),
-            6,
-        )
+        st = T.text_stat_cols()
         df = core.select(
             "row_id",
             "url",
             "lat",
             "lon",
-            n_tok.cast("int").alias("n_tokens"),
-            quality.alias("quality"),
-            T.lang_id_from_scores(
-                {lang: F.col(f"s_{lang}") for lang in T.LANG_STOPWORDS}
-            ).alias("lang_guess"),
+            F.col("n_tokens").cast("int").alias("n_tokens"),
+            st["quality"].alias("quality"),
+            st["lang"].alias("lang_guess"),
         )
         if min_quality is not None:
             df = df.filter(F.col("quality") >= F.lit(min_quality))

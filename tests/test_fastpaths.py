@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from geotables_jl_spark.core.geotable import GeoTable, georef
-from geotables_jl_spark.functions.textstats import FP_BASE, FP_MOD, fingerprint, fingerprint_fast
+from geotables_jl_spark.functions.textstats import FP_BASE, FP_MOD, fingerprint_fast
 from geotables_jl_spark.operators.dedup import embedding_neardup_pairs
 from geotables_jl_spark.operators.geojoin import knn_join
 
@@ -24,15 +24,16 @@ def _py_fp(s: str) -> int:
 
 def test_fingerprint_fast_matches_sql_and_python(spark):
     # includes non-BMP (surrogate-pair) input: emoji, math alphanumerics —
-    # Spark's split('')+ascii folds CODEPOINTS, as does the utf-32 fast path
+    # the fingerprint folds CODEPOINTS, as the utf-32 fast path does;
+    # NULL text → NULL (as the Spark SQL fold it replaced gave), '' → 0
     texts = ["", "a", "hello world", "x" * 700, "Üñíçødé text", "tab\tand\nnewline",
-             "emoji 😀 test", "𝕏 math 🎉🎉", "mixed 漢字 and 😺"]
+             "emoji 😀 test", "𝕏 math 🎉🎉", "mixed 漢字 and 😺", None]
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "id long, t string")
-    rows = df.select(
-        "id", fingerprint(F.col("t")).alias("sql_fp"), fingerprint_fast(F.col("t")).alias("fast_fp")
-    ).collect()
+    rows = df.select("id", fingerprint_fast(F.col("t")).alias("fast_fp")).collect()
+    assert len(rows) == len(texts)
     for r in rows:
-        assert r["sql_fp"] == r["fast_fp"] == _py_fp(texts[r["id"]])
+        t = texts[r["id"]]
+        assert r["fast_fp"] == (None if t is None else _py_fp(t))
 
 
 def test_blocked_cosine_matches_naive(spark):

@@ -389,3 +389,46 @@ def test_knn_join_sphere_rejects(spark):
         knn_join(reproject(g, "EPSG:3857"), reproject(g, "EPSG:3857"), k=1, metric="sphere")
     with _pt.raises(ValueError, match="unknown metric"):
         knn_join(g, g, k=1, metric="euclid")
+
+
+def test_point_prep_drops_null_nan_inf_rows(spark):
+    """s2_point_prep keeps only finite, non-zero directions in both
+    branches, so no kNN arm (kernel, rounds, shuffle) or dwithin join
+    emits a row for a NULL/NaN/±Inf coordinate. Spark orders NaN above
+    every number, so a bare ``nrm > 0`` guard would let NaN through."""
+    ll = spark.sql(
+        "SELECT * FROM VALUES (0L, 10.0D, 20.0D), (1L, -30.0D, 100.0D),"
+        " (2L, CAST(NULL AS DOUBLE), 5.0D), (3L, CAST('NaN' AS DOUBLE), 5.0D),"
+        " (4L, 1.0D, CAST('Infinity' AS DOUBLE)) AS t(lid, lat, lon)"
+    )
+    xyz = spark.sql(
+        "SELECT * FROM VALUES (0L, 1.0D, 0.5D, 0.25D), (1L, -0.5D, 1.0D, 0.0D),"
+        " (2L, CAST(NULL AS DOUBLE), 1.0D, 0.0D), (3L, CAST('NaN' AS DOUBLE), 1.0D, 0.0D),"
+        " (4L, CAST('Infinity' AS DOUBLE), 1.0D, 0.0D), (5L, 0.0D, 0.0D, 0.0D)"
+        " AS t(lid, x, y, z)"
+    )
+    R = _unit(40, 11)
+    right = spark.createDataFrame(
+        pd.DataFrame({"rid": np.arange(len(R)), "nx": R[:, 0], "ny": R[:, 1], "nz": R[:, 2]})
+    )
+    for left in (
+        s2_point_prep(ll, "lid", latlon=("lat", "lon")),
+        s2_point_prep(xyz, "lid", xyz=("x", "y", "z")),
+    ):
+        pts = left.toPandas().sort_values("lid")
+        assert pts["lid"].tolist() == [0, 1]
+        assert np.isfinite(pts[["nx", "ny", "nz"]].to_numpy(dtype=float)).all()
+        L = pts[["nx", "ny", "nz"]].to_numpy(dtype=float)
+        d2 = ((L[:, None, :] - R[None, :, :]) ** 2).sum(-1)
+        exp = {(lid, int(r)) for lid, row in zip([0, 1], d2) for r in np.argsort(row, kind="stable")[:3]}
+        for kw in (
+            {"broadcast_right": True},  # kernel arm
+            {"broadcast_right": True, "engine": "rounds"},
+            {"broadcast_right": False},  # shuffle arm
+        ):
+            got = s2_knn_join(left, right, 3, n_right=len(R), **kw).toPandas()
+            assert {(int(a), int(b)) for a, b in zip(got["lid"], got["rid"])} == exp, kw
+            assert np.isfinite(got["chord2"].to_numpy(dtype=float)).all(), kw
+        near = s2_dwithin_join(left, right, 2.0).toPandas()
+        assert sorted(set(near["lid"])) == [0, 1]
+        assert len(near) == 2 * len(R)

@@ -111,18 +111,15 @@ def test_ngram_shingled_injection_equivalence(spark, docs):
 
 
 def test_minhash_signatures_arrow_properties(spark, docs):
-    """The map-only Arrow signature kernel must agree with the JVM
-    explode+groupBy pipeline on every hash-independent property: same
-    doc set (empty-shingle docs excluded by both), values inside
-    [0, p), per-run determinism, plan with ZERO exchanges, and — the
-    property LSH actually relies on — identical docs get identical
+    """The map-only Arrow signature kernel's hash-independent
+    properties: one row per doc (every doc has ≥1 shingle), values
+    inside [0, p), per-run determinism, plan with ZERO exchanges, and —
+    the property LSH actually relies on — identical docs get identical
     signatures while the planted near-dup pair agrees on most
     positions."""
     arrow = DD.minhash_signatures_arrow(docs, "doc_id", "text", 64, 3)
-    jvm = DD.minhash_signatures(docs, "doc_id", "text", 64, 3)
     a_rows = {r["__id"]: [r[f"s{i}"] for i in range(64)] for r in arrow.collect()}
-    j_rows = {r["__id"]: [r[f"s{i}"] for i in range(64)] for r in jvm.collect()}
-    assert set(a_rows) == set(j_rows)  # same doc inclusion rule
+    assert set(a_rows) == {r["doc_id"] for r in docs.collect()}
     assert all(0 <= v < DD._MINHASH_P for sig in a_rows.values() for v in sig)
     # determinism: a second evaluation is bit-identical
     again = {r["__id"]: [r[f"s{i}"] for i in range(64)] for r in arrow.collect()}
@@ -138,21 +135,18 @@ def test_minhash_signatures_arrow_properties(spark, docs):
     )
     assert far < agree
     # map-only contract: no Exchange anywhere in the physical plan
-    # (the JVM twin pays one partial-agg exchange by design)
     plan = arrow._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan[:1500]
 
 
 def test_minhash_signatures_arrow_empty_docs(spark):
-    # short/empty TEXT still yields one full-token shingle (shingles()
-    # contract: short docs participate) — kernel and JVM twin agree
+    # short/empty TEXT still yields one full-token shingle (shingles_fast
+    # contract: short docs participate)
     rows = [(1, "a b c d"), (2, ""), (3, "xy")]
     df = spark.createDataFrame(rows, "doc_id: long, text: string")
     out = DD.minhash_signatures_arrow(df, "doc_id", "text", 8, 3).collect()
-    jvm = DD.minhash_signatures(df, "doc_id", "text", 8, 3).collect()
-    assert sorted(r["__id"] for r in out) == sorted(r["__id"] for r in jvm) == [1, 2, 3]
-    # an INJECTED shingled frame with truly empty arrays drops those
-    # docs (parity with the explode form, which emits no rows for them)
+    assert sorted(r["__id"] for r in out) == [1, 2, 3]
+    # an INJECTED shingled frame with truly empty arrays drops those docs
     sh = spark.createDataFrame(
         [(1, ["a b c"]), (2, []), (3, [])], "__id: long, __shset: array<string>"
     )
@@ -268,12 +262,13 @@ def test_ann_lsh_subset_of_exact(spark, vecs):
 
 
 def test_text_stats_and_langid(spark, docs):
-    out = {r["doc_id"]: r for r in docs.select(
+    st = TS.text_stat_cols()
+    out = {r["doc_id"]: r for r in TS.text_core_arrow(docs).select(
         "doc_id",
-        TS.token_count(F.col("text")).alias("n"),
-        TS.lang_id(F.col("text")).alias("lang"),
-        TS.fingerprint(F.col("text")).alias("fp"),
-        F.round(TS.stopword_ratio(F.col("text")), 6).alias("sr"),
+        F.col("n_tokens").alias("n"),
+        st["lang"].alias("lang"),
+        TS.fingerprint_fast(F.col("text")).alias("fp"),
+        F.round(st["stop_ratio"], 6).alias("sr"),
     ).collect()}
     assert out[5]["n"] == 2
     assert out[0]["n"] == len(BASE.split())
@@ -365,7 +360,7 @@ def test_canonical_url_and_latest_snapshot(spark):
 
 def test_shingles_short_doc(spark):
     df = spark.createDataFrame([(1, "a b")], "id long, text string")
-    sh = df.select(TS.shingles(F.col("text"), 3).alias("s")).collect()[0]["s"]
+    sh = df.select(TS.shingles_fast(F.col("text"), 3).alias("s")).collect()[0]["s"]
     assert sh == ["a b"]  # shorter than n → single whole-doc shingle
 
 

@@ -57,7 +57,6 @@ def test_tile_rollup_matches_direct(spark, tmp_path):
     out = geotag_pipeline(spark, str(tmp_path), SF, run_id="p3")
     got = {r["tile_id"]: (r["n_pages"], r["sum_tokens"]) for r in out["tiles"].collect()}
 
-    from geotables_jl_spark.functions import textstats as T
     from geotables_jl_spark.operators.dedup import dedup_exact
     from geotables_jl_spark.sources.webpages import extract_geotags, webpages_from_documents
 
@@ -70,7 +69,11 @@ def test_tile_rollup_matches_direct(spark, tmp_path):
                 F.floor((F.col("lat") + 90.0) / 10.0).cast("long") * 36
                 + F.floor((F.col("lon") + 180.0) / 10.0).cast("long")
             ).alias("tile_id"),
-            T.token_count(F.col("text")).alias("n_tokens"),
+            # whitespace token count in plain Spark SQL (the same
+            # expression the DuckDB oracle of webpages_tiles replays)
+            F.expr(
+                "CASE WHEN trim(text) = '' THEN 0 ELSE size(split(trim(text), '\\\\s+')) END"
+            ).alias("n_tokens"),
         )
         .groupBy("tile_id")
         .agg(F.count(F.lit(1)).alias("n_pages"), F.sum("n_tokens").alias("sum_tokens"))

@@ -1,13 +1,13 @@
-"""Parity tests: the Arrow repetition-stats kernel must be bit-identical
-to the HOF column-math twin (which the DuckDB oracle replays) on
+"""The Arrow repetition-stats kernel against golden values on
 adversarial texts — empty docs, whitespace-class edge cases (tab/VT/FF
-that Java \\s splits on but F.trim does not strip), unicode incl.
-non-BMP, duplicate-heavy and tie-heavy shapes, and nulls."""
+that Java \\s splits on but SQL trim does not strip), unicode incl.
+non-BMP, duplicate-heavy and tie-heavy shapes, and nulls — recorded from
+the higher-order-function column fold it replaced, and against the
+DuckDB oracle SQL on random documents."""
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import functions as F
 
 from geotables_jl_spark.functions import textstats as TS
 
@@ -34,27 +34,46 @@ ADVERSARIAL = [
 ]
 
 
+#: (doc_id, n_lines, n_dup_lines, dup_line_chars, line_chars, n_words,
+#:  word_chars, top_word_chars, top_bigram_chars) per ADVERSARIAL row
+GOLDEN = [
+    (0, 1, 0, 0, 0, 0, 0, 0, 0),
+    (1, 1, 0, 0, 1, 0, 0, 0, 0),
+    (2, 1, 0, 0, 2, 0, 0, 0, 0),
+    (3, 2, 2, 0, 0, 0, 0, 0, 0),
+    (4, 4, 4, 0, 0, 0, 0, 0, 0),
+    (5, 1, 0, 0, 1, 1, 1, 1, 0),
+    (6, 1, 0, 0, 7, 4, 4, 4, 9),
+    (7, 1, 0, 0, 9, 5, 5, 3, 6),
+    (8, 3, 3, 12, 12, 6, 9, 6, 12),
+    (9, 5, 4, 4, 5, 5, 5, 2, 6),
+    (10, 1, 0, 0, 27, 6, 22, 5, 10),
+    (11, 1, 0, 0, 16, 3, 12, 5, 9),
+    (12, 1, 0, 0, 21, 4, 18, 10, 20),
+    (13, 1, 0, 0, 8, 3, 6, 4, 6),
+    (14, 5, 5, 8, 8, 2, 8, 8, 9),
+    (15, 1, 0, 0, 100, 50, 50, 50, 147),
+    (16, 1, 0, 0, 66, 33, 33, 3, 9),
+    (17, 1, 0, 0, 15, 4, 12, 6, 7),
+    # NULL text: NULL stats, but no bigram mass
+    (18, None, None, None, None, None, None, None, 0),
+]
+
+
 def test_arrow_matches_hof_columns(spark):
     rows = [(i, t) for i, t in enumerate(ADVERSARIAL)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-
-    cols = TS.repetition_stats_cols(F.col("text"))
-    ref = (
-        df.select("doc_id", *[v.alias(k) for k, v in cols.items()])
-        .orderBy("doc_id")
-        .toPandas()
-    )
-    got = TS.repetition_stats_arrow(df).orderBy("doc_id").toPandas()
-
-    assert list(ref.columns) == list(got.columns)
-    for c in ref.columns:
-        a = ref[c].astype("Int64")
-        b = got[c].astype("Int64")
-        assert a.equals(b), f"{c}:\nref={a.tolist()}\ngot={b.tolist()}"
+    got = TS.repetition_stats_arrow(df).orderBy("doc_id")
+    assert got.columns == ["doc_id", *TS.REPETITION_COLS]
+    assert [tuple(r) for r in got.collect()] == GOLDEN
 
 
 def test_arrow_matches_on_random_docs(spark):
     import random
+
+    import duckdb
+
+    import __spark_entry__ as E
 
     rng = random.Random(7)
     vocab = ["the", "cat", "sat", "on", "mat", "a", "bb", "ccc", "dddd", "é"]
@@ -70,14 +89,9 @@ def test_arrow_matches_on_random_docs(spark):
             lines.append(rng.choice(lines))
         docs.append((i, "\n".join(lines)))
     df = spark.createDataFrame(docs, "doc_id long, text string")
+    got = sorted(tuple(r) for r in TS.repetition_stats_arrow(df).collect())
 
-    cols = TS.repetition_stats_cols(F.col("text"))
-    ref = (
-        df.select("doc_id", *[v.alias(k) for k, v in cols.items()])
-        .orderBy("doc_id")
-        .toPandas()
-    )
-    got = TS.repetition_stats_arrow(df).orderBy("doc_id").toPandas()
-    pd.testing.assert_frame_equal(
-        ref.astype("Int64", errors="ignore"), got.astype("Int64", errors="ignore")
-    )
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(docs, columns=["doc_id", "text"]))
+    want = sorted(con.sql(E.oracle_sql()["repetition_stats"]).fetchall())
+    assert got == want

@@ -1,7 +1,8 @@
 """S2 cell-id correctness: three independent implementations (numpy 4-bit
-LUT, per-level scalar reference, Spark codegen, generated DuckDB SQL)
-cross-checked bit-for-bit, plus structural invariants of the public S2
-scheme (known face tokens, Hilbert curve adjacency, parent containment)."""
+LUT, which ``with_s2_cell_arrow`` runs in Spark; per-level scalar
+reference; generated DuckDB SQL) cross-checked bit-for-bit, plus
+structural invariants of the public S2 scheme (known face tokens,
+Hilbert curve adjacency, parent containment)."""
 
 import duckdb
 import numpy as np
@@ -82,23 +83,22 @@ def test_parent_and_level():
             assert cu - lsb + 1 <= lu <= cu + lsb - 1
 
 
-def test_spark_codegen_bit_exact(spark):
+def test_spark_arrow_cell_bit_exact(spark):
     x, y, z = _rand_xyz(20000, seed=21)
     df = spark.createDataFrame(pd.DataFrame({"rid": np.arange(len(x)), "x": x, "y": y, "z": z}))
     for lvl in (0, 12, 30):
         out = (
-            s2.with_s2_cell(df, lvl, xyz=("x", "y", "z"))
+            s2.with_s2_cell_arrow(df, lvl, xyz=("x", "y", "z"))
             .select("rid", "s2_cell").toPandas().sort_values("rid")
         )
         assert (out["s2_cell"].to_numpy() == s2.s2_cell_from_xyz_np(x, y, z, lvl)).all()
-    # zero vector -> NULL, and the plan is pure codegen (no Python eval)
+    # zero vector -> NULL, and the plan is map-only (no Exchange)
     zdf = spark.createDataFrame(pd.DataFrame({"x": [0.0], "y": [0.0], "z": [0.0]}))
-    assert s2.with_s2_cell(zdf, 10, xyz=("x", "y", "z")).collect()[0]["s2_cell"] is None
-    plan = s2.with_s2_cell(df, 12, xyz=("x", "y", "z"))._jdf.queryExecution().executedPlan().toString()
-    for bad in ("BatchEvalPython", "ArrowEval", "MapInArrow", "MapInPandas"):
-        assert bad not in plan
+    assert s2.with_s2_cell_arrow(zdf, 10, xyz=("x", "y", "z")).collect()[0]["s2_cell"] is None
+    plan = s2.with_s2_cell_arrow(df, 12, xyz=("x", "y", "z"))._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
     # parent column math == recompute at coarser level
-    d2 = s2.with_s2_cell(df, 30, xyz=("x", "y", "z"))
+    d2 = s2.with_s2_cell_arrow(df, 30, xyz=("x", "y", "z"))
     got = (
         d2.select("rid", s2.s2_parent_col(F.col("s2_cell"), 9).alias("p"))
         .toPandas().sort_values("rid")["p"].to_numpy()
@@ -123,14 +123,18 @@ def test_duckdb_sql_bit_exact():
 
 
 def test_latlon_convenience(spark):
+    from geotables_jl_spark.operators.geojoin_s2 import s2_point_prep
+
     rng = np.random.default_rng(5)
     lat = rng.uniform(-90, 90, 8000)
     lon = rng.uniform(-180, 180, 8000)
     df = spark.createDataFrame(pd.DataFrame({"rid": np.arange(len(lat)), "lat": lat, "lon": lon}))
+    pts = s2_point_prep(df, "rid", latlon=("lat", "lon"))
     out = (
-        s2.with_s2_cell(df, 12, latlon=("lat", "lon"))
+        s2.with_s2_cell_arrow(pts, 12, xyz=("nx", "ny", "nz"))
         .select("rid", "s2_cell").toPandas().sort_values("rid")["s2_cell"].to_numpy()
     )
+    assert len(out) == len(lat)
     exp = s2.s2_cell_from_latlon_np(lat, lon, 12)
     # engine trig may differ by 1 ulp -> a point within ulp of a leaf
     # boundary can flip; must be rare and never more than that
@@ -173,11 +177,10 @@ def test_cap_cover_rigorous_with_disk_filter():
 
 
 def test_arrow_twin_nulls_nan_rows(spark):
-    """NULL/NaN coordinates must yield NULL cells in BOTH column twins
-    (and be dropped by the SQL twin). Neither degenerate input escapes
-    on its own: NULL/NaN comparisons are falsy so a face still gets
-    picked, and greatest(NULL, 0) swallows the NULL into ij=0 — the
-    pre-fix behavior was a deterministic-garbage id."""
+    """NULL/NaN/±Inf coordinates and the zero vector must yield NULL
+    cells from ``with_s2_cell_arrow`` (and be dropped by the SQL twin):
+    NaN passes a pure ``!= 0`` guard, and an infinite coordinate picks a
+    real face and clamps to a valid-looking edge cell without a mask."""
     pdf = pd.DataFrame(
         {
             "rid": [0, 1, 2, 3],
@@ -192,10 +195,7 @@ def test_arrow_twin_nulls_nan_rows(spark):
     df = df.union(
         spark.sql("SELECT 4L AS rid, CAST('NaN' AS DOUBLE) AS x, 0.1D AS y, 0.2D AS z")
     )
-    # rows 5/6: ±Infinity — abs(inf) comparisons are TRUE, so without an
-    # explicit mask the codegen twin picks a real face and clamps to a
-    # valid-looking edge cell while the Arrow twin's isfinite mask says
-    # NULL; the parity contract requires NULL from both
+    # rows 5/6: ±Infinity
     df = df.union(
         spark.sql(
             "SELECT 5L, CAST('Infinity' AS DOUBLE), 0.1D, 0.2D"
@@ -206,16 +206,16 @@ def test_arrow_twin_nulls_nan_rows(spark):
         r["rid"]: r["s2_cell"]
         for r in s2.with_s2_cell_arrow(df, 12, xyz=("x", "y", "z")).collect()
     }
-    want = {
-        r["rid"]: r["s2_cell"]
-        for r in s2.with_s2_cell(df, 12, xyz=("x", "y", "z")).collect()
-    }
+    want = {0: s2.s2_cell_scalar(0.6, 0.48, 0.64, 12), **{i: None for i in range(1, 7)}}
     assert got == want
     assert [got[i] for i in (1, 2, 3, 4, 5, 6)] == [None] * 6
     assert got[0] is not None
-    # latlon convenience path: NULL lat -> NULL cell
+    # latlon convenience path: a NULL lat has no cell (the row is dropped)
+    from geotables_jl_spark.operators.geojoin_s2 import s2_point_prep
+
     lldf = spark.sql("SELECT 1L AS rid, CAST(NULL AS DOUBLE) AS lat, 3.5D AS lon")
-    assert s2.with_s2_cell(lldf, 10, latlon=("lat", "lon")).collect()[0]["s2_cell"] is None
+    pts = s2_point_prep(lldf, "rid", latlon=("lat", "lon"))
+    assert s2.with_s2_cell_arrow(pts, 10, xyz=("nx", "ny", "nz")).collect() == []
     # SQL twin drops the degenerate rows instead
     con = duckdb.connect()
     con.register("pts", pd.DataFrame({

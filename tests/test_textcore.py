@@ -1,11 +1,16 @@
-"""Parity tests: text_core_arrow's integer components must reproduce the
-HOF/regexp column twins bit-for-bit, including the token_count quirks
-(SQL trim strips SPACES only, boundary empties from non-space whitespace
-prefixes count) — and the rebuilt ratio/quality/lang_id codegen tails
-must equal the original whole-column expressions."""
+"""text_core_arrow's integer components, the ``text_stat_cols`` codegen
+tail and ``shingles_fast`` against golden values. The goldens were
+recorded from the higher-order-function / regexp column expressions
+these kernels replaced (Spark ``split(trim(text), '\\s+')`` semantics),
+including their quirks: SQL trim strips SPACES only, and boundary
+empties from non-space whitespace prefixes count as tokens."""
 
 from __future__ import annotations
 
+import hashlib
+import json
+
+import duckdb
 from pyspark.sql import functions as F
 
 from geotables_jl_spark.functions import textstats as TS
@@ -13,7 +18,7 @@ from geotables_jl_spark.functions import textstats as TS
 ADVERSARIAL = [
     "",
     " ",
-    "\t",  # trim keeps it; split -> ['',''] -> token_count 2 (quirk)
+    "\t",  # trim keeps it; split -> ['',''] -> 2 tokens (quirk)
     "\tword",  # leading empty counts (quirk)
     "the cat and the hat",
     "THE The the",  # case-folded stopword hits
@@ -28,6 +33,45 @@ ADVERSARIAL = [
     None,
 ]
 
+#: (doc_id, n_chars, nonws_chars, nonclean_chars, n_tokens, stop_hits,
+#:  s_en, s_es, s_fr, s_de) per ADVERSARIAL row
+CORE_GOLDEN = [
+    (0, 0, 0, 0, 0, 0, 0, 0, 0, 0),
+    (1, 1, 0, 0, 0, 0, 0, 0, 0, 0),
+    (2, 1, 0, 1, 2, 0, 0, 0, 0, 0),
+    (3, 5, 4, 1, 2, 0, 0, 0, 0, 0),
+    (4, 19, 15, 0, 5, 3, 3, 0, 0, 0),
+    (5, 11, 9, 0, 3, 3, 3, 0, 0, 0),
+    (6, 13, 9, 0, 5, 0, 0, 5, 2, 0),
+    (7, 8, 6, 3, 3, 0, 0, 0, 0, 0),
+    (8, 16, 14, 4, 3, 0, 0, 0, 0, 0),
+    (9, 16, 12, 0, 3, 1, 1, 0, 0, 0),
+    (10, 19, 14, 0, 6, 0, 0, 2, 6, 0),
+    (11, 19, 15, 0, 5, 0, 0, 0, 0, 5),
+    (12, 500, 500, 0, 1, 0, 0, 0, 0, 0),
+    (13, 9, 5, 0, 5, 0, 0, 0, 0, 0),
+    (14, None, None, None, None, None, None, None, None, None),
+]
+
+#: (doc_id, n_tokens, n_bpe, n_chars_txt, punct_r, stop_r, mean_tok,
+#:  quality, lang_pred, fp) per non-NULL ADVERSARIAL row
+TAILS_GOLDEN = [
+    (0, 0, 0, 0, 0.0, 0.0, 0.0, 0.333333, "und", 0),
+    (1, 0, 0, 1, 0.0, 0.0, 0.0, 0.333333, "und", 32),
+    (2, 2, 0, 1, 1.0, 0.0, 0.0, 0.006667, "und", 9),
+    (3, 2, 1, 5, 0.2, 0.0, 2.0, 0.006667, "und", 11967123),
+    (4, 5, 5, 19, 0.0, 0.6, 3.0, 0.683333, "en", 577224333),
+    (5, 3, 3, 11, 0.0, 1.0, 3.0, 0.676667, "en", 913589574),
+    (6, 5, 5, 13, 0.0, 0.0, 1.8, 0.35, "es", 50809119),
+    (7, 3, 6, 8, 0.375, 0.0, 2.0, 0.01, "und", 781753905),
+    (8, 3, 3, 16, 0.25, 0.0, 4.666667, 0.01, "und", 197885938),
+    (9, 3, 3, 16, 0.0, 0.333333, 4.0, 0.676667, "en", 392641851),
+    (10, 6, 6, 19, 0.0, 0.0, 2.333333, 0.353333, "fr", 630658658),
+    (11, 5, 5, 19, 0.0, 0.0, 3.0, 0.35, "de", 430947143),
+    (12, 1, 1, 500, 0.0, 0.0, 500.0, 0.336667, "und", 68960947),
+    (13, 5, 5, 9, 0.0, 0.0, 1.0, 0.35, "und", 403607924),
+]
+
 
 def _twin_df(spark):
     rows = [(i, t) for i, t in enumerate(ADVERSARIAL)]
@@ -35,117 +79,116 @@ def _twin_df(spark):
 
 
 def test_core_components_match_twins(spark):
-    df = _twin_df(spark)
-    t = F.col("text")
-    ref = df.select(
-        "doc_id",
-        F.length(t).cast("long").alias("n_chars"),
-        F.length(F.regexp_replace(t, r"\s", "")).cast("long").alias("nonws_chars"),
-        (F.length(t) - F.length(F.regexp_replace(t, "[^0-9A-Za-z ]", "")))
-        .cast("long")
-        .alias("nonclean_chars"),
-        TS.token_count(t).cast("long").alias("n_tokens"),
-        TS._count_in(TS.tokens(t), TS.QUALITY_STOPWORDS).cast("long").alias("stop_hits"),
-        *[
-            TS._count_in(TS.tokens(t), words).cast("long").alias(f"s_{lang}")
-            for lang, words in TS.LANG_STOPWORDS.items()
-        ],
-    ).orderBy("doc_id").toPandas()
-    got = (
-        TS.text_core_arrow(df).drop("text").orderBy("doc_id").toPandas()
-    )
-    assert list(ref.columns) == list(got.columns)
-    for c in ref.columns:
-        a, b = ref[c].astype("Int64"), got[c].astype("Int64")
-        assert a.equals(b), f"{c}:\nref={a.tolist()}\ngot={b.tolist()}"
+    got = TS.text_core_arrow(_twin_df(spark)).drop("text").orderBy("doc_id")
+    assert got.columns == ["doc_id", *TS.TEXT_CORE_COLS, *[f"s_{l}" for l in TS.LANG_STOPWORDS]]
+    assert [tuple(r) for r in got.collect()] == CORE_GOLDEN
 
 
 def test_driver_tails_match_column_twins(spark):
-    """q_text_stats / q_lang_id rebuilt over the kernel must equal the
-    original all-column expressions value-for-value."""
-    import __spark_entry__ as E
-
+    """The q_text_stats select over the kernel (``text_stat_cols``, the
+    bpe regexp and ``fingerprint_fast``) must reproduce the golden
+    ratios, rounding and language ids value-for-value."""
     df = _twin_df(spark).where(F.col("text").isNotNull())
     t = F.col("text")
-    ref = df.select(
+    st = TS.text_stat_cols()
+    got = TS.text_core_arrow(df).select(
         "doc_id",
-        TS.token_count(t).cast("long").alias("n_tokens"),
+        F.col("n_tokens").cast("long").alias("n_tokens"),
         TS.bpe_token_count(t).cast("long").alias("n_bpe"),
-        F.length(t).cast("long").alias("n_chars_txt"),
-        F.round(TS.punct_ratio(t), 6).alias("punct_r"),
-        F.round(TS.stopword_ratio(t), 6).alias("stop_r"),
-        F.round(TS.mean_token_len(t), 6).alias("mean_tok"),
-        TS.quality_score(t).alias("quality"),
-        TS.lang_id(t).alias("lang_pred"),
-    ).orderBy("doc_id").toPandas()
+        F.col("n_chars").cast("long").alias("n_chars_txt"),
+        F.round(st["punct_ratio"], 6).alias("punct_r"),
+        F.round(st["stop_ratio"], 6).alias("stop_r"),
+        F.round(st["mean_token_len"], 6).alias("mean_tok"),
+        st["quality"].alias("quality"),
+        st["lang"].alias("lang_pred"),
+        TS.fingerprint_fast(t).alias("fp"),
+    ).orderBy("doc_id")
+    assert [tuple(r) for r in got.collect()] == TAILS_GOLDEN
 
-    core = TS.text_core_arrow(df)
-    n_tok, n_ch = F.col("n_tokens"), F.col("n_chars")
-    punct = F.when(n_ch == 0, F.lit(0.0)).otherwise(
-        F.col("nonclean_chars").cast("double") / n_ch.cast("double")
-    )
-    stop = F.when(n_tok == 0, F.lit(0.0)).otherwise(
-        F.col("stop_hits").cast("double") / n_tok.cast("double")
-    )
-    mean_tok = F.when(n_tok == 0, F.lit(0.0)).otherwise(
-        F.col("nonws_chars").cast("double") / n_tok.cast("double")
-    )
-    nd = n_tok.cast("double")
-    quality = F.round(
-        (
-            F.least(nd / F.lit(100.0), F.lit(1.0))
-            + F.least(stop * F.lit(4.0), F.lit(1.0))
-            + (F.lit(1.0) - F.least(punct * F.lit(5.0), F.lit(1.0)))
-        )
-        / F.lit(3.0),
-        6,
-    )
-    got = core.select(
-        "doc_id",
-        n_tok.cast("long").alias("n_tokens"),
-        TS.bpe_token_count(t).cast("long").alias("n_bpe"),
-        n_ch.cast("long").alias("n_chars_txt"),
-        F.round(punct, 6).alias("punct_r"),
-        F.round(stop, 6).alias("stop_r"),
-        F.round(mean_tok, 6).alias("mean_tok"),
-        quality.alias("quality"),
-        TS.lang_id_from_scores(
-            {lang: F.col(f"s_{lang}") for lang in TS.LANG_STOPWORDS}
-        ).alias("lang_pred"),
-    ).orderBy("doc_id").toPandas()
 
-    import pandas as pd
+SHINGLE_CASES = [
+    "the quick brown fox jumps over the lazy dog",
+    "a b", "a", "", " ", "   ", None,
+    "  leading and trailing  ", "tab\tsep", "line\nbreak",
+    "\t lead", "trail \t", "multi   space", "a b c d e f g",
+    "\x0b vert", "\r\n crlf mix \r", "ümlaut wörds hëre",
+    "dup dup dup dup", "x " * 300,
+    "nbsp is not java ws",  # java \s is ASCII-only
+]
 
-    pd.testing.assert_frame_equal(ref, got, check_exact=True)
+_EDGE = [["a b"], ["a"], [""], [""], [""], [""]]  # cases 1..6 at every n
+
+#: shingles per SHINGLE_CASES row, for n = 2, 3, 5
+SHINGLE_GOLDEN = {
+    2: [
+        ["the quick", "quick brown", "brown fox", "fox jumps", "jumps over",
+         "over the", "the lazy", "lazy dog"],
+        *_EDGE,
+        ["leading and", "and trailing"], ["tab sep"], ["line break"],
+        [" lead"], ["trail "], ["multi space"],
+        ["a b", "b c", "c d", "d e", "e f", "f g"],
+        [" vert"], [" crlf", "crlf mix", "mix "], ["ümlaut wörds", "wörds hëre"],
+        ["dup dup"], ["x x"], ["nbsp is", "is not", "not java", "java ws"],
+    ],
+    3: [
+        ["the quick brown", "quick brown fox", "brown fox jumps", "fox jumps over",
+         "jumps over the", "over the lazy", "the lazy dog"],
+        *_EDGE,
+        ["leading and trailing"], ["tab sep"], ["line break"],
+        [" lead"], ["trail "], ["multi space"],
+        ["a b c", "b c d", "c d e", "d e f", "e f g"],
+        [" vert"], [" crlf mix", "crlf mix "], ["ümlaut wörds hëre"],
+        ["dup dup dup"], ["x x x"], ["nbsp is not", "is not java", "not java ws"],
+    ],
+    5: [
+        ["the quick brown fox jumps", "quick brown fox jumps over",
+         "brown fox jumps over the", "fox jumps over the lazy", "jumps over the lazy dog"],
+        *_EDGE,
+        ["leading and trailing"], ["tab sep"], ["line break"],
+        [" lead"], ["trail "], ["multi space"],
+        ["a b c d e", "b c d e f", "c d e f g"],
+        [" vert"], [" crlf mix "], ["ümlaut wörds hëre"],
+        ["dup dup dup dup"], ["x x x x x"], ["nbsp is not java ws"],
+    ],
+}
 
 
 def test_shingles_fast_bit_parity_with_jvm(spark):
-    """shingles_fast (Arrow twin, the dedup hot path) must be
-    bit-identical to the JVM expression form `shingles` — including the
-    Spark edge semantics: trim strips ASCII spaces only, split keeps
-    leading/trailing empty tokens, NULL text yields [''] (concat_ws over
-    a NULL array), short docs yield their full token string, dedup keeps
-    first-occurrence order."""
-    cases = [
-        "the quick brown fox jumps over the lazy dog",
-        "a b", "a", "", " ", "   ", None,
-        "  leading and trailing  ", "tab\tsep", "line\nbreak",
-        "\t lead", "trail \t", "multi   space", "a b c d e f g",
-        "\x0b vert", "\r\n crlf mix \r", "ümlaut wörds hëre",
-        "dup dup dup dup", "x " * 300,
-        "nbsp is not java ws",  # java \s is ASCII-only
-    ]
+    """shingles_fast against the golden shingle lists of Spark's
+    expression semantics: trim strips ASCII spaces only, split keeps
+    leading/trailing empty tokens, NULL text yields [''] (concat_ws
+    over a NULL array), short docs yield their full token string, dedup
+    keeps first-occurrence order."""
     df = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(cases)], "id long, t string"
+        [(i, c) for i, c in enumerate(SHINGLE_CASES)], "id long, t string"
     )
     for n in (2, 3, 5):
-        a = {r["id"]: r["s"] for r in df.select("id", TS.shingles(F.col("t"), n).alias("s")).collect()}
-        b = {r["id"]: r["s"] for r in df.select("id", TS.shingles_fast(F.col("t"), n).alias("s")).collect()}
-        assert a == b, {i: (cases[i], a[i], b[i]) for i in a if a[i] != b[i]}
+        got = {r["id"]: r["s"] for r in df.select("id", TS.shingles_fast(F.col("t"), n).alias("s")).collect()}
+        assert [got[i] for i in range(len(SHINGLE_CASES))] == SHINGLE_GOLDEN[n], n
+
+
+#: sha256 of json.dumps(sorted (doc_id, shingles) pairs) over the sf0.001
+#: documents fixture, n=3, recorded from the JVM expression form
+FIXTURE_SHINGLES_SHA = "d1f652174918710a0f2bcdd0c1a4dfa464ba7e58cb5b9b56d403d997ad4901de"
 
 
 def test_shingles_fast_parity_on_documents_fixture(spark):
-    doc = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    a = {r["doc_id"]: r["s"] for r in doc.select("doc_id", TS.shingles(F.col("text"), 3).alias("s")).collect()}
-    b = {r["doc_id"]: r["s"] for r in doc.select("doc_id", TS.shingles_fast(F.col("text"), 3).alias("s")).collect()}
-    assert a == b
+    import __spark_entry__ as E
+
+    path = "/root/testdata/sf0.001/documents.parquet"
+    doc = spark.read.parquet(path)
+    got = sorted(
+        (r["doc_id"], r["s"])
+        for r in doc.select("doc_id", TS.shingles_fast(F.col("text"), 3).alias("s")).collect()
+    )
+    assert len(got) == 500
+    digest = hashlib.sha256(json.dumps(got, ensure_ascii=False).encode()).hexdigest()
+    assert digest == FIXTURE_SHINGLES_SHA
+    # the DuckDB oracle's shingle expression agrees set-for-set
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW documents AS SELECT * FROM '{path}'")
+    want = con.sql(
+        f"SELECT doc_id, {E._SQL_SHINGLES3} AS sh FROM (SELECT doc_id, {E.SQL_TOKS} AS toks FROM documents)"
+    ).fetchall()
+    assert {d: sorted(s) for d, s in want} == {d: sorted(s) for d, s in got}
+

@@ -168,9 +168,9 @@ def _synth_docs(spark, input_dir: str):
 def run_dedup_lsh(spark, input_dir: str) -> dict:
     """Webtext-payload flagship: MinHash-LSH near-dup candidate pairs
     (star mode — the dedup_clusters edge feed) over the page table.
-    Exercises the full shingle → xxhash64 → 64-permutation →
-    band-bucket window pipeline — one wide map stage plus the
-    (band, bucket) exchange."""
+    Exercises the full shingle → map-only Arrow MinHash kernel
+    (crc32, 64 permutations) → band-bucket window pipeline — one wide
+    map stage plus the (band, bucket) exchange."""
     from geotables_jl_spark.operators.dedup import minhash_lsh_pairs
 
     docs = _synth_docs(spark, input_dir)
@@ -181,31 +181,6 @@ def run_dedup_lsh(spark, input_dir: str) -> dict:
     ).write.format("noop").mode("overwrite").save()
     dt = time.perf_counter() - t0
     return {"job": "dedup_lsh", "rows": n_rows, "sec": round(dt, 3)}
-
-
-def run_dedup_lsh_arrow(spark, input_dir: str) -> dict:
-    """Same star-pair LSH but with signatures from the MAP-ONLY Arrow
-    MinHash kernel (``minhash_signatures_arrow``) — the edge feed
-    ``dedup_clusters`` defaults to since round 5. The explode + 64-perm
-    groupBy phases (the worst-scaling part of the round-4 dedup_lsh
-    decomposition, 2.4×/1→4) are replaced by one zero-shuffle Arrow
-    map; only the band-bucket exchange remains."""
-    from geotables_jl_spark.operators.dedup import (
-        _shingle_sets,
-        minhash_lsh_pairs,
-        minhash_signatures_arrow,
-    )
-
-    docs = _synth_docs(spark, input_dir)
-    n_rows = docs.count()
-    t0 = time.perf_counter()
-    shingled = _shingle_sets(docs, "row_id", "text", 3)
-    sig = minhash_signatures_arrow(None, shingled=shingled)
-    minhash_lsh_pairs(
-        docs, "row_id", "text", verify=False, pair_mode="star", signatures=sig
-    ).write.format("noop").mode("overwrite").save()
-    dt = time.perf_counter() - t0
-    return {"job": "dedup_lsh_arrow", "rows": n_rows, "sec": round(dt, 3)}
 
 
 def run_bloom(spark, input_dir: str) -> dict:
@@ -281,7 +256,6 @@ def main() -> None:
         "s2_knn": (run_s2_knn, (spark, input_dir, sf_dir)),
         "asof_join": (run_asof, (spark, input_dir)),
         "dedup_lsh": (run_dedup_lsh, (spark, input_dir)),
-        "dedup_lsh_arrow": (run_dedup_lsh_arrow, (spark, input_dir)),
         "bloom": (run_bloom, (spark, input_dir)),
     }
     only = os.environ.get("SPARK_GRAFT_SCALING_JOBS")
