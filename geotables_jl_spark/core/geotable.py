@@ -354,6 +354,35 @@ def georef_grid(
     )
 
 
+def grid_envelope_stats(g: GridMeta) -> dict:
+    """``envelope_stats`` of the ``georef_grid`` relation with metadata
+    ``g``, computed from the metadata alone (no Spark job).
+
+    Replays ``st_box``'s arithmetic: cell i spans ``[ox + i·sx, (ox +
+    i·sx) + sx]``, monotone in i, so the extent is set by the end cells.
+    Every cell is an envelope-exact box of width ``sx`` and height
+    ``sy`` (bit-equal to the data pass when the lattice is exact in
+    binary floating point, e.g. whole-degree tiles). Only valid for the
+    grid relation itself: rows filtered or reprojected after
+    ``georef_grid`` keep ``grid`` metadata that no longer describes them.
+    """
+    n = g.nx * g.ny
+    if n == 0:
+        keys = ("xmin", "ymin", "xmax", "ymax", "avg_w", "avg_h", "all_exact")
+        return {"n": 0, **dict.fromkeys(keys)}
+
+    def _span(o: float, s: float, k: int) -> tuple[float, float]:
+        lo = [float(o) + float(i) * float(s) for i in (0, k - 1)]
+        return min(lo), max(v + float(s) for v in lo)
+
+    xmin, xmax = _span(g.ox, g.sx, g.nx)
+    ymin, ymax = _span(g.oy, g.sy, g.ny)
+    return {
+        "n": n, "xmin": xmin, "ymin": ymin, "xmax": xmax, "ymax": ymax,
+        "avg_w": float(g.sx), "avg_h": float(g.sy), "all_exact": 1,
+    }
+
+
 def grid_view_box(gtb: GeoTable, x0: float, y0: float, x1: float, y1: float) -> GeoTable:
     """``view(gridtable, Box)`` stays RASTER (reference
     ``test/views.jl:12-19``: viewing a 10×10 grid with Box((1,1),(5,5))

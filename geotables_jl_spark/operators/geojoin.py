@@ -431,7 +431,9 @@ def geojoin(
     stats1/stats2: precomputed ``envelope_stats`` dicts per side. At
     10^12 rows the planning scans should come from table-level statistics
     (Iceberg column min/max + row counts) instead of an aggregate pass —
-    pass them here and the join plans without touching the data.
+    pass them here and the join plans without touching the data. They
+    are never derived from ``gtb.grid`` here: filtered or reprojected
+    tables keep grid metadata that no longer describes their rows.
 
     pred: "intersects" (default, ``geojoin.jl:51``), "within" (left ⊆
     right — reference ``issubset``), "contains", "knn" (k nearest right

@@ -7,15 +7,24 @@ Iceberg models them — an immutable data directory plus a manifest that
 commits it atomically:
 
 - a stage writes parquet to ``<root>/<stage>/data`` with a
-  ``_lineage_part`` column (the producing task's partition id);
-- per-partition row counts + schema + input fingerprint go into
-  ``<root>/<stage>/_MANIFEST.json``, written AFTER the data and moved
-  into place atomically (rename) — a crash mid-write leaves no
-  manifest, so the stage simply recomputes on resume (same contract as
-  an uncommitted Iceberg snapshot);
+  ``_lineage_part`` column (the producing task's partition id, always
+  stamped by the write itself — an inherited column is overwritten);
+- per-partition row counts, numeric column bounds, schema and input
+  fingerprint go into ``<root>/<stage>/_MANIFEST.json``, written AFTER
+  the data and moved into place atomically (rename) — a crash mid-write
+  leaves no manifest, so the stage simply recomputes on resume (same
+  contract as an uncommitted Iceberg snapshot). The previous manifest is
+  deleted before the write starts, so a failed recompute cannot leave
+  it pointing at an emptied directory;
+- the manifest is snapshot METADATA, answered without a Spark job:
+  counts and bounds come from the parquet footers the write just left
+  (Iceberg's per-file ``record_count`` and lower/upper bounds), the
+  schema is the frame's own JSON schema (Iceberg's schema-id), so
+  reading a snapshot back never infers a schema;
 - resume = if a manifest exists and its fingerprint matches the
-  caller's current inputs, read the parquet back instead of recomputing
-  (snapshot read), else recompute and commit a new snapshot.
+  caller's current inputs, read the parquet back under the manifest's
+  schema instead of recomputing (snapshot read), else recompute and
+  commit a new snapshot.
 
 Swapping the parquet+manifest pair for ``df.writeTo(table)`` +
 snapshot-id bookkeeping is a sink change only — the stage API and
@@ -27,15 +36,24 @@ resume hit) for the run-level observability the north star asks for.
 
 from __future__ import annotations
 
+import glob
 import json
+import math
 import os
 import time
 from collections.abc import Callable
 
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 LINEAGE_COL = "_lineage_part"
+
+# numeric types whose parquet min/max statistics convert to exact JSON
+# numbers (decimals are left out: JSON would round them)
+_BOUNDED_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.FloatType, T.DoubleType)
 
 
 class Checkpointer:
@@ -51,33 +69,32 @@ class Checkpointer:
 
         ``fingerprint`` identifies the stage's logical inputs (upstream
         snapshot ids, parameters, code version); a committed snapshot
-        with the same fingerprint is reused without recompute.
+        with the same fingerprint is reused without recompute. Neither
+        branch launches a Spark job beyond the stage's own write.
         """
         manifest = self._manifest_path(name)
         data_dir = os.path.join(self.root, name, "data")
         existing = self._read_manifest(manifest)
         if existing is not None and existing.get("fingerprint") == fingerprint:
             self._log(name, "resume_hit", existing)
-            return self.spark.read.parquet(data_dir)
+            return self.spark.read.schema(_schema(existing)).parquet(data_dir)
 
         t0 = time.time()
-        df = build()
-        if LINEAGE_COL not in df.columns:
-            df = df.withColumn(LINEAGE_COL, F.spark_partition_id())
+        df = build().withColumn(LINEAGE_COL, F.spark_partition_id())
+        self.invalidate(name)  # overwrite empties data/ even when the write then fails
         df.write.mode("overwrite").parquet(data_dir)
 
-        out = self.spark.read.parquet(data_dir)
-        part_counts = {
-            str(r[LINEAGE_COL]): r["cnt"]
-            for r in out.groupBy(LINEAGE_COL).agg(F.count(F.lit(1)).alias("cnt")).collect()
-        }
+        out = self.spark.read.schema(df.schema).parquet(data_dir)
+        bounded = [f.name for f in out.schema.fields if isinstance(f.dataType, _BOUNDED_TYPES)]
+        part_counts, bounds = footer_stats(data_dir, bounded)
         meta = {
             "stage": name,
             "fingerprint": fingerprint,
             "rows": int(sum(part_counts.values())),
             "partitions": len(part_counts),
             "partition_rows": part_counts,
-            "schema": out.schema.simpleString(),
+            "bounds": bounds,
+            "schema": out.schema.json(),
             "wall_sec": round(time.time() - t0, 3),
             "committed_at": time.time(),
         }
@@ -104,9 +121,11 @@ class Checkpointer:
             return None
         try:
             with open(path) as f:
-                return json.load(f)
-        except (json.JSONDecodeError, OSError):
-            return None  # torn manifest == uncommitted snapshot
+                meta = json.load(f)
+            _schema(meta)
+            return meta
+        except (OSError, ValueError, TypeError, KeyError, AttributeError):
+            return None  # torn manifest (or schema) == uncommitted snapshot
 
     @staticmethod
     def _commit_manifest(path: str, meta: dict) -> None:
@@ -126,3 +145,53 @@ class Checkpointer:
         }
         with open(os.path.join(self.root, "metrics.jsonl"), "a") as f:
             f.write(json.dumps(line) + "\n")
+
+
+def _schema(meta: dict) -> T.StructType:
+    """The snapshot schema a manifest pins (``StructType.json()``)."""
+    return T.StructType.fromJson(json.loads(meta["schema"]))
+
+
+def footer_stats(data_dir: str, bounded: list[str]) -> tuple[dict[str, int], dict[str, list]]:
+    """Per-partition row counts and column bounds of a snapshot, read from
+    the parquet footers of ``data_dir/*.parquet`` (no Spark job, no data
+    page read in the common case).
+
+    A row group's partition is its ``LINEAGE_COL`` min, which equals its
+    max because every write task stamps its own id. A row group without
+    that statistic, or with min != max, is counted by reading just that
+    column of just that row group. ``bounded`` names top-level numeric
+    columns; each gets ``[min, max]`` over all row groups, and is left
+    out if any non-empty row group lacks min/max or has a NaN bound.
+    """
+    part_rows: dict[str, int] = {}
+    bounds: dict[str, list] = {}
+    unbounded: set[str] = set()
+    for path in sorted(glob.glob(os.path.join(data_dir, "*.parquet"))):
+        md = pq.read_metadata(path)
+        for i in range(md.num_row_groups):
+            rg = md.row_group(i)
+            if rg.num_rows == 0:
+                continue
+            stats = {
+                rg.column(j).path_in_schema: rg.column(j).statistics for j in range(rg.num_columns)
+            }
+            lin = stats.get(LINEAGE_COL)
+            if lin is not None and lin.has_min_max and lin.min == lin.max:
+                key = str(lin.min)
+                part_rows[key] = part_rows.get(key, 0) + rg.num_rows
+            else:
+                with pq.ParquetFile(path) as pf:
+                    col = pf.read_row_group(i, columns=[LINEAGE_COL])[LINEAGE_COL]
+                for vc in pc.value_counts(col).to_pylist():
+                    key = str(vc["values"])
+                    part_rows[key] = part_rows.get(key, 0) + vc["counts"]
+            for c in bounded:
+                s = stats.get(c)
+                if s is None or not s.has_min_max or math.isnan(s.min) or math.isnan(s.max):
+                    unbounded.add(c)
+                elif c in bounds:
+                    bounds[c] = [min(bounds[c][0], s.min), max(bounds[c][1], s.max)]
+                else:
+                    bounds[c] = [s.min, s.max]
+    return part_rows, {c: b for c, b in bounds.items() if c not in unbounded}

@@ -82,3 +82,31 @@ def test_2d_grid_ops_reject_nd_meta_and_vice_versa(spark):
     g2 = georef_grid(spark, 3, 3)
     with pytest.raises(ValueError, match="N-d"):
         grid_subset_nd(g2, [(0, 1), (0, 1)])
+
+
+@pytest.mark.parametrize(
+    "nx,ny,ox,oy,sx,sy",
+    [
+        (36, 18, -180.0, -90.0, 10.0, 10.0),
+        (10, 10, 0.0, 0.0, 1.0, 1.0),
+        (7, 3, 0.1, -0.3, 0.1, 0.7),
+        (5, 4, 3.0, 2.0, -1.5, -0.5),
+        (0, 5, 0.0, 0.0, 1.0, 1.0),
+    ],
+)
+def test_grid_envelope_stats_match_data_pass(spark, nx, ny, ox, oy, sx, sy):
+    """Planning statistics of a raster from its metadata equal the
+    ``envelope_stats`` pass over the generated cells: counts and extent
+    bit-exactly, mean cell size up to rounding of the cell widths."""
+    from geotables_jl_spark.core.geotable import georef_grid, grid_envelope_stats
+    from geotables_jl_spark.geom.cells import envelope_stats
+
+    g = georef_grid(spark, nx, ny, ox=ox, oy=oy, sx=sx, sy=sy)
+    got, want = grid_envelope_stats(g.grid), envelope_stats(g.df)
+    assert set(got) == set(want)
+    for key in ("n", "xmin", "ymin", "xmax", "ymax", "all_exact"):
+        assert got[key] == want[key], key
+    for key in ("avg_w", "avg_h"):
+        assert got[key] == pytest.approx(want[key], rel=1e-12), key
+    if sx == 10.0:
+        assert got == want

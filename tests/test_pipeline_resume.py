@@ -4,9 +4,11 @@ and correctness of the final tile rollup vs a direct computation."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from geotables_jl_spark.plans.pipeline import geotag_pipeline
@@ -83,6 +85,9 @@ def test_tile_rollup_matches_direct(spark, tmp_path):
 
 
 def test_per_partition_lineage_in_snapshots(spark, tmp_path):
+    """Every data file of every stage holds exactly one lineage value: the
+    id of the task that wrote it, which Spark also puts in the file name
+    (``part-<id>-...``). dedup does not inherit extract's values."""
     root = str(tmp_path)
     geotag_pipeline(spark, root, SF, run_id="p4")
     from geotables_jl_spark.plans.checkpoint import LINEAGE_COL, Checkpointer
@@ -93,3 +98,53 @@ def test_per_partition_lineage_in_snapshots(spark, tmp_path):
         assert m is not None and m["rows"] == sum(m["partition_rows"].values())
         snap = spark.read.parquet(os.path.join(root, "p4", stage, "data"))
         assert LINEAGE_COL in snap.columns
+        files = glob.glob(os.path.join(root, "p4", stage, "data", "*.parquet"))
+        assert len(files) == m["partitions"], stage
+        for f in files:
+            vals = set(pq.read_table(f, columns=[LINEAGE_COL])[LINEAGE_COL].to_pylist())
+            assert vals == {int(os.path.basename(f).split("-")[1])}, (stage, f, vals)
+
+
+def test_manifests_match_snapshot_oracle(spark, tmp_path):
+    """Each stage's manifest equals a scan of its snapshot: rows and
+    per-partition rows a groupBy count, lat/lon bounds Spark's min/max,
+    and the returned frame's schema the inferred one. A resume of the
+    whole pipeline then launches no Spark job."""
+    from geotables_jl_spark.core.geotable import georef
+    from geotables_jl_spark.geom.cells import envelope_stats
+    from geotables_jl_spark.plans.checkpoint import LINEAGE_COL
+    from geotables_jl_spark.plans.pipeline import _page_stats
+
+    root = str(tmp_path)
+    out = geotag_pipeline(spark, root, SF, run_id="p5")
+    manifests = {}
+    for stage, df in out.items():
+        with open(os.path.join(root, "p5", stage, "_MANIFEST.json")) as f:
+            m = manifests[stage] = json.load(f)
+        snap = spark.read.parquet(os.path.join(root, "p5", stage, "data"))
+        counts = {
+            str(r[LINEAGE_COL]): r["cnt"]
+            for r in snap.groupBy(LINEAGE_COL).agg(F.count(F.lit(1)).alias("cnt")).collect()
+        }
+        assert m["partition_rows"] == counts, stage
+        assert m["rows"] == snap.count() > 0, stage
+        if "lat" in snap.columns:
+            mm = snap.agg(F.min("lat"), F.max("lat"), F.min("lon"), F.max("lon")).collect()[0]
+            assert m["bounds"]["lat"] == [mm[0], mm[1]], stage
+            assert m["bounds"]["lon"] == [mm[2], mm[3]], stage
+        assert df.schema == snap.schema, stage
+
+    # the tile join's page-side plan statistics equal the data pass
+    pages = georef(spark.read.parquet(os.path.join(root, "p5", "stats", "data")), coords=["lat", "lon"])
+    assert _page_stats(manifests["stats"]) == envelope_stats(pages.df)
+
+    sc = spark.sparkContext
+    sc.setJobGroup("pipeline_resume", "pipeline_resume")
+    try:
+        again = geotag_pipeline(spark, root, SF, run_id="p5")
+    finally:
+        sc.setJobGroup("", "")
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup("pipeline_resume") == []
+    assert [e["event"] for e in _events(root, "p5")[4:]] == ["resume_hit"] * 4
+    assert sorted(again["tiles"].collect()) == sorted(out["tiles"].collect())
