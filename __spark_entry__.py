@@ -958,14 +958,14 @@ def q_s2_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2 kNN join via cell-ring expansion (the north rule's "kNN via
     cell-ring expansion over the cell index with distance refinement",
     sphere-correct) in the PRODUCTION orientation — k=5 nearest
-    directory entries (suppliers) per page, broadcast directory — so the
-    gate replays the one-map-stage kernel arm (geom/s2_knn_kernel.py)
-    bit-for-bit against a window-function SQL oracle: in-kernel
-    certify-or-escalate, tie order (chord2, rid). The shuffle arm (huge
-    right side) keeps brute-force pytest coverage in
-    tests/test_geojoin_s2.py. ``n_right`` comes from the parquet footer
-    count (metadata-only job) — the stats-injection escape hatch, not a
-    table scan."""
+    directory entries (suppliers) per page; the small directory picks
+    the one-map-stage kernel arm (geom/s2_knn_kernel.py), so the gate
+    replays it bit-for-bit against a window-function SQL oracle:
+    in-kernel certify-or-escalate, tie order (chord2, rid). The rounds
+    arm (huge or non-integral-id directory) keeps brute-force pytest
+    coverage in tests/test_geojoin_s2.py. ``n_right`` comes from the
+    parquet footer count (metadata-only job) — the stats-injection escape
+    hatch, not a table scan."""
     from geotables_jl_spark.operators.geojoin_s2 import s2_knn_join
 
     n_supp = spark.read.parquet(f"{sf_dir}/supplier.parquet").count()
@@ -974,7 +974,6 @@ def q_s2_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         _supp_sphere(spark, sf_dir, "rid"),
         5,
         n_right=n_supp,
-        broadcast_right=True,
     )
     return out.select(
         "lid", "rid", "chord2", F.col("rank").cast("long").alias("rank")
@@ -1213,10 +1212,13 @@ def _sql_lang_scores() -> str:
     return ", ".join(parts)
 
 
+# NULL text → NULL and '' → 0, like fingerprint_fast: the split of ''
+# is [''] (unicode('') = -1), so empty pieces are filtered out
 _SQL_FP = (
-    "list_reduce(list_prepend(CAST(0 AS BIGINT), "
-    "list_transform(regexp_split_to_array({col}, ''), c -> CAST(unicode(c) AS BIGINT))), "
-    "(acc, c) -> (acc*31 + c) % 1000000007)"
+    "CASE WHEN {col} IS NOT NULL THEN list_reduce(list_prepend(CAST(0 AS BIGINT), "
+    "list_transform(list_filter(regexp_split_to_array({col}, ''), c -> c <> ''), "
+    "c -> CAST(unicode(c) AS BIGINT))), "
+    "(acc, c) -> (acc*31 + c) % 1000000007) END"
 )
 
 _SQL_SHINGLES3 = (

@@ -1,22 +1,22 @@
-"""In-kernel S2 kNN for a broadcast-able directory — the spherical twin
-of ``geom/knn_kernel.py``.
+"""In-kernel S2 kNN for a small directory — the kernel arm of
+``s2_knn_join`` and the spherical counterpart of ``geom/knn_kernel.py``.
 
-The DataFrame broadcast arm of ``s2_knn_join`` materializes every
-(page, candidate) pair as a JVM join row and ships it through Arrow to
-the streaming top-k kernel; at ~23 cover cells per directory point that
-is tens of candidate rows per page and the Arrow/row overhead dominates
-(measured 62k pages/s on 8 cores vs the planar kernel's 155k/s on ONE).
-This module keeps the exact same algorithm — cell-ring expansion over
-the S2 index with chord-distance refinement, certify-or-escalate — but
-runs it entirely inside one Arrow map stage against a resident broadcast
-directory, so the whole kNN job is a single narrow map over the page
-scan (the shape the north rule's scaling criterion wants):
+A DataFrame pipeline materializes every (page, candidate) pair as a JVM
+join row; at ~23 cover cells per directory point that is tens of
+candidate rows per page and the row overhead dominates (a broadcast-join
+pipeline measured 62k pages/s on 8 cores vs the planar kernel's 155k/s
+on ONE). This module runs the same algorithm as the rounds arm —
+cell-ring expansion over the S2 index with chord-distance refinement,
+certify-or-escalate — entirely inside one Arrow map stage against a
+resident broadcast directory, so the whole kNN job is a single narrow
+map over the page scan (the shape the north rule's scaling criterion
+wants):
 
 - the directory rides to workers once as plain numpy (~32 B/point);
 - per (chord, level) the worker builds a cap-cover CSR (cell → slice of
   directory point indices whose chord-cap cover contains the cell) —
-  memoized across batches, exactly the structure the DataFrame arm's
-  ``_cover_explode`` broadcast builds per round;
+  memoized across batches, the structure the rounds arm's
+  ``_cover_explode`` builds as join rows;
 - pages probe with their own single level-``level`` cell, candidates
   gather through count-sorted padded chunks (bounded working set), and
   rows whose k-th candidate lies within the covered chord certify
@@ -26,7 +26,7 @@ scan (the shape the north rule's scaling criterion wants):
   brute-forces against the full directory.
 
 All distances are SQUARED chords (dx²+dy²+dz² — never a sqrt), so
-results are bit-identical to the DataFrame arm's codegen ``_chord2``
+results are bit-identical to the rounds arm's codegen ``_chord2``
 refine and to the DuckDB oracle; ties order by (chord2, rid) both ways.
 
 Reference semantics: GeoTables.jl kNN search over the domain
@@ -72,9 +72,9 @@ class CoverIndex:
     """cell → slice of directory point indices whose chord-cap cover
     contains the cell, at one (chord, level). Built vectorized from
     ``s2_cap_cells_np`` (the same rigorous interval-arithmetic cover the
-    DataFrame arm explodes); within a cell's slice, point indices are
+    rounds arm explodes); within a cell's slice, point indices are
     ascending = rid order, so top-k column-position ties resolve by rid
-    exactly like the DataFrame arm's (chord2, rid) ordering."""
+    exactly like the rounds arm's (chord2, rid) ordering."""
 
     def __init__(self, base: SphereIndex, chord: float, level: int):
         rows, cells = s2.s2_cap_cells_np(base.x, base.y, base.z, chord, level)

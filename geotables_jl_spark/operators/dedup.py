@@ -593,6 +593,7 @@ def embedding_neardup_pairs(
     id_col: str,
     vec_col: str,
     threshold: float = 0.95,
+    *,
     use_lsh: bool | None = None,
     planes: int = 16,
     bands: int = 32,

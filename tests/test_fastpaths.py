@@ -34,6 +34,15 @@ def test_fingerprint_fast_matches_sql_and_python(spark):
     for r in rows:
         t = texts[r["id"]]
         assert r["fast_fp"] == (None if t is None else _py_fp(t))
+    # the DuckDB oracle twin agrees, NULL and '' included
+    import duckdb
+    import pandas as pd
+
+    from __spark_entry__ import _SQL_FP
+
+    tdf = pd.DataFrame({"t": texts})  # noqa: F841 — read by the SQL below
+    sql_fp = [r[0] for r in duckdb.sql(f"SELECT {_SQL_FP.format(col='t')} FROM tdf").fetchall()]
+    assert sql_fp == [None if t is None else _py_fp(t) for t in texts]
 
 
 def test_blocked_cosine_matches_naive(spark):

@@ -1,7 +1,9 @@
 """S2-indexed spherical joins: the cap cover must be a rigorous superset
 (adversarial boundary sampling), and dwithin/kNN joins must match numpy
 brute force exactly — including tie order, salting, and the cell-ring
-escalation path (sparse right side forces multiple rounds)."""
+escalation path (sparse right side forces multiple rounds). Every
+brute-force kNN check runs on both kNN arms: the small fixtures pick the
+kernel arm, and a zero threshold forces the rounds arm."""
 
 import numpy as np
 import pandas as pd
@@ -9,11 +11,33 @@ import pytest
 from pyspark.sql import functions as F
 
 from geotables_jl_spark.geom import s2
+from geotables_jl_spark.operators import geojoin_s2
 from geotables_jl_spark.operators.geojoin_s2 import (
     s2_dwithin_join,
     s2_knn_join,
     s2_point_prep,
 )
+
+_KERNEL_ROWS = geojoin_s2.S2_BROADCAST_ROWS
+
+
+def _per_arm(monkeypatch, run):
+    """Yield (arm, run()) for the kernel arm at the real threshold, then
+    for the rounds arm forced by a zero threshold; checks that each run
+    took the arm it is named after."""
+    real = geojoin_s2._knn_kernel_arm
+    for arm, rows in (("kernel", _KERNEL_ROWS), ("rounds", 0)):
+        calls = []
+
+        def spy(*a):
+            calls.append(a)
+            return real(*a)
+
+        monkeypatch.setattr(geojoin_s2, "_knn_kernel_arm", spy)
+        monkeypatch.setattr(geojoin_s2, "S2_BROADCAST_ROWS", rows)
+        out = run()
+        assert bool(calls) == (arm == "kernel"), arm
+        yield arm, out
 
 
 def _unit(n, seed):
@@ -110,19 +134,19 @@ def test_dwithin_salted_same_result(sphere_dfs):
     assert (base["rid"].to_numpy() == salted["rid"].to_numpy()).all()
 
 
-def test_knn_matches_bruteforce_with_ties(sphere_dfs):
+def test_knn_matches_bruteforce_with_ties(sphere_dfs, monkeypatch):
     L, R, lp, rp = sphere_dfs
     k = 5
-    got = s2_knn_join(lp, rp, k, n_right=2000).toPandas()
     D = np.sqrt(((L[:, None, :] - R[None, :, :]) ** 2).sum(-1))
     exp = np.argsort(D, axis=1, kind="stable")[:, :k]
-    assert len(got) == 300 * k
-    for lid in range(300):
-        g = got[got["lid"] == lid].sort_values("rank")["rid"].to_numpy()
-        assert (g == exp[lid]).all(), lid
+    for arm, got in _per_arm(monkeypatch, lambda: s2_knn_join(lp, rp, k, n_right=2000).toPandas()):
+        assert len(got) == 300 * k, arm
+        for lid in range(300):
+            g = got[got["lid"] == lid].sort_values("rank")["rid"].to_numpy()
+            assert (g == exp[lid]).all(), (arm, lid)
 
 
-def test_knn_sparse_right_escalates(sphere_dfs):
+def test_knn_sparse_right_escalates(sphere_dfs, monkeypatch):
     """8 right points force the ring expansion through to the full
     sphere — the graceful brute-force degradation, still exact."""
     L, _, lp, _ = sphere_dfs
@@ -132,13 +156,13 @@ def test_knn_sparse_right_escalates(sphere_dfs):
         pd.DataFrame({"rid": np.arange(8), "x": R2[:, 0], "y": R2[:, 1], "z": R2[:, 2]})
     )
     rp2 = s2_point_prep(rdf, "rid", xyz=("x", "y", "z"))
-    got = s2_knn_join(lp, rp2, 3, n_right=8).toPandas()
     D = np.sqrt(((L[:, None, :] - R2[None, :, :]) ** 2).sum(-1))
     exp = np.argsort(D, axis=1, kind="stable")[:, :3]
-    assert len(got) == 300 * 3
-    for lid in range(300):
-        g = got[got["lid"] == lid].sort_values("rank")["rid"].to_numpy()
-        assert (g == exp[lid]).all(), lid
+    for arm, got in _per_arm(monkeypatch, lambda: s2_knn_join(lp, rp2, 3, n_right=8).toPandas()):
+        assert len(got) == 300 * 3, arm
+        for lid in range(300):
+            g = got[got["lid"] == lid].sort_values("rank")["rid"].to_numpy()
+            assert (g == exp[lid]).all(), (arm, lid)
 
 
 def test_dwithin_expand_right_matches(sphere_dfs):
@@ -158,128 +182,90 @@ def test_dwithin_expand_right_matches(sphere_dfs):
 
 
 def test_knn_expand_right_matches_bruteforce(sphere_dfs):
-    """kNN with the right-side cover explode (broadcast orientation),
-    including escalation rounds (sparse right forces them), stays exact
-    vs numpy brute force with (distance, rid) tie order."""
+    """kNN with the right-side cover explode: the rounds arm broadcasts a
+    small directory and explodes it, which string rids force (the kernel
+    arm takes integral ids only). Exact vs numpy brute force with
+    (distance, rid) tie order, including certify/escalate rounds."""
     L, R, lp, rp = sphere_dfs
-    k = 5
-    got = s2_knn_join(lp, rp, k, n_right=2000, broadcast_right=True).toPandas()
+    rps = rp.withColumn("rid", F.format_string("r%04d", "rid"))  # string order = numeric
     D = np.sqrt(((L[:, None, :] - R[None, :, :]) ** 2).sum(-1))
-    exp = np.argsort(D, axis=1, kind="stable")[:, :k]
-    assert len(got) == 300 * k
-    for lid in range(300):
-        g = got[got["lid"] == lid].sort_values("rank")["rid"].to_numpy()
-        assert (g == exp[lid]).all(), lid
-    # tiny chord0 forces several certify/escalate rounds through the
-    # right-explode arm too
-    got2 = s2_knn_join(lp, rp, 2, chord0=1e-3, broadcast_right=True).toPandas()
-    exp2 = np.argsort(D, axis=1, kind="stable")[:, :2]
-    assert len(got2) == 300 * 2
-    for lid in range(300):
-        g = got2[got2["lid"] == lid].sort_values("rank")["rid"].to_numpy()
-        assert (g == exp2[lid]).all(), lid
+    # a tiny chord0 forces several certify/escalate rounds
+    for k, kw in ((5, {"n_right": 2000}), (2, {"chord0": 1e-3})):
+        got = s2_knn_join(lp, rps, k, **kw).toPandas()
+        exp = np.argsort(D, axis=1, kind="stable")[:, :k]
+        assert len(got) == 300 * k, kw
+        for lid in range(300):
+            g = got[got["lid"] == lid].sort_values("rank")["rid"].str[1:].astype(int)
+            assert (g.to_numpy() == exp[lid]).all(), (kw, lid)
 
 
-def test_knn_max_rounds_exhausted_fallback(sphere_dfs):
-    """max_rounds=1 with a tiny chord0 certifies nothing in the loop, so
-    every row takes the final full-sphere pass — which must stay exact
-    on both the shuffle and broadcast arms."""
+def test_knn_max_rounds_exhausted_fallback(sphere_dfs, monkeypatch):
+    """max_rounds=1 with a tiny chord0 certifies nothing in the rounds
+    arm's loop, so every row takes the final full-sphere pass — which
+    must stay exact; the kernel arm escalates in-kernel instead."""
     L, R, lp, rp = sphere_dfs
     D = np.sqrt(((L[:, None, :] - R[None, :, :]) ** 2).sum(-1))
     exp = np.argsort(D, axis=1, kind="stable")[:, :3]
-    for bc in (None, True):
-        got = s2_knn_join(
-            lp, rp, 3, chord0=1e-6, max_rounds=1, n_right=2000, broadcast_right=bc
-        ).toPandas()
-        assert len(got) == 300 * 3, bc
+
+    def run():
+        return s2_knn_join(lp, rp, 3, chord0=1e-6, max_rounds=1, n_right=2000).toPandas()
+
+    for arm, got in _per_arm(monkeypatch, run):
+        assert len(got) == 300 * 3, arm
         for lid in range(300):
             g = got[got["lid"] == lid].sort_values("rank")["rid"].to_numpy()
-            assert (g == exp[lid]).all(), (bc, lid)
+            assert (g == exp[lid]).all(), (arm, lid)
 
 
-def test_topk_stream_batch_boundaries(spark):
-    """The no-shuffle top-k kernel must be exact when a lid's candidate
-    run spans Arrow batch boundaries: force 7-row batches over runs of
-    varying length (1..13, some > k, some < k, duplicate chord2 ties)."""
-    rng = np.random.default_rng(11)
-    rows = []
-    for lid in range(40):
-        m = 1 + (lid * 7) % 13
-        c2 = np.round(rng.uniform(0, 1, m), 2)  # coarse → real ties
-        for j in range(m):
-            rows.append((lid, 1000 + j, float(c2[j])))
-    pdf = pd.DataFrame(rows, columns=["lid", "rid", "chord2"])
-    from geotables_jl_spark.operators.geojoin_s2 import _topk_stream
-
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
-    try:
-        # single partition → one python worker sees every boundary
-        cand = spark.createDataFrame(pdf).coalesce(1)
-        got = _topk_stream(cand, 4).toPandas().sort_values(["lid", "rank"])
-    finally:
-        if old is None:
-            spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
-        else:
-            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-    exp = []
-    for lid, grp in pdf.groupby("lid"):
-        g = grp.sort_values(["chord2", "rid"]).head(4)
-        for r, (_, row) in enumerate(g.iterrows(), 1):
-            exp.append((lid, row["rid"], row["chord2"], r))
-    expdf = pd.DataFrame(exp, columns=["lid", "rid", "chord2", "rank"])
-    assert len(got) == len(expdf)
-    for c in ("lid", "rid", "rank"):
-        assert (got[c].to_numpy() == expdf[c].to_numpy()).all(), c
-    assert (got["chord2"].to_numpy() == expdf["chord2"].to_numpy()).all()
+def _engine_unit(P):
+    """``s2_point_prep``'s xyz normalization in numpy: same operations in
+    the same order, so the directions (and chord² sums) are bit-equal."""
+    nrm = np.sqrt(P[:, 0] * P[:, 0] + P[:, 1] * P[:, 1] + P[:, 2] * P[:, 2])
+    return P / nrm[:, None]
 
 
-def test_topk_stream_cert_batch_boundaries(spark):
-    """The in-kernel certification path (cert2=) across 7-row Arrow
-    batch boundaries: certified runs emit top-k with cert=true; runs
-    with < k candidates, k-th beyond the bound, or a single null-rid
-    marker (the left-outer no-candidate row) collapse to one rank-0
-    marker with cert=false."""
-    rng = np.random.default_rng(13)
-    rows = []
-    for lid in range(40):
-        m = (lid * 7) % 13  # 0 → no-candidate marker run
-        if m == 0:
-            rows.append((lid, None, None))
-            continue
-        c2 = np.round(rng.uniform(0, 1, m), 2)
-        for j in range(m):
-            rows.append((lid, 1000 + j, float(c2[j])))
-    pdf = pd.DataFrame(rows, columns=["lid", "rid", "chord2"])
-    from geotables_jl_spark.operators.geojoin_s2 import _topk_stream
+def test_knn_string_ids_small_directory(spark, monkeypatch):
+    """String lid/rid on a small directory — the one input the kernel arm
+    cannot take — runs the rounds arm with a broadcast cell join and
+    equals numpy brute force including the (chord2, rid) tie order,
+    where rid order is string order ("r10" < "r9")."""
+    rng = np.random.default_rng(21)
+    base = rng.normal(size=(20, 3))
+    R = np.repeat(base, 3, axis=0)  # every position three times: exact ties
+    L = rng.normal(size=(25, 3))
+    L[:5] = base[:5]  # queries on directory positions: chord2 == 0 ties
+    rid = np.array([f"r{i}" for i in range(len(R))])
+    lid = np.array([f"q{i}" for i in range(len(L))])
+    ldf = spark.createDataFrame(pd.DataFrame({"lid": lid, "x": L[:, 0], "y": L[:, 1], "z": L[:, 2]}))
+    rdf = spark.createDataFrame(pd.DataFrame({"rid": rid, "x": R[:, 0], "y": R[:, 1], "z": R[:, 2]}))
+    lp = s2_point_prep(ldf, "lid", xyz=("x", "y", "z"))
+    rp = s2_point_prep(rdf, "rid", xyz=("x", "y", "z"))
 
-    k, cert2 = 4, 0.5
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
-    try:
-        cand = spark.createDataFrame(
-            pdf.astype({"rid": "Int64"}), schema="lid long, rid long, chord2 double"
-        ).coalesce(1)
-        got = _topk_stream(cand, k, cert2=cert2).toPandas().sort_values(["lid", "rank"])
-    finally:
-        if old is None:
-            spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
-        else:
-            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-    for lid, grp in pdf.groupby("lid"):
-        g = got[got["lid"] == lid]
-        valid = grp.dropna(subset=["rid"]).sort_values(["chord2", "rid"])
-        certified = len(valid) >= k and valid["chord2"].iloc[k - 1] <= cert2
-        if certified:
-            top = valid.head(k)
-            assert g["cert"].all() and len(g) == k, lid
-            assert (g.sort_values("rank")["rid"].to_numpy() == top["rid"].to_numpy()).all(), lid
-        else:
-            assert len(g) == 1 and not g["cert"].iloc[0], lid
-            assert g["rank"].iloc[0] == 0 and g["rid"].iloc[0] == -1, lid
+    Lu, Ru = _engine_unit(L), _engine_unit(R)
+    d = [Lu[:, None, i] - Ru[None, :, i] for i in range(3)]
+    d2 = d[0] * d[0] + d[1] * d[1] + d[2] * d[2]
+    k = 7  # cuts through a three-way tie group
+    broadcasts = []
+    real = geojoin_s2._round_topk
+
+    def spy(*a):
+        broadcasts.append(a[-1])
+        return real(*a)
+
+    monkeypatch.setattr(geojoin_s2, "_round_topk", spy)
+    for kw in ({}, {"chord0": 1e-3}):  # default radius, then forced escalation
+        broadcasts.clear()
+        got = s2_knn_join(lp, rp, k, n_right=len(R), **kw).toPandas()
+        assert broadcasts and all(broadcasts), kw
+        assert len(got) == len(L) * k, kw
+        for i, q in enumerate(lid):
+            order = np.lexsort((rid, d2[i]))[:k]
+            g = got[got["lid"] == q].sort_values("rank")
+            assert g["rid"].tolist() == rid[order].tolist(), (kw, q)
+            assert (g["chord2"].to_numpy() == d2[i, order]).all(), (kw, q)
 
 
-def test_knn_duplicate_distance_ties(spark):
+def test_knn_duplicate_distance_ties(spark, monkeypatch):
     """Adversarial: many right points at IDENTICAL distances from the
     query (a ring of duplicated positions) — rank must break ties by
     ascending rid, matching the SQL oracle's (chord2, rid) order."""
@@ -297,7 +283,6 @@ def test_knn_duplicate_distance_ties(spark):
     )
     lp = s2_point_prep(ldf, "lid", xyz=("x", "y", "z"))
     rp = s2_point_prep(rdf, "rid", xyz=("x", "y", "z"))
-    got = s2_knn_join(lp, rp, 8, n_right=len(R)).toPandas().sort_values("rank")
     # oracle orders by (chord2, rid) with the ENGINE's exact arithmetic
     # (dx*dx + dy*dy + dz*dz, left-assoc float64) — the three ring
     # positions per radius are only ulp-tied, so a sqrt'd oracle would
@@ -305,10 +290,15 @@ def test_knn_duplicate_distance_ties(spark):
     # pairs (rid 2k, 2k+1) are the true tie exercise
     d2 = (c[0] - R[:, 0]) ** 2 + (c[1] - R[:, 1]) ** 2 + (c[2] - R[:, 2]) ** 2
     exp = np.lexsort((np.arange(len(R)), d2))[:8]
-    assert (got["rid"].to_numpy() == exp).all()
-    # bit-identical duplicates must be adjacent with ascending rid
-    pairs = got["rid"].to_numpy().reshape(-1, 2)
-    assert ((pairs[:, 1] - pairs[:, 0]) == 1).all() and (pairs[:, 0] % 2 == 0).all()
+
+    def run():
+        return s2_knn_join(lp, rp, 8, n_right=len(R)).toPandas().sort_values("rank")
+
+    for arm, got in _per_arm(monkeypatch, run):
+        assert (got["rid"].to_numpy() == exp).all(), arm
+        # bit-identical duplicates must be adjacent with ascending rid
+        pairs = got["rid"].to_numpy().reshape(-1, 2)
+        assert ((pairs[:, 1] - pairs[:, 0]) == 1).all() and (pairs[:, 0] % 2 == 0).all(), arm
 
 
 def test_point_prep_latlon_and_zero(spark):
@@ -321,7 +311,7 @@ def test_point_prep_latlon_and_zero(spark):
     assert s2_point_prep(zdf, "id", xyz=("x", "y", "z")).count() == 0
 
 
-def test_knn_join_sphere_metric_antimeridian(spark):
+def test_knn_join_sphere_metric_antimeridian(spark, monkeypatch):
     """knn_join(metric='sphere') ranks by great-circle distance: across
     the antimeridian the nearest neighbor is at lon -179.9 (0.2 deg of
     arc), which planar LatLon distance ranks FARTHEST (359.8 units)."""
@@ -340,38 +330,53 @@ def test_knn_join_sphere_metric_antimeridian(spark):
     )
     gl = georef(left, coords=["lat", "lon"])
     gr = georef(right, coords=["lat", "lon"])
-    sph = knn_join(gl, gr, k=2, metric="sphere", n_right=2).toPandas().sort_values("rank")
-    assert list(sph["neighbor_id"]) == [1, 2]
-    assert abs(sph.iloc[0]["distance"] - np.radians(0.2)) < 1e-9
-    assert list(sph["name_"] if "name_" in sph else sph["name"]) == ["x", "y"]
+
+    def run():
+        return knn_join(gl, gr, k=2, metric="sphere", n_right=2).toPandas().sort_values("rank")
+
+    for arm, sph in _per_arm(monkeypatch, run):
+        assert list(sph["neighbor_id"]) == [1, 2], arm
+        assert abs(sph.iloc[0]["distance"] - np.radians(0.2)) < 1e-9, arm
+        assert list(sph["name_"] if "name_" in sph else sph["name"]) == ["x", "y"], arm
     pla = knn_join(gl, gr, k=2).toPandas().sort_values("rank")
     assert list(pla["neighbor_id"]) == [2, 1]  # planar gets it wrong
 
 
-def test_knn_join_sphere_broadcast_parity(spark):
-    """knn_join(metric='sphere', broadcast_right=True) — the shuffle-free
-    S2 pipeline — returns exactly the shuffle arm's neighbors, distances,
-    and columns."""
+def test_knn_join_sphere_broadcast_parity(spark, monkeypatch):
+    """knn_join(metric='sphere') returns the same neighbors, distances
+    and columns on the kernel arm and on the rounds arm, and the
+    neighbors match numpy brute force."""
     import pandas as pd
 
     from geotables_jl_spark import georef, knn_join
 
     rng = np.random.default_rng(3)
-    left = spark.createDataFrame(pd.DataFrame({
+    lpdf = pd.DataFrame({
         "row_id": range(30),
-        "lat": rng.uniform(-80, 80, 30), "lon": rng.uniform(-179, 179, 30)}))
-    right = spark.createDataFrame(pd.DataFrame({
+        "lat": rng.uniform(-80, 80, 30), "lon": rng.uniform(-179, 179, 30)})
+    rpdf = pd.DataFrame({
         "row_id": range(200),
         "lat": rng.uniform(-80, 80, 200), "lon": rng.uniform(-179, 179, 200),
-        "name": [f"n{i}" for i in range(200)]}))
+        "name": [f"n{i}" for i in range(200)]})
+    left, right = spark.createDataFrame(lpdf), spark.createDataFrame(rpdf)
     gl, gr = georef(left, coords=["lat", "lon"]), georef(right, coords=["lat", "lon"])
-    a = knn_join(gl, gr, k=4, metric="sphere", n_right=200).toPandas()
-    b = knn_join(gl, gr, k=4, metric="sphere", n_right=200, broadcast_right=True).toPandas()
-    a = a.sort_values(["row_id", "rank"]).reset_index(drop=True)
-    b = b.sort_values(["row_id", "rank"]).reset_index(drop=True)
+
+    def run():
+        out = knn_join(gl, gr, k=4, metric="sphere", n_right=200).toPandas()
+        return out.sort_values(["row_id", "rank"]).reset_index(drop=True)
+
+    (_, a), (_, b) = _per_arm(monkeypatch, run)
     assert list(a.columns) == list(b.columns)
     assert (a["neighbor_id"] == b["neighbor_id"]).all()
     assert (a["distance"].to_numpy() == b["distance"].to_numpy()).all()
+
+    def xyz(pdf):
+        la, lo = np.radians(pdf["lat"].to_numpy()), np.radians(pdf["lon"].to_numpy())
+        return np.stack([np.cos(la) * np.cos(lo), np.cos(la) * np.sin(lo), np.sin(la)], axis=1)
+
+    d2 = ((xyz(lpdf)[:, None, :] - xyz(rpdf)[None, :, :]) ** 2).sum(-1)
+    exp = np.argsort(d2, axis=1, kind="stable")[:, :4].reshape(-1)
+    assert (a["neighbor_id"].to_numpy() == exp).all()
 
 
 def test_knn_join_sphere_rejects(spark):
@@ -391,9 +396,9 @@ def test_knn_join_sphere_rejects(spark):
         knn_join(g, g, k=1, metric="euclid")
 
 
-def test_point_prep_drops_null_nan_inf_rows(spark):
+def test_point_prep_drops_null_nan_inf_rows(spark, monkeypatch):
     """s2_point_prep keeps only finite, non-zero directions in both
-    branches, so no kNN arm (kernel, rounds, shuffle) or dwithin join
+    branches, so no kNN arm (kernel, rounds) or dwithin join
     emits a row for a NULL/NaN/±Inf coordinate. Spark orders NaN above
     every number, so a bare ``nrm > 0`` guard would let NaN through."""
     ll = spark.sql(
@@ -421,14 +426,10 @@ def test_point_prep_drops_null_nan_inf_rows(spark):
         L = pts[["nx", "ny", "nz"]].to_numpy(dtype=float)
         d2 = ((L[:, None, :] - R[None, :, :]) ** 2).sum(-1)
         exp = {(lid, int(r)) for lid, row in zip([0, 1], d2) for r in np.argsort(row, kind="stable")[:3]}
-        for kw in (
-            {"broadcast_right": True},  # kernel arm
-            {"broadcast_right": True, "engine": "rounds"},
-            {"broadcast_right": False},  # shuffle arm
-        ):
-            got = s2_knn_join(left, right, 3, n_right=len(R), **kw).toPandas()
-            assert {(int(a), int(b)) for a, b in zip(got["lid"], got["rid"])} == exp, kw
-            assert np.isfinite(got["chord2"].to_numpy(dtype=float)).all(), kw
+        runs = _per_arm(monkeypatch, lambda: s2_knn_join(left, right, 3, n_right=len(R)).toPandas())
+        for arm, got in runs:
+            assert {(int(a), int(b)) for a, b in zip(got["lid"], got["rid"])} == exp, arm
+            assert np.isfinite(got["chord2"].to_numpy(dtype=float)).all(), arm
         near = s2_dwithin_join(left, right, 2.0).toPandas()
         assert sorted(set(near["lid"])) == [0, 1]
         assert len(near) == 2 * len(R)

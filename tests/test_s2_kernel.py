@@ -9,10 +9,10 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from geotables_jl_spark.geom.s2_knn_kernel import SphereIndex, score_batch_sphere
+from geotables_jl_spark.operators import geojoin_s2
 from geotables_jl_spark.operators.geojoin_s2 import s2_knn_join, s2_point_prep
 
 
@@ -94,9 +94,10 @@ def test_kernel_small_directory():
     _check_kernel(lx, ly, lz, rid, rx, ry, rz, k=10, chord0=0.5)
 
 
-def test_kernel_arm_matches_rounds_arm(spark):
-    """End-to-end: s2_knn_join kernel arm vs DataFrame rounds arm on the
-    driver fixture shapes — identical (lid, rid, chord2, rank) sets."""
+def test_kernel_arm_matches_rounds_arm(spark, monkeypatch):
+    """End-to-end: s2_knn_join kernel arm vs DataFrame rounds arm (forced
+    by a zero directory threshold) on the driver fixture shapes —
+    identical (lid, rid, chord2, rank) sets."""
     n_l, n_r = 80, 400
     left = spark.range(n_l).select(F.col("id").alias("lid"))
     k = F.col("lid")
@@ -115,10 +116,13 @@ def test_kernel_arm_matches_rounds_arm(spark):
     )
     rprep = s2_point_prep(right, "rid", xyz=("px", "py", "pz"))
 
-    kern = s2_knn_join(lprep, rprep, 5, n_right=n_r, broadcast_right=True, engine="kernel")
-    rnds = s2_knn_join(lprep, rprep, 5, n_right=n_r, broadcast_right=True, engine="rounds")
-    a = sorted(map(tuple, kern.select("lid", "rid", "chord2", "rank").collect()))
-    b = sorted(map(tuple, rnds.select("lid", "rid", "chord2", "rank").collect()))
+    def rows():
+        out = s2_knn_join(lprep, rprep, 5, n_right=n_r)
+        return sorted(map(tuple, out.select("lid", "rid", "chord2", "rank").collect()))
+
+    a = rows()
+    monkeypatch.setattr(geojoin_s2, "S2_BROADCAST_ROWS", 0)
+    b = rows()
     assert a == b
     assert len(a) == 5 * lprep.where(F.col("nx").isNotNull()).count()
 
@@ -171,14 +175,6 @@ def test_kernel_property_sweep(cfg):
         rid, pts[:, 0].copy(), pts[:, 1].copy(), pts[:, 2].copy(),
         k=k, chord0=chord0,
     )
-
-
-def test_kernel_engine_requires_broadcast(spark):
-    left = spark.range(3).select(F.col("id").alias("lid"),
-                                 F.lit(1.0).alias("px"), F.lit(0.0).alias("py"), F.lit(0.0).alias("pz"))
-    lp = s2_point_prep(left, "lid", xyz=("px", "py", "pz"))
-    with pytest.raises(ValueError, match="broadcast_right"):
-        s2_knn_join(lp, lp.withColumnRenamed("lid", "rid"), 1, n_right=3, engine="kernel")
 
 
 def test_cover_index_cache_keyed_by_token():

@@ -96,24 +96,24 @@ def _supplier_directory(spark, sf_dir: str):
 
 
 def run_s2_knn(spark, input_dir: str, sf_dir: str) -> dict:
-    """The north rule's mandated kNN shape end-to-end on the DataFrame
-    path: S2 cell-ring expansion with certify-or-escalate rounds. With
-    the broadcast directory the round is a shuffle-free map pipeline
-    (scan → Arrow cell id → broadcast join → codegen refine → streaming
-    Arrow top-k), so it should scale with cores by construction."""
+    """The north rule's mandated kNN shape end-to-end: S2 cell-ring
+    expansion with certify-or-escalate. The 100k-point directory picks
+    the kernel arm — one narrow map over the page scan with the whole
+    expansion inside the Arrow kernel against a broadcast numpy
+    directory — so it should scale with cores by construction."""
     from geotables_jl_spark.operators.geojoin_s2 import s2_knn_join, s2_point_prep
 
     pages = spark.read.parquet(input_dir).select(F.col("row_id").alias("lid"), "lat", "lon")
     left = s2_point_prep(pages, "lid", latlon=("lat", "lon"))
-    # supplier.parquet is one file → without this the directory's
-    # per-round cover explode (the broadcast build) is a SERIAL stage
+    # supplier.parquet is one file → without this the directory's point
+    # prep ahead of the kernel's broadcast build runs as ONE task
     supp = _supplier_directory(spark, sf_dir).withColumnRenamed("row_id", "rid").repartition(64)
     right = s2_point_prep(supp, "rid", latlon=("lat", "lon"))
     n_right = supp.count()
     n_rows = pages.count()
     t0 = time.perf_counter()
     s2_knn_join(
-        left, right, k=10, n_right=n_right, n_left=n_rows, broadcast_right=True
+        left, right, k=10, n_right=n_right, n_left=n_rows
     ).write.format("noop").mode("overwrite").save()
     dt = time.perf_counter() - t0
     return {"job": "s2_knn", "rows": n_rows, "sec": round(dt, 3)}

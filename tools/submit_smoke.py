@@ -51,7 +51,7 @@ left = s2_point_prep(
     "lid", latlon=("lat", "lon"))
 right = s2_point_prep(
     base.select(F.col("row_id").alias("rid"), "lat", "lon"), "rid", latlon=("lat", "lon"))
-knn = s2_knn_join(left, right, k=3, broadcast_right=True).toPandas()
+knn = s2_knn_join(left, right, k=3).toPandas()
 pdf = base.toPandas()
 la, lo = np.radians(pdf["lat"].to_numpy()), np.radians(pdf["lon"].to_numpy())
 xyz = np.stack([np.cos(la) * np.cos(lo), np.cos(la) * np.sin(lo), np.sin(la)], axis=1)
