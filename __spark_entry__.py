@@ -959,13 +959,14 @@ def q_s2_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell-ring expansion over the cell index with distance refinement",
     sphere-correct) in the PRODUCTION orientation — k=5 nearest
     directory entries (suppliers) per page; the small directory picks
-    the one-map-stage kernel arm (geom/s2_knn_kernel.py), so the gate
-    replays it bit-for-bit against a window-function SQL oracle:
+    the one-map-stage kernel arm of the one kNN engine
+    (``operators/knn.py`` with ``geom/knn_kernel.knn_exact``), so the
+    gate replays it bit-for-bit against a window-function SQL oracle:
     in-kernel certify-or-escalate, tie order (chord2, rid). The rounds
-    arm (huge or non-integral-id directory) keeps brute-force pytest
-    coverage in tests/test_geojoin_s2.py. ``n_right`` comes from the
-    parquet footer count (metadata-only job) — the stats-injection escape
-    hatch, not a table scan."""
+    arm (directory of ``KNN_BROADCAST_ROWS`` or more) keeps brute-force
+    pytest coverage on both metrics (the ``knn_arms`` test fixture).
+    ``n_right`` comes from the parquet footer count (metadata-only job)
+    — the stats-injection escape hatch, not a table scan."""
     from geotables_jl_spark.operators.geojoin_s2 import s2_knn_join
 
     n_supp = spark.read.parquet(f"{sf_dir}/supplier.parquet").count()

@@ -67,28 +67,6 @@ def point_cell(geom: Column, cell_size: float) -> Column:
     return pack_cell(cell_index(geom["x"], cell_size), cell_index(geom["y"], cell_size))
 
 
-def cell_ring(geom: Column, cell_size: float, radius: Column | int) -> Column:
-    """array<long> of the (2r+1)^2 cell block centered on a point's cell —
-    the kNN candidate neighborhood (cell-ring expansion)."""
-    return cell_block(geom["x"], geom["y"], cell_size, radius)
-
-
-def cell_block(x: Column, y: Column, cell_size: float, radius: Column | int) -> Column:
-    """array<long> of the (2r+1)^2 cell block centered on the cell of
-    coordinate columns (x, y). Exploded on the SMALL side of a kNN join so
-    the big side probes with a single packed cell id (no generator, no
-    per-row arrays on the 10^12-row stream)."""
-    r = radius if isinstance(radius, Column) else F.lit(int(radius))
-    cx = cell_index(x, cell_size)
-    cy = cell_index(y, cell_size)
-    return F.flatten(
-        F.transform(
-            F.sequence(cx - r, cx + r),
-            lambda icx: F.transform(F.sequence(cy - r, cy + r), lambda icy: pack_cell(icx, icy)),
-        )
-    )
-
-
 def is_envelope_exact(g: Column) -> Column:
     """True when the geometry IS its envelope: points, and axis-aligned
     box polygons in the canonical ring order ``st_box`` emits. For such

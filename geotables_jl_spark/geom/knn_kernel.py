@@ -1,33 +1,50 @@
-"""Vectorized kNN scoring kernel (Arrow batches + numpy) for the
-broadcast-right map round of ``knn_pairs``.
+"""One exact kNN kernel for the plane and the sphere (Arrow batches +
+numpy): the worker side of both arms in ``operators/knn.py``.
+
+A *metric spec* (``Planar``, ``Sphere``) holds everything that differs
+between the two searches: the coordinates, the index entries a
+directory point contributes (the (2r+1)² cell block around its cell, or
+the S2 cells covering its chord cap), the one cell a query point probes,
+the distance (``sqrt(dx²+dy²)``, or chord² with no root), the
+certificate bound and the escalation (3× cell at fixed r, or 3× chord at
+the S2 level for it). Everything else is shared: the cell→point CSR
+(``CellIndex``) and its worker memo, one covered pass, the tie-exact
+top-k, the brute-force tail and the certify→escalate→brute driver
+``knn_exact``.
 
 Why Python here at all (the repo's rule is JVM-first): the per-row
 "score ~65 candidates, sort, slice k" step has no codegen-friendly Spark
 expression — higher-order functions (``transform``/``array_sort``) are
 CodegenFallback and measured 6.7–92 s per 4M rows on local[16]
-(``tools/profile_knn_micro.py``), 10–25× the budget. This kernel does
-the same work fully vectorized: the 10^12-row left stream ships ONLY
-(lid, lx, ly, cell) — 32 bytes/row — through Arrow, all candidate data
-lives in a numpy broadcast on each worker, and every batch is processed
-with whole-batch matrix ops (padded neighborhood gather, argpartition
-top-k with an exact tie fallback), never a per-row or per-group Python
-loop. Results go back as Arrow LIST columns (one row per left row, built
-zero-copy from flat arrays + offsets) so the JVM fans out pairs with a
-codegen ``posexplode`` instead of Arrow shipping k× duplicated rows.
+(``tools/profile_knn_micro.py``, deleted in the commit after e85fbc8),
+10–25× the budget. Here every batch runs as whole-batch matrix ops
+(padded gather, argpartition top-k with an exact tie fallback), never a
+per-row or per-group Python loop.
 
-Determinism: right points are sorted by rid once; the offset-exploded
-neighbor index preserves that order inside every neighborhood, so ties
-on distance resolve by ascending rid — the same (dist, rid) order the
-JVM rounds and the DuckDB oracle use. Distances are
-``sqrt(dx*dx + dy*dy)`` (each op IEEE correctly-rounded) so all three
-engines agree bit-for-bit.
+Determinism: directory points sit in rid order and every index slice
+keeps that order, so a top-k that breaks distance ties by column
+position breaks them by ascending rid — the (dist, rid) order of the
+rounds arm and the DuckDB oracles. ``Metric.dist`` is the same IEEE ops
+in the same order as its JVM form, so every engine agrees bit for bit.
 """
 
 from __future__ import annotations
 
+import uuid
+
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+
+from geotables_jl_spark.geom import s2
 
 _MASK32 = np.int64((1 << 32) - 1)
+
+# below this many (uncertified rows × directory points) distance evals,
+# brute force beats building the escalated index: with round-1 sizing
+# ~99.9% of rows certify, and a per-worker index build for a handful of
+# rows would dominate the job (measured 0.3 s warm vs 10 s cold per batch)
+_BRUTE_DIRECT_MAX = 64_000_000
 
 
 def pack_cells_np(cx: np.ndarray, cy: np.ndarray) -> np.ndarray:
@@ -38,77 +55,171 @@ def pack_cells_np(cx: np.ndarray, cy: np.ndarray) -> np.ndarray:
         return ((cx & _MASK32) << np.int64(32)) | (cy & _MASK32)
 
 
-class RightIndex:
-    """Right-side points, rid-sorted, shipped to workers via
-    ``sc.broadcast`` as plain numpy (~32 B/point). Workers derive the
-    per-radius neighbor index lazily (``NeighborIndex``)."""
+class Metric:
+    """What a metric spec provides: ``cols`` (coordinate names),
+    ``root`` (distance is the root of the squared sum), ``bound`` (a row
+    whose k-th distance is within it is certified: every point that close
+    is a candidate), ``covers_all`` (every point is a candidate of every
+    query), ``key`` (the memo key of its index), and the methods below."""
 
-    def __init__(self, rid: np.ndarray, rx: np.ndarray, ry: np.ndarray, cell_size: float):
-        order = np.argsort(rid, kind="stable")
-        self.cell_size = float(cell_size)
-        self.rid = np.ascontiguousarray(rid[order])
-        self.rx = np.ascontiguousarray(rx[order])
-        self.ry = np.ascontiguousarray(ry[order])
+    def dist(self, q, p, sqrt=np.sqrt):
+        """Distance between query coordinates ``q`` and point coordinates
+        ``p``: numpy arrays, or Spark Columns with ``sqrt=F.sqrt``. The
+        ops and their order are the same on both engines."""
+        s = None
+        for a, b in zip(q, p):
+            d = a - b
+            s = d * d if s is None else s + d * d
+        return sqrt(s) if self.root else s
 
 
-class NeighborIndex:
-    """cell → slice of point indices whose (2r+1)² block contains the
-    cell. Built VECTORIZED (offset explode + lexsort), no per-cell
-    Python: n2·(2r+1)² int64 entries, ~0.1 s for 100k points at r=1."""
+class Planar(Metric):
+    """Euclidean (x, y). A point's index entries are the (2r+1)² cells of
+    side ``cell`` around its own, so every point within ``radius·cell``
+    of a query is in the query cell's slice. Escalation triples the cell
+    at the same radius: the guarantee triples and the cover stays
+    (2r+1)² cells. ``extent`` (the larger bounding-box side of both
+    inputs) decides when a block covers everything; the kernel, which
+    never needs that, leaves it infinite."""
 
-    def __init__(self, base: RightIndex, radius: int):
-        s = base.cell_size
-        cx = np.floor(base.rx / s).astype(np.int64)
-        cy = np.floor(base.ry / s).astype(np.int64)
-        r = int(radius)
-        w = 2 * r + 1
+    cols = ("x", "y")
+    root = True
+
+    def __init__(self, cell: float, radius: int = 2, extent: float = float("inf")):
+        self.cell, self.radius, self.extent = float(cell), int(radius), float(extent)
+        self.bound = self.radius * self.cell
+        # r·cell >= 2·extent puts any two points' cell indices at most
+        # r apart per axis, with room for floor()'s rounding
+        self.covers_all = self.bound >= 2.0 * self.extent
+        self.key = ("planar", self.cell, self.radius)
+
+    def cells(self, x, y):
+        return pack_cells_np(
+            np.floor(x / self.cell).astype(np.int64), np.floor(y / self.cell).astype(np.int64)
+        )
+
+    def entries(self, x, y):
+        """(point, cell) over each point's (2r+1)² block, point-major."""
+        r, w = self.radius, 2 * self.radius + 1
         offs = np.arange(-r, r + 1, dtype=np.int64)
-        # all (cx+i, cy+j) combos, point-major; point idx is rid-ordered,
-        # and the stable lexsort keeps that order inside each target cell
-        tx = np.repeat((cx[:, None] + offs[None, :]).reshape(-1), w)
-        ty = np.tile((cy[:, None] + offs[None, :]).reshape(len(cy), w), (1, w)).reshape(-1)
-        tgt = pack_cells_np(tx, ty)
-        idx = np.repeat(np.arange(len(cx), dtype=np.int64), w * w)
-        o = np.lexsort((idx, tgt))
-        # int32 point indices: halves gather traffic (the kernel is memory
-        # -bandwidth-bound under full-machine concurrency; chunk_budget is
-        # sized so the per-chunk matrices stay L3-resident — measured 2.5×
-        # on 16 concurrent workers vs a 4M budget)
-        self.point_idx = idx[o].astype(np.int32)
-        tgt = tgt[o]
-        self.keys, self.starts = np.unique(tgt, return_index=True)
-        self.ends = np.append(self.starts[1:], len(tgt))
+        cx = np.floor(x / self.cell).astype(np.int64)[:, None] + offs
+        cy = np.floor(y / self.cell).astype(np.int64)[:, None] + offs
+        tx = np.repeat(cx.reshape(-1), w)
+        ty = np.tile(cy, (1, w)).reshape(-1)
+        return np.repeat(np.arange(len(x), dtype=np.int64), w * w), pack_cells_np(tx, ty)
+
+    def escalate(self) -> Planar:
+        return Planar(3.0 * self.cell, self.radius, self.extent)
+
+    def full(self) -> Planar:
+        return Planar(2.0 * self.extent, self.radius, self.extent)
+
+
+class Sphere(Metric):
+    """Unit vectors (x, y, z) ranked by squared chord — never a sqrt, so
+    results match the codegen refine and the SQL oracle bit for bit. A
+    point's index entries are the level-``level`` S2 cells of its
+    rigorous chord-cap cover (``s2_cap_cells_np``), so every point within
+    ``chord`` of a query is in the query cell's slice. Escalation triples
+    the chord at the coarser level for it; chord 2 covers the sphere."""
+
+    cols = ("x", "y", "z")
+    root = False
+
+    def __init__(self, chord: float, level: int | None = None):
+        self.chord = min(2.0, float(chord))
+        # 6 cells per window side, one level finer than the cover-bound
+        # default: the tighter window cuts candidate pairs ~2× per level
+        # (measured 2.36B→1.09B, level 5→6, on the 5M-page dwithin profile)
+        self.level = s2.s2_level_for_chord(self.chord, 6.0) if level is None else int(level)
+        self.bound = self.chord * self.chord
+        self.covers_all = self.chord >= 2.0
+        self.key = ("sphere", self.chord, self.level)
+
+    def cells(self, x, y, z):
+        return s2.s2_cell_from_xyz_np(x, y, z, self.level)
+
+    def entries(self, x, y, z):
+        return s2.s2_cap_cells_np(x, y, z, self.chord, self.level)
+
+    def escalate(self) -> Sphere:
+        return Sphere(3.0 * self.chord)
+
+    def full(self) -> Sphere:
+        return Sphere(2.0)
+
+
+class PointIndex:
+    """Directory points in rid order — the kernel arm's broadcast (8 B
+    per coordinate per point, plus the rids). ``rid`` is any Arrow
+    -sortable array: the kernel works on positions and ``rid.take`` maps
+    them back, so distance ties break in Arrow's ascending order, which
+    for numbers and (binary) strings is Spark's too.
+
+    ``token`` keys the worker memo. id() would not do: Python reuses
+    addresses after gc, so a second directory allocated where a collected
+    one lived would hit the old directory's cached index. The token is
+    minted once on the driver and pickles with the broadcast."""
+
+    def __init__(self, rid, coords):
+        rid = rid if isinstance(rid, pa.Array) else pa.array(rid)
+        order = pc.sort_indices(rid, null_placement="at_start").to_numpy()
+        self.rid = rid.take(order)
+        self.coords = tuple(np.ascontiguousarray(np.asarray(c, np.float64)[order]) for c in coords)
+        self.token = uuid.uuid4().hex
+
+
+class RightIndex(PointIndex):
+    """A planar directory and its base cell size (``score_batch_exact``)."""
+
+    def __init__(self, rid, rx, ry, cell_size: float):
+        super().__init__(rid, (rx, ry))
+        self.cell_size = float(cell_size)
+
+
+class CellIndex:
+    """cell → slice of directory positions whose index entries hold the
+    cell, at one spec resolution: a CSR built by one stable sort, no
+    per-cell Python. Positions are int32 (half the gather traffic of a
+    memory-bound kernel) and ascending inside a slice, i.e. rid order."""
+
+    def __init__(self, base: PointIndex, spec: Metric):
+        rows, cells = spec.entries(*base.coords)  # point-major
+        o = np.argsort(cells, kind="stable")
+        self.pos = rows[o].astype(np.int32)
+        cells = cells[o]
+        self.keys, self.starts = np.unique(cells, return_index=True)
+        self.ends = np.append(self.starts[1:], len(cells))
 
     def lookup(self, cells: np.ndarray):
-        """(starts, counts) per query cell; count 0 when no right point
-        is within the block."""
+        """(starts, counts) per query cell; count 0 for an unindexed cell."""
         if not len(self.keys):
             z = np.zeros(len(cells), dtype=np.int64)
             return z, z
-        pos = np.searchsorted(self.keys, cells)
-        pos_c = np.minimum(pos, len(self.keys) - 1)
-        ok = self.keys[pos_c] == cells
-        starts = np.where(ok, self.starts[pos_c], 0)
-        counts = np.where(ok, self.ends[pos_c] - self.starts[pos_c], 0)
+        pos = np.minimum(np.searchsorted(self.keys, cells), len(self.keys) - 1)
+        ok = self.keys[pos] == cells
+        starts = np.where(ok, self.starts[pos], 0)
+        counts = np.where(ok, self.ends[pos] - self.starts[pos], 0)
         return starts.astype(np.int64), counts.astype(np.int64)
 
 
-# worker-global neighbor-index memo (workers are reused across batches).
-# Keyed per radius so the base round AND its escalation radius stay
-# cached together — the escalation path runs on a few rows of nearly
-# every batch, and rebuilding its index per batch would dominate.
-_NI_CACHE: dict = {"base_id": None, "by_radius": {}}
+def NeighborIndex(base: RightIndex, radius: int) -> CellIndex:
+    """The planar index of ``base`` at its cell size and ``radius``."""
+    return CellIndex(base, Planar(base.cell_size, radius))
 
 
-def _neighbor_index(base: RightIndex, radius: int) -> NeighborIndex:
-    if _NI_CACHE["base_id"] != id(base):
-        _NI_CACHE["base_id"] = id(base)
-        _NI_CACHE["by_radius"] = {}
-    by_r = _NI_CACHE["by_radius"]
-    ni = by_r.get(int(radius))
-    if ni is None:
-        ni = by_r[int(radius)] = NeighborIndex(base, radius)
-    return ni
+# worker memo (workers are reused across batches and tasks): one entry
+# per spec resolution, so a pass and its escalation stay built together
+_MEMO: dict = {"token": None, "by_key": {}}
+
+
+def _cell_index(base: PointIndex, spec: Metric) -> CellIndex:
+    if _MEMO["token"] != base.token:
+        _MEMO["token"], _MEMO["by_key"] = base.token, {}
+    ci = _MEMO["by_key"].get(spec.key)
+    if ci is None:
+        ci = _MEMO["by_key"][spec.key] = CellIndex(base, spec)
+    return ci
 
 
 def _topk_tie_exact(d: np.ndarray, kk: int):
@@ -154,143 +265,132 @@ def _topk_tie_exact(d: np.ndarray, kk: int):
     return part, dp
 
 
-def score_batch(
-    lid: np.ndarray,
-    lx: np.ndarray,
-    ly: np.ndarray,
-    lcell: np.ndarray,
-    index: RightIndex,
-    radius: int,
-    k: int,
-    chunk_budget: int = 262_144,
-):
-    """One Arrow batch → per-left-row top-k as flat values + offsets.
+def _ragged_arange(lens: np.ndarray) -> np.ndarray:
+    ends = np.cumsum(lens)
+    return np.arange(int(ends[-1]) if len(ends) else 0, dtype=np.int64) - np.repeat(ends - lens, lens)
 
-    Returns (cols, offsets, rid_values, dist_values): ``cols`` is a dict
-    of per-row columns (lid, lx, ly, cnt, kth) in output row order,
-    ``offsets`` the int32 list offsets (len = rows+1), and the values the
-    flattened top-k — ready for zero-copy Arrow ListArray assembly. Every
-    input row produces exactly one output row (complete accounting);
-    cnt=0 rows have empty lists.
 
-    Rows are processed in count-sorted chunks padded to the chunk max
-    (bounded working set: cache-resident under concurrency, and a skewed
-    hot cell can't blow the matrix budget).
-    """
-    ni = _neighbor_index(index, radius)
-    n = len(lid)
-    starts, counts = ni.lookup(lcell)
+def _result(lens, parts):
+    """(offsets, pos, dist) in row order from per-row ``lens`` and
+    (rows, row lens, pos, dist) parts holding those rows' values."""
+    off = np.zeros(len(lens) + 1, np.int64)
+    off[1:] = np.cumsum(lens)
+    pos, dist = np.empty(int(off[-1]), np.int64), np.empty(int(off[-1]))
+    for rows, ln, p, d in parts:
+        at = np.repeat(off[rows], ln) + _ragged_arange(ln)
+        pos[at], dist[at] = p, d
+    return off, pos, dist
 
+
+def _covered(q, index: PointIndex, spec: Metric, k: int, budget: int):
+    """One covered pass of the query rows ``q`` (a coordinate tuple):
+    ((offsets, pos, dist) in row order, rows left uncertified).
+
+    Rows run in count-sorted chunks padded to the chunk max, so the
+    working set stays bounded (cache-resident under concurrency) and a
+    hot cell cannot blow the matrix budget."""
+    n, n2 = len(q[0]), len(index.rid)
+    ci = _cell_index(index, spec)
+    starts, counts = ci.lookup(spec.cells(*q))
     order = np.argsort(counts, kind="stable")
     cs = np.maximum(counts[order], 1)
-    row_parts, kth_parts, ridv_parts, distv_parts, lens_parts = [], [], [], [], []
-
+    lens = np.zeros(n, np.int64)
+    kth = np.full(n, np.nan)
+    parts = []
     i = 0
     while i < n:
-        # counts are sorted ascending, so rows×max = (j-i)·cs[j-1] is
-        # nondecreasing in j → the chunk boundary is a binary search with
-        # an O(1) predicate. (The r2 version materialized the whole
-        # product array per chunk — O(n·chunks) worst case when hot rows
-        # force one-row chunks; ADVICE r2.)
+        # count-sorted ⇒ rows·max = (j-i)·cs[j-1] is nondecreasing in j:
+        # binary-search the chunk boundary (O(1) predicate)
         lo, hi = i + 1, n
         while lo < hi:
             mid = (lo + hi + 1) // 2
-            if (mid - i) * int(cs[mid - 1]) <= chunk_budget:
+            if (mid - i) * int(cs[mid - 1]) <= budget:
                 lo = mid
             else:
                 hi = mid - 1
-        j = lo
-        rows = order[i:j]
-        i = j
+        rows = order[i:lo]
+        i = lo
         cnts = counts[rows]
-        mmax = max(int(cnts[-1]), 1)
-        if cnts[-1] == 0:  # count-sorted: all-zero chunk
-            row_parts.append(rows)
-            kth_parts.append(np.full(len(rows), np.nan))
-            lens_parts.append(np.zeros(len(rows), np.int64))
-            ridv_parts.append(np.empty(0, np.int64))
-            distv_parts.append(np.empty(0))
-            continue
-        b = len(rows)
-        pad = np.arange(mmax, dtype=np.int64)[None, :]
+        m = int(cnts[-1])
+        if m == 0:
+            continue  # count-sorted: an all-empty chunk
+        pad = np.arange(m, dtype=np.int64)[None, :]
         mask = pad < cnts[:, None]
-        gidx = np.where(mask, starts[rows][:, None] + pad, 0)
-        pidx = ni.point_idx[gidx]  # b×m point idx
-        dx = lx[rows][:, None] - index.rx[pidx]
-        dy = ly[rows][:, None] - index.ry[pidx]
-        d = np.sqrt(dx * dx + dy * dy)
+        pidx = ci.pos[np.where(mask, starts[rows][:, None] + pad, 0)]
+        d = spec.dist([c[rows][:, None] for c in q], [c[pidx] for c in index.coords])
         d[~mask] = np.inf
-        kk = min(k, int(cnts[-1]))
-        top, dist_mat = _topk_tie_exact(d, kk)
-        rid_mat = index.rid[np.take_along_axis(pidx, top, axis=1)]
-        lens = np.minimum(cnts, k)
-        keep = pad[:, :kk] < lens[:, None]  # drop pad/beyond-cnt slots
-        row_parts.append(rows)
-        kth_pos = np.maximum(lens, 1) - 1
-        kth = np.where(cnts > 0, dist_mat[np.arange(b), np.minimum(kth_pos, kk - 1)], np.nan)
-        kth_parts.append(kth)
-        lens_parts.append(lens)
-        ridv_parts.append(rid_mat[keep])
-        distv_parts.append(dist_mat[keep])
-
-    rows_all = np.concatenate(row_parts) if row_parts else np.empty(0, np.int64)
-    lens_all = np.concatenate(lens_parts) if lens_parts else np.empty(0, np.int64)
-    offsets = np.zeros(len(rows_all) + 1, dtype=np.int32)
-    offsets[1:] = np.cumsum(lens_all).astype(np.int32)
-    cols = {
-        "__lid": lid[rows_all],
-        "__lx": lx[rows_all],
-        "__ly": ly[rows_all],
-        "__cnt": counts[rows_all],
-        "__kth": np.concatenate(kth_parts) if kth_parts else np.empty(0),
-    }
-    ridv = np.concatenate(ridv_parts) if ridv_parts else np.empty(0, np.int64)
-    distv = np.concatenate(distv_parts) if distv_parts else np.empty(0)
-    return cols, offsets, ridv, distv
+        kk = min(k, m)
+        top, dk = _topk_tie_exact(d, kk)
+        ln = np.minimum(cnts, k)
+        keep = pad[:, :kk] < ln[:, None]
+        lens[rows] = ln
+        kth[rows] = np.where(cnts > 0, dk[np.arange(len(rows)), np.maximum(ln, 1) - 1], np.nan)
+        parts.append((rows, ln, np.take_along_axis(pidx, top, axis=1)[keep], dk[keep]))
+    with np.errstate(invalid="ignore"):
+        cert = ((counts >= k) & (kth <= spec.bound)) | (counts >= n2)
+    return _result(lens, parts), np.flatnonzero(~cert)
 
 
-# escalation index stays bounded: n2·(2·3r+1)² entries beyond this →
-# skip the indexed retry and brute-force the (tiny) tail directly
-_ESCALATE_MAX_ENTRIES = 30_000_000
-
-# below this many (bad_rows × n2) distance evals, brute-force beats the
-# indexed retry outright: with round-1 sizing ~99.9% certify, so a batch
-# has ~0.1% bad rows and building a (2·3r+1)²-entry neighbor index (a
-# multi-second lexsort per worker at n2=100k) would dominate the whole
-# job — measured 0.3 s warm vs 10 s cold per batch, i.e. the index build
-# WAS the round-2 kNN regression before this gate existed
-_BRUTE_DIRECT_MAX = 64_000_000
-
-
-def _ragged_arange(lens: np.ndarray) -> np.ndarray:
-    ends = np.cumsum(lens)
-    starts = ends - lens
-    return np.arange(int(ends[-1]) if len(ends) else 0, dtype=np.int64) - np.repeat(starts, lens)
-
-
-def _brute_rows(lx: np.ndarray, ly: np.ndarray, index: RightIndex, k: int, chunk_budget: int):
-    """Exact top-k for a (tiny) set of rows against ALL right points.
-    Column position is rid order (index arrays are rid-sorted), so ties
-    resolve identically to the indexed path. Returns (lens, kth, ridv,
-    distv) with rows in input order."""
-    n2 = len(index.rid)
-    nb = len(lx)
+def _brute(q, index: PointIndex, spec: Metric, k: int, budget: int):
+    """Exact top-k of the query rows ``q`` against every directory point:
+    (offsets, pos, dist) in row order. Columns are in rid order, so ties
+    resolve as in the indexed pass."""
+    n2, nb = len(index.rid), len(q[0])
     kk = min(k, n2)
-    step = max(1, chunk_budget // max(n2, 1))
-    lens = np.full(nb, kk, dtype=np.int64)
-    kth = np.empty(nb)
-    ridv_parts, distv_parts = [], []
+    step = max(1, budget // max(n2, 1))
+    pos, dist = [], []
     for i in range(0, nb, step):
-        dx = lx[i : i + step, None] - index.rx[None, :]
-        dy = ly[i : i + step, None] - index.ry[None, :]
-        d = np.sqrt(dx * dx + dy * dy)
-        top, dp = _topk_tie_exact(d, kk)
-        kth[i : i + step] = dp[:, -1]
-        ridv_parts.append(index.rid[top].reshape(-1))
-        distv_parts.append(dp.reshape(-1))
-    ridv = np.concatenate(ridv_parts) if ridv_parts else np.empty(0, np.int64)
-    distv = np.concatenate(distv_parts) if distv_parts else np.empty(0)
-    return lens, kth, ridv, distv
+        d = spec.dist([c[i : i + step, None] for c in q], [c[None, :] for c in index.coords])
+        top, dk = _topk_tie_exact(d, kk)
+        pos.append(top.reshape(-1))
+        dist.append(dk.reshape(-1))
+    off = np.arange(nb + 1, dtype=np.int64) * kk
+    return off, np.concatenate(pos) if pos else np.empty(0, np.int64), np.concatenate(dist) if dist else np.empty(0)
+
+
+def _replace(res, rows: np.ndarray, sub):
+    """``res`` with the values of ``rows`` replaced by ``sub``, a result
+    over exactly those rows in that order."""
+    off, pos, dist = res
+    s_off, s_pos, s_dist = sub
+    lens = np.diff(off)
+    kept = np.ones(len(lens), bool)
+    kept[rows] = False
+    kept = np.flatnonzero(kept)
+    at = np.repeat(off[kept], lens[kept]) + _ragged_arange(lens[kept])
+    new_lens = lens.copy()
+    new_lens[rows] = np.diff(s_off)
+    return _result(new_lens, [(kept, lens[kept], pos[at], dist[at]), (rows, np.diff(s_off), s_pos, s_dist)])
+
+
+def knn_exact(q, index: PointIndex, spec: Metric, k: int, budget: int = 262_144):
+    """Exact k nearest directory points of every query row in one pass:
+    the covered pass at ``spec`` certifies the bulk (k-th distance ≤
+    ``spec.bound`` ⇒ nothing outside the cover is closer), uncertified
+    rows retry once at ``spec.escalate()`` against the same resident
+    directory when that beats brute force, and the residue brute-forces.
+    No driver rounds, no shuffle: the whole kNN job is one map.
+
+    ``q`` is a tuple of coordinate arrays (``spec.cols``). Returns
+    (offsets, pos, dist) in input row order: row i's neighbours are the
+    directory positions ``pos[offsets[i]:offsets[i+1]]`` (rids via
+    ``index.rid.take``) by ascending (dist, rid); every row gets
+    min(k, n2) of them."""
+    n, n2 = len(q[0]), len(index.rid)
+    if n == 0 or n2 == 0:
+        return np.zeros(n + 1, np.int64), np.empty(0, np.int64), np.empty(0)
+    res, bad = _covered(q, index, spec, k, budget)
+    if not len(bad):
+        return res
+    sub = tuple(c[bad] for c in q)
+    nxt = spec.escalate()
+    if len(bad) * n2 > _BRUTE_DIRECT_MAX and not nxt.covers_all:
+        fix, still = _covered(sub, index, nxt, k, budget)
+        if len(still):
+            fix = _replace(fix, still, _brute(tuple(c[still] for c in sub), index, nxt, k, budget))
+    else:
+        fix = _brute(sub, index, spec, k, budget)
+    return _replace(res, bad, fix)
 
 
 def score_batch_exact(
@@ -303,126 +403,10 @@ def score_batch_exact(
     k: int,
     chunk_budget: int = 262_144,
 ):
-    """EXACT one-pass kNN: the radius-r indexed pass certifies the bulk
-    (kth ≤ r·cell ⇒ no point outside the block can beat it), uncertified
-    rows retry at radius·3 IN-KERNEL (the broadcast index is already on
-    this worker), and the residue is brute-forced against the full right
-    side. No driver rounds, no persisted intermediates, no shuffle — the
-    whole job is a single map over the left stream, which is what makes
-    kNN throughput scale linearly with executors (the north rule).
-
-    Same return shape as ``score_batch``; every input row yields exactly
-    one output row with its true top-min(k, n2) neighbors.
-    """
-    n = len(lid)
-    n2 = len(index.rid)
-    if n2 == 0 or n == 0:
-        return (
-            {
-                "__lid": lid,
-                "__lx": lx,
-                "__ly": ly,
-                "__cnt": np.zeros(n, np.int64),
-                "__kth": np.full(n, np.nan),
-            },
-            np.zeros(n + 1, np.int32),
-            np.empty(0, np.int64),
-            np.empty(0),
-        )
-
-    cols, offsets, ridv, distv = score_batch(lid, lx, ly, lcell, index, radius, k, chunk_budget)
-    # score_batch emits rows in count-sorted order (rows_all = perm).
-    # Matching back by lid would be wrong (dup lids allowed), so rebuild
-    # the permutation exactly as score_batch derives it: stable argsort
-    # of the per-row neighborhood counts.
-    ni = _neighbor_index(index, radius)
-    _, counts = ni.lookup(lcell)
-    perm = np.argsort(counts, kind="stable")
-    lens1 = np.diff(offsets).astype(np.int64)
-    guarantee = float(radius) * index.cell_size
-    cnt1 = cols["__cnt"]
-    kth1 = cols["__kth"]
-    cert = ((cnt1 >= k) & ~np.isnan(kth1) & (kth1 <= guarantee)) | (cnt1 >= n2)
-    if cert.all():
-        return cols, offsets, ridv, distv
-
-    bad = np.nonzero(~cert)[0]  # positions in score_batch output order
-    bad_in = perm[bad]  # positions in input order
-    sub_lens = np.zeros(len(bad), np.int64)
-    sub_kth = np.full(len(bad), np.nan)
-    r2 = radius * 3
-    tried_escalate = (
-        len(bad) * n2 > _BRUTE_DIRECT_MAX
-        and n2 * (2 * r2 + 1) ** 2 <= _ESCALATE_MAX_ENTRIES
-    )
-    still = np.arange(len(bad))
-    if tried_escalate:
-        c2, o2, rv2, dv2 = score_batch(
-            lid[bad_in], lx[bad_in], ly[bad_in], lcell[bad_in], index, r2, k, chunk_budget
-        )
-        _, counts2 = _neighbor_index(index, r2).lookup(lcell[bad_in])
-        perm2 = np.argsort(counts2, kind="stable")
-        g2 = float(r2) * index.cell_size
-        cert2 = ((c2["__cnt"] >= k) & ~np.isnan(c2["__kth"]) & (c2["__kth"] <= g2)) | (
-            c2["__cnt"] >= n2
-        )
-        l2 = np.diff(o2).astype(np.int64)
-        # scatter certified retry results into the bad-row slots
-        ok2 = np.nonzero(cert2)[0]
-        tgt = perm2[ok2]  # positions within `bad`
-        sub_lens[tgt] = l2[ok2]
-        sub_kth[tgt] = c2["__kth"][ok2]
-        # values for certified rows, reordered to tgt order
-        v_off = np.zeros(len(l2) + 1, np.int64)
-        v_off[1:] = np.cumsum(l2)
-        pos2 = np.repeat(v_off[ok2], l2[ok2]) + _ragged_arange(l2[ok2])
-        esc_ridv, esc_distv = rv2[pos2], dv2[pos2]
-        still = perm2[np.nonzero(~cert2)[0]]
-    else:
-        esc_ridv = np.empty(0, np.int64)
-        esc_distv = np.empty(0)
-        ok2 = np.empty(0, np.int64)
-        tgt = np.empty(0, np.int64)
-        l2 = np.empty(0, np.int64)
-    if len(still):
-        bl, bk, brv, bdv = _brute_rows(lx[bad_in[still]], ly[bad_in[still]], index, k, chunk_budget)
-        sub_lens[still] = bl
-        sub_kth[still] = bk
-    else:
-        brv, bdv = np.empty(0, np.int64), np.empty(0)
-
-    # ---- splice: final output in INPUT row order
-    lens_f = np.empty(n, np.int64)
-    kth_f = np.empty(n)
-    cnt_f = np.empty(n, np.int64)
-    ok1 = np.nonzero(cert)[0]
-    lens_f[perm[ok1]] = lens1[ok1]
-    kth_f[perm[ok1]] = kth1[ok1]
-    cnt_f[perm[ok1]] = cnt1[ok1]
-    lens_f[bad_in] = sub_lens
-    kth_f[bad_in] = sub_kth
-    cnt_f[bad_in] = np.maximum(sub_lens, cnt1[bad])  # ≥ what any pass saw
-    off_f = np.zeros(n + 1, np.int64)
-    off_f[1:] = np.cumsum(lens_f)
-    ridv_f = np.empty(int(off_f[-1]), np.int64)
-    distv_f = np.empty(int(off_f[-1]))
-
-    def _scatter(dst_rows, src_vals_r, src_vals_d, src_lens):
-        if not len(dst_rows):
-            return
-        pos = np.repeat(off_f[dst_rows], src_lens) + _ragged_arange(src_lens)
-        ridv_f[pos] = src_vals_r
-        distv_f[pos] = src_vals_d
-
-    # pass-1 certified values
-    pos1 = np.repeat(offsets[:-1].astype(np.int64)[ok1], lens1[ok1]) + _ragged_arange(lens1[ok1])
-    _scatter(perm[ok1], ridv[pos1], distv[pos1], lens1[ok1])
-    # escalation-certified values (already in tgt order)
-    if len(tgt):
-        _scatter(bad_in[tgt], esc_ridv, esc_distv, l2[ok2])
-    # brute-forced tail
-    if len(still):
-        _scatter(bad_in[still], brv, bdv, sub_lens[still])
-
-    cols_f = {"__lid": lid, "__lx": lx, "__ly": ly, "__cnt": cnt_f, "__kth": kth_f}
-    return cols_f, off_f.astype(np.int32), ridv_f, distv_f
+    """``knn_exact`` on the plane at the index's cell size and ``radius``:
+    (offsets, rids, dists) in input row order. Rows keep their input
+    order and cells come from (lx, ly), so ``lid`` and ``lcell`` are not
+    read; they keep the signature the benchmark's kernel-rate layer
+    calls."""
+    off, pos, dist = knn_exact((lx, ly), index, Planar(index.cell_size, radius), k, chunk_budget)
+    return off, index.rid.take(pa.array(pos)).to_numpy(), dist

@@ -617,7 +617,7 @@ def embedding_neardup_pairs(
     so false positives never survive.
 
     ``use_lsh=None`` (default) AUTO-SELECTS by corpus size, mirroring
-    ``knn_join``'s broadcast gate (``operators/geojoin.py``): at or
+    the kNN engine's ``KNN_BROADCAST_ROWS`` gate (``operators/knn.py``): at or
     under :data:`EMBED_EXACT_MAX_ROWS` rows the exact arm runs;
     above it the sign-LSH arm engages — a naive caller at 10⁸ vectors
     gets the bucketed plan, never a quadratic job with 8× replication

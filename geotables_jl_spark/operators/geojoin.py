@@ -37,6 +37,7 @@ cell-join output partitioning when AQE leaves it intact.
 
 from __future__ import annotations
 
+import math
 from typing import Iterable
 
 import numpy as np
@@ -47,7 +48,6 @@ from pyspark.sql import types as T
 
 from geotables_jl_spark.core.geotable import GEOM, ROW_ID, GeoTable
 from geotables_jl_spark.geom.cells import (
-    cell_block,
     cell_cover,
     choose_cell_size,
     envelope_stats,
@@ -382,8 +382,6 @@ def plan_salt(
     )
     if not hot:
         return 1
-    import math
-
     return int(min(max(1, math.ceil(hot / target_per_key)), cap))
 
 
@@ -520,222 +518,8 @@ def geojoin(
 
 
 # ---------------------------------------------------------------------------
-# kNN: cell-ring expansion + exact distance, 100% JVM (points only)
+# kNN: the planar entry of the one kNN engine (operators/knn.py)
 # ---------------------------------------------------------------------------
-
-
-def _topk_select(df: DataFrame, scored_col: str, k: int, on: list[str]) -> DataFrame:
-    """(lid, lx, ly, on..., scored array) → (lid, lx, ly, on..., __cnt,
-    __top, __kth). The sort is the NATURAL struct ordering of
-    struct(__dist, __rid) — payload columns are deliberately NOT in the
-    struct (joined back by rid at the end of knn_pairs), so unorderable
-    right payload types never reach a comparison, and ties on distance
-    break deterministically by rid. NULL scored arrays flow through as
-    cnt=0 / top=NULL — a complete accounting of the input, so the next
-    round derives by a map-only filter (no anti-join)."""
-    srt = F.array_sort(F.col(scored_col))
-    # separate projection: array_sort is CodegenFallback, and inlining it
-    # into the 3 consumers below would evaluate the sort 3× per row
-    d = df.select(
-        _LID, "__lx", "__ly", *[f"__lon_{c}" for c in on], srt.alias("__srt")
-    )
-    return d.select(
-        _LID,
-        "__lx",
-        "__ly",
-        *[f"__lon_{c}" for c in on],
-        F.coalesce(F.size("__srt"), F.lit(0)).alias("__cnt"),
-        F.slice("__srt", 1, k).alias("__top"),
-    ).withColumn(
-        "__kth",
-        F.when(
-            F.col("__cnt") > 0,
-            F.element_at("__top", F.least(F.lit(k), F.col("__cnt")))["__dist"],
-        ),
-    )
-
-
-def _cand_struct() -> Column:
-    return F.struct(F.col("__rx"), F.col("__ry"), F.col(_RID))
-
-
-def _score(c: Column) -> Column:
-    """sqrt(dx²+dy²), NOT hypot: multiply/add/sqrt are each IEEE
-    correctly-rounded, so the JVM, the numpy kernel and the DuckDB oracle
-    produce bit-identical distances."""
-    dx = F.col("__lx") - c["__rx"]
-    dy = F.col("__ly") - c["__ry"]
-    return F.struct(
-        F.sqrt(dx * dx + dy * dy).alias("__dist"),
-        c[_RID].alias("__rid"),
-    )
-
-
-def _knn_round_numpy(remaining: DataFrame, bc, radius: int, k: int) -> DataFrame:
-    """MAP-ONLY kNN pass for a broadcast-able right side — the 100 TB
-    shape of the north-star job (10^12-row page stream vs a directory
-    table). The whole right side rides to every worker as plain numpy
-    arrays (``geom/knn_kernel.RightIndex``, ~32 B/point via
-    sc.broadcast); the left stream ships ONLY (lid, lx, ly, cell) through
-    Arrow and the scoring/top-k runs vectorized in the kernel. ZERO
-    shuffle, zero groupBy, zero JVM per-element interpretation — the
-    pass is a pure map over the scan, so throughput scales linearly
-    with executors (the north rule's scaling criterion).
-
-    The kernel is ``score_batch_exact``: certification, radius
-    escalation and the brute-force outlier tail all happen INSIDE the
-    kernel against the already-resident broadcast index, so the whole
-    kNN job is ONE Spark stage — no driver rounds, no persisted
-    intermediates, no count() barriers. This is what fixed the round-1
-    scaling-efficiency failure (0.45): the old loop serialized on a
-    per-round job barrier + remainder count."""
-    schema = T.StructType(
-        [
-            T.StructField(_LID, T.LongType()),
-            T.StructField("__lx", T.DoubleType()),
-            T.StructField("__ly", T.DoubleType()),
-            T.StructField("__cnt", T.LongType()),
-            T.StructField("__kth", T.DoubleType()),
-            T.StructField("__rids", T.ArrayType(T.LongType())),
-            T.StructField("__dists", T.ArrayType(T.DoubleType())),
-        ]
-    )
-
-    def _iter(batches):
-        import pyarrow as pa
-
-        from geotables_jl_spark.geom.knn_kernel import score_batch_exact
-
-        idx = bc.value
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            name_i = {nm: i for i, nm in enumerate(rb.schema.names)}
-
-            def col(nm, dt):
-                return rb.column(name_i[nm]).to_numpy(zero_copy_only=False).astype(dt, copy=False)
-
-            cols, offsets, ridv, distv = score_batch_exact(
-                col(_LID, np.int64),
-                col("__lx", np.float64),
-                col("__ly", np.float64),
-                col("__lcell", np.int64),
-                idx,
-                radius,
-                k,
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(cols["__lid"], pa.int64()),
-                    pa.array(cols["__lx"], pa.float64()),
-                    pa.array(cols["__ly"], pa.float64()),
-                    pa.array(cols["__cnt"], pa.int64()),
-                    pa.array(cols["__kth"], pa.float64()),
-                    pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), pa.array(ridv, pa.int64())),
-                    pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), pa.array(distv, pa.float64())),
-                ],
-                names=[_LID, "__lx", "__ly", "__cnt", "__kth", "__rids", "__dists"],
-            )
-
-    return remaining.select(_LID, "__lx", "__ly", "__lcell").mapInArrow(_iter, schema)
-
-
-def _knn_round_shuffle(
-    remaining: DataFrame,
-    right_base: DataFrame,
-    cell_size: float,
-    radius: int,
-    k: int,
-    on: list[str],
-    broadcast_right: bool,
-    explode_right: bool,
-) -> DataFrame:
-    """Generic kNN round: block-explode the SMALLER side (``explode_right``
-    False once the remainder set is smaller than the right table), cell
-    equi-join, one collect_list aggregation per lid. Used when the right
-    side is too large to broadcast, when ``on`` conjuncts are present, or
-    in later rounds where the shrunken remainder is the natural explode
-    side. Distance is computed BEFORE the aggregate (codegen) and the
-    collected struct is (dist, rid) only."""
-    if explode_right:
-        r = right_base.withColumn(
-            "__jc", F.explode(cell_block(F.col("__rx"), F.col("__ry"), cell_size, radius))
-        )
-        l = remaining.withColumn("__ljc", F.col("__lcell"))
-    else:
-        l = remaining.withColumn(
-            "__ljc", F.explode(cell_block(F.col("__lx"), F.col("__ly"), cell_size, radius))
-        )
-        r = right_base.withColumnRenamed("__rcell", "__jc")
-    if broadcast_right:
-        r = F.broadcast(r)
-    cond = F.col("__ljc") == F.col("__jc")
-    for c in on:
-        cond = cond & F.col(f"__lon_{c}").eqNullSafe(F.col(f"__ron_{c}"))
-    cand = l.join(r, cond, "left").select(
-        F.col(_LID),
-        F.col("__lx"),
-        F.col("__ly"),
-        *[F.col(f"__lon_{c}") for c in on],
-        F.when(F.col(_RID).isNotNull(), _score(_cand_struct())).alias("__c"),
-    )
-    agg = cand.groupBy(_LID).agg(
-        F.collect_list("__c").alias("__scored"),  # collect_list skips NULLs
-        F.first("__lx").alias("__lx"),
-        F.first("__ly").alias("__ly"),
-        *[F.first(f"__lon_{c}").alias(f"__lon_{c}") for c in on],
-    )
-    return _topk_select(agg, "__scored", k, on)
-
-
-def _knn_exact(
-    remaining: DataFrame,
-    right_base: DataFrame,
-    k: int,
-    on: list[str],
-    broadcast_right: bool,
-) -> DataFrame:
-    """Exact terminal round: every remaining lid against the FULL right
-    side (no cells). Runs only on the escalation tail — outlier/sparse
-    left points the ring expansion could not certify — so the remainder
-    is tiny by construction and the nested-loop cost is bounded. This is
-    the no-silent-drop guarantee: knn never returns partial results.
-
-    For a non-broadcast right side the per-lid candidate set is the whole
-    right table — too big for one collect_list buffer — so a bucketed
-    pre-reduce (groupBy(lid, hash(rid)%256) → local top-k) caps every
-    aggregation buffer at ~n2/256 and the final merge sees ≤ 256·k
-    candidates per lid."""
-    cond = F.lit(True)
-    for c in on:
-        cond = cond & F.col(f"__lon_{c}").eqNullSafe(F.col(f"__ron_{c}"))
-    r = F.broadcast(right_base) if broadcast_right else right_base
-    j = remaining.join(r, cond, "inner").select(
-        F.col(_LID),
-        F.col("__lx"),
-        F.col("__ly"),
-        *[F.col(f"__lon_{c}") for c in on],
-        _score(_cand_struct()).alias("__s"),
-    )
-    # lids that match nothing simply emit no pair rows — same contract as
-    # _explode_top dropping cnt=0 lids (the left spine restores NULLs)
-    if not broadcast_right:
-        pre = j.groupBy(_LID, F.pmod(F.hash(F.col("__s")["__rid"]), F.lit(256)).alias("__b")).agg(
-            F.slice(F.array_sort(F.collect_list("__s")), 1, k).alias("__top"),
-            F.first("__lx").alias("__lx"),
-            F.first("__ly").alias("__ly"),
-            *[F.first(f"__lon_{c}").alias(f"__lon_{c}") for c in on],
-        )
-        j = pre.select(
-            _LID, "__lx", "__ly", *[f"__lon_{c}" for c in on], F.explode("__top").alias("__s")
-        )
-    agg = j.groupBy(_LID).agg(
-        F.collect_list("__s").alias("__scored"),
-        F.first("__lx").alias("__lx"),
-        F.first("__ly").alias("__ly"),
-        *[F.first(f"__lon_{c}").alias(f"__lon_{c}") for c in on],
-    )
-    return _topk_select(agg, "__scored", k, on)
 
 
 def knn_pairs(
@@ -749,211 +533,53 @@ def knn_pairs(
     stats1: dict | None = None,
     stats2: dict | None = None,
 ) -> DataFrame:
-    """(lid, rid, __dist, __rank) pairs: k nearest right points per left
-    point. Iterative cell-ring expansion: certified when kth_dist ≤
-    radius*cell_size (any point outside the (2r+1)^2 block is strictly
-    farther); uncertified rows escalate (radius ×3) and the tail finishes
-    in an exact nested-loop round — no left row is ever dropped.
+    """(__lid, __rid, __dist, __rank, *extra) pairs: the k nearest right
+    points of every left point by euclidean distance, ties by rid, under
+    the ``on`` equalities. Points with a NULL, NaN or infinite coordinate
+    take no part. The ``Planar`` spec is sized from density stats so the
+    first pass certifies ~99.9% of rows (see ``operators/knn.nearest``
+    for the two arms); the right payload ``extra`` joins back by rid."""
+    from geotables_jl_spark.geom.knn_kernel import Planar
+    from geotables_jl_spark.operators import knn
 
-    Scale shape (the north rule's scaling criterion): round 1 is sized
-    from density stats to certify ~99% of rows in ONE pass, and for a
-    broadcast-able right side that pass is MAP-ONLY (``_knn_round_numpy``)
-    — no shuffle, no groupBy, no window over the big left stream, so
-    throughput scales linearly with executors. Later rounds touch only
-    the persisted (tiny) remainder; the full input is never persisted."""
     on = list(on or [])
     extra = list(extra or [])
+    x, y = F.col(GEOM)["x"], F.col(GEOM)["y"]
+    df1, df2 = df1.where(knn.finite(x, y)), df2.where(knn.finite(x, y))
     s2 = stats2 or envelope_stats(df2)
     s1 = stats1 or envelope_stats(df1)
-    if s1["n"] == 0 or s2["n"] == 0 or s1["xmax"] is None or s2["xmax"] is None:
-        # empty side ⇒ no pairs (left spine restores NULLs in the
-        # aggregate form); schema must still match the non-empty path
-        spark = df1.sparkSession
-        empty = spark.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField(_LID, df1.schema[ROW_ID].dataType),
-                    T.StructField(_RID, df2.schema[ROW_ID].dataType),
-                    T.StructField("__dist", T.DoubleType()),
-                    T.StructField("__rank", T.IntegerType()),
-                ]
-                + [df2.schema[c] for c in extra]
-            ),
-        )
-        return empty
-    ext_w = max(s1["xmax"], s2["xmax"]) - min(s1["xmin"], s2["xmin"])
-    ext_h = max(s1["ymax"], s2["ymax"]) - min(s1["ymin"], s2["ymin"])
-    extent = max(ext_w, ext_h, 1e-9)
-    import math
-
-    n1 = max(s1["n"], 1)
-    n2 = max(s2["n"], 1)
-    radius0 = 1
-    if cell_size is None:
-        # size the ROUND-1 block so its certificate (kth ≤ radius·cell)
-        # already covers the typical kth distance with slack: for
-        # Poisson-ish density λ = n2/area, kth ≈ sqrt(k/(π·λ)); starting
-        # at radius 2 over cells of 0.42·sqrt(k/λ) gives guarantee
-        # 0.84·sqrt(k/λ) ⇒ P(certify) = P(Poisson(π·0.84²·k) ≥ k) ≳ 99.9%
-        # for k ≥ 5, with only ~25·0.18·k ≈ 4.4k candidates per left row
-        # (the finer grid trims the corner waste of a radius-1 block; a
-        # round-1 certification miss is what capped scaling efficiency at
-        # 0.45 in round 1 of this build).
-        area = max(ext_w, 1e-9) * max(ext_h, 1e-9)
-        cell_size = 0.42 * math.sqrt(max(float(k), 1.0) * area / float(n2))
-        cell_size = min(max(cell_size, extent / 65536.0), extent)
-        radius0 = 2
-
-    right_base = df2.select(
-        F.col(ROW_ID).alias(_RID),
-        F.col(GEOM)["x"].alias("__rx"),
-        F.col(GEOM)["y"].alias("__ry"),
-        *[F.col(c).alias(f"__ron_{c}") for c in on],
-        point_cell(F.col(GEOM), cell_size).alias("__rcell"),
+    if not s1["n"] or not s2["n"] or s1["xmax"] is None or s2["xmax"] is None:
+        spec = Planar(1.0, 1, 0.0)  # an empty side: one round, no pairs
+    else:
+        ext_w = max(s1["xmax"], s2["xmax"]) - min(s1["xmin"], s2["xmin"])
+        ext_h = max(s1["ymax"], s2["ymax"]) - min(s1["ymin"], s2["ymin"])
+        extent = max(ext_w, ext_h, 1e-9)
+        radius = 1
+        if cell_size is None:
+            # size the first block so its certificate (kth ≤ radius·cell)
+            # covers the typical kth distance with slack: for Poisson-ish
+            # density λ = n2/area, kth ≈ sqrt(k/(π·λ)); radius 2 over
+            # cells of 0.42·sqrt(k/λ) guarantees 0.84·sqrt(k/λ) ⇒
+            # P(certify) = P(Poisson(π·0.84²·k) ≥ k) ≳ 99.9% for k ≥ 5,
+            # with only ~25·0.18·k ≈ 4.4k candidates per left row
+            area = max(ext_w, 1e-9) * max(ext_h, 1e-9)
+            cell_size = 0.42 * math.sqrt(max(float(k), 1.0) * area / float(s2["n"]))
+            cell_size = min(max(cell_size, extent / 65536.0), extent)
+            radius = 2
+        spec = Planar(cell_size, radius, extent)
+    side = [x, y, *map(F.col, on)]
+    out = knn.nearest(
+        df1.select(F.col(ROW_ID), *side), df2.select(F.col(ROW_ID), *side), spec, k,
+        n_right=s2["n"], n_keys=len(on), max_rounds=max_rounds,
     )
-    broadcast_right = n2 < BROADCAST_ROWS
-    # the vectorized Arrow kernel path needs integral row ids (numpy
-    # int64 columns) and no `on` conjuncts; anything else → JVM rounds
-    id_ok = isinstance(df1.schema[ROW_ID].dataType, (T.LongType, T.IntegerType)) and isinstance(
-        df2.schema[ROW_ID].dataType, (T.LongType, T.IntegerType)
-    )
-    use_kernel = broadcast_right and not on and id_ok
-    bc = None
-    if use_kernel:
-        # ship the right side to workers ONCE as plain numpy (~32 B/pt):
-        # all rounds share it, only the gather radius changes
-        from geotables_jl_spark.geom.knn_kernel import RightIndex
-
-        pdf = right_base.select(_RID, "__rx", "__ry").toPandas()
-        bc = df1.sparkSession.sparkContext.broadcast(
-            RightIndex(
-                pdf[_RID].to_numpy(np.int64),
-                pdf["__rx"].to_numpy(np.float64),
-                pdf["__ry"].to_numpy(np.float64),
-                cell_size,
-            )
-        )
-    elif broadcast_right:
-        # small side only: rounds ≥ 2 re-read it for their broadcast map.
-        # A huge right side is NOT pinned — each (rare) extra round
-        # re-scans the source instead of pinning 10^12 rows of storage.
-        right_base = right_base.persist()
-
-    from geotables_jl_spark.geom.cells import cell_index, pack_cell
-
-    remaining = df1.select(
-        F.col(ROW_ID).alias(_LID),
-        F.col(GEOM)["x"].alias("__lx"),
-        F.col(GEOM)["y"].alias("__ly"),
-        *[F.col(c).alias(f"__lon_{c}") for c in on],
-        point_cell(F.col(GEOM), cell_size).alias("__lcell"),
-    )
-    if use_kernel:
-        # ONE exact map-only stage: certification, radius escalation and
-        # the brute-force outlier tail all run inside the Arrow kernel
-        # against the resident broadcast index (score_batch_exact). No
-        # driver rounds, no persist, no count() barrier — the job is a
-        # single narrow map over the left scan, the shape that scales
-        # linearly with executors (round-1's loop measured 0.45
-        # efficiency; a pure map measures like the intersects join).
-        out = _pairs_from_kernel(_knn_round_numpy(remaining, bc, radius0, k))
-        out = out.select(_LID, _RID, "__dist", "__rank")
-        if extra:
-            payload = F.broadcast(df2.select(F.col(ROW_ID).alias(_RID), *extra))
-            out = out.join(payload, _RID, "left")
-        return out.select(_LID, _RID, "__dist", "__rank", *extra)
-
-    rem_count = n1
-    done_parts: list[DataFrame] = []
-    radius = radius0
-    round_no = 0
-    # bound on the per-round (2r+1)²·n explode/gather volume; past it the
-    # escalation tail finishes in the exact round instead
-    explode_budget = 64_000_000
-    while True:
-        round_no += 1
-        blocks = (2 * radius + 1) ** 2
-        block_covers_extent = (2 * radius + 1) * cell_size >= 2.0 * extent
-        if round_no > 1 and (
-            block_covers_extent
-            or round_no > max_rounds
-            or blocks * min(rem_count, n2) > explode_budget
-        ):
-            # escalation tail (tiny by construction): finish exactly —
-            # uncertified rows are NEVER silently dropped
-            done_parts.append(_explode_top(_knn_exact(remaining, right_base, k, on, broadcast_right)))
-            break
-        guarantee = float(radius) * cell_size
-        agg = _knn_round_shuffle(
-            remaining, right_base, cell_size, radius, k, on,
-            broadcast_right, explode_right=n2 <= rem_count,
-        )
-        cert_cond = (F.col("__cnt") >= k) & (F.col("__kth") <= F.lit(guarantee))
-        if block_covers_extent:
-            done_parts.append(_explode_top(agg))
-            break
-        done_parts.append(_explode_top(agg.filter(cert_cond)))
-        # cnt=0 rows: false AND null is false in SQL, so ~cert_cond
-        # keeps them
-        nxt = agg.filter(~cert_cond).select(
-            _LID, "__lx", "__ly", *[f"__lon_{c}" for c in on],
-            pack_cell(
-                cell_index(F.col("__lx"), cell_size), cell_index(F.col("__ly"), cell_size)
-            ).alias("__lcell"),
-        ).persist()
-        # Persist ONLY the remainder (≈1% of input with the stats-driven
-        # round-1 sizing) — the certified bulk is recomputed once by the
-        # caller's single action; persisted remainders stay pinned because
-        # later done_parts read them, and their total size is a fraction
-        # of one round-1 input. The count materializes the persist AND
-        # replaces the old per-round isEmpty() driver short-circuit.
-        remaining = nxt
-        rem_count = nxt.count()
-        if rem_count == 0:
-            nxt.unpersist()
-            break
-        radius *= 3
-
-    out = done_parts[0]
-    for p in done_parts[1:]:
-        out = out.unionByName(p)
-    out = out.select(_LID, _RID, "__dist", "__rank")
     if extra:
-        # right payload joins back ONCE, by rid, after all rounds — keeps
-        # payload out of every sort/shuffle and permits unorderable types
+        # the payload joins back ONCE, by rid, after all rounds: it stays
+        # out of every sort and shuffle, and unorderable types are fine
         payload = df2.select(F.col(ROW_ID).alias(_RID), *extra)
-        if broadcast_right:
+        if s2["n"] < knn.KNN_BROADCAST_ROWS:
             payload = F.broadcast(payload)
         out = out.join(payload, _RID, "left")
     return out.select(_LID, _RID, "__dist", "__rank", *extra)
-
-
-def _pairs_from_kernel(rnd: DataFrame) -> DataFrame:
-    """Kernel round output (one row per lid, top-k as ARRAY columns) →
-    (lid, rid, dist, rank) pair rows via codegen posexplode — the k× fan
-    -out happens JVM-side, never through Arrow. cnt=0 lids have empty
-    arrays and emit no rows (the caller's left spine restores NULLs)."""
-    return rnd.select(
-        _LID, F.posexplode(F.arrays_zip("__rids", "__dists")).alias("__pos", "__z")
-    ).select(
-        _LID,
-        F.col("__z")["__rids"].alias(_RID),
-        F.col("__z")["__dists"].alias("__dist"),
-        (F.col("__pos") + 1).alias("__rank"),
-    )
-
-
-def _explode_top(agg: DataFrame) -> DataFrame:
-    """Certified per-lid top arrays → (lid, rid, dist, rank) pair rows.
-    cnt=0 lids (no neighbor exists at all) emit no rows — the caller's
-    left spine restores them as NULL aggregates."""
-    return agg.select(_LID, F.posexplode("__top").alias("__pos", "__c")).select(
-        _LID,
-        F.col("__c")["__rid"].alias(_RID),
-        F.col("__c")["__dist"].alias("__dist"),
-        (F.col("__pos") + 1).alias("__rank"),
-    )
 
 
 def knn_join(
@@ -974,14 +600,14 @@ def knn_join(
     kNN searches the embedding space of the domain,
     ``/root/reference/src/geoops/geojoin.jl``). ``metric='sphere'``
     ranks by great-circle distance instead, via the S2 cell-ring join
-    (``operators/geojoin_s2``): correct across the antimeridian and at
-    the poles, where planar LatLon distance is wrong. Sphere mode
-    requires a LatLon CRS and POINT geometry (rows with null point
-    coords are dropped), reports ``distance`` as the central angle in
-    RADIANS (multiply by the earth radius for meters), and does not
-    support ``on=`` conjuncts. ``n_right`` is the sphere path's
-    stats-injection escape hatch (skips one count job); it also picks
-    the S2 join's arm (see ``operators/geojoin_s2.s2_knn_join``)."""
+    (``operators/geojoin_s2.s2_knn_join``): correct across the
+    antimeridian and at the poles, where planar LatLon distance is
+    wrong. Sphere mode requires a LatLon CRS and POINT geometry, reports
+    ``distance`` as the central angle in RADIANS (multiply by the earth
+    radius for meters), and does not support ``on=`` conjuncts. Both
+    metrics run the one kNN engine (``operators/knn.py``) and drop
+    points with a NULL, NaN or infinite coordinate. ``n_right`` is the
+    sphere path's stats-injection escape hatch (skips one count job)."""
     if gtb2.crs != gtb1.crs:
         from geotables_jl_spark.functions.crs import reproject
 

@@ -7,3 +7,30 @@ from geotables_jl_spark.session import get_spark
 def spark():
     s = get_spark("geotables-tests", cpus=8, shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture
+def knn_arms(monkeypatch):
+    """``knn_arms(run)`` yields (arm, run()) for the kNN kernel arm at the
+    real directory threshold, then for the rounds arm forced by a zero
+    threshold, and checks each run took the arm it is named after. A run
+    with ``on=`` keys takes the rounds arm under both thresholds."""
+    from geotables_jl_spark.operators import knn
+
+    real, rows = knn._kernel_arm, knn.KNN_BROADCAST_ROWS
+
+    def per_arm(run, kernel=True):
+        for arm, threshold in (("kernel", rows), ("rounds", 0)):
+            calls = []
+
+            def spy(*a):
+                calls.append(a)
+                return real(*a)
+
+            monkeypatch.setattr(knn, "_kernel_arm", spy)
+            monkeypatch.setattr(knn, "KNN_BROADCAST_ROWS", threshold)
+            out = run()
+            assert bool(calls) == (kernel and arm == "kernel"), arm
+            yield arm, out
+
+    return per_arm

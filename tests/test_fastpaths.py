@@ -70,25 +70,32 @@ def test_blocked_cosine_matches_naive(spark):
         assert got[k] == pytest.approx(v, abs=1e-6)
 
 
-def test_knn_multi_round_expansion(spark):
-    # sparse points + tiny forced cell_size → radius must double several
-    # times before the k-th neighbor is certified; exact result must
-    # equal brute force regardless of how many rounds it takes
+def test_knn_multi_round_expansion(spark, knn_arms):
+    # sparse points + tiny forced cell_size → the search radius must
+    # triple several times before the k-th neighbor is certified; exact
+    # result must equal brute force regardless of how many rounds it
+    # takes. Points with a NULL, NaN or infinite coordinate get no pairs
+    # and are no one's neighbour.
     pts = [(i, float(i * i % 97), float((i * 37) % 89)) for i in range(40)]
-    df = spark.createDataFrame(pts, "row_id long, x double, y double")
+    bad = [(40, None, 1.0), (41, float("nan"), 2.0), (42, float("inf"), 3.0), (43, 4.0, float("-inf"))]
+    df = spark.createDataFrame(pts + bad, "row_id long, x double, y double")
     gtb = georef(df, coords=["x", "y"], crs="Cartesian")
-    out = knn_join(gtb, gtb, k=4, cell_size=0.5)  # ~1 point per 2000 cells
-    got = {}
-    for r in out.collect():
-        got.setdefault(r["row_id"], []).append((r["rank"], r["neighbor_id"], r["distance"]))
-    assert set(got) == {p[0] for p in pts}
-    for qid, qx, qy in pts:
-        d = sorted((math.hypot(px - qx, py - qy), pid) for pid, px, py in pts)[:4]
-        mine = sorted(got[qid])
-        assert len(mine) == 4
-        for rank, (dist, pid) in enumerate(d, 1):
-            assert mine[rank - 1][1] == pid
-            assert mine[rank - 1][2] == pytest.approx(dist, abs=1e-9)
+
+    def run():
+        got = {}
+        for r in knn_join(gtb, gtb, k=4, cell_size=0.5).collect():  # ~1 point per 2000 cells
+            got.setdefault(r["row_id"], []).append((r["rank"], r["neighbor_id"], r["distance"]))
+        return got
+
+    for arm, got in knn_arms(run):
+        assert set(got) == {p[0] for p in pts}, arm
+        for qid, qx, qy in pts:
+            d = sorted((math.hypot(px - qx, py - qy), pid) for pid, px, py in pts)[:4]
+            mine = sorted(got[qid])
+            assert len(mine) == 4, arm
+            for rank, (dist, pid) in enumerate(d, 1):
+                assert mine[rank - 1][1] == pid, arm
+                assert mine[rank - 1][2] == pytest.approx(dist, abs=1e-9), arm
 
 
 def test_extract_text_byte_identical_across_parallelism(spark):

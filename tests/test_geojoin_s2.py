@@ -11,34 +11,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from geotables_jl_spark.geom import s2
-from geotables_jl_spark.operators import geojoin_s2
 from geotables_jl_spark.operators.geojoin_s2 import (
     s2_dwithin_join,
     s2_knn_join,
     s2_point_prep,
 )
-
-_KERNEL_ROWS = geojoin_s2.S2_BROADCAST_ROWS
-
-
-def _per_arm(monkeypatch, run):
-    """Yield (arm, run()) for the kernel arm at the real threshold, then
-    for the rounds arm forced by a zero threshold; checks that each run
-    took the arm it is named after."""
-    real = geojoin_s2._knn_kernel_arm
-    for arm, rows in (("kernel", _KERNEL_ROWS), ("rounds", 0)):
-        calls = []
-
-        def spy(*a):
-            calls.append(a)
-            return real(*a)
-
-        monkeypatch.setattr(geojoin_s2, "_knn_kernel_arm", spy)
-        monkeypatch.setattr(geojoin_s2, "S2_BROADCAST_ROWS", rows)
-        out = run()
-        assert bool(calls) == (arm == "kernel"), arm
-        yield arm, out
-
 
 def _unit(n, seed):
     r = np.random.default_rng(seed)
@@ -134,19 +111,19 @@ def test_dwithin_salted_same_result(sphere_dfs):
     assert (base["rid"].to_numpy() == salted["rid"].to_numpy()).all()
 
 
-def test_knn_matches_bruteforce_with_ties(sphere_dfs, monkeypatch):
+def test_knn_matches_bruteforce_with_ties(sphere_dfs, knn_arms):
     L, R, lp, rp = sphere_dfs
     k = 5
     D = np.sqrt(((L[:, None, :] - R[None, :, :]) ** 2).sum(-1))
     exp = np.argsort(D, axis=1, kind="stable")[:, :k]
-    for arm, got in _per_arm(monkeypatch, lambda: s2_knn_join(lp, rp, k, n_right=2000).toPandas()):
+    for arm, got in knn_arms(lambda: s2_knn_join(lp, rp, k, n_right=2000).toPandas()):
         assert len(got) == 300 * k, arm
         for lid in range(300):
             g = got[got["lid"] == lid].sort_values("rank")["rid"].to_numpy()
             assert (g == exp[lid]).all(), (arm, lid)
 
 
-def test_knn_sparse_right_escalates(sphere_dfs, monkeypatch):
+def test_knn_sparse_right_escalates(sphere_dfs, knn_arms):
     """8 right points force the ring expansion through to the full
     sphere — the graceful brute-force degradation, still exact."""
     L, _, lp, _ = sphere_dfs
@@ -158,7 +135,7 @@ def test_knn_sparse_right_escalates(sphere_dfs, monkeypatch):
     rp2 = s2_point_prep(rdf, "rid", xyz=("x", "y", "z"))
     D = np.sqrt(((L[:, None, :] - R2[None, :, :]) ** 2).sum(-1))
     exp = np.argsort(D, axis=1, kind="stable")[:, :3]
-    for arm, got in _per_arm(monkeypatch, lambda: s2_knn_join(lp, rp2, 3, n_right=8).toPandas()):
+    for arm, got in knn_arms(lambda: s2_knn_join(lp, rp2, 3, n_right=8).toPandas()):
         assert len(got) == 300 * 3, arm
         for lid in range(300):
             g = got[got["lid"] == lid].sort_values("rank")["rid"].to_numpy()
@@ -181,25 +158,24 @@ def test_dwithin_expand_right_matches(sphere_dfs):
     assert (base["chord2"].to_numpy() == flip["chord2"].to_numpy()).all()
 
 
-def test_knn_expand_right_matches_bruteforce(sphere_dfs):
-    """kNN with the right-side cover explode: the rounds arm broadcasts a
-    small directory and explodes it, which string rids force (the kernel
-    arm takes integral ids only). Exact vs numpy brute force with
+def test_knn_expand_right_matches_bruteforce(sphere_dfs, knn_arms):
+    """String rids (Arrow-taken by the kernel arm, window-ordered by the
+    rounds arm) on both arms: exact vs numpy brute force with
     (distance, rid) tie order, including certify/escalate rounds."""
     L, R, lp, rp = sphere_dfs
     rps = rp.withColumn("rid", F.format_string("r%04d", "rid"))  # string order = numeric
     D = np.sqrt(((L[:, None, :] - R[None, :, :]) ** 2).sum(-1))
     # a tiny chord0 forces several certify/escalate rounds
     for k, kw in ((5, {"n_right": 2000}), (2, {"chord0": 1e-3})):
-        got = s2_knn_join(lp, rps, k, **kw).toPandas()
         exp = np.argsort(D, axis=1, kind="stable")[:, :k]
-        assert len(got) == 300 * k, kw
-        for lid in range(300):
-            g = got[got["lid"] == lid].sort_values("rank")["rid"].str[1:].astype(int)
-            assert (g.to_numpy() == exp[lid]).all(), (kw, lid)
+        for arm, got in knn_arms(lambda: s2_knn_join(lp, rps, k, **kw).toPandas()):
+            assert len(got) == 300 * k, (arm, kw)
+            for lid in range(300):
+                g = got[got["lid"] == lid].sort_values("rank")["rid"].str[1:].astype(int)
+                assert (g.to_numpy() == exp[lid]).all(), (arm, kw, lid)
 
 
-def test_knn_max_rounds_exhausted_fallback(sphere_dfs, monkeypatch):
+def test_knn_max_rounds_exhausted_fallback(sphere_dfs, knn_arms):
     """max_rounds=1 with a tiny chord0 certifies nothing in the rounds
     arm's loop, so every row takes the final full-sphere pass — which
     must stay exact; the kernel arm escalates in-kernel instead."""
@@ -210,7 +186,7 @@ def test_knn_max_rounds_exhausted_fallback(sphere_dfs, monkeypatch):
     def run():
         return s2_knn_join(lp, rp, 3, chord0=1e-6, max_rounds=1, n_right=2000).toPandas()
 
-    for arm, got in _per_arm(monkeypatch, run):
+    for arm, got in knn_arms(run):
         assert len(got) == 300 * 3, arm
         for lid in range(300):
             g = got[got["lid"] == lid].sort_values("rank")["rid"].to_numpy()
@@ -224,11 +200,10 @@ def _engine_unit(P):
     return P / nrm[:, None]
 
 
-def test_knn_string_ids_small_directory(spark, monkeypatch):
-    """String lid/rid on a small directory — the one input the kernel arm
-    cannot take — runs the rounds arm with a broadcast cell join and
-    equals numpy brute force including the (chord2, rid) tie order,
-    where rid order is string order ("r10" < "r9")."""
+def test_knn_string_ids_small_directory(spark, knn_arms):
+    """String lid/rid on a small directory equal numpy brute force on
+    both arms, including the (chord2, rid) tie order, where rid order is
+    string order ("r10" < "r9")."""
     rng = np.random.default_rng(21)
     base = rng.normal(size=(20, 3))
     R = np.repeat(base, 3, axis=0)  # every position three times: exact ties
@@ -245,27 +220,17 @@ def test_knn_string_ids_small_directory(spark, monkeypatch):
     d = [Lu[:, None, i] - Ru[None, :, i] for i in range(3)]
     d2 = d[0] * d[0] + d[1] * d[1] + d[2] * d[2]
     k = 7  # cuts through a three-way tie group
-    broadcasts = []
-    real = geojoin_s2._round_topk
-
-    def spy(*a):
-        broadcasts.append(a[-1])
-        return real(*a)
-
-    monkeypatch.setattr(geojoin_s2, "_round_topk", spy)
     for kw in ({}, {"chord0": 1e-3}):  # default radius, then forced escalation
-        broadcasts.clear()
-        got = s2_knn_join(lp, rp, k, n_right=len(R), **kw).toPandas()
-        assert broadcasts and all(broadcasts), kw
-        assert len(got) == len(L) * k, kw
-        for i, q in enumerate(lid):
-            order = np.lexsort((rid, d2[i]))[:k]
-            g = got[got["lid"] == q].sort_values("rank")
-            assert g["rid"].tolist() == rid[order].tolist(), (kw, q)
-            assert (g["chord2"].to_numpy() == d2[i, order]).all(), (kw, q)
+        for arm, got in knn_arms(lambda: s2_knn_join(lp, rp, k, n_right=len(R), **kw).toPandas()):
+            assert len(got) == len(L) * k, (arm, kw)
+            for i, q in enumerate(lid):
+                order = np.lexsort((rid, d2[i]))[:k]
+                g = got[got["lid"] == q].sort_values("rank")
+                assert g["rid"].tolist() == rid[order].tolist(), (arm, kw, q)
+                assert (g["chord2"].to_numpy() == d2[i, order]).all(), (arm, kw, q)
 
 
-def test_knn_duplicate_distance_ties(spark, monkeypatch):
+def test_knn_duplicate_distance_ties(spark, knn_arms):
     """Adversarial: many right points at IDENTICAL distances from the
     query (a ring of duplicated positions) — rank must break ties by
     ascending rid, matching the SQL oracle's (chord2, rid) order."""
@@ -294,7 +259,7 @@ def test_knn_duplicate_distance_ties(spark, monkeypatch):
     def run():
         return s2_knn_join(lp, rp, 8, n_right=len(R)).toPandas().sort_values("rank")
 
-    for arm, got in _per_arm(monkeypatch, run):
+    for arm, got in knn_arms(run):
         assert (got["rid"].to_numpy() == exp).all(), arm
         # bit-identical duplicates must be adjacent with ascending rid
         pairs = got["rid"].to_numpy().reshape(-1, 2)
@@ -311,7 +276,7 @@ def test_point_prep_latlon_and_zero(spark):
     assert s2_point_prep(zdf, "id", xyz=("x", "y", "z")).count() == 0
 
 
-def test_knn_join_sphere_metric_antimeridian(spark, monkeypatch):
+def test_knn_join_sphere_metric_antimeridian(spark, knn_arms):
     """knn_join(metric='sphere') ranks by great-circle distance: across
     the antimeridian the nearest neighbor is at lon -179.9 (0.2 deg of
     arc), which planar LatLon distance ranks FARTHEST (359.8 units)."""
@@ -334,7 +299,7 @@ def test_knn_join_sphere_metric_antimeridian(spark, monkeypatch):
     def run():
         return knn_join(gl, gr, k=2, metric="sphere", n_right=2).toPandas().sort_values("rank")
 
-    for arm, sph in _per_arm(monkeypatch, run):
+    for arm, sph in knn_arms(run):
         assert list(sph["neighbor_id"]) == [1, 2], arm
         assert abs(sph.iloc[0]["distance"] - np.radians(0.2)) < 1e-9, arm
         assert list(sph["name_"] if "name_" in sph else sph["name"]) == ["x", "y"], arm
@@ -342,7 +307,7 @@ def test_knn_join_sphere_metric_antimeridian(spark, monkeypatch):
     assert list(pla["neighbor_id"]) == [2, 1]  # planar gets it wrong
 
 
-def test_knn_join_sphere_broadcast_parity(spark, monkeypatch):
+def test_knn_join_sphere_broadcast_parity(spark, knn_arms):
     """knn_join(metric='sphere') returns the same neighbors, distances
     and columns on the kernel arm and on the rounds arm, and the
     neighbors match numpy brute force."""
@@ -365,7 +330,7 @@ def test_knn_join_sphere_broadcast_parity(spark, monkeypatch):
         out = knn_join(gl, gr, k=4, metric="sphere", n_right=200).toPandas()
         return out.sort_values(["row_id", "rank"]).reset_index(drop=True)
 
-    (_, a), (_, b) = _per_arm(monkeypatch, run)
+    (_, a), (_, b) = knn_arms(run)
     assert list(a.columns) == list(b.columns)
     assert (a["neighbor_id"] == b["neighbor_id"]).all()
     assert (a["distance"].to_numpy() == b["distance"].to_numpy()).all()
@@ -396,7 +361,7 @@ def test_knn_join_sphere_rejects(spark):
         knn_join(g, g, k=1, metric="euclid")
 
 
-def test_point_prep_drops_null_nan_inf_rows(spark, monkeypatch):
+def test_point_prep_drops_null_nan_inf_rows(spark, knn_arms):
     """s2_point_prep keeps only finite, non-zero directions in both
     branches, so no kNN arm (kernel, rounds) or dwithin join
     emits a row for a NULL/NaN/±Inf coordinate. Spark orders NaN above
@@ -426,7 +391,7 @@ def test_point_prep_drops_null_nan_inf_rows(spark, monkeypatch):
         L = pts[["nx", "ny", "nz"]].to_numpy(dtype=float)
         d2 = ((L[:, None, :] - R[None, :, :]) ** 2).sum(-1)
         exp = {(lid, int(r)) for lid, row in zip([0, 1], d2) for r in np.argsort(row, kind="stable")[:3]}
-        runs = _per_arm(monkeypatch, lambda: s2_knn_join(left, right, 3, n_right=len(R)).toPandas())
+        runs = knn_arms(lambda: s2_knn_join(left, right, 3, n_right=len(R)).toPandas())
         for arm, got in runs:
             assert {(int(a), int(b)) for a, b in zip(got["lid"], got["rid"])} == exp, arm
             assert np.isfinite(got["chord2"].to_numpy(dtype=float)).all(), arm

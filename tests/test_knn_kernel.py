@@ -1,4 +1,4 @@
-"""Property test of the one-pass exact kNN kernel (geom/knn_kernel.py)
+"""Property test of the one-pass exact kNN kernel's Planar spec (geom/knn_kernel.py)
 against a brute-force numpy reference — no Spark session needed, so it
 exercises hostile layouts (clustered + far outliers that force the
 in-kernel escalation and brute-force tail, duplicated coordinates that
@@ -62,13 +62,12 @@ def test_score_batch_exact_matches_brute_force():
         )
         radius = int(rng.integers(1, 3))
         budget = int(rng.choice([64, 1000, 262144]))
-        cols, off, ridv, distv = score_batch_exact(lid, lx, ly, lcell, idx, radius, k, budget)
+        off, ridv, distv = score_batch_exact(lid, lx, ly, lcell, idx, radius, k, budget)
         ref = _brute_ref(lx, ly, rid, rx, ry, k)
-        # complete accounting: every input row appears exactly once
-        assert sorted(cols["__lid"].tolist()) == lid.tolist()
-        for pos in range(n1):
-            i = int(cols["__lid"][pos])
-            got = list(zip(ridv[off[pos] : off[pos + 1]].tolist(), distv[off[pos] : off[pos + 1]].tolist()))
+        # complete accounting: one output row per input row, in input order
+        assert len(off) == n1 + 1
+        for i in range(n1):
+            got = list(zip(ridv[off[i] : off[i + 1]].tolist(), distv[off[i] : off[i + 1]].tolist()))
             assert got == ref[i], (
                 f"trial {trial} layout {layout} lid {i}: k={k} n2={n2} "
                 f"cell={cell:.4f} r={radius} budget={budget}"
@@ -80,10 +79,10 @@ def test_score_batch_exact_empty_sides():
     lid = np.arange(3, dtype=np.int64)
     lx = ly = np.zeros(3)
     lcell = pack_cells_np(np.zeros(3, np.int64), np.zeros(3, np.int64))
-    cols, off, ridv, distv = score_batch_exact(lid, lx, ly, lcell, idx, 1, 5)
-    assert (cols["__cnt"] == 0).all() and len(ridv) == 0 and list(off) == [0, 0, 0, 0]
+    off, ridv, distv = score_batch_exact(lid, lx, ly, lcell, idx, 1, 5)
+    assert len(ridv) == 0 and list(off) == [0, 0, 0, 0]
     idx2 = RightIndex(np.array([7], np.int64), np.array([0.5]), np.array([0.5]), 1.0)
-    cols, off, ridv, distv = score_batch_exact(
+    off, ridv, distv = score_batch_exact(
         np.empty(0, np.int64), np.empty(0), np.empty(0), np.empty(0, np.int64), idx2, 1, 5
     )
     assert len(ridv) == 0 and list(off) == [0]
@@ -133,11 +132,8 @@ def test_score_batch_exact_integer_lattice_sweep():
             np.floor(lx / cell).astype(np.int64), np.floor(ly / cell).astype(np.int64)
         )
         for budget in (64, 262144):
-            cols, off, ridv, distv = score_batch_exact(lid, lx, ly, lcell, idx, 1, k, budget)
+            off, ridv, distv = score_batch_exact(lid, lx, ly, lcell, idx, 1, k, budget)
             ref = _brute_ref(lx, ly, rid, rx, ry, k)
-            for pos in range(len(lx)):
-                i = int(cols["__lid"][pos])
-                got = list(
-                    zip(ridv[off[pos]: off[pos + 1]].tolist(), distv[off[pos]: off[pos + 1]].tolist())
-                )
+            for i in range(len(lx)):
+                got = list(zip(ridv[off[i]: off[i + 1]].tolist(), distv[off[i]: off[i + 1]].tolist()))
                 assert got == ref[i], (span, dup, k, budget, i)

@@ -78,17 +78,18 @@ def test_filter_pushdown_reaches_scan(spark):
 
 
 def test_s2_knn_kernel_arm_is_one_map_stage(spark):
-    """The broadcast-directory S2 kNN must stay a single narrow map over
-    the page scan: its only Exchange is the documented single-file
-    fixture repartition (REPARTITION_BY_NUM below the kernel), never a
-    hash shuffle, window, or sort-merge join above it."""
-    df = E.queries()["s2_knn"](spark, SF)
-    plan = _plan(df)
-    assert "MapInArrow" in plan, plan[:1500]
-    exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
-    assert all("REPARTITION_BY_NUM" in ln for ln in exchanges), exchanges
-    assert "SortMergeJoin" not in plan
-    assert "Window" not in plan
+    """A kNN against a broadcast-size directory, sphere or plane, must
+    stay a single narrow map over the query scan: exactly one
+    MapInArrow, and no hash shuffle, window or sort-merge join above it.
+    The only Exchange allowed is the documented single-file fixture
+    repartition (REPARTITION_BY_NUM below the kernel)."""
+    for name in ("s2_knn", "geojoin_knn"):
+        plan = _plan(E.queries()[name](spark, SF))
+        assert plan.count("MapInArrow") == 1, (name, plan[:1500])
+        exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
+        assert all("REPARTITION_BY_NUM" in ln for ln in exchanges), (name, exchanges)
+        assert "SortMergeJoin" not in plan, name
+        assert "Window" not in plan, name
 
 
 def test_driver_registry_contract():

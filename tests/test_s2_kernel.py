@@ -1,4 +1,4 @@
-"""Exactness tests for the in-kernel S2 kNN arm (geom/s2_knn_kernel.py):
+"""Exactness tests for the kNN kernel's Sphere spec (geom/knn_kernel.py):
 against a numpy brute-force oracle, against the DataFrame rounds arm,
 and on adversarial shapes — identical positions (chord2==0 ties),
 lattice ties at the k-th boundary, empty-region points that must
@@ -11,8 +11,8 @@ import math
 import numpy as np
 from pyspark.sql import functions as F
 
-from geotables_jl_spark.geom.s2_knn_kernel import SphereIndex, score_batch_sphere
-from geotables_jl_spark.operators import geojoin_s2
+from geotables_jl_spark.geom.knn_kernel import PointIndex, Sphere, knn_exact
+from geotables_jl_spark.operators import knn
 from geotables_jl_spark.operators.geojoin_s2 import s2_knn_join, s2_point_prep
 
 
@@ -32,12 +32,9 @@ def _norm(x, y, z):
 
 
 def _check_kernel(lx, ly, lz, rid, rx, ry, rz, k, chord0):
-    from geotables_jl_spark.geom import s2
-
-    idx = SphereIndex(rid, rx, ry, rz)
-    level0 = s2.s2_level_for_chord(chord0, 6.0)
-    lid = np.arange(len(lx), dtype=np.int64)
-    lens, off, ridv, d2v = score_batch_sphere(lid, lx, ly, lz, idx, chord0, level0, k)
+    idx = PointIndex(rid, (rx, ry, rz))
+    off, pos, d2v = knn_exact((lx, ly, lz), idx, Sphere(chord0), k)
+    ridv = idx.rid.take(pos).to_numpy()
     exp = _brute(lx, ly, lz, rid, rx, ry, rz, k)
     for i in range(len(lx)):
         got = list(zip(d2v[off[i]:off[i + 1]], ridv[off[i]:off[i + 1]]))
@@ -121,7 +118,7 @@ def test_kernel_arm_matches_rounds_arm(spark, monkeypatch):
         return sorted(map(tuple, out.select("lid", "rid", "chord2", "rank").collect()))
 
     a = rows()
-    monkeypatch.setattr(geojoin_s2, "S2_BROADCAST_ROWS", 0)
+    monkeypatch.setattr(knn, "KNN_BROADCAST_ROWS", 0)
     b = rows()
     assert a == b
     assert len(a) == 5 * lprep.where(F.col("nx").isNotNull()).count()
@@ -178,28 +175,29 @@ def test_kernel_property_sweep(cfg):
 
 
 def test_cover_index_cache_keyed_by_token():
-    """The worker-global CoverIndex memo must key on the SphereIndex's
-    construction token, not id(): ids are reused after gc, which would
-    serve a new directory the OLD directory's cover slices."""
-    from geotables_jl_spark.geom import s2_knn_kernel as K
+    """The worker-global cell-index memo must key on the directory's
+    construction token, not id(), for both metrics: ids are reused after
+    gc, which would serve a new directory the OLD directory's slices."""
+    from geotables_jl_spark.geom import knn_kernel as K
 
-    rng = np.random.default_rng(7)
-
-    def mk(n, seed):
-        r = np.random.default_rng(seed)
-        v = r.standard_normal((n, 3))
+    def sphere(n, seed):
+        v = np.random.default_rng(seed).standard_normal((n, 3))
         v /= np.linalg.norm(v, axis=1, keepdims=True)
-        return SphereIndex(np.arange(n, dtype=np.int64), v[:, 0], v[:, 1], v[:, 2])
+        return PointIndex(np.arange(n, dtype=np.int64), v.T), Sphere(0.1, 8)
 
-    a = mk(50, 1)
-    b = mk(80, 2)
-    assert a.token != b.token
-    ci_a = K._cover_index(a, 0.1, 8)
-    assert K._CI_CACHE["base_token"] == a.token
-    ci_b = K._cover_index(b, 0.1, 8)
-    assert K._CI_CACHE["base_token"] == b.token
-    assert ci_b is not ci_a
-    # the stale entry for `a` was evicted; re-requesting rebuilds fresh
-    ci_a2 = K._cover_index(a, 0.1, 8)
-    assert ci_a2 is not ci_a
-    assert len(ci_a2.point_idx) == len(ci_a.point_idx)
+    def plane(n, seed):
+        p = np.random.default_rng(seed).uniform(0, 10, (n, 2))
+        return K.RightIndex(np.arange(n, dtype=np.int64), p[:, 0], p[:, 1], 0.5), K.Planar(0.5, 2)
+
+    for mk in (sphere, plane):
+        (a, spec), (b, _) = mk(50, 1), mk(80, 2)
+        assert a.token != b.token
+        ci_a = K._cell_index(a, spec)
+        assert K._MEMO["token"] == a.token
+        ci_b = K._cell_index(b, spec)
+        assert K._MEMO["token"] == b.token
+        assert ci_b is not ci_a
+        # the stale entry for `a` was evicted; re-requesting rebuilds fresh
+        ci_a2 = K._cell_index(a, spec)
+        assert ci_a2 is not ci_a
+        assert (ci_a2.pos == ci_a.pos).all()

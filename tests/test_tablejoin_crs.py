@@ -85,25 +85,68 @@ def test_geojoin_auto_reproject(spark):
     assert out["v"] == pytest.approx(7.0)  # reprojection made the points coincide
 
 
-def test_knn_golden(spark):
+def test_knn_golden(spark, knn_arms):
     left = _points(spark, [(0, 0.0, 0.0)], "row_id long, x double, y double")
     right = _points(
         spark,
         [(1, 1.0, 0.0), (2, 0.0, 2.0), (3, 3.0, 0.0), (4, 0.0, 4.0)],
         "row_id long, x double, y double",
     )
-    got = sorted(
-        (r["rank"], r["neighbor_id"], r["distance"]) for r in knn_join(left, right, k=3).collect()
-    )
-    assert got == [(1, 1, 1.0), (2, 2, 2.0), (3, 3, 3.0)]
+
+    def run():
+        return sorted(
+            (r["rank"], r["neighbor_id"], r["distance"]) for r in knn_join(left, right, k=3).collect()
+        )
+
+    for arm, got in knn_arms(run):
+        assert got == [(1, 1, 1.0), (2, 2, 2.0), (3, 3, 3.0)], arm
 
 
-def test_knn_tie_break_by_id(spark):
+def test_knn_tie_break_by_id(spark, knn_arms):
     left = _points(spark, [(0, 0.0, 0.0)], "row_id long, x double, y double")
     right = _points(
         spark,
         [(5, 1.0, 0.0), (2, -1.0, 0.0), (9, 0.0, 1.0)],
         "row_id long, x double, y double",
     )
-    got = [(r["rank"], r["neighbor_id"]) for r in knn_join(left, right, k=3).collect()]
-    assert sorted(got) == [(1, 2), (2, 5), (3, 9)]  # equal distances → id order
+
+    def run():
+        return sorted((r["rank"], r["neighbor_id"]) for r in knn_join(left, right, k=3).collect())
+
+    for arm, got in knn_arms(run):
+        assert got == [(1, 2), (2, 5), (3, 9)], arm  # equal distances → id order
+
+
+def test_geojoin_knn_on_keys_string_ids(spark, knn_arms):
+    """geojoin(pred="knn", on=[...]) with string row ids equals brute
+    force: neighbours come from the row's key group only (a NULL key
+    matches NULL, as isequal), distance ties break by rid in string order
+    ("r10" < "r9"), and a point with a NULL, NaN or infinite coordinate
+    gets a NULL aggregate and is no one's neighbour."""
+    inf, nan = float("inf"), float("nan")
+    keys = ["a", "b", None]
+    # small integer lattice: distance ties at the k-th boundary everywhere
+    right = [(f"r{i}", keys[i % 3], float(i * 7 % 5), float(i * 3 % 4)) for i in range(30)]
+    right += [("rnan", "a", nan, 0.0), ("rinf", "b", 1.0, -inf), ("rnull", None, None, 0.0)]
+    left = [(f"q{i}", keys[i % 3], float(i % 5), float(i * 5 % 4)) for i in range(12)]
+    left += [("qnan", "a", nan, 1.0), ("qinf", "b", inf, 1.0), ("qnull", None, 2.0, None)]
+    left.append(("qlone", "zz", 0.0, 0.0))  # a key no right row has
+    schema = "row_id string, key string, x double, y double"
+    gl = _points(spark, left, schema)
+    gr = _points(spark, [(*r, r[0]) for r in right], schema + ", name string")
+    k = 3
+    exp = {}
+    for lid, key, lx, ly in left:
+        cand = sorted(
+            (math.sqrt((lx - rx) * (lx - rx) + (ly - ry) * (ly - ry)), rid)
+            for rid, rkey, rx, ry in right
+            if rkey == key and all(v is not None and math.isfinite(v) for v in (lx, ly, rx, ry))
+        )
+        exp[lid] = sorted(rid for _, rid in cand[:k]) or None
+
+    def run():
+        out = geojoin(gl, gr, aggs={"name": "collect"}, pred="knn", on=["key"], k=k).df
+        return {r["row_id"]: r["name"] for r in out.collect()}
+
+    for arm, got in knn_arms(run, kernel=False):
+        assert got == exp, arm
