@@ -963,7 +963,7 @@ def q_s2_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``operators/knn.py`` with ``geom/knn_kernel.knn_exact``), so the
     gate replays it bit-for-bit against a window-function SQL oracle:
     in-kernel certify-or-escalate, tie order (chord2, rid). The rounds
-    arm (directory of ``KNN_BROADCAST_ROWS`` or more) keeps brute-force
+    arm (a directory over the ``KNN_BROADCAST_ROWS`` budget) keeps brute-force
     pytest coverage on both metrics (the ``knn_arms`` test fixture).
     ``n_right`` comes from the parquet footer count (metadata-only job)
     — the stats-injection escape hatch, not a table scan."""

@@ -549,34 +549,36 @@ def knn_pairs(
     s2 = stats2 or envelope_stats(df2)
     s1 = stats1 or envelope_stats(df1)
     if not s1["n"] or not s2["n"] or s1["xmax"] is None or s2["xmax"] is None:
-        spec = Planar(1.0, 1, 0.0)  # an empty side: one round, no pairs
-    else:
-        ext_w = max(s1["xmax"], s2["xmax"]) - min(s1["xmin"], s2["xmin"])
-        ext_h = max(s1["ymax"], s2["ymax"]) - min(s1["ymin"], s2["ymin"])
-        extent = max(ext_w, ext_h, 1e-9)
-        radius = 1
-        if cell_size is None:
-            # size the first block so its certificate (kth ≤ radius·cell)
-            # covers the typical kth distance with slack: for Poisson-ish
-            # density λ = n2/area, kth ≈ sqrt(k/(π·λ)); radius 2 over
-            # cells of 0.42·sqrt(k/λ) guarantees 0.84·sqrt(k/λ) ⇒
-            # P(certify) = P(Poisson(π·0.84²·k) ≥ k) ≳ 99.9% for k ≥ 5,
-            # with only ~25·0.18·k ≈ 4.4k candidates per left row
-            area = max(ext_w, 1e-9) * max(ext_h, 1e-9)
-            cell_size = 0.42 * math.sqrt(max(float(k), 1.0) * area / float(s2["n"]))
-            cell_size = min(max(cell_size, extent / 65536.0), extent)
-            radius = 2
-        spec = Planar(cell_size, radius, extent)
+        # an empty side: no pairs (the left spine restores NULLs)
+        return knn.empty(df1.select(ROW_ID), df2.select(ROW_ID, *extra), extra)
+    ext_w = max(s1["xmax"], s2["xmax"]) - min(s1["xmin"], s2["xmin"])
+    ext_h = max(s1["ymax"], s2["ymax"]) - min(s1["ymin"], s2["ymin"])
+    extent = max(ext_w, ext_h, 1e-9)
+    radius = 1
+    if cell_size is None:
+        # size the first block so its certificate (kth ≤ radius·cell)
+        # covers the typical kth distance with slack: for Poisson-ish
+        # density λ = n2/area, kth ≈ sqrt(k/(π·λ)); radius 2 over
+        # cells of 0.42·sqrt(k/λ) guarantees 0.84·sqrt(k/λ) ⇒
+        # P(certify) = P(Poisson(π·0.84²·k) ≥ k) ≳ 99.9% for k ≥ 5,
+        # with only ~25·0.18·k ≈ 4.4k candidates per left row
+        area = max(ext_w, 1e-9) * max(ext_h, 1e-9)
+        cell_size = 0.42 * math.sqrt(max(float(k), 1.0) * area / float(s2["n"]))
+        cell_size = min(max(cell_size, extent / 65536.0), extent)
+        radius = 2
+    spec = Planar(cell_size, radius, extent)
     side = [x, y, *map(F.col, on)]
     out = knn.nearest(
         df1.select(F.col(ROW_ID), *side), df2.select(F.col(ROW_ID), *side), spec, k,
         n_right=s2["n"], n_keys=len(on), max_rounds=max_rounds,
+        # an injected count may include the non-finite rows dropped above
+        n_left=None if stats1 else s1["n"],
     )
     if extra:
         # the payload joins back ONCE, by rid, after all rounds: it stays
         # out of every sort and shuffle, and unorderable types are fine
         payload = df2.select(F.col(ROW_ID).alias(_RID), *extra)
-        if s2["n"] < knn.KNN_BROADCAST_ROWS:
+        if knn.small(s2["n"], spec):
             payload = F.broadcast(payload)
         out = out.join(payload, _RID, "left")
     return out.select(_LID, _RID, "__dist", "__rank", *extra)

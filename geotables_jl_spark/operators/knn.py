@@ -3,25 +3,30 @@ directory points of every query point, ties by ascending rid, under a
 metric spec from ``geom/knn_kernel.py`` (``Planar`` or ``Sphere``).
 The directory's row count picks one of two arms:
 
-- **kernel arm** (directory below ``KNN_BROADCAST_ROWS``, no ``on=``
-  keys): ONE narrow map stage. The directory rides to workers once as a
-  rid-sorted numpy broadcast; each Arrow batch ships (lid, coordinates)
-  in and (lid, rids, dists) out, and ``knn_exact`` runs the whole
-  cell-ring expansion in-batch (covered pass, certification, one 3×
-  escalation, brute-force tail). The JVM fans the lists out with a
+- **kernel arm** (a directory whose worker index fits the
+  ``KNN_BROADCAST_ROWS`` budget, no ``on=`` keys): ONE narrow map
+  stage. The directory rides to workers once as a rid-sorted numpy
+  broadcast; each Arrow batch ships (lid, coordinates) in and (lid,
+  rids, dists) out, and ``knn_exact`` runs the whole cell-ring
+  expansion in-batch (covered pass, certification, one 3× escalation,
+  brute-force tail). The JVM fans the lists out with a
   codegen posexplode. No shuffle and no driver rounds, so the job
   scales with executors like a scan.
 - **rounds arm** (larger directory, or ``on=`` keys): certify-or-escalate
-  DataFrame rounds. A round explodes the remaining query rows to the
-  spec's index cells (one Arrow map), equi-joins the directory's single
-  cell plus the ``on=`` keys (null-safe, the reference's ``isequal``),
-  and ranks by (dist, rid) in one lid window; a row is certified when
-  its k-th candidate is within the spec's bound. The rest escalate: the
-  search radius triples at a 3× coarser resolution, so each cover stays
-  ~(2r+1)² cells. The last round covers everything, so it is exact.
+  DataFrame rounds. A round explodes the smaller of the directory and
+  the remaining query rows to the spec's index cells (one Arrow map),
+  equi-joins the other side's single cell plus the ``on=`` keys
+  (null-safe, the reference's ``isequal``), and ranks by (dist, rid) in
+  one lid window; a row is certified when its k-th candidate is within
+  the spec's bound. Both covers hold every point within the bound, so
+  either orientation certifies the same rows. A directory under the
+  budget is broadcast. The rest escalate: the search radius triples at
+  a 3× coarser resolution, so each cover stays ~(2r+1)² cells. The last
+  round covers everything, so it is exact.
 
 Both arms first drop query and directory rows with a NULL, NaN or
 infinite coordinate: such a point has no neighbours and is no one's.
+A side known to be empty returns no rows without a kernel or rounds job.
 """
 
 from __future__ import annotations
@@ -33,17 +38,25 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from geotables_jl_spark.geom.knn_kernel import Metric
+from geotables_jl_spark.geom.knn_kernel import Metric, Sphere
 
-#: directories below this many rows take the kernel arm. Each Python
-#: worker builds the directory's cell index (17-30 entries per point on
-#: either metric), and a batch that escalates builds a second one. Peak
-#: RSS growth of one worker building both and scoring a 10k-row batch,
-#: at 249,999 uniform points (numpy 1.26, 4-vCPU / 15 GB host): planar
-#: 0.36 GB at k=10 and k=50; sphere 0.96 GB at k=10 and 0.83 GB at k=50
-#: (the S2 cap cover's temporaries: 3.5-4 KB per point), linear in the
-#: directory, so four workers stay under 4 GB.
+#: the kernel arm's budget, in sphere directory rows: a directory takes
+#: the kernel arm while ``n_right · spec.point_bytes`` stays under
+#: ``KNN_BROADCAST_ROWS · Sphere.point_bytes`` (~1 GB per Python
+#: worker), so the plane's lighter index keeps it to 666,666 rows. Each
+#: worker builds the directory's cell index, and a batch that escalates
+#: builds a second one. Peak RSS growth of one worker building both and
+#: scoring a 10k-row batch, uniform points just under the threshold
+#: (numpy 1.26, 4-vCPU / 15 GB host): sphere at 249,999 points 0.96 GB
+#: (k=10) and 0.83 GB (k=50); planar at 666,666 points 0.94 GB (k=10
+#: and k=50). Linear in the directory, so four workers stay under 4 GB.
 KNN_BROADCAST_ROWS = 250_000
+
+
+def small(n_right: int, spec: Metric) -> bool:
+    """True while a worker's ``spec`` index of ``n_right`` directory
+    points fits the kernel arm's budget (``KNN_BROADCAST_ROWS``)."""
+    return n_right * spec.point_bytes < KNN_BROADCAST_ROWS * Sphere.point_bytes
 
 
 def finite(*cols: Column) -> Column:
@@ -76,12 +89,30 @@ def nearest(
     (dist, rid). Both sides are (id, *coordinates in ``spec.cols`` order,
     *the last ``n_keys`` columns as ``on=`` keys), by position; any
     orderable id type works. ``n_right`` (the directory's row count)
-    picks the arm; ``max_rounds`` and ``n_left`` (the query row count,
-    when known: it saves a count job) only apply to the rounds arm."""
+    picks the arm; ``max_rounds`` and ``n_left`` (the query row count
+    after the non-finite drop, when known: it saves a count job) only
+    apply to the rounds arm."""
     lt, rt = points(left, "l", spec, n_keys), points(right, "r", spec, n_keys)
-    if n_keys or n_right >= KNN_BROADCAST_ROWS:
-        return _rounds_arm(lt, rt, spec, k, n_keys, max_rounds, n_left)
+    if n_right == 0 or n_left == 0:
+        return empty(lt, rt)
+    if n_keys or not small(n_right, spec):
+        return _rounds_arm(lt, rt, spec, k, n_keys, max_rounds, n_left, n_right)
     return _kernel_arm(lt, rt, spec, k)
+
+
+def empty(left: DataFrame, right: DataFrame, extra: list[str] = ()) -> DataFrame:
+    """The (__lid, __rid, __dist, __rank, *extra) frame with no rows: ids
+    typed as the first column of each side, ``extra`` as in ``right``."""
+    schema = T.StructType(
+        [
+            T.StructField("__lid", left.schema.fields[0].dataType),
+            T.StructField("__rid", right.schema.fields[0].dataType),
+            T.StructField("__dist", T.DoubleType()),
+            T.StructField("__rank", T.IntegerType()),
+        ]
+        + [right.schema[c] for c in extra]
+    )
+    return left.sparkSession.createDataFrame([], schema)
 
 
 def _kernel_arm(left: DataFrame, right: DataFrame, spec: Metric, k: int) -> DataFrame:
@@ -147,30 +178,36 @@ def cells(df: DataFrame, spec: Metric, tag: str, explode: bool) -> DataFrame:
     return df.mapInArrow(_iter, schema)
 
 
-def _round(remaining: DataFrame, right: DataFrame, spec: Metric, k: int, n_keys: int) -> DataFrame:
+def _round(
+    remaining: DataFrame, right: DataFrame, spec: Metric, k: int, n_keys: int, explode_right: bool, broadcast: bool
+) -> DataFrame:
     """One rounds-arm pass: per lid, the top-k candidates by (dist, rid)
-    among the spec's index cells. Candidates beyond the bound can never
-    certify a row, so they are dropped before the window (the cover
-    oversamples the search radius several times) — except in a round
-    that covers everything, which certifies by construction."""
+    among the spec's index cells, with the ``explode_right`` side
+    exploded. Candidates beyond the bound can never certify a row, so
+    they are dropped before the window (the cover oversamples the search
+    radius several times) — except in a round that covers everything,
+    which certifies by construction."""
     cond = F.col("__lcell") == F.col("__rcell")
     for i in range(n_keys):
         cond = cond & F.col(f"__lk{i}").eqNullSafe(F.col(f"__rk{i}"))
     dist = spec.dist([F.col(f"__l{c}") for c in spec.cols], [F.col(f"__r{c}") for c in spec.cols], F.sqrt)
-    cand = cells(remaining, spec, "l", explode=True).join(cells(right, spec, "r", explode=False), cond)
-    cand = cand.select("__lid", "__rid", dist.alias("__dist"))
+    r = cells(right, spec, "r", explode=explode_right)
+    l = cells(remaining, spec, "l", explode=not explode_right)
+    cand = l.join(F.broadcast(r) if broadcast else r, cond).select("__lid", "__rid", dist.alias("__dist"))
     if not spec.covers_all:
         cand = cand.where(F.col("__dist") <= F.lit(spec.bound))
     w = Window.partitionBy("__lid").orderBy(F.col("__dist").asc(), F.col("__rid").asc())
     return cand.withColumn("__rank", F.row_number().over(w)).where(F.col("__rank") <= k)
 
 
-def _rounds_arm(left, right, spec, k, n_keys, max_rounds, n_left) -> DataFrame:
+def _rounds_arm(left, right, spec, k, n_keys, max_rounds, n_left, n_right) -> DataFrame:
     """Certify-or-escalate rounds (see module docstring)."""
     results = []
-    remaining, n_remaining = left, n_left
+    broadcast = small(n_right, spec)
+    remaining = left
+    n_remaining = left.count() if n_left is None else n_left
     for _ in range(max_rounds):
-        topk = _round(remaining, right, spec, k, n_keys)
+        topk = _round(remaining, right, spec, k, n_keys, n_right <= n_remaining, broadcast)
         if spec.covers_all:
             results.append(topk)
             break
@@ -179,8 +216,6 @@ def _rounds_arm(left, right, spec, k, n_keys, max_rounds, n_left) -> DataFrame:
         topk = topk.localCheckpoint(eager=True)
         # candidates are within the bound, so a k-th one certifies its lid
         cert = topk.where(F.col("__rank") == k).select("__lid")
-        if n_remaining is None:
-            n_remaining = remaining.count()
         n_cert = cert.count()
         if n_cert == n_remaining:
             results.append(topk)
@@ -192,5 +227,5 @@ def _rounds_arm(left, right, spec, k, n_keys, max_rounds, n_left) -> DataFrame:
         n_remaining -= n_cert
         spec = spec.escalate()
     else:
-        results.append(_round(remaining, right, spec.full(), k, n_keys))
+        results.append(_round(remaining, right, spec.full(), k, n_keys, n_right <= n_remaining, broadcast))
     return reduce(DataFrame.unionByName, results)

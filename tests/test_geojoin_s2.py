@@ -137,6 +137,8 @@ def test_knn_sparse_right_escalates(sphere_dfs, knn_arms):
     exp = np.argsort(D, axis=1, kind="stable")[:, :3]
     for arm, got in knn_arms(lambda: s2_knn_join(lp, rp2, 3, n_right=8).toPandas()):
         assert len(got) == 300 * 3, arm
+        if arm == "rounds":  # the 8-row directory explodes, not the 300 queries
+            assert knn_arms.rounds[0] == (True, False)
         for lid in range(300):
             g = got[got["lid"] == lid].sort_values("rank")["rid"].to_numpy()
             assert (g == exp[lid]).all(), (arm, lid)

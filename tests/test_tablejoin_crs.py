@@ -128,7 +128,9 @@ def test_geojoin_knn_on_keys_string_ids(spark, knn_arms):
     # small integer lattice: distance ties at the k-th boundary everywhere
     right = [(f"r{i}", keys[i % 3], float(i * 7 % 5), float(i * 3 % 4)) for i in range(30)]
     right += [("rnan", "a", nan, 0.0), ("rinf", "b", 1.0, -inf), ("rnull", None, None, 0.0)]
-    left = [(f"q{i}", keys[i % 3], float(i % 5), float(i * 5 % 4)) for i in range(12)]
+    # more query rows than directory rows: round 1 explodes the directory,
+    # the escalated rounds (qlone's, below) the few remaining query rows
+    left = [(f"q{i}", keys[i % 3], float(i % 5), float(i * 5 % 4)) for i in range(36)]
     left += [("qnan", "a", nan, 1.0), ("qinf", "b", inf, 1.0), ("qnull", None, 2.0, None)]
     left.append(("qlone", "zz", 0.0, 0.0))  # a key no right row has
     schema = "row_id string, key string, x double, y double"
@@ -150,3 +152,65 @@ def test_geojoin_knn_on_keys_string_ids(spark, knn_arms):
 
     for arm, got in knn_arms(run, kernel=False):
         assert got == exp, arm
+        assert {e for e, _ in knn_arms.rounds} == {True, False}, arm
+        # the 30-row directory is broadcast at the real threshold only
+        assert {b for _, b in knn_arms.rounds} == {arm == "kernel"}, arm
+
+
+def _jobs(spark, fn):
+    """(fn(), the number of Spark jobs it launched)."""
+    sc = spark.sparkContext
+    sc.setJobGroup("knn-jobs", "knn-jobs")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup("knn-jobs"))
+
+
+def test_knn_empty_side_runs_no_job(spark):
+    """A side known to be empty gives the typed empty pair frame without
+    launching a job, on both metrics."""
+    from geotables_jl_spark.geom.cells import envelope_stats
+    from geotables_jl_spark.operators.geojoin import knn_pairs
+    from geotables_jl_spark.operators.geojoin_s2 import s2_knn_join
+
+    schema = "row_id string, x double, y double, name string"
+    full = _points(spark, [("a", 0.0, 0.0, "n")], schema).df
+    none = _points(spark, [], schema).df
+    s_full, s_none = envelope_stats(full), envelope_stats(none)
+    for l, r, s1, s2 in ((none, full, s_none, s_full), (full, none, s_full, s_none)):
+        out, jobs = _jobs(spark, lambda: knn_pairs(l, r, 3, extra=["name"], stats1=s1, stats2=s2))
+        assert jobs == 0
+        assert out.dtypes == [("__lid", "string"), ("__rid", "string"), ("__dist", "double"),
+                              ("__rank", "int"), ("name", "string")]
+        assert out.count() == 0
+    sph = spark.createDataFrame([(1, 1.0, 0.0, 0.0)], "id long, nx double, ny double, nz double")
+    lp, rp = sph.withColumnRenamed("id", "lid"), sph.withColumnRenamed("id", "rid")
+    for kw in ({"n_right": 0}, {"n_right": 1, "n_left": 0}):
+        out, jobs = _jobs(spark, lambda: s2_knn_join(lp, rp, 3, **kw))
+        assert jobs == 0 and out.count() == 0, kw
+
+
+def test_knn_pairs_passes_left_count_to_rounds(spark, monkeypatch):
+    """The left count of stats computed from the finite rows reaches the
+    rounds arm, so it runs no count of its own; an injected count, which
+    may include non-finite rows, does not."""
+    from geotables_jl_spark.operators import knn
+    from geotables_jl_spark.operators.geojoin import knn_pairs
+
+    schema = "row_id long, key long, x double, y double"
+    l = _points(spark, [(0, 1, 0.0, 0.0), (1, 1, 1.0, 1.0), (2, 1, float("nan"), 0.0)], schema).df
+    r = _points(spark, [(5, 1, 0.0, 1.0), (6, 1, 2.0, 0.0)], schema).df
+    seen = []
+    real = knn._rounds_arm
+
+    def spy(*a):
+        seen.append(a[-2])  # n_left
+        return real(*a)
+
+    monkeypatch.setattr(knn, "_rounds_arm", spy)
+    knn_pairs(l, r, 1, on=["key"]).collect()
+    knn_pairs(l, r, 1, on=["key"], stats1={"n": 3, "xmin": 0.0, "ymin": 0.0, "xmax": 1.0, "ymax": 1.0}).collect()
+    assert seen == [2, None]
