@@ -13,9 +13,10 @@ version).
 Physical plan (replaces the reference's brute-force O(n1*n2) thread loop,
 ``geojoin.jl:120-124,242-248``):
 
-  1. one cheap envelope-stats aggregate per side → resolution choice +
-     broadcast-vs-shuffle decision (size-based, like Catalyst's own
-     autoBroadcastJoinThreshold but measured in rows we just counted);
+  1. envelope stats per side → resolution choice + broadcast-vs-shuffle
+     decision (size-based, like Catalyst's own autoBroadcastJoinThreshold
+     but measured in rows): read from parquet footers for a bare scan of
+     points, else one cheap aggregate shared by both sides;
   2. cell-cover explode on both sides (pure JVM ``sequence``/``flatten``);
   3. equi-join on cell id (+ null-safe ``on`` conjuncts, mirroring the
      reference's ``isequal`` matching at ``geojoin.jl:226``); the small
@@ -47,12 +48,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from geotables_jl_spark.core.geotable import GEOM, ROW_ID, GeoTable
-from geotables_jl_spark.geom.cells import (
-    cell_cover,
-    choose_cell_size,
-    envelope_stats,
-    point_cell,
-)
+from geotables_jl_spark.geom import cells
+from geotables_jl_spark.geom.cells import cell_cover, choose_cell_size, point_cell
 from geotables_jl_spark.geom.refine import refine_mask
 
 _LID = "__lid"
@@ -400,12 +397,17 @@ def geojoin(
 ) -> GeoTable:
     """Spatial aggregate-on-match join (see module docstring).
 
-    stats1/stats2: precomputed ``envelope_stats`` dicts per side. At
-    10^12 rows the planning scans should come from table-level statistics
-    (Iceberg column min/max + row counts) instead of an aggregate pass —
-    pass them here and the join plans without touching the data. They
-    are never derived from ``gtb.grid`` here: filtered or reprojected
-    tables keep grid metadata that no longer describes their rows.
+    stats1/stats2: precomputed ``envelope_stats`` dicts per side. A side
+    that is a bare parquet scan of ``georef(coords=…)`` points needs
+    none: ``envelope_stats`` reads its row count and extent from the
+    parquet footers (the stand-in for Iceberg's ``record_count`` and
+    ``lower_bounds``/``upper_bounds``) without a Spark job. Every other
+    side without injected stats takes one aggregate pass, shared by both
+    sides. Inject stats for such sides when table-level statistics are
+    known (grids: ``grid_envelope_stats``), and the join plans without
+    touching the data. They are never derived from ``gtb.grid`` here:
+    filtered or reprojected tables keep grid metadata that no longer
+    describes their rows.
 
     pred: "intersects" (default, ``geojoin.jl:51``), "within" (left ⊆
     right — reference ``issubset``), "contains", "knn" (k nearest right
@@ -460,8 +462,10 @@ def geojoin(
         matched = knn_pairs(df1, df2, k=k, on=on, extra=right_cols, cell_size=cell_size,
                             stats1=stats1, stats2=stats2)
     else:
-        s1 = stats1 or envelope_stats(df1)
-        s2 = stats2 or envelope_stats(df2)
+        s1 = stats1 or cells.footer_envelope_stats(df1)
+        s2 = stats2 or cells.footer_envelope_stats(df2)
+        passed = iter(cells.envelope_pass([df for df, s in ((df1, s1), (df2, s2)) if not s]))
+        s1, s2 = s1 or next(passed), s2 or next(passed)
         size = cell_size or choose_cell_size(s1, s2)
         # all-points sides (zero mean envelope extent) unlock plan pruning:
         # no pair dedupe needed, and refine can skip impossible branches;
@@ -545,9 +549,15 @@ def knn_pairs(
     on = list(on or [])
     extra = list(extra or [])
     x, y = F.col(GEOM)["x"], F.col(GEOM)["y"]
+    # plan from the footers of an unfiltered bare parquet side: n is then an
+    # upper bound of its finite rows and the extent a superset, good for
+    # sizing only; the other sides share one data pass over finite rows
+    s1 = stats1 or cells.footer_envelope_stats(df1)
+    s2 = stats2 or cells.footer_envelope_stats(df2)
     df1, df2 = df1.where(knn.finite(x, y)), df2.where(knn.finite(x, y))
-    s2 = stats2 or envelope_stats(df2)
-    s1 = stats1 or envelope_stats(df1)
+    passed = iter(cells.envelope_pass([df for df, s in ((df1, s1), (df2, s2)) if not s]))
+    left_counted = not s1
+    s1, s2 = s1 or next(passed), s2 or next(passed)
     if not s1["n"] or not s2["n"] or s1["xmax"] is None or s2["xmax"] is None:
         # an empty side: no pairs (the left spine restores NULLs)
         return knn.empty(df1.select(ROW_ID), df2.select(ROW_ID, *extra), extra)
@@ -571,8 +581,10 @@ def knn_pairs(
     out = knn.nearest(
         df1.select(F.col(ROW_ID), *side), df2.select(F.col(ROW_ID), *side), spec, k,
         n_right=s2["n"], n_keys=len(on), max_rounds=max_rounds,
-        # an injected count may include the non-finite rows dropped above
-        n_left=None if stats1 else s1["n"],
+        # the rounds arm ends on the exact count of finite left rows, which
+        # only the data pass has: injected and footer counts may include
+        # the non-finite rows dropped above
+        n_left=s1["n"] if left_counted else None,
     )
     if extra:
         # the payload joins back ONCE, by rid, after all rounds: it stays

@@ -27,6 +27,10 @@ The directory's row count picks one of two arms:
 Both arms first drop query and directory rows with a NULL, NaN or
 infinite coordinate: such a point has no neighbours and is no one's.
 A side known to be empty returns no rows without a kernel or rounds job.
+``n_right`` may be a footer estimate that counts non-finite rows, so a
+directory found empty by the kernel arm's collect, or by the rounds
+arm after a first round that certified nothing, also returns no rows
+without further jobs.
 """
 
 from __future__ import annotations
@@ -123,6 +127,9 @@ def _kernel_arm(left: DataFrame, right: DataFrame, spec: Metric, k: int) -> Data
 
     xs = [f"__r{c}" for c in spec.cols]
     tbl = right.select("__rid", *xs).toArrow()
+    if tbl.num_rows == 0:
+        # n_right may be a footer estimate that counted non-finite rows
+        return empty(left, right)
     index = PointIndex(tbl.column("__rid").combine_chunks(), [tbl.column(c).to_numpy() for c in xs])
     bc = left.sparkSession.sparkContext.broadcast(index)
     schema = T.StructType(
@@ -220,6 +227,9 @@ def _rounds_arm(left, right, spec, k, n_keys, max_rounds, n_left, n_right) -> Da
         if n_cert == n_remaining:
             results.append(topk)
             break
+        if not n_cert and not results and right.isEmpty():
+            # n_right may be a footer estimate that counted non-finite rows
+            return empty(left, right)
         # cert scales with the query side, so it is never force-broadcast:
         # topk is lid-partitioned by the window, and AQE broadcasts a small cert
         results.append(topk.join(cert, "__lid"))

@@ -38,10 +38,9 @@ from __future__ import annotations
 
 import glob
 import json
-import math
 import os
 import time
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
 
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
@@ -167,31 +166,57 @@ def footer_stats(data_dir: str, bounded: list[str]) -> tuple[dict[str, int], dic
     part_rows: dict[str, int] = {}
     bounds: dict[str, list] = {}
     unbounded: set[str] = set()
-    for path in sorted(glob.glob(os.path.join(data_dir, "*.parquet"))):
+    paths = sorted(glob.glob(os.path.join(data_dir, "*.parquet")))
+    for path, i, rows, rg_bounds in row_group_bounds(paths, [LINEAGE_COL, *bounded]):
+        lin = rg_bounds[LINEAGE_COL]
+        if lin is not None and lin[0] == lin[1]:
+            key = str(lin[0])
+            part_rows[key] = part_rows.get(key, 0) + rows
+        else:
+            with pq.ParquetFile(path) as pf:
+                col = pf.read_row_group(i, columns=[LINEAGE_COL])[LINEAGE_COL]
+            for vc in pc.value_counts(col).to_pylist():
+                key = str(vc["values"])
+                part_rows[key] = part_rows.get(key, 0) + vc["counts"]
+        for c in bounded:
+            b = rg_bounds[c]
+            if b is None:
+                unbounded.add(c)
+            elif c in bounds:
+                bounds[c] = [min(bounds[c][0], b[0]), max(bounds[c][1], b[1])]
+            else:
+                bounds[c] = list(b)
+    return part_rows, {c: b for c, b in bounds.items() if c not in unbounded}
+
+
+def row_group_bounds(paths: list[str], columns: list[str]) -> Iterator[tuple[str, int, int, dict]]:
+    """``(path, index, rows, bounds)`` of every non-empty row group of the
+    parquet files at ``paths``, from their footers alone. ``bounds[c]``
+    is the footer's ``(min, max)`` of top-level column ``c``, or None
+    where the row group has no such column, no min/max for it that
+    pyarrow converts, or a NaN bound: Spark's writer records NaN as the
+    max, so a NaN bound says nothing about the other values. (pyarrow's
+    writer leaves NaN out of min/max instead, and an all-NaN chunk has
+    none.) This is the one footer reader behind snapshot manifests and
+    metadata-planned joins: per-file row counts and column bounds, as
+    Iceberg keeps them in ``record_count`` and
+    ``lower_bounds``/``upper_bounds``."""
+    for path in paths:
         md = pq.read_metadata(path)
+        pos = {md.schema.column(j).path: j for j in range(md.num_columns)}
         for i in range(md.num_row_groups):
             rg = md.row_group(i)
             if rg.num_rows == 0:
                 continue
-            stats = {
-                rg.column(j).path_in_schema: rg.column(j).statistics for j in range(rg.num_columns)
-            }
-            lin = stats.get(LINEAGE_COL)
-            if lin is not None and lin.has_min_max and lin.min == lin.max:
-                key = str(lin.min)
-                part_rows[key] = part_rows.get(key, 0) + rg.num_rows
-            else:
-                with pq.ParquetFile(path) as pf:
-                    col = pf.read_row_group(i, columns=[LINEAGE_COL])[LINEAGE_COL]
-                for vc in pc.value_counts(col).to_pylist():
-                    key = str(vc["values"])
-                    part_rows[key] = part_rows.get(key, 0) + vc["counts"]
-            for c in bounded:
-                s = stats.get(c)
-                if s is None or not s.has_min_max or math.isnan(s.min) or math.isnan(s.max):
-                    unbounded.add(c)
-                elif c in bounds:
-                    bounds[c] = [min(bounds[c][0], s.min), max(bounds[c][1], s.max)]
-                else:
-                    bounds[c] = [s.min, s.max]
-    return part_rows, {c: b for c, b in bounds.items() if c not in unbounded}
+            yield path, i, rg.num_rows, {c: _min_max(rg, pos.get(c)) for c in columns}
+
+
+def _min_max(rg, j: int | None) -> tuple | None:
+    s = rg.column(j).statistics if j is not None else None
+    if s is None or not s.has_min_max:
+        return None
+    try:
+        lo, hi = s.min, s.max
+    except NotImplementedError:  # pyarrow converts no decimal statistics
+        return None
+    return (lo, hi) if lo == lo and hi == hi else None  # v == v is false only for NaN

@@ -27,7 +27,6 @@ from __future__ import annotations
 
 import hashlib
 import json
-import math
 from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -142,8 +141,9 @@ def geotag_pipeline(
     # 4. 10°-tile rollup: georef the stats rows, inner tile geojoin,
     #    per-tile page count + token sum (broadcast tile side). The join
     #    is planned from metadata, not an envelope pass per side: the
-    #    tiles' stats follow from the grid, the pages' from the stats
-    #    snapshot's manifest (row count + lat/lon footer bounds).
+    #    tiles' stats follow from the grid, and the pages side is a bare
+    #    scan of the stats snapshot, planned from its parquet footers
+    #    (row count + lat/lon bounds).
     def _tiles() -> DataFrame:
         pages = georef(out["stats"], coords=["lat", "lon"])
         grid = georef_grid(spark, 36, 18, ox=-180.0, oy=-90.0, sx=10.0, sy=10.0, crs="LatLon")
@@ -164,7 +164,6 @@ def geotag_pipeline(
             aggs={"page_id": "count", "n_tokens": "sum"},
             kind="inner",
             stats1=grid_envelope_stats(grid.grid),
-            stats2=_page_stats(pipe.cp.manifest("stats")),
         )
         return res.df.select(
             "tile_id",
@@ -175,20 +174,3 @@ def geotag_pipeline(
     out["tiles"] = pipe.stage("tiles", _tiles, deps=["stats"], params={"v": 1})
     return out
 
-
-def _page_stats(manifest: dict | None) -> dict | None:
-    """``envelope_stats`` of the points ``georef`` builds from a snapshot's
-    ``lat``/``lon`` columns, read from its manifest: ``rows`` and the
-    footer bounds of the two columns. None (the join then runs its own
-    pass) when the snapshot is empty or either column has no finite
-    bounds."""
-    bounds = (manifest or {}).get("bounds", {})
-    if not manifest or not manifest["rows"] or "lon" not in bounds or "lat" not in bounds:
-        return None
-    (xmin, xmax), (ymin, ymax) = bounds["lon"], bounds["lat"]
-    if not all(math.isfinite(v) for v in (xmin, xmax, ymin, ymax)):
-        return None
-    return {
-        "n": manifest["rows"], "xmin": float(xmin), "ymin": float(ymin),
-        "xmax": float(xmax), "ymax": float(ymax), "avg_w": 0.0, "avg_h": 0.0, "all_exact": 1,
-    }

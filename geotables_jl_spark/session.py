@@ -58,6 +58,12 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # off: every F.*/Column call would also capture its Python call
+        # site for DataFrame error context (a session lookup, a conf read,
+        # an origin set/clear over Py4J and an IPython import attempt) —
+        # over a third of the Py4J round trips of a geojoin call. Error
+        # classes are unchanged; only that call-site text goes away.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if extra_conf:
         for k, v in extra_conf.items():

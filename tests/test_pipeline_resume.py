@@ -111,9 +111,8 @@ def test_manifests_match_snapshot_oracle(spark, tmp_path):
     and the returned frame's schema the inferred one. A resume of the
     whole pipeline then launches no Spark job."""
     from geotables_jl_spark.core.geotable import georef
-    from geotables_jl_spark.geom.cells import envelope_stats
+    from geotables_jl_spark.geom import cells
     from geotables_jl_spark.plans.checkpoint import LINEAGE_COL
-    from geotables_jl_spark.plans.pipeline import _page_stats
 
     root = str(tmp_path)
     out = geotag_pipeline(spark, root, SF, run_id="p5")
@@ -134,9 +133,11 @@ def test_manifests_match_snapshot_oracle(spark, tmp_path):
             assert m["bounds"]["lon"] == [mm[2], mm[3]], stage
         assert df.schema == snap.schema, stage
 
-    # the tile join's page-side plan statistics equal the data pass
+    # the tile join plans its page side (a bare scan of the stats
+    # snapshot) from the footers, and they equal a forced data pass
     pages = georef(spark.read.parquet(os.path.join(root, "p5", "stats", "data")), coords=["lat", "lon"])
-    assert _page_stats(manifests["stats"]) == envelope_stats(pages.df)
+    footer = cells.footer_envelope_stats(pages.df)
+    assert footer is not None and footer == cells.envelope_pass([pages.df])[0]
 
     sc = spark.sparkContext
     sc.setJobGroup("pipeline_resume", "pipeline_resume")
