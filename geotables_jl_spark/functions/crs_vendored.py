@@ -62,16 +62,18 @@ def _xyz_to_geodetic(x, y, z, a: float, b: float):
     lon = np.arctan2(y, x)
     p = np.hypot(x, y)
     lat = np.arctan2(z, p * (1.0 - e2))
-    if np.size(lat) == 0:  # empty ring/batch: np.max would raise
-        return lon, lat
+    # each point stops at its own convergence (~0.1 µm; ~5 rounds), not
+    # the batch's slowest, so its bits do not depend on its batch
+    done = np.zeros(np.shape(lat), bool)
     for _ in range(100):
         s = np.sin(lat)
         nu = a / np.sqrt(1.0 - e2 * s * s)
         new = np.arctan2(z + e2 * nu * s, p)
-        if np.max(np.abs(new - lat)) < 1e-14:  # ~0.1 µm; ~5 rounds
-            lat = new
+        conv = np.abs(new - lat) < 1e-14
+        lat = np.where(done, lat, new)
+        done |= conv
+        if done.all():
             break
-        lat = new
     return lon, lat
 
 
@@ -146,9 +148,12 @@ def osgb36_tm_inverse(E, N):
     aF0 = AIRY_A * _NG_F0
     phi = (np.asarray(N, dtype=np.float64) - _NG_N0) / aF0 + _NG_PHI0
     M = _ng_meridional_arc(phi)
-    while np.size(phi) and np.max(np.abs(N - _NG_N0 - M)) >= 1e-5:  # 0.01 mm (guide's bound)
-        phi = phi + (N - _NG_N0 - M) / aF0
+    # 0.01 mm (guide's bound), per point as in _xyz_to_geodetic
+    active = np.abs(N - _NG_N0 - M) >= 1e-5
+    while active.any():
+        phi = np.where(active, phi + (N - _NG_N0 - M) / aF0, phi)
         M = _ng_meridional_arc(phi)
+        active = np.abs(N - _NG_N0 - M) >= 1e-5
     s = np.sin(phi)
     t = np.tan(phi)
     sec = 1.0 / np.cos(phi)
@@ -168,29 +173,48 @@ def osgb36_tm_inverse(E, N):
     return lon, lat
 
 
+def _batch_invariant(f, a, b):
+    """``f(a, b)`` evaluated so that a point's bits do not depend on its
+    batch: numpy 1.26 runs a one-element array's transcendentals on its
+    scalar path, whose last bit can differ from the SIMD loop every
+    longer array takes, so a one-point input is evaluated as two copies
+    and the first kept."""
+    a, b = np.asarray(a, dtype=np.float64), np.asarray(b, dtype=np.float64)
+    shape = np.broadcast_shapes(a.shape, b.shape)
+    if int(np.prod(shape)) != 1:
+        return f(a, b)
+    u, v = f(np.repeat(a.reshape(1), 2), np.repeat(b.reshape(1), 2))
+    return u[:1].reshape(shape), v[:1].reshape(shape)
+
+
+def _forward(lon_deg, lat_deg):
+    x, y, z = _geodetic_to_xyz(np.radians(lon_deg), np.radians(lat_deg), WGS84_A, WGS84_B)
+    x, y, z = _helmert(x, y, z, +1)
+    lon36, lat36 = _xyz_to_geodetic(x, y, z, AIRY_A, AIRY_B)
+    return osgb36_tm_forward(lon36, lat36)
+
+
+def _inverse(E, N):
+    lon36, lat36 = osgb36_tm_inverse(E, N)
+    x, y, z = _geodetic_to_xyz(lon36, lat36, AIRY_A, AIRY_B)
+    x, y, z = _helmert(x, y, z, -1)
+    lon, lat = _xyz_to_geodetic(x, y, z, WGS84_A, WGS84_B)
+    return np.degrees(lon), np.degrees(lat)
+
+
 class Osgb36Transformer:
-    """EPSG:27700 — WGS84 lon/lat degrees ↔ National Grid metres."""
+    """EPSG:27700 — WGS84 lon/lat degrees ↔ National Grid metres. A
+    point's result is the same in every batch it arrives in."""
 
     name = "EPSG:27700"
 
     @staticmethod
     def forward(lon_deg, lat_deg):
-        lon = np.radians(np.asarray(lon_deg, dtype=np.float64))
-        lat = np.radians(np.asarray(lat_deg, dtype=np.float64))
-        x, y, z = _geodetic_to_xyz(lon, lat, WGS84_A, WGS84_B)
-        x, y, z = _helmert(x, y, z, +1)
-        lon36, lat36 = _xyz_to_geodetic(x, y, z, AIRY_A, AIRY_B)
-        return osgb36_tm_forward(lon36, lat36)
+        return _batch_invariant(_forward, lon_deg, lat_deg)
 
     @staticmethod
     def inverse(E, N):
-        lon36, lat36 = osgb36_tm_inverse(
-            np.asarray(E, dtype=np.float64), np.asarray(N, dtype=np.float64)
-        )
-        x, y, z = _geodetic_to_xyz(lon36, lat36, AIRY_A, AIRY_B)
-        x, y, z = _helmert(x, y, z, -1)
-        lon, lat = _xyz_to_geodetic(x, y, z, WGS84_A, WGS84_B)
-        return np.degrees(lon), np.degrees(lat)
+        return _batch_invariant(_inverse, E, N)
 
 
 _VENDORED = {"EPSG:27700": Osgb36Transformer}

@@ -2,15 +2,28 @@
 numpy): the worker side of both arms in ``operators/knn.py``.
 
 A *metric spec* (``Planar``, ``Sphere``) holds everything that differs
-between the two searches: the coordinates, the index entries a
-directory point contributes (the (2r+1)² cell block around its cell, or
-the S2 cells covering its chord cap), the one cell a query point probes,
-the distance (``sqrt(dx²+dy²)``, or chord² with no root), the
-certificate bound and the escalation (3× cell at fixed r, or 3× chord at
-the S2 level for it). Everything else is shared: the cell→point CSR
-(``CellIndex``) and its worker memo, one covered pass, the tie-exact
-top-k, the brute-force tail and the certify→escalate→brute driver
-``knn_exact``.
+between the two searches: the coordinates, the (position, key) entries a
+directory point stores (``index``), the key ranges a query row gathers
+(``probe``), the distance (``sqrt(dx²+dy²)``, or chord² with no root),
+the certificate bound and the escalation (3× cell at fixed r, or 3×
+chord at the S2 level for it). Everything else is shared: the sorted
+(key, position) CSR (``CellIndex``) and its worker memo, one gather and
+covered pass, the tie-exact top-k, the brute-force tail and the
+certify→escalate→brute driver ``knn_exact``.
+
+Which side carries the cover: the plane indexes each directory point
+once, under its own cell, and a query gathers its (2r+1)² ring as 2r+1
+column runs of the sorted keys; the sphere indexes each directory point
+under every S2 cell of its chord cap (~23 cells, ~15 µs per point) and a
+query probes its one cell, because the query side is the one that grows
+to 10¹² rows. Per query row the ring gather costs more than one slice
+(a warm covered pass over 25k benchmark rows: 128 ms with the plane's
+old 25×-replicated index, ~175 ms gathered), but building the compact
+index costs ~0.02 s instead of ~0.4 s per 100k points and a twentieth of
+the memory. The gather wins whenever a worker scores fewer than ~240k
+rows per directory build, lets a planar batch escalate its uncertified
+rows instead of brute-forcing them, and lets the kernel arm serve much
+larger planar directories.
 
 Why Python here at all (the repo's rule is JVM-first): the per-row
 "score ~65 candidates, sort, slice k" step has no codegen-friendly Spark
@@ -21,11 +34,14 @@ CodegenFallback and measured 6.7–92 s per 4M rows on local[16]
 (padded gather, argpartition top-k with an exact tie fallback), never a
 per-row or per-group Python loop.
 
-Determinism: directory points sit in rid order and every index slice
-keeps that order, so a top-k that breaks distance ties by column
-position breaks them by ascending rid — the (dist, rid) order of the
+Determinism: directory points sit in rid order, so a directory position
+orders like its rid. A gathered row concatenates several key ranges, so
+its columns are in key order, not rid order: the top-k breaks distance
+ties on the gathered position *values* (the brute-force tail's columns
+are the positions themselves), which is the (dist, rid) order of the
 rounds arm and the DuckDB oracles. ``Metric.dist`` is the same IEEE ops
-in the same order as its JVM form, so every engine agrees bit for bit.
+in the same order as its JVM form, so every engine agrees bit for bit,
+whatever the batching.
 """
 
 from __future__ import annotations
@@ -39,12 +55,10 @@ import pyarrow.compute as pc
 from geotables_jl_spark.geom import s2
 
 _MASK32 = np.int64((1 << 32) - 1)
-
-# below this many (uncertified rows × directory points) distance evals,
-# brute force beats building the escalated index: with round-1 sizing
-# ~99.9% of rows certify, and a per-worker index build for a handful of
-# rows would dominate the job (measured 0.3 s warm vs 10 s cold per batch)
-_BRUTE_DIRECT_MAX = 64_000_000
+# a planar index frame spans at most this many cells per axis: wider
+# directories merge their outer cells into the edge ones, which only adds
+# candidates (clipping is monotone and never widens a gap)
+_SPAN = (1 << 31) - 1
 
 
 def pack_cells_np(cx: np.ndarray, cy: np.ndarray) -> np.ndarray:
@@ -61,8 +75,12 @@ class Metric:
     whose k-th distance is within it is certified: every point that close
     is a candidate), ``covers_all`` (every point is a candidate of every
     query), ``key`` (the memo key of its index), ``point_bytes`` (the
-    peak bytes a worker's index build adds per directory point), and the
-    methods below."""
+    peak bytes a worker's kernel adds per directory point),
+    ``build_rows`` (an index build costs, per directory point, about as
+    much as brute-forcing this many query rows against it), and the
+    methods below. ``index`` and ``probe`` are the kernel's two sides:
+    the (position, key) entries a directory stores and the key ranges a
+    query row gathers. ``cells`` and ``entries`` are the rounds arm's."""
 
     def dist(self, q, p, sqrt=np.sqrt):
         """Distance between query coordinates ``q`` and point coordinates
@@ -76,19 +94,27 @@ class Metric:
 
 
 class Planar(Metric):
-    """Euclidean (x, y). A point's index entries are the (2r+1)² cells of
-    side ``cell`` around its own, so every point within ``radius·cell``
-    of a query is in the query cell's slice. Escalation triples the cell
-    at the same radius: the guarantee triples and the cover stays
-    (2r+1)² cells. ``extent`` (the larger bounding-box side of both
-    inputs) decides when a block covers everything; the kernel, which
-    never needs that, leaves it infinite."""
+    """Euclidean (x, y) over square cells of side ``cell``: every point
+    within ``radius·cell`` of a query lies in the (2r+1)² cell ring around
+    the query's cell. The kernel stores each directory point once, under
+    its own cell, and a query gathers its ring as 2r+1 column runs of an
+    order-preserving key; the rounds arm explodes one side to the ring
+    (``entries``) instead. Escalation triples the cell at the same
+    radius: the guarantee triples and the ring stays (2r+1)² cells.
+    ``extent`` (the larger bounding-box side of both inputs) decides when
+    a ring covers everything; the kernel, which never needs that, leaves
+    it infinite."""
 
     cols = ("x", "y")
     root = True
-    # 25 int64 (point, cell) entries per point, sorted, twice (base and
-    # escalated index): measured 1,470-1,514 B/pt at 250k-750k points
-    point_bytes = 1_500
+    # worker peak RSS growth per directory point: the unpickled broadcast
+    # (24 B of rid + coordinates), the compact index and its escalation.
+    # Measured 82 B/pt between 2M and 4M points plus ~70 MB of query-side
+    # working set; 0.83 GB at 9,999,999 points (see KNN_BROADCAST_ROWS)
+    point_bytes = 100
+    # ~30 ns per brute-forced (row, point) pair against ~0.19 µs per
+    # point to sort an index (numpy 1.26, 4 vCPU): escalate from 6 rows
+    build_rows = 6
 
     def __init__(self, cell: float, radius: int = 2, extent: float = float("inf")):
         self.cell, self.radius, self.extent = float(cell), int(radius), float(extent)
@@ -113,6 +139,37 @@ class Planar(Metric):
         ty = np.tile(cy, (1, w)).reshape(-1)
         return np.repeat(np.arange(len(x), dtype=np.int64), w * w), pack_cells_np(tx, ty)
 
+    def _ints(self, v):
+        # clipped as floats: astype has no defined result out of range
+        return np.floor(np.clip(v / self.cell, -(2.0**61), 2.0**61)).astype(np.int64)
+
+    def index(self, x, y):
+        """Each point once, under its own cell: (positions, keys, frame).
+        A key is ``(cx - x0) << 32 | (cy - y0)`` inside the directory's
+        cell frame, so one ring column is one contiguous key range (the
+        32-bit mask of ``pack_cells_np`` breaks that across 0)."""
+        cx, cy = self._ints(x), self._ints(y)
+        x0 = y0 = wx = wy = 0
+        if len(cx):
+            x0, y0 = int(cx.min()), int(cy.min())
+            wx, wy = min(int(cx.max()) - x0, _SPAN), min(int(cy.max()) - y0, _SPAN)
+        keys = (np.minimum(cx - x0, wx) << np.int64(32)) | np.minimum(cy - y0, wy)
+        return np.arange(len(cx), dtype=np.int64), keys, (x0, y0, wx, wy)
+
+    def probe(self, frame, x, y):
+        """(lo, hi) key ranges, one per ring column: (n, 2r+1) each. A
+        query far outside the frame clips to just beyond its edge, where
+        its ring is empty."""
+        x0, y0, wx, wy = frame
+        r = self.radius
+        cx = np.clip(self._ints(x) - x0, -r - 1, wx + r + 1)
+        cy = np.clip(self._ints(y) - y0, -r - 1, wy + r + 1)
+        c = cx[:, None] + np.arange(-r, r + 1, dtype=np.int64)
+        ylo, yhi = np.maximum(cy - r, 0), np.minimum(cy + r, wy)
+        ok = (c >= 0) & (c <= wx) & (ylo <= yhi)[:, None]
+        c = np.where(ok, c, 0) << np.int64(32)
+        return np.where(ok, c | ylo[:, None], 1), np.where(ok, c | yhi[:, None], 0)
+
     def escalate(self) -> Planar:
         return Planar(3.0 * self.cell, self.radius, self.extent)
 
@@ -125,14 +182,19 @@ class Sphere(Metric):
     results match the codegen refine and the SQL oracle bit for bit. A
     point's index entries are the level-``level`` S2 cells of its
     rigorous chord-cap cover (``s2_cap_cells_np``), so every point within
-    ``chord`` of a query is in the query cell's slice. Escalation triples
-    the chord at the coarser level for it; chord 2 covers the sphere."""
+    ``chord`` of a query is in its one cell's range. The cover stays on
+    the directory: it costs ~23 cells and ~15 µs per point, which a query
+    side of 10¹² rows must not pay. Escalation triples the chord at the
+    coarser level for it; chord 2 covers the sphere."""
 
     cols = ("x", "y", "z")
     root = False
     # the cap cover's temporaries dominate: measured 3,484-4,019 B/pt at
     # 250k points (k=50..10)
     point_bytes = 4_000
+    # the escalated cover's ~19 µs per point against ~30 ns per
+    # brute-forced pair (numpy 1.26, 4 vCPU): escalate from 600 rows
+    build_rows = 600
 
     def __init__(self, chord: float, level: int | None = None):
         self.chord = min(2.0, float(chord))
@@ -149,6 +211,15 @@ class Sphere(Metric):
 
     def entries(self, x, y, z):
         return s2.s2_cap_cells_np(x, y, z, self.chord, self.level)
+
+    def index(self, x, y, z):
+        """The cap cover's (positions, cells), no frame."""
+        return (*self.entries(x, y, z), None)
+
+    def probe(self, frame, x, y, z):
+        """One range per row: its own cell."""
+        c = self.cells(x, y, z)[:, None]
+        return c, c
 
     def escalate(self) -> Sphere:
         return Sphere(3.0 * self.chord)
@@ -186,29 +257,32 @@ class RightIndex(PointIndex):
 
 
 class CellIndex:
-    """cell → slice of directory positions whose index entries hold the
-    cell, at one spec resolution: a CSR built by one stable sort, no
-    per-cell Python. Positions are int32 (half the gather traffic of a
-    memory-bound kernel) and ascending inside a slice, i.e. rid order."""
+    """The directory's (position, key) entries at one spec resolution:
+    positions sorted by key (a CSR built by one stable sort, no per-cell
+    Python) and each distinct key's first entry. Positions are int32
+    (half the gather traffic of a memory-bound kernel) and ascending
+    within a key, i.e. in rid order."""
 
     def __init__(self, base: PointIndex, spec: Metric):
-        rows, cells = spec.entries(*base.coords)  # point-major
-        o = np.argsort(cells, kind="stable")
-        self.pos = rows[o].astype(np.int32)
-        cells = cells[o]
-        self.keys, self.starts = np.unique(cells, return_index=True)
-        self.ends = np.append(self.starts[1:], len(cells))
+        rows, keys, self.frame = spec.index(*base.coords)
+        o = np.argsort(keys, kind="stable")
+        self.pos, keys = rows[o].astype(np.int32), keys[o]
+        first = np.flatnonzero(np.append(True, keys[1:] != keys[:-1])) if len(keys) else np.empty(0, np.int64)
+        self.keys, self.bounds = keys[first], np.append(first, len(keys))
 
-    def lookup(self, cells: np.ndarray):
-        """(starts, counts) per query cell; count 0 for an unindexed cell."""
-        if not len(self.keys):
-            z = np.zeros(len(cells), dtype=np.int64)
-            return z, z
-        pos = np.minimum(np.searchsorted(self.keys, cells), len(self.keys) - 1)
-        ok = self.keys[pos] == cells
-        starts = np.where(ok, self.starts[pos], 0)
-        counts = np.where(ok, self.ends[pos] - self.starts[pos], 0)
-        return starts.astype(np.int64), counts.astype(np.int64)
+    def ranges(self, spec: Metric, q):
+        """(starts, counts) of the entries each query row gathers: one
+        column per key range of ``spec.probe``, count 0 for an empty
+        one."""
+        lo, hi = spec.probe(self.frame, *q)
+        # searched in key order, one range column at a time: ascending
+        # needles halve the searches' cache misses
+        o = np.argsort(lo[:, lo.shape[1] // 2])
+        s = self.bounds[np.searchsorted(self.keys, lo[o].T, "left")].T
+        e = self.bounds[np.searchsorted(self.keys, hi[o].T, "right")].T
+        starts, counts = np.empty_like(s), np.empty_like(s)
+        starts[o], counts[o] = s, np.maximum(e - s, 0)
+        return starts, counts
 
 
 def NeighborIndex(base: RightIndex, radius: int) -> CellIndex:
@@ -230,28 +304,32 @@ def _cell_index(base: PointIndex, spec: Metric) -> CellIndex:
     return ci
 
 
-def _topk_tie_exact(d: np.ndarray, kk: int):
+def _order(d: np.ndarray, p: np.ndarray | None) -> np.ndarray:
+    """Row-wise argsort by (d, p); by (d, column) when ``p`` is None."""
+    return np.argsort(d, axis=-1, kind="stable") if p is None else np.lexsort((p, d), axis=-1)
+
+
+def _topk_tie_exact(d: np.ndarray, kk: int, p: np.ndarray | None = None):
     """Row-wise top-kk of the padded distance matrix ``d`` ordered by
-    (dist, column position) — column position IS rid order. argpartition
-    (O(m)) + tiny per-row sort; rows whose k-th distance ties with an
-    excluded element fall back to a full stable argsort (exact, rare —
+    (dist, position): ``p`` holds each column's directory position (rid
+    order), or None when the column IS the position. argpartition (O(m))
+    + tiny per-row sort; rows whose k-th distance ties with an excluded
+    element fall back to an exact sort of their ≤-kth candidates (rare —
     needs duplicate distances exactly at the boundary)."""
     b, m = d.shape
     if kk >= m:
-        top = np.argsort(d, axis=1, kind="stable")[:, :kk]
+        top = _order(d, p)[:, :kk]
         return top, np.take_along_axis(d, top, axis=1)
     part = np.argpartition(d, kk - 1, axis=1)[:, :kk]
-    # order the selected by (dist, pos): pos-sort first, stable dist-sort
-    o1 = np.argsort(part, axis=1)
-    part = np.take_along_axis(part, o1, axis=1)
+    # order the selected by (dist, position)
     dp = np.take_along_axis(d, part, axis=1)
-    o2 = np.argsort(dp, axis=1, kind="stable")
-    part = np.take_along_axis(part, o2, axis=1)
-    dp = np.take_along_axis(dp, o2, axis=1)
+    o = _order(dp, part if p is None else np.take_along_axis(p, part, axis=1))
+    part = np.take_along_axis(part, o, axis=1)
+    dp = np.take_along_axis(dp, o, axis=1)
     # boundary-tie check: an excluded element equal to the kth distance
-    # could have a smaller pos (rid) than an included tie. Resolve by
+    # could have a smaller position than an included tie. Resolve by
     # sorting ONLY the ≤-kth candidates of each affected row (kk + tie
-    # group, typically a handful) — a full-row argsort here was the
+    # group, typically a handful) — a full-row sort here was the
     # dominant cost on lattice-like data where exact ties are pervasive.
     kth = dp[:, kk - 1]
     n_le = (d <= kth[:, None]).sum(axis=1)
@@ -259,15 +337,14 @@ def _topk_tie_exact(d: np.ndarray, kk: int):
     if len(bad) and m <= max(8 * kk, 512):
         # narrow rows (padded neighborhood path): vectorized full sort of
         # the affected rows is cheaper than any per-row bookkeeping
-        full = np.argsort(d[bad], axis=1, kind="stable")[:, :kk]
+        full = _order(d[bad], None if p is None else p[bad])[:, :kk]
         part[bad] = full
         dp[bad] = np.take_along_axis(d[bad], full, axis=1)
     else:
         for r in bad:
             dr = d[r]
-            cand = np.nonzero(dr <= kth[r])[0]  # position-ascending
-            o = np.argsort(dr[cand], kind="stable")[:kk]  # stable ⇒ pos order in ties
-            sel = cand[o]
+            cand = np.nonzero(dr <= kth[r])[0]
+            sel = cand[_order(dr[cand], None if p is None else p[r, cand])[:kk]]
             part[r] = sel
             dp[r] = dr[sel]
     return part, dp
@@ -296,10 +373,13 @@ def _covered(q, index: PointIndex, spec: Metric, k: int, budget: int):
 
     Rows run in count-sorted chunks padded to the chunk max, so the
     working set stays bounded (cache-resident under concurrency) and a
-    hot cell cannot blow the matrix budget."""
+    hot cell cannot blow the matrix budget. A chunk gathers its rows'
+    key ranges into one padded matrix of directory positions, in range
+    order, so ties break on the position values."""
     n, n2 = len(q[0]), len(index.rid)
     ci = _cell_index(index, spec)
-    starts, counts = ci.lookup(spec.cells(*q))
+    starts, runs = ci.ranges(spec, q)
+    counts = runs.sum(axis=1)
     order = np.argsort(counts, kind="stable")
     cs = np.maximum(counts[order], 1)
     lens = np.zeros(n, np.int64)
@@ -322,13 +402,19 @@ def _covered(q, index: PointIndex, spec: Metric, k: int, budget: int):
         m = int(cnts[-1])
         if m == 0:
             continue  # count-sorted: an all-empty chunk
+        # entry j of run (row, c) sits at starts + j; the runs of a row
+        # fill its matrix row left to right
+        rl = runs[rows].reshape(-1)
+        at = np.repeat(starts[rows].reshape(-1) - (np.cumsum(rl) - rl), rl) + np.arange(int(rl.sum()))
         pad = np.arange(m, dtype=np.int64)[None, :]
         mask = pad < cnts[:, None]
-        pidx = ci.pos[np.where(mask, starts[rows][:, None] + pad, 0)]
+        pidx = np.zeros((len(rows), m), np.int32)
+        pidx[mask] = ci.pos[at]
         d = spec.dist([c[rows][:, None] for c in q], [c[pidx] for c in index.coords])
         d[~mask] = np.inf
+        pidx[~mask] = n2  # padding sorts after every real position
         kk = min(k, m)
-        top, dk = _topk_tie_exact(d, kk)
+        top, dk = _topk_tie_exact(d, kk, pidx)
         ln = np.minimum(cnts, k)
         keep = pad[:, :kk] < ln[:, None]
         lens[rows] = ln
@@ -341,8 +427,8 @@ def _covered(q, index: PointIndex, spec: Metric, k: int, budget: int):
 
 def _brute(q, index: PointIndex, spec: Metric, k: int, budget: int):
     """Exact top-k of the query rows ``q`` against every directory point:
-    (offsets, pos, dist) in row order. Columns are in rid order, so ties
-    resolve as in the indexed pass."""
+    (offsets, pos, dist) in row order. Columns are positions, so ties
+    resolve as in the covered pass."""
     n2, nb = len(index.rid), len(q[0])
     kk = min(k, n2)
     step = max(1, budget // max(n2, 1))
@@ -376,8 +462,9 @@ def knn_exact(q, index: PointIndex, spec: Metric, k: int, budget: int = 262_144)
     the covered pass at ``spec`` certifies the bulk (k-th distance ≤
     ``spec.bound`` ⇒ nothing outside the cover is closer), uncertified
     rows retry once at ``spec.escalate()`` against the same resident
-    directory when that beats brute force, and the residue brute-forces.
-    No driver rounds, no shuffle: the whole kNN job is one map.
+    directory when that beats brute force (``build_rows``, or the
+    escalated index is already built), and the residue brute-forces. No
+    driver rounds, no shuffle: the whole kNN job is one map.
 
     ``q`` is a tuple of coordinate arrays (``spec.cols``). Returns
     (offsets, pos, dist) in input row order: row i's neighbours are the
@@ -392,7 +479,7 @@ def knn_exact(q, index: PointIndex, spec: Metric, k: int, budget: int = 262_144)
         return res
     sub = tuple(c[bad] for c in q)
     nxt = spec.escalate()
-    if len(bad) * n2 > _BRUTE_DIRECT_MAX and not nxt.covers_all:
+    if not nxt.covers_all and (len(bad) >= nxt.build_rows or nxt.key in _MEMO["by_key"]):
         fix, still = _covered(sub, index, nxt, k, budget)
         if len(still):
             fix = _replace(fix, still, _brute(tuple(c[still] for c in sub), index, nxt, k, budget))

@@ -590,7 +590,7 @@ def knn_pairs(
         # the payload joins back ONCE, by rid, after all rounds: it stays
         # out of every sort and shuffle, and unorderable types are fine
         payload = df2.select(F.col(ROW_ID).alias(_RID), *extra)
-        if knn.small(s2["n"], spec):
+        if s2["n"] < knn.KNN_BROADCAST_ROWS:  # rows, as the rounds arm's broadcast
             payload = F.broadcast(payload)
         out = out.join(payload, _RID, "left")
     return out.select(_LID, _RID, "__dist", "__rank", *extra)

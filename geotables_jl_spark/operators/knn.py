@@ -9,9 +9,9 @@ The directory's row count picks one of two arms:
   broadcast; each Arrow batch ships (lid, coordinates) in and (lid,
   rids, dists) out, and ``knn_exact`` runs the whole cell-ring
   expansion in-batch (covered pass, certification, one 3× escalation,
-  brute-force tail). The JVM fans the lists out with a
-  codegen posexplode. No shuffle and no driver rounds, so the job
-  scales with executors like a scan.
+  brute force for the rows still uncertified). The JVM fans the lists
+  out with a codegen posexplode. No shuffle and no driver rounds, so
+  the job scales with executors like a scan.
 - **rounds arm** (larger directory, or ``on=`` keys): certify-or-escalate
   DataFrame rounds. A round explodes the smaller of the directory and
   the remaining query rows to the spec's index cells (one Arrow map),
@@ -19,10 +19,10 @@ The directory's row count picks one of two arms:
   (null-safe, the reference's ``isequal``), and ranks by (dist, rid) in
   one lid window; a row is certified when its k-th candidate is within
   the spec's bound. Both covers hold every point within the bound, so
-  either orientation certifies the same rows. A directory under the
-  budget is broadcast. The rest escalate: the search radius triples at
-  a 3× coarser resolution, so each cover stays ~(2r+1)² cells. The last
-  round covers everything, so it is exact.
+  either orientation certifies the same rows. A directory under
+  ``KNN_BROADCAST_ROWS`` rows is broadcast. The rest escalate: the
+  search radius triples at a 3× coarser resolution, so each cover stays
+  ~(2r+1)² cells. The last round covers everything, so it is exact.
 
 Both arms first drop query and directory rows with a NULL, NaN or
 infinite coordinate: such a point has no neighbours and is no one's.
@@ -47,13 +47,17 @@ from geotables_jl_spark.geom.knn_kernel import Metric, Sphere
 #: the kernel arm's budget, in sphere directory rows: a directory takes
 #: the kernel arm while ``n_right · spec.point_bytes`` stays under
 #: ``KNN_BROADCAST_ROWS · Sphere.point_bytes`` (~1 GB per Python
-#: worker), so the plane's lighter index keeps it to 666,666 rows. Each
-#: worker builds the directory's cell index, and a batch that escalates
-#: builds a second one. Peak RSS growth of one worker building both and
-#: scoring a 10k-row batch, uniform points just under the threshold
-#: (numpy 1.26, 4-vCPU / 15 GB host): sphere at 249,999 points 0.96 GB
-#: (k=10) and 0.83 GB (k=50); planar at 666,666 points 0.94 GB (k=10
-#: and k=50). Linear in the directory, so four workers stay under 4 GB.
+#: worker), so the plane's compact index keeps it to 10M rows. Each
+#: worker unpickles the directory and builds its cell index, and a batch
+#: that escalates builds a second one. Peak RSS growth of one worker
+#: doing all that and scoring a 65,536-row batch, uniform points just
+#: under the threshold (numpy 1.26, 4-vCPU / 15 GB host): sphere at
+#: 249,999 points 0.99 GB (k=10) and 0.86 GB (k=50); planar, one
+#: ``knn_join`` of 200k queries against 9,999,999 points on local[4],
+#: 0.83 GB in each of the 4 workers. Linear in the directory.
+#: The driver is not the binding limit at 10M planar rows: its
+#: ``toArrow`` collect and broadcast peaked at 2.33 GB JVM RSS (1.9 GB
+#: heap) and 0.91 GB Python RSS in that run.
 KNN_BROADCAST_ROWS = 250_000
 
 
@@ -210,7 +214,9 @@ def _round(
 def _rounds_arm(left, right, spec, k, n_keys, max_rounds, n_left, n_right) -> DataFrame:
     """Certify-or-escalate rounds (see module docstring)."""
     results = []
-    broadcast = small(n_right, spec)
+    # a JVM broadcast holds rows, not a worker's index: the row budget,
+    # whatever the spec's index bytes
+    broadcast = n_right < KNN_BROADCAST_ROWS
     remaining = left
     n_remaining = left.count() if n_left is None else n_left
     for _ in range(max_rounds):

@@ -133,6 +133,27 @@ def test_longtail_roundtrip_bng(spark):
 
 
 @pytest.mark.skipif(_pyproj() is not None, reason="pyproj present: it would use OSTN-grade datum shifts, not the vendored Helmert")
+def test_vendored_transformer_batch_invariant():
+    """A point's bits do not depend on the batch it arrives in: every
+    chunking of the 12 dispatch-test points, 1 to 12 points per call,
+    equals one 12-point call exactly, in both directions. One-point
+    batches (numpy's scalar path) and the iterative latitude solves (a
+    batch-wide stopping rule) both broke this."""
+    import numpy as np
+
+    from geotables_jl_spark.functions.crs_vendored import Osgb36Transformer
+
+    lons = np.array([-6.0 + i * 0.7 for i in range(12)])
+    lats = np.array([50.0 + i * 0.45 for i in range(12)])
+    E, N = Osgb36Transformer.forward(lons, lats)
+    for fn, a, b in ((Osgb36Transformer.forward, lons, lats), (Osgb36Transformer.inverse, E, N)):
+        u, v = fn(a, b)
+        for size in range(1, 13):
+            parts = [fn(a[i : i + size], b[i : i + size]) for i in range(0, 12, size)]
+            assert (np.concatenate([p[0] for p in parts]) == u).all(), (fn.__name__, size)
+            assert (np.concatenate([p[1] for p in parts]) == v).all(), (fn.__name__, size)
+
+
 def test_vendored_dispatch_matches_numpy_oracle(spark):
     """The library surface (reproject → Arrow vertex kernel) applies
     EXACTLY the vendored numpy transformer — pins the pyproj-free

@@ -14,6 +14,7 @@ from __future__ import annotations
 import numpy as np
 
 from geotables_jl_spark.geom.knn_kernel import (
+    NeighborIndex,
     RightIndex,
     pack_cells_np,
     score_batch_exact,
@@ -137,3 +138,128 @@ def test_score_batch_exact_integer_lattice_sweep():
             for i in range(len(lx)):
                 got = list(zip(ridv[off[i]: off[i + 1]].tolist(), distv[off[i]: off[i + 1]].tolist()))
                 assert got == ref[i], (span, dup, k, budget, i)
+
+
+# -- the compact planar index and its ring gather -----------------------------
+
+from geotables_jl_spark.geom import knn_kernel as K  # noqa: E402
+
+
+def _check(lx, ly, rid, rx, ry, cell, radius, k, budget=262_144):
+    idx = RightIndex(rid.copy(), rx.copy(), ry.copy(), cell)
+    off, ridv, distv = score_batch_exact(np.arange(len(lx)), lx, ly, None, idx, radius, k, budget)
+    ref = _brute_ref(lx, ly, rid, rx, ry, k)
+    for i in range(len(lx)):
+        got = list(zip(ridv[off[i] : off[i + 1]].tolist(), distv[off[i] : off[i + 1]].tolist()))
+        assert got == ref[i], (i, cell, radius, k)
+        assert len(set(ridv[off[i] : off[i + 1]].tolist())) == off[i + 1] - off[i], ("repeated id", i)
+
+
+def test_gather_ties_across_ring_cells_break_by_rid():
+    """Equal distances in different ring cells, rids running opposite to
+    the gather order (column-major, ascending cell): the ties break by
+    rid, with k cutting through the tie group, all inside the covered
+    pass (every row certifies, so neither escalation nor brute force
+    resolves them)."""
+    # 8 lattice points at distance sqrt(5) from (0.5, 0.5), each in its own
+    # cell, plus 4 at distance 2
+    offs = [(-2, -1), (-2, 1), (-1, -2), (-1, 2), (1, -2), (1, 2), (2, -1), (2, 1), (-2, 0), (0, -2), (0, 2), (2, 0)]
+    rx = np.array([0.5 + a for a, _ in offs])
+    ry = np.array([0.5 + b for _, b in offs])
+    rid = np.arange(len(offs), dtype=np.int64)[::-1].copy() * 5  # descending in gather order
+    lx, ly = np.array([0.5, 0.5]), np.array([0.5, 0.5])
+    for k in (1, 3, 5, 6, 9, 12):
+        _check(lx, ly, rid, rx, ry, 1.2, 2, k)
+        idx = RightIndex(rid.copy(), rx.copy(), ry.copy(), 1.2)
+        _, bad = K._covered((lx, ly), idx, K.Planar(1.2, 2), k, 262_144)
+        assert len(bad) == 0, k
+
+
+def test_gather_random_ties_no_repeats():
+    """Heavy duplication on a lattice straddling both axes' zero (where a
+    32-bit-masked key would wrap), tiny chunk budgets, both radii: every
+    row equals brute force and names no neighbour twice."""
+    rng = np.random.default_rng(5)
+    for trial in range(12):
+        base = rng.integers(-6, 6, 20).astype(np.float64) * 0.5
+        rx, ry = rng.choice(base, 300), rng.choice(base, 300)
+        lx, ly = rng.choice(base, 80) + rng.choice([0.0, 0.25], 80), rng.choice(base, 80)
+        rid = rng.permutation(300).astype(np.int64)
+        _check(lx, ly, rid, rx, ry, float(rng.choice([0.3, 0.5, 1.0])), 1 + trial % 2, int(rng.integers(1, 15)),
+               int(rng.choice([16, 300, 262_144])))
+
+
+def test_compact_index_holds_each_point_once():
+    rng = np.random.default_rng(1)
+    for n in (1, 7, 1000):
+        p = rng.uniform(-50, 50, (2, n))
+        idx = RightIndex(np.arange(n, dtype=np.int64), p[0], p[1], 0.7)
+        ci = NeighborIndex(idx, 2)
+        assert len(ci.pos) == ci.bounds[-1] == n and len(ci.keys) <= n
+        assert sorted(ci.pos.tolist()) == list(range(n))
+
+
+def test_far_from_origin_stays_exact():
+    """|x / cell| ≥ 2³¹ on both sides of zero: the index keys its cells
+    relative to the directory's own frame, so ring columns stay
+    contiguous; queries far outside the frame still get exact rows."""
+    rng = np.random.default_rng(3)
+    for ox, oy in ((1e6, 1e6), (-1e6, 3e5), (5e5, -2e6)):
+        rx, ry = ox + rng.uniform(0, 1, 400), oy + rng.uniform(0, 1, 400)
+        lx = np.concatenate([ox + rng.uniform(0, 1, 60), ox + rng.uniform(-50, 50, 20)])
+        ly = np.concatenate([oy + rng.uniform(0, 1, 60), oy + rng.uniform(-50, 50, 20)])
+        rid = rng.permutation(400).astype(np.int64)
+        cell = 2e-4
+        assert abs(ox / cell) >= 2**31
+        _check(lx, ly, rid, rx, ry, cell * 100, 2, 6)
+        _check(lx, ly, rid, rx, ry, cell, 1, 3)
+
+
+# -- results do not depend on batching ----------------------------------------
+
+
+def _batched(q, idx, spec, k, size):
+    parts = [K.knn_exact(tuple(c[i : i + size] for c in q), idx, spec, k) for i in range(0, len(q[0]), size)]
+    lens = np.concatenate([np.diff(o) for o, _, _ in parts])
+    off = np.concatenate([[0], np.cumsum(lens)])
+    return off, np.concatenate([p for _, p, _ in parts]), np.concatenate([d for _, _, d in parts])
+
+
+def _assert_batch_invariant(q, idx, spec, k):
+    K._MEMO["token"] = None
+    ref = _batched(q, idx, spec, k, len(q[0]))
+    for size in (1, 7):
+        for cold in (True, False):  # escalated index not yet / already built
+            if cold:
+                K._MEMO["token"] = None
+            got = _batched(q, idx, spec, k, size)
+            for a, b in zip(ref, got):
+                assert a.dtype == b.dtype and np.array_equal(a, b), (type(spec).__name__, size, cold)
+
+
+def test_knn_exact_batch_invariant_planar():
+    """Batches of 1, 7 and all rows give identical (offsets, pos, dist),
+    including a batch that escalates (clustered directory, scattered
+    queries: dozens of rows fail the first certificate)."""
+    rng = np.random.default_rng(9)
+    rx, ry = rng.normal(0, 1, 2000), rng.normal(0, 1, 2000)
+    lx = np.concatenate([rng.normal(0, 1, 60), rng.uniform(-30, 30, 40)])
+    ly = np.concatenate([rng.normal(0, 1, 60), rng.uniform(-30, 30, 40)])
+    idx = K.PointIndex(rng.permutation(2000).astype(np.int64), (rx, ry))
+    spec = K.Planar(0.15, 2)
+    _, bad = K._covered((lx, ly), idx, spec, 8, 262_144)
+    assert len(bad) >= spec.build_rows  # the whole batch escalates
+    _assert_batch_invariant((lx, ly), idx, spec, 8)
+
+
+def test_knn_exact_batch_invariant_sphere():
+    rng = np.random.default_rng(4)
+    v = rng.standard_normal((3, 1500))
+    v /= np.linalg.norm(v, axis=0)
+    w = rng.standard_normal((3, 700))
+    w /= np.linalg.norm(w, axis=0)
+    idx = K.PointIndex(rng.permutation(1500).astype(np.int64), tuple(v))
+    spec = K.Sphere(0.01)
+    _, bad = K._covered(tuple(w), idx, spec, 5, 262_144)
+    assert len(bad) >= spec.build_rows  # the whole batch escalates
+    _assert_batch_invariant(tuple(w), idx, spec, 5)
