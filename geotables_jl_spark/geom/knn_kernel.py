@@ -14,11 +14,11 @@ certify→escalate→brute driver ``knn_exact``.
 Which side carries the cover: the plane indexes each directory point
 once, under its own cell, and a query gathers its (2r+1)² ring as 2r+1
 column runs of the sorted keys; the sphere indexes each directory point
-under every S2 cell of its chord cap (~23 cells, ~15 µs per point) and a
-query probes its one cell, because the query side is the one that grows
-to 10¹² rows. Per query row the ring gather costs more than one slice
+under every S2 cell of its chord cap (~23 cells, ~15-30 µs per point)
+and a query probes its one cell, because the query side is the one that
+grows to 10¹² rows. Per query row the ring gather costs more than one slice
 (a warm covered pass over 25k benchmark rows: 128 ms with the plane's
-old 25×-replicated index, ~175 ms gathered), but building the compact
+old 25×-replicated index, ~170 ms gathered), but building the compact
 index costs ~0.02 s instead of ~0.4 s per 100k points and a twentieth of
 the memory. The gather wins whenever a worker scores fewer than ~240k
 rows per directory build, lets a planar batch escalate its uncertified
@@ -183,8 +183,8 @@ class Sphere(Metric):
     point's index entries are the level-``level`` S2 cells of its
     rigorous chord-cap cover (``s2_cap_cells_np``), so every point within
     ``chord`` of a query is in its one cell's range. The cover stays on
-    the directory: it costs ~23 cells and ~15 µs per point, which a query
-    side of 10¹² rows must not pay. Escalation triples the chord at the
+    the directory: it costs ~23 cells and ~15-30 µs per point, which a
+    query side of 10¹² rows must not pay. Escalation triples the chord at the
     coarser level for it; chord 2 covers the sphere."""
 
     cols = ("x", "y", "z")
