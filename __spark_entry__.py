@@ -443,7 +443,7 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace/quality stats plus the BPE-ish pre-tokenizer count
     (GPT-2 pattern sans whitespace runs, lookahead-free so Java regex and
     DuckDB's RE2 agree match-for-match). Integer components come from ONE
-    Arrow map (``text_core_arrow``); every ratio/round is codegen float
+    Arrow UDF (``text_core_arrow``); every ratio/round is codegen float
     math over those integers (``text_stat_cols``), so the oracle match
     is structural. (The r2 ``bpe_tokens``, ``lang_id`` and
     ``fingerprint`` entries merged in here — driver-gate slot budget;
@@ -896,7 +896,7 @@ def q_s2_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     math (``s2_parent_col`` — proven equal to direct level-4
     assignment), and roll up doc count + char mass per cell. At 10^12
     rows the level-k cell is the Iceberg partition / bucketing key; this
-    plan is scan → one Arrow map (vectorized numpy LUT fold) → one
+    plan is scan → one Arrow UDF (vectorized numpy LUT fold) → one
     map-side-combinable groupBy."""
     from geotables_jl_spark.geom.s2 import s2_parent_col, with_s2_cell_arrow
 
@@ -983,8 +983,8 @@ def q_s2_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition quality signals (duplicate-line fraction,
-    most-common word/2-gram char mass) — exact integers, one Arrow map
-    stage (factorize/bincount numpy kernel), map-only at any scale,
+    most-common word/2-gram char mass) — exact integers, one Arrow UDF
+    (factorize/bincount numpy kernel), map-only at any scale,
     replayed by the SQL oracle with list/unnest group counts."""
     d = _docs(spark, sf_dir)
     return TS.repetition_stats_arrow(d.select("doc_id", "text"))
@@ -1136,8 +1136,8 @@ def q_simhash_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style quality gate, one map-only pass (two chained Arrow
-    kernels + codegen rule tail, zero shuffles). Bench-only: its rule
+    """Gopher-style quality gate, one map-only pass (two Arrow UDFs in one
+    Python node + codegen rule tail, zero shuffles). Bench-only: its rule
     booleans are pure functions of the text_stats/repetition_stats
     integer columns the gate already oracles bit-exactly, so a separate
     gate slot would re-verify the same math."""

@@ -30,13 +30,15 @@ from __future__ import annotations
 import math
 import re
 from dataclasses import dataclass
-from typing import Callable
+from typing import Callable, Iterator
 
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from geotables_jl_spark.core.geotable import GEOM, GeoTable
 from geotables_jl_spark.geom.model import st_point
+from geotables_jl_spark.session import column_kernel
 
 # WGS84 / GRS80 (identical to double precision for flattening purposes)
 A_WGS84 = 6378137.0
@@ -510,28 +512,23 @@ def _xform_geom_batch(geoms, txy):
 
 
 def transform_geometry_vertexwise(df, make_txy):
-    """mapInPandas vertex reprojection for transforms with no closed
-    column form. ``make_txy`` is a zero-arg factory returning the
-    vectorized ``(x[], y[]) -> (x[], y[])`` function — called once per
-    Python worker (e.g. builds a pyproj.Transformer there), so the
-    non-picklable/expensive object never ships from the driver. Arrow-
-    batched; schema unchanged; map-only (scale-safe, but slower than the
+    """Vertex reprojection for transforms with no closed column form: an
+    iterator Arrow UDF over the geometry column only. ``make_txy`` is a
+    zero-arg factory returning the vectorized ``(x[], y[]) -> (x[], y[])``
+    function — called once per task (e.g. builds a pyproj.Transformer
+    there), so the non-picklable/expensive object never ships from the
+    driver. Schema unchanged; map-only (scale-safe, but slower than the
     registry's codegen paths — used only for long-tail CRS)."""
-    import pandas as pd
 
-    schema = df.schema
-
-    def fn(batches):
+    @column_kernel(df.schema[GEOM].dataType)
+    def xform_vertices(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
         txy = make_txy()
-        for pdf in batches:
-            if len(pdf):
-                pdf = pdf.copy()
-                pdf[GEOM] = pd.Series(
-                    _xform_geom_batch(list(pdf[GEOM]), txy), index=pdf.index, dtype=object
-                )
-            yield pdf
+        for geoms in batches:
+            yield pa.array(_xform_geom_batch(geoms.to_pylist(), txy), type=geoms.type)
 
-    return df.mapInPandas(fn, schema=schema)
+    # NULL exactly where the input is: the coalesce keeps the geometry
+    # column's own nullability (a UDF result is always nullable)
+    return df.withColumn(GEOM, F.coalesce(xform_vertices(GEOM), F.col(GEOM)))
 
 
 def _reproject_longtail(gtb: GeoTable, src: CRSDef, dst: CRSDef) -> GeoTable:

@@ -2,11 +2,13 @@
 
 One production arm per signal, each map-only at any scale:
 
-- ``text_core_arrow`` — ONE Arrow map emitting the integer text-stat
-  components (chars, tokens, stopword and per-language hits);
+- ``text_core_arrow`` — ONE Arrow UDF over the text column emitting the
+  integer text-stat components (chars, tokens, stopword and
+  per-language hits) as a struct;
   :func:`text_stat_cols` rebuilds the ratios, quality score and
   language id from those integers in codegen.
-- ``repetition_stats_arrow`` — the Gopher repetition signals.
+- ``repetition_stats_arrow`` — the Gopher repetition signals, one Arrow
+  UDF likewise.
 - ``shingles_fast`` / ``fingerprint_fast`` — word n-gram shingles and
   the polynomial rolling-hash fingerprint, Arrow-batched.
 - ``bpe_token_count`` — JVM regexp pre-tokenizer count.
@@ -19,10 +21,15 @@ Java's ASCII ``\\s`` class splits, boundary empties included.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from geotables_jl_spark.session import column_kernel
 
 #: tiny per-language stopword lists for the n-gram/stopword-hit heuristic
 #: (deterministic, dependency-free language ID — not a real classifier)
@@ -75,8 +82,6 @@ def fingerprint_fast(text: Column) -> Column:
     ``acc = (acc*31 + col) % p`` pass per character position. Exact
     integer math — bit-identical to the DuckDB oracle on non-empty text.
     """
-    import numpy as np
-    import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("long")
@@ -107,7 +112,6 @@ def shingles_fast(text: Column, n: int = 3) -> Column:
     kept), documents shorter than ``n`` tokens yield their full token
     string as a single shingle (so short docs still participate), NULL
     text yields ``['']``, first-occurrence-order dedup."""
-    from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
 
     nn = int(n)
@@ -165,9 +169,6 @@ def _repetition_batch(texts):
     - top_bigram_chars — most-common word-2-gram char mass (the bigram
       string includes its single joining space)."""
     import itertools
-
-    import numpy as np
-    import pandas as pd
 
     n = len(texts)
     out = {c: np.zeros(n, dtype=np.int64) for c in REPETITION_COLS}
@@ -266,9 +267,6 @@ def _text_core_batch(texts, lang_words: dict[str, list[str]], quality_words: lis
     import itertools
     import re
 
-    import numpy as np
-    import pandas as pd
-
     n = len(texts)
     s = pd.Series(texts, dtype=object)
     out = {}
@@ -311,44 +309,54 @@ def _text_core_batch(texts, lang_words: dict[str, list[str]], quality_words: lis
     return out
 
 
-def text_core_arrow(df, text_col: str = "text", keep: tuple[str, ...] = ("doc_id",)):
-    """ONE Arrow map emitting the integer text-stat components
-    (``TEXT_CORE_COLS`` + per-language ``s_<lang>`` hit counts) plus the
-    pass-through text column, ~1M rows/s per 8 cores (the equivalent
-    higher-order-function columns evaluated interpreted at 28-37k
-    rows/s). Ratios, quality score and rounding are NOT computed here —
-    :func:`text_stat_cols` rebuilds them in codegen from the integers,
-    so DuckDB-oracle bit-exactness is structural. Null text → all-null
-    components."""
-    import pandas as pd
+#: every field of the text-core struct: the integer components plus one
+#: stopword-hit count per language
+_CORE_FIELDS = (*TEXT_CORE_COLS, *(f"s_{lang}" for lang in LANG_STOPWORDS))
 
-    fields = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    stat_cols = list(TEXT_CORE_COLS) + [f"s_{lang}" for lang in LANG_STOPWORDS]
-    schema = (
-        ", ".join(f"{c} {fields[c]}" for c in keep)
-        + f", {text_col} string, "
-        + ", ".join(f"{c} long" for c in stat_cols)
+
+def _long_struct(stats: dict, names, null: np.ndarray, valid=()) -> pa.StructArray:
+    """int64 struct over ``names`` of ``stats``; a row flagged in ``null``
+    is NULL in every field except those in ``valid``."""
+    mask = null if null.any() else None
+    return pa.StructArray.from_arrays(
+        [pa.array(stats[c], type=pa.int64(), mask=None if c in valid else mask) for c in names],
+        names=list(names),
     )
-    cols = list(keep) + [text_col]
 
-    def _iter(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            t = pdf[text_col]
-            null = t.isna().to_numpy()
-            stats = _text_core_batch(
-                t.fillna("").tolist(), LANG_STOPWORDS, QUALITY_STOPWORDS
-            )
-            res = pdf[cols].copy()
-            for c in stat_cols:
-                col = pd.array(stats[c], dtype="Int64")
-                if null.any():
-                    col[null] = None
-                res[c] = col
-            yield res
 
-    return df.select(*cols).mapInPandas(_iter, schema=schema)
+def _long_struct_type(names) -> T.StructType:
+    return T.StructType([T.StructField(c, T.LongType()) for c in names])
+
+
+@column_kernel(_long_struct_type(_CORE_FIELDS))
+def text_core_udf(text: pa.Array) -> pa.Array:
+    """Text-core struct per row (see :func:`_text_core_batch`); NULL text
+    gives NULL fields."""
+    stats = _text_core_batch(text.fill_null("").to_pylist(), LANG_STOPWORDS, QUALITY_STOPWORDS)
+    return _long_struct(stats, _CORE_FIELDS, text.is_null().to_numpy(zero_copy_only=False))
+
+
+def _check_outputs(inputs, outputs) -> None:
+    clash = [c for c in outputs if c in inputs]
+    if clash:
+        raise ValueError(
+            f"output column {clash[0]!r} is already an input column; rename it "
+            "or leave it out of keep"
+        )
+
+
+def text_core_arrow(df, text_col: str = "text", keep: tuple[str, ...] = ("doc_id",)):
+    """``keep`` + the text column + the integer text-stat components
+    (``TEXT_CORE_COLS`` + per-language ``s_<lang>`` hit counts), from ONE
+    Arrow UDF that reads only the text column (~1M rows/s per 8 cores;
+    the equivalent higher-order-function columns evaluated interpreted
+    at 28-37k rows/s). Ratios, quality score and rounding are NOT
+    computed here — :func:`text_stat_cols` rebuilds them in codegen from
+    the integers, so DuckDB-oracle bit-exactness is structural. Null text
+    → all-null components."""
+    _check_outputs((*keep, text_col), _CORE_FIELDS)
+    core = df.select(*keep, text_col, text_core_udf(text_col).alias("__core"))
+    return core.select(*keep, text_col, "__core.*")
 
 
 def lang_id_from_scores(scores: dict[str, Column]) -> Column:
@@ -404,36 +412,23 @@ def text_stat_cols() -> dict[str, Column]:
     }
 
 
+@column_kernel(_long_struct_type(REPETITION_COLS))
+def repetition_udf(text: pa.Array) -> pa.Array:
+    """Repetition struct per row (see :func:`_repetition_batch`). NULL
+    text gives NULL fields, except ``top_bigram_chars = 0``: a NULL text
+    has no bigram, like any doc of < 2 words."""
+    stats = _repetition_batch(text.fill_null("").to_pylist())
+    null = text.is_null().to_numpy(zero_copy_only=False)
+    return _long_struct(stats, REPETITION_COLS, null, valid=("top_bigram_chars",))
+
+
 def repetition_stats_arrow(df, text_col: str = "text", keep: tuple[str, ...] = ("doc_id",)):
-    """One mapInPandas stage computing all 8 Gopher repetition signals
-    (``REPETITION_COLS``, see :func:`_repetition_batch`) per row with
-    factorize/bincount/lexsort numpy — ~20× the per-row throughput of
-    an interpreted higher-order-function fold. Exact integers, replayed
-    bit-for-bit by the DuckDB oracle. Map-only at any scale, same plan
-    class as the kNN kernel."""
-    import pandas as pd
-
-    fields = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    schema = ", ".join(f"{c} {fields[c]}" for c in keep) + ", " + ", ".join(
-        f"{c} long" for c in REPETITION_COLS
-    )
-    cols = list(keep) + [text_col]
-
-    def _iter(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            t = pdf[text_col]
-            null = t.isna().to_numpy()
-            stats = _repetition_batch(t.fillna("").tolist())
-            res = pdf[list(keep)].copy()
-            for c in REPETITION_COLS:
-                col = pd.array(stats[c], dtype="Int64")
-                # null text → NULL stats, except top_bigram_chars = 0
-                # (a NULL text has no bigram, like any doc of < 2 words)
-                if null.any() and c != "top_bigram_chars":
-                    col[null] = None
-                res[c] = col
-            yield res
-
-    return df.select(*cols).mapInPandas(_iter, schema=schema)
+    """``keep`` + all 8 Gopher repetition signals (``REPETITION_COLS``,
+    see :func:`_repetition_batch`), from one Arrow UDF over the text
+    column running factorize/bincount/lexsort numpy — ~20× the per-row
+    throughput of an interpreted higher-order-function fold. Exact
+    integers, replayed bit-for-bit by the DuckDB oracle. Map-only at any
+    scale."""
+    _check_outputs(keep, REPETITION_COLS)
+    rep = df.select(*keep, repetition_udf(text_col).alias("__rep"))
+    return rep.select(*keep, "__rep.*")

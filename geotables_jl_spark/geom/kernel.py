@@ -2,8 +2,9 @@
 
 These are the exact-refinement predicates of the two-stage spatial join:
 the candidate stage is a JVM cell equi-join (``geom/cells.py``); only the
-surviving (left, right) pairs reach these kernels inside
-``mapInPandas`` — no per-row Python anywhere else.
+surviving (left, right) pairs reach these kernels inside the refine
+Arrow UDF (``operators/geojoin._refine_udf``) — no per-row Python
+anywhere else.
 
 Semantics mirror Meshes.jl predicates as exercised by the reference tests
 (``test/operations.jl:11-24,51-72``): boundary-inclusive. A point on the

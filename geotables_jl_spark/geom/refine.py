@@ -12,38 +12,31 @@ cell prefilter already bounds candidates).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from geotables_jl_spark.geom import kernel
 
 EPS = kernel.EPS
 
 
-def _as_struct_arrays(series: pd.Series):
-    """Decompose a geometry-struct pandas Series (dicts per row) into
-    (kind, x, y, rings) arrays."""
-    n = len(series)
-    kind = np.empty(n, dtype=np.int64)
-    x = np.full(n, np.nan)
-    y = np.full(n, np.nan)
-    rings = [None] * n
-    for i, g in enumerate(series.to_numpy()):
-        kind[i] = g["kind"]
-        if g["x"] is not None:
-            x[i] = g["x"]
-            y[i] = g["y"]
-        rings[i] = g["rings"]
-    return kind, x, y, rings
+def _as_struct_arrays(geoms: pa.StructArray):
+    """Decompose an Arrow batch of geometry structs into (kind, x, y,
+    rings) numpy arrays — coordinates NaN where NULL (polygons)."""
+    f = dict(zip((t.name for t in geoms.type), geoms.flatten()))
+    kind, x, y, rings = (f[c].to_numpy(zero_copy_only=False) for c in ("kind", "x", "y", "rings"))
+    return kind.astype(np.int64), x, y, rings
 
 
 def refine_mask(
-    lgeom: pd.Series,
-    rgeom: pd.Series,
+    lgeom: pa.StructArray,
+    rgeom: pa.StructArray,
     lid: np.ndarray,
     rid: np.ndarray,
     pred: str,
 ) -> np.ndarray:
-    """Boolean mask of pairs satisfying the exact predicate.
+    """Boolean mask of pairs satisfying the exact predicate, over Arrow
+    batches of geometry structs. ``lid``/``rid`` identify each side's
+    geometry: pairs sharing an id share one polygon, decoded once.
 
     pred ∈ {"intersects", "within", "contains"}:
     within  = left ⊆ right (reference ``issubset``),
@@ -59,6 +52,13 @@ def refine_mask(
 _POLY_KINDS = (3, 5)  # polygon family: PolyArea (holes = rings[1:]) / Multi
 
 
+def _groups(ids: np.ndarray, mask: np.ndarray) -> list[np.ndarray]:
+    """Row indices under ``mask``, split into runs sharing one id."""
+    idx = np.flatnonzero(mask)
+    order = idx[np.argsort(ids[idx], kind="stable")]
+    return np.split(order, np.flatnonzero(np.diff(ids[order])) + 1) if len(order) else []
+
+
 def _refine(lkind, lx, ly, lrings, lid, rkind, rx, ry, rrings, rid, pred) -> np.ndarray:
     n = len(lkind)
     out = np.zeros(n, dtype=bool)
@@ -69,42 +69,15 @@ def _refine(lkind, lx, ly, lrings, lid, rkind, rx, ry, rrings, rid, pred) -> np.
         out[ii] = (np.abs(lx[ii] - rx[ii]) <= EPS) & (np.abs(ly[ii] - ry[ii]) <= EPS)
 
     # point-left vs polygon-family right: vectorize per distinct right geom
-    pt_poly = (lkind == 1) & np.isin(rkind, _POLY_KINDS)
-    if pt_poly.any():
-        idx = np.flatnonzero(pt_poly)
-        order = idx[np.argsort(rid[idx], kind="stable")]
-        start = 0
-        while start < len(order):
-            end = start
-            g = rid[order[start]]
-            while end < len(order) and rid[order[end]] == g:
-                end += 1
-            ii = order[start:end]
-            # point vs polygon: intersects == within (boundary-inclusive)
-            out[ii] = kernel.points_in_poly(
-                lx[ii], ly[ii], rrings[ii[0]], int(rkind[ii[0]])
-            )
-            start = end
+    # (point vs polygon: intersects == within, boundary-inclusive)
+    for ii in _groups(rid, (lkind == 1) & np.isin(rkind, _POLY_KINDS)):
+        out[ii] = kernel.points_in_poly(lx[ii], ly[ii], rrings[ii[0]], int(rkind[ii[0]]))
 
     # polygon-family left vs point-right: vectorize per distinct left geom
-    poly_pt = np.isin(lkind, _POLY_KINDS) & (rkind == 1)
-    if poly_pt.any():
-        idx = np.flatnonzero(poly_pt)
-        order = idx[np.argsort(lid[idx], kind="stable")]
-        start = 0
-        while start < len(order):
-            end = start
-            g = lid[order[start]]
-            while end < len(order) and lid[order[end]] == g:
-                end += 1
-            ii = order[start:end]
-            if pred == "within":
-                out[ii] = False  # a polygon is never ⊆ a point
-            else:
-                out[ii] = kernel.points_in_poly(
-                    rx[ii], ry[ii], lrings[ii[0]], int(lkind[ii[0]])
-                )
-            start = end
+    # (a polygon is never ⊆ a point, so `within` stays False)
+    if pred != "within":
+        for ii in _groups(lid, np.isin(lkind, _POLY_KINDS) & (rkind == 1)):
+            out[ii] = kernel.points_in_poly(rx[ii], ry[ii], lrings[ii[0]], int(lkind[ii[0]]))
 
     poly_poly = np.isin(lkind, _POLY_KINDS) & np.isin(rkind, _POLY_KINDS)
     if poly_poly.any():

@@ -5,8 +5,8 @@ production kernel plus two references, cross-checked bit-for-bit:
 
 1. ``s2_cell_from_xyz_np`` — vectorized numpy kernel folding the
    Hilbert curve 4 bits per step against a 1024-entry lookup table;
-   ``with_s2_cell_arrow`` runs it as one Arrow map stage (the 100 TB
-   path).
+   ``with_s2_cell_arrow`` runs it as one Arrow UDF over the three
+   direction columns (the 100 TB path).
 2. ``s2_cell_sql`` — generated ANSI SQL (chained CTEs, one 2-bit Hilbert
    step per level) runnable by DuckDB: the driver-oracle twin.
 3. ``s2_cell_scalar`` — per-level pure-Python reference for tests.
@@ -39,8 +39,11 @@ BIGINT carry it natively.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from geotables_jl_spark.session import column_kernel
 
 MAX_LEVEL = 30
 _SWAP = 1
@@ -347,7 +350,7 @@ def s2_cap_cells_np(x, y, z, chord, level: int) -> tuple[np.ndarray, np.ndarray]
 
 
 # ---------------------------------------------------------------------------
-# Spark (the 100 TB path — one Arrow map for the cell id, codegen bit math
+# Spark (the 100 TB path — one Arrow UDF for the cell id, codegen bit math
 # for parents and tokens)
 # ---------------------------------------------------------------------------
 
@@ -359,40 +362,34 @@ def with_s2_cell_arrow(
     xyz: tuple[str, str, str] = ("x", "y", "z"),
 ) -> DataFrame:
     """Add an int64 S2 cell-id column computed from the three direction
-    columns ``xyz``: one mapInPandas stage running the vectorized numpy
-    LUT fold (``s2_cell_from_xyz_np``) — bit-exact and oracle-able (see
-    the determinism contract above). Zero-vector, NULL-coordinate and
-    non-finite-coordinate rows get NULL. All input columns pass through;
-    at 10^12 rows the cell id is the Iceberg-style partition / bucketing
-    key for everything downstream. For (lat, lon) degree input, go
-    through ``geojoin_s2.s2_point_prep(latlon=...)`` first."""
+    columns ``xyz``: one Arrow UDF over those three columns running the
+    vectorized numpy LUT fold (``s2_cell_from_xyz_np``) — bit-exact and
+    oracle-able (see the determinism contract above). Zero-vector,
+    NULL-coordinate and non-finite-coordinate rows get NULL. All input
+    columns pass through in the JVM; at 10^12 rows the cell id is the
+    Iceberg-style partition / bucketing key for everything downstream.
+    For (lat, lon) degree input, go through
+    ``geojoin_s2.s2_point_prep(latlon=...)`` first."""
     if not 0 <= level <= MAX_LEVEL:
         raise ValueError(f"level must be in [0, {MAX_LEVEL}]")
-    import pandas as pd
+    if out in df.columns:
+        raise ValueError(
+            f"output column {out!r} already exists on the input; pass a "
+            "different out (withColumn would silently overwrite it)"
+        )
 
-    fields = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-    schema = f"{fields}, {out} long"
-    xc, yc, zc = xyz
+    @column_kernel("long")
+    def s2_cell(x: pa.Array, y: pa.Array, z: pa.Array) -> pa.Array:
+        # NULL coords arrive as NaN and would pass a pure !=0 guard
+        # (NaN != 0 is True) into the LUT fold, yielding an arbitrary
+        # cell — mask non-finite rows too
+        x, y, z = (c.to_numpy(zero_copy_only=False) for c in (x, y, z))
+        ok = ((x != 0) | (y != 0) | (z != 0)) & (
+            np.isfinite(x) & np.isfinite(y) & np.isfinite(z)
+        )
+        return pa.array(s2_cell_from_xyz_np(x, y, z, level), mask=~ok)
 
-    def _iter(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x, y, z = (pdf[c].to_numpy(dtype="float64") for c in (xc, yc, zc))
-            # NULL coords arrive as NaN through to_numpy and would pass a
-            # pure !=0 guard (NaN != 0 is True) into the LUT fold, yielding
-            # an arbitrary cell — mask non-finite rows too
-            ok = ((x != 0) | (y != 0) | (z != 0)) & (
-                np.isfinite(x) & np.isfinite(y) & np.isfinite(z)
-            )
-            cell = pd.array(s2_cell_from_xyz_np(x, y, z, level), dtype="Int64")
-            if not ok.all():
-                cell[~ok] = None
-            pdf = pdf.copy()
-            pdf[out] = cell
-            yield pdf
-
-    return df.mapInPandas(_iter, schema=schema)
+    return df.withColumn(out, s2_cell(*(F.col(c).cast("double") for c in xyz)))
 
 
 def s2_parent_col(cell: Column, level: int) -> Column:

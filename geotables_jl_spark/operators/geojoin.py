@@ -25,9 +25,9 @@ Physical plan (replaces the reference's brute-force O(n1*n2) thread loop,
      replication for pathological cells (megacity cells at web scale);
   4. dedupe (lid, rid) candidate pairs (a geometry pair can share several
      cover cells);
-  5. exact refinement in ``mapInPandas`` (Arrow batches, numpy winding
-     number — ``geom/refine.py``); POINT-vs-POINT and envelope-exact cases
-     skip Python entirely;
+  5. exact refinement as one boolean Arrow UDF in ``.filter`` over the two
+     geometry columns (numpy winding number — ``geom/refine.py``);
+     POINT-vs-POINT and envelope-exact cases skip Python entirely;
   6. ``groupBy(lid).agg(...)`` map-side-combinable aggregates;
   7. join the aggregate back onto the full left spine (left kind) or
      inner-join it (inner kind).
@@ -42,10 +42,12 @@ import math
 from typing import Iterable
 
 import numpy as np
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.functions import arrow_udf
 
 from geotables_jl_spark.core.geotable import GEOM, ROW_ID, GeoTable
 from geotables_jl_spark.geom import cells
@@ -309,39 +311,41 @@ def refine(
     if "__rgeom" not in pairs.columns:
         pairs = pairs.withColumn("__rgeom", st_point(F.col("__rxmin"), F.col("__rymin")))
 
-    drop_cols = {"__lgeom", "__rgeom", *env_cols}
-    out_fields = [f for f in pairs.schema.fields if f.name not in drop_cols]
-    out_schema = T.StructType(out_fields)
-    out_cols = [f.name for f in out_fields]
-
-    if callable(pred):
-        # arbitrary predicate (reference ``pred=(g1,g2)->Bool``,
-        # ``geojoin.jl:51-52``; tested ``test/operations.jl:51,60``):
-        # a Python callable (lgeom: pd.Series, rgeom: pd.Series) -> bool
-        # mask. Contract: the candidate stage only generates
-        # envelope-overlapping pairs, so the callable must imply envelope
-        # overlap (true for containment/intersection-style predicates —
-        # non-local matching belongs in `on`/tablejoin).
-        def _mask(pdf):
-            return np.asarray(pred(pdf["__lgeom"], pdf["__rgeom"]), dtype=bool)
-    else:
-        def _mask(pdf):
-            return refine_mask(
-                pdf["__lgeom"], pdf["__rgeom"], pdf[_LID].to_numpy(), pdf[_RID].to_numpy(), pred
-            )
-
-    def _iter(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            yield pdf.loc[_mask(pdf), out_cols]
-
     # ONE Arrow pass for every remaining shape, including fully-mixed
     # kind×kind tables: the kernel short-circuits pt-pt pairs itself
     # (``geom/refine.py``), so splitting them out JVM-side would only
     # re-evaluate the candidate-pair subtree (the whole cell join) twice
     # — the VERDICT r1 "What's wrong" #4 anti-pattern.
-    return pairs.mapInPandas(_iter, schema=out_schema)
+    return _done(pairs.filter(_refine_udf(pred)("__lgeom", "__rgeom", _LID, _RID)))
+
+
+def _refine_udf(pred):
+    """Boolean Arrow UDF ``(lgeom, rgeom, lid, rid)`` for ``.filter``:
+    the exact predicate over pairs of geometry structs. The ids group
+    pairs that share a polygon (``geom/refine.py``); a batch with a NULL
+    id treats every row as a distinct geometry.
+
+    ``pred`` is a name (``refine_mask``) or an arbitrary predicate
+    (reference ``pred=(g1,g2)->Bool``, ``geojoin.jl:51-52``; tested
+    ``test/operations.jl:51,60``): a Python callable (lgeom: pd.Series,
+    rgeom: pd.Series) of geometry dicts -> bool mask. Contract: the
+    candidate stage only generates envelope-overlapping pairs, so the
+    callable must imply envelope overlap (true for containment /
+    intersection-style predicates — non-local matching belongs in
+    `on`/tablejoin)."""
+
+    def ids(a: pa.Array) -> np.ndarray:
+        return np.arange(len(a)) if a.null_count else a.to_numpy()
+
+    @arrow_udf("boolean")
+    def refine_pred(lgeom: pa.Array, rgeom: pa.Array, lid: pa.Array, rid: pa.Array) -> pa.Array:
+        if callable(pred):
+            mask = pred(lgeom.to_pandas(), rgeom.to_pandas())
+        else:
+            mask = refine_mask(lgeom, rgeom, ids(lid), ids(rid), pred)
+        return pa.array(np.asarray(mask, dtype=bool))
+
+    return refine_pred
 
 
 def build_aggs(
@@ -683,26 +687,8 @@ def knn_join(
 def spatial_filter(df: DataFrame, query_geom: Column, pred: str = "intersects") -> DataFrame:
     """Rows whose geometry matches a literal query geometry (reference
     ``gtb[geometry, vars]``, ``src/api/geotables.jl:5-6``). bbox prefilter
-    in the JVM; exact refinement in one Arrow pass."""
-    tagged = df.withColumn("__qgeom", query_geom)
-    lg, rg = F.col(GEOM), F.col("__qgeom")
-    tagged = tagged.filter(_bbox_overlap(lg, rg))
-
-    out_schema = T.StructType([f for f in tagged.schema.fields if f.name != "__qgeom"])
-    out_cols = [f.name for f in out_schema.fields]
-
-    def _iter(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            n = len(pdf)
-            mask = refine_mask(
-                pdf[GEOM],
-                pdf["__qgeom"],
-                pdf[ROW_ID].to_numpy() if ROW_ID in pdf else np.arange(n),
-                np.zeros(n, dtype=np.int64),
-                pred,
-            )
-            yield pdf.loc[mask, out_cols]
-
-    return tagged.mapInPandas(_iter, schema=out_schema)
+    in the JVM; exact refinement by the refine UDF over the geometry
+    column and the query."""
+    g = F.col(GEOM)
+    exact = _refine_udf(pred)(g, query_geom, F.lit(None).cast("long"), F.lit(0))
+    return df.filter(_bbox_overlap(g, query_geom) & exact)

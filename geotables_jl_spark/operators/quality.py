@@ -4,14 +4,13 @@ Not in the reference (GeoTables.jl has no text surface); this is the
 training-data-pipeline gate that decides which crawled pages enter the
 corpus, composed from signals the engine already computes:
 
-- ``text_core_arrow`` integer components (chars / tokens / stopword
-  hits) and
-- ``repetition_stats_arrow`` Gopher repetition signals (duplicate-line
-  mass, most-common word / 2-gram char mass),
+- the text-core integer components (chars / tokens / stopword hits) and
+- the Gopher repetition signals (duplicate-line mass, most-common word /
+  2-gram char mass),
 
-chained as two back-to-back Arrow maps in the SAME Spark stage (the
-first passes ``text`` through, the second consumes and drops it) — scan
-→ kernel → kernel → codegen rule tail, zero shuffles at any scale. The
+as two Arrow UDFs over the text column in ONE projection, so Spark
+evaluates both in a single Python node that ships only ``text`` — scan
+→ kernels → codegen rule tail, zero shuffles at any scale. The
 rule thresholds follow the published Gopher rules (Rae et al. 2021,
 "Scaling Language Models: ... Gopher", App. A) where this engine has the
 exact signal, with two documented substitutions: the symbol-to-word rule
@@ -25,12 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from geotables_jl_spark.functions.textstats import (
-    LANG_STOPWORDS,
-    TEXT_CORE_COLS,
-    repetition_stats_arrow,
-    text_core_arrow,
-)
+from geotables_jl_spark.functions.textstats import repetition_udf, text_core_udf
 
 
 def gopher_quality_filter(
@@ -53,11 +47,11 @@ def gopher_quality_filter(
     ``keep`` = AND of all rules. Null/empty text fails the word-count
     rule and is kept=false (never null), so the output partitions the
     corpus exactly in two."""
-    core = text_core_arrow(df.select(id_col, text_col), text_col=text_col, keep=(id_col,))
-    stat_cols = list(TEXT_CORE_COLS) + [f"s_{lang}" for lang in LANG_STOPWORDS]
-    rep = repetition_stats_arrow(
-        core, text_col=text_col, keep=(id_col, *stat_cols)
-    )
+    rep = df.select(
+        id_col,
+        text_core_udf(text_col).alias("__core"),
+        repetition_udf(text_col).alias("__rep"),
+    ).select(id_col, "__core.*", "__rep.*")
 
     nw = F.col("n_words").cast("double")
     wc = F.col("word_chars").cast("double")

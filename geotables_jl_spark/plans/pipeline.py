@@ -112,7 +112,7 @@ def geotag_pipeline(
 
     out["dedup"] = pipe.stage("dedup", _dedup, deps=["extract"], params={"v": 1})
 
-    # 3. text stats (+ optional quality floor) — ONE Arrow map for the
+    # 3. text stats (+ optional quality floor) — ONE Arrow UDF for the
     # integer components (text_core_arrow), quality and language id
     # rebuilt from them in codegen (text_stat_cols)
     def _stats() -> DataFrame:

@@ -9,9 +9,32 @@ default.
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import SparkSession
+from pyspark.sql.functions import arrow_udf
+
+
+def column_kernel(return_type):
+    """Decorator turning ``f(pa.Array, ...) -> pa.Array`` into a function
+    of columns that applies it as an ``arrow_udf`` (Spark >= 4.1): a
+    row-preserving kernel over only the columns it reads.
+
+    - The UDF is marked nondeterministic, so Spark evaluates it exactly
+      once: a deterministic UDF is copied into every filter pushed below
+      its projection and runs again there.
+    - It is built on each call: a UDF object caches its JVM twin, which
+      would keep a stopped SparkContext's accumulator server."""
+
+    def decorate(f):
+        @functools.wraps(f)
+        def apply(*cols):
+            return arrow_udf(f, return_type).asNondeterministic()(*cols)
+
+        return apply
+
+    return decorate
 
 
 def get_spark(

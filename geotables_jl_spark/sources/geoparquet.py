@@ -2,8 +2,10 @@
 
 The engine's internal geometry is a struct column (``geom/model.py``);
 the interchange standard is WKB inside parquet (GeoParquet). This module
-converts both ways as Arrow-batched passes (``mapInPandas``) — the ONLY
-place WKB bytes are touched; every interior operator works on the struct.
+converts both ways with one Arrow UDF over the converted column — the
+ONLY place WKB bytes are touched; every interior operator works on the
+struct. NULL converts to NULL both ways, and a blob the decoder cannot
+parse decodes to a NULL geometry.
 Closes the SURVEY §1.5 schema promise (WKB payload interop).
 
 Encoding (little-endian ISO WKB):
@@ -14,9 +16,10 @@ Encoding (little-endian ISO WKB):
 - kind 5 (multipolygon) ↔ WKB MultiPolygon (type 6): CCW ring starts a
   part, following CW rings are its holes (``geom/model._oriented``)
 
-Scale shape: both directions are map-only (no shuffle); decode prunes to
-the WKB column + pass-through attributes, so a 10^12-row GeoParquet scan
-streams straight through the converter into the cell-join pipeline.
+Scale shape: both directions are map-only (no shuffle) and only the
+converted column crosses into Python; the attributes stay in the JVM, so
+a 10^12-row GeoParquet scan streams straight through the converter into
+the cell-join pipeline.
 """
 
 from __future__ import annotations
@@ -24,14 +27,15 @@ from __future__ import annotations
 import struct as _struct
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
-from geotables_jl_spark.core.geotable import GEOM, ROW_ID, GeoTable, georef
+from geotables_jl_spark.core.geotable import GEOM, GeoTable, georef
 from geotables_jl_spark.geom.model import GEOMETRY_TYPE
+from geotables_jl_spark.session import column_kernel
 
 _WKB_POINT = 1
 _WKB_POLYGON = 3
@@ -152,44 +156,49 @@ def _poly_dict(kind: int, rings: list[list[float]]) -> dict:
     }
 
 
+def _decode_or_null(wkb: bytes | None) -> dict | None:
+    """``_decode_one``, or None for a NULL blob or one it cannot parse
+    (truncated, unsupported type): a poison payload costs its own row,
+    never the task."""
+    if wkb is None:
+        return None
+    try:
+        return _decode_one(wkb)
+    except (_struct.error, ValueError, IndexError):
+        return None
+
+
+_GEOM_ARROW = to_arrow_type(GEOMETRY_TYPE)
+
+
+@column_kernel(GEOMETRY_TYPE)
+def wkb_decode(wkb: pa.Array) -> pa.Array:
+    return pa.array([_decode_or_null(b) for b in wkb.to_pylist()], type=_GEOM_ARROW)
+
+
+@column_kernel(T.BinaryType())
+def wkb_encode(geoms: pa.Array) -> pa.Array:
+    return pa.array(
+        [None if g is None else _encode_one(g) for g in geoms.to_pylist()], type=pa.binary()
+    )
+
+
 # ---------------------------------------------------------------------------
-# DataFrame-level converters (Arrow-batched map passes)
+# DataFrame-level converters (one Arrow UDF over the converted column)
 
 
 def wkb_to_geometry(df: DataFrame, wkb_col: str = "wkb", drop: bool = True) -> DataFrame:
-    """Decode a WKB binary column into the engine geometry struct."""
-    fields = [f for f in df.schema.fields if not (drop and f.name == wkb_col)]
-    out_schema = T.StructType(fields + [T.StructField(GEOM, GEOMETRY_TYPE)])
-    keep = [f.name for f in fields]
-
-    def _iter(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            geoms = [_decode_one(b) for b in pdf[wkb_col]]
-            out = pdf[keep].copy()
-            out[GEOM] = geoms
-            yield out
-
-    return df.mapInPandas(_iter, schema=out_schema)
+    """Decode a WKB binary column into the engine geometry struct,
+    appended last. A NULL or unparseable blob gives a NULL geometry."""
+    keep = [c for c in df.columns if not (drop and c == wkb_col)]
+    return df.select(*keep, wkb_decode(wkb_col).alias(GEOM))
 
 
 def geometry_to_wkb(df: DataFrame, out_col: str = "wkb", drop: bool = True) -> DataFrame:
-    """Encode the engine geometry struct into a WKB binary column."""
-    fields = [f for f in df.schema.fields if not (drop and f.name == GEOM)]
-    out_schema = T.StructType(fields + [T.StructField(out_col, T.BinaryType())])
-    keep = [f.name for f in fields]
-
-    def _iter(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            wkb = [_encode_one(g) for g in pdf[GEOM]]
-            out = pdf[keep].copy()
-            out[out_col] = wkb
-            yield out
-
-    return df.mapInPandas(_iter, schema=out_schema)
+    """Encode the engine geometry struct into a WKB binary column,
+    appended last. A NULL geometry gives a NULL blob."""
+    keep = [c for c in df.columns if not (drop and c == GEOM)]
+    return df.select(*keep, wkb_encode(GEOM).alias(out_col))
 
 
 def read_geoparquet(

@@ -1,6 +1,7 @@
 """WKB / GeoParquet interop (sources/geoparquet.py): byte-exact
 round-trips for points, holed polygons, multipoints and multipolygons,
-plus an end-to-end write→read→geojoin path."""
+an end-to-end write→read→geojoin path, and the NULL / poison-blob rules
+(NULL converts to NULL both ways; an unparseable blob decodes to NULL)."""
 
 from __future__ import annotations
 
@@ -83,3 +84,47 @@ def test_wkb_column_converters(spark):
     back = wkb_to_geometry(wkb_df)
     got = {r["row_id"]: (r["geometry"]["x"], r["geometry"]["y"]) for r in back.collect()}
     assert got == {0: (1.0, 2.0), 1: (-3.5, 4.25)}
+
+
+def _decoded(spark, blobs):
+    """{id: geometry} after wkb_to_geometry over (id, blob) rows."""
+    df = spark.createDataFrame(list(enumerate(blobs)), "row_id long, wkb binary")
+    return {r["row_id"]: r["geometry"] for r in wkb_to_geometry(df).collect()}
+
+
+def test_wkb_decode_null_is_null_geometry(spark, tmp_path):
+    # GeoParquet allows NULL geometries: read_geoparquet must read them
+    ok = _encode_one(point_row(1.5, 2.5))
+    path = str(tmp_path / "with_nulls")
+    spark.createDataFrame(
+        [(0, bytearray(ok)), (1, None)], "row_id long, geometry binary"
+    ).write.parquet(path)
+    got = {r["row_id"]: r["geometry"] for r in read_geoparquet(spark, path).df.collect()}
+    assert got[1] is None
+    assert (got[0]["x"], got[0]["y"]) == (1.5, 2.5)
+
+
+def test_wkb_decode_truncated_blob_is_null_geometry(spark):
+    ok = _encode_one(point_row(1.5, 2.5))
+    holed = _encode_one(geom_rows_from_polygons([OUTER], holes=[[HOLE]])[0])
+    got = _decoded(spark, [bytearray(ok), bytearray(ok[:9]), bytearray(holed[:40]), bytearray()])
+    assert got[0]["kind"] == 1
+    assert got[1] is None and got[2] is None and got[3] is None
+
+
+def test_wkb_decode_unsupported_type_is_null_geometry(spark):
+    linestring = b"\x01" + struct.pack("<II", 2, 2) + struct.pack("<4d", 0.0, 0.0, 1.0, 1.0)
+    got = _decoded(spark, [bytearray(linestring), bytearray(_encode_one(point_row(3.0, 4.0)))])
+    assert got[0] is None
+    assert (got[1]["x"], got[1]["y"]) == (3.0, 4.0)
+
+
+def test_geometry_encode_null_is_null_wkb(spark):
+    pts = spark.createDataFrame(
+        [(0, 1.0, 2.0), (1, None, None)], "row_id long, x double, y double"
+    )
+    g = georef(pts, coords=["x", "y"]).df
+    g = g.withColumn("geometry", F.when(F.col("row_id") == 1, F.lit(None)).otherwise(F.col("geometry")))
+    rows = {r["row_id"]: r["wkb"] for r in geometry_to_wkb(g).collect()}
+    assert rows[1] is None
+    assert struct.unpack_from("<dd", bytes(rows[0]), 5) == (1.0, 2.0)

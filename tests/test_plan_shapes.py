@@ -174,3 +174,28 @@ def test_cc_round_plan_shape(spark):
         sc.setJobGroup("", "")
     # free every checkpoint this probe pinned (sym/lab/ck), nothing else
     _unpersist_ids(sc, _persistent_ids(sc) - pre)
+
+
+@pytest.mark.parametrize("name", ["repetition_stats", "s2_cells", "spatial_select", "geojoin_holes"])
+def test_column_kernel_is_one_arrow_udf_node(spark, name):
+    """A row-preserving kernel is an Arrow UDF over the columns it reads:
+    one ArrowEvalPython node, evaluated once (never copied into a pushed-
+    down filter), and no whole-row map."""
+    plan = _plan(E.queries()[name](spark, SF))
+    assert plan.count("ArrowEvalPython") == 1, plan[:3000]
+    assert "MapInPandas" not in plan
+
+
+def test_quality_filter_runs_both_text_udfs_in_one_node(spark):
+    plan = _plan(E.q_quality_filter(spark, SF))
+    nodes = [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln]
+    assert len(nodes) == 1, plan[:3000]
+    assert "text_core_udf(" in nodes[0] and "repetition_udf(" in nodes[0]
+    assert "MapInPandas" not in plan
+
+
+def test_text_stats_evaluates_the_core_struct_once(spark):
+    """text_stat_cols reads several fields of the one text-core struct;
+    the UDF must still appear once in the plan."""
+    plan = _plan(E.queries()["text_stats"](spark, SF))
+    assert plan.count("text_core_udf(") == 1, plan[:3000]

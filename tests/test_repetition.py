@@ -8,6 +8,7 @@ DuckDB oracle SQL on random documents."""
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 
 from geotables_jl_spark.functions import textstats as TS
 
@@ -95,3 +96,10 @@ def test_arrow_matches_on_random_docs(spark):
     con.register("documents", pd.DataFrame(docs, columns=["doc_id", "text"]))
     want = sorted(con.sql(E.oracle_sql()["repetition_stats"]).fetchall())
     assert got == want
+
+
+def test_output_name_clash_raises(spark):
+    df = spark.createDataFrame([(0, "a b", 3)], "doc_id long, text string, n_lines long")
+    with pytest.raises(ValueError, match="n_lines"):
+        TS.repetition_stats_arrow(df, keep=("doc_id", "n_lines"))
+    assert TS.repetition_stats_arrow(df).columns == ["doc_id", *TS.REPETITION_COLS]

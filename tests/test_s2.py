@@ -228,3 +228,12 @@ def test_arrow_twin_nulls_nan_rows(spark):
     res = con.sql(q + " ORDER BY rid").df()
     assert list(res["rid"]) == [0]
     assert int(res["s2_cell"][0]) == got[0]
+
+
+def test_output_name_clash_raises(spark):
+    df = spark.createDataFrame([(0, 0.6, 0.48, 0.64, 7)], "rid long, x double, y double, z double, s2_cell long")
+    with pytest.raises(ValueError, match="s2_cell"):
+        s2.with_s2_cell_arrow(df, 12)
+    out = s2.with_s2_cell_arrow(df, 12, out="s2_12")
+    assert out.columns == [*df.columns, "s2_12"]
+    assert out.collect()[0]["s2_12"] == s2.s2_cell_scalar(0.6, 0.48, 0.64, 12)

@@ -11,6 +11,7 @@ import hashlib
 import json
 
 import duckdb
+import pytest
 from pyspark.sql import functions as F
 
 from geotables_jl_spark.functions import textstats as TS
@@ -192,3 +193,21 @@ def test_shingles_fast_parity_on_documents_fixture(spark):
     ).fetchall()
     assert {d: sorted(s) for d, s in want} == {d: sorted(s) for d, s in got}
 
+
+
+def test_output_name_clash_raises_before_any_job(spark):
+    # the documents table carries its own n_chars column
+    docs = spark.createDataFrame(
+        [(0, "the cat", "en", "web", 7)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("textcore_clash", "name clash")
+    try:
+        with pytest.raises(ValueError, match="n_chars"):
+            TS.text_core_arrow(docs, keep=("doc_id", "lang", "source", "n_chars"))
+        assert not sc.statusTracker().getJobIdsForGroup("textcore_clash")
+    finally:
+        sc.setJobGroup("", "")
+    out = TS.text_core_arrow(docs, keep=("doc_id", "lang", "source"))
+    assert out.columns[:4] == ["doc_id", "lang", "source", "text"]
