@@ -33,11 +33,8 @@ from geotables_jl_spark.operators.asof import asof_join
 from geotables_jl_spark.operators.bloom import (
     BloomFilter,
     bloom_anti_join,
-    bloom_anti_join_sharded,
     build_bloom,
-    build_bloom_sharded,
     with_bloom_contains,
-    with_bloom_contains_sharded,
 )
 from geotables_jl_spark.operators.dedup import connected_components, dedup_clusters
 from geotables_jl_spark.operators.quality import gopher_quality_filter
@@ -70,9 +67,6 @@ __all__ = [
     "build_bloom",
     "with_bloom_contains",
     "bloom_anti_join",
-    "build_bloom_sharded",
-    "with_bloom_contains_sharded",
-    "bloom_anti_join_sharded",
 ]
 
 __version__ = "0.1.0"

@@ -856,11 +856,14 @@ def connected_components(
     ONE action per round: the lazy per-round checkpoint is materialized
     by the join-free convergence aggregate (labels only ever decrease,
     so Σcomp in exact decimal is strictly decreasing until the
-    fixpoint). Superseded rounds' checkpoint blocks are UNPERSISTED as
-    soon as the next round materializes — at any moment at most one
-    label snapshot plus the edge set is pinned, and the edge set is
-    freed when the loop exits (only the returned snapshot stays, since
-    the caller's DataFrame reads from it).
+    fixpoint). One loop serves both storages through a ``_keep`` /
+    ``_release`` pair chosen once from ``checkpoint_dir``. A superseded
+    round is released as soon as the next round materializes — at any
+    moment at most one label snapshot plus the edge set is kept, and the
+    edge set is freed when the loop exits (only the returned snapshot
+    stays, since the caller's DataFrame reads from it). If anything
+    raises, every kept intermediate is released before the error
+    propagates.
 
     ``small_graph_max``: edge graphs at or under this size skip the loop
     entirely — the edge list (two longs per edge) is collected and
@@ -881,7 +884,9 @@ def connected_components(
     manifest-style hook the pipeline layer uses). Each round's file
     replaces the previous one; on failure the whole run directory is
     removed; on success only the final round's file survives — it backs
-    the returned DataFrame and is the caller's to delete.
+    the returned DataFrame and is the caller's to delete. Without a
+    checkpoint dir the same intermediates are ``localCheckpoint``
+    blocks, unpersisted by the RDD ids each one created.
     """
     e = pairs.select(
         F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
@@ -891,8 +896,8 @@ def connected_components(
     sc = spark.sparkContext
 
     # resolve durability FIRST: it decides how every intermediate below
-    # is materialized — parquet files a task retry can always re-read,
-    # vs executor-memory localCheckpoint blocks that die with their host
+    # is kept — parquet files a task retry can always re-read, vs
+    # executor-memory localCheckpoint blocks that die with their host
     if checkpoint_dir is None:
         checkpoint_dir = sc.getCheckpointDir()
         if checkpoint_dir is not None:
@@ -907,156 +912,107 @@ def connected_components(
 
         run_dir = checkpoint_dir.rstrip("/") + "/run_" + uuid.uuid4().hex[:12]
 
-    def _durable(df: DataFrame, name: str) -> DataFrame:
-        path = f"{run_dir}/{name}"
-        df.write.mode("error").parquet(path)
-        return spark.read.parquet(path)
+    # _keep(df, name, eager) -> (kept df, handle); _release(handle) frees it
+    if run_dir is None:
 
-    # materialize the DIRECTED edge list first: the pair producer (LSH
-    # signatures + verify) is the expensive upstream, and both the
-    # symmetrized union below and the fast-path collect would otherwise
-    # re-run it once per branch
-    e_ids: set[int] = set()
-    if run_dir is not None:
-        e = _durable(e, "edges_directed")
+        def _keep(df: DataFrame, name: str, eager: bool):
+            # a lazy checkpoint registers its RDD now and is written by
+            # the next action over it
+            before = _persistent_ids(sc)
+            df = df.localCheckpoint(eager=eager)
+            return df, _persistent_ids(sc) - before
+
+        def _release(ids: set[int]) -> None:
+            _unpersist_ids(sc, ids)
+
     else:
-        before = _persistent_ids(sc)
-        e = e.localCheckpoint(eager=True)
-        e_ids = _persistent_ids(sc) - before
-    n_edges = e.count()
 
-    if small_graph_max and n_edges <= small_graph_max:
-        # driver union-find fast path: the whole graph is two longs per
-        # edge; below the bound, O(log d) Spark rounds are pure job
-        # latency. Distributed arm still covered by forced-threshold
-        # tests (small_graph_max=0). Union-find needs no symmetrized
-        # copy — collect the directed list as-is.
-        rows = e.collect()
-        _unpersist_ids(sc, e_ids)
+        def _keep(df: DataFrame, name: str, eager: bool):
+            # the write IS the materialization barrier, whatever ``eager``
+            path = f"{run_dir}/{name}"
+            df.write.mode("error").parquet(path)
+            return spark.read.parquet(path), path
+
+        def _release(path: str) -> None:
+            _fs_delete(spark, path)
+
+    kept: dict = {}  # name -> handle of every kept frame not yet released
+
+    def keep(df: DataFrame, name: str, eager: bool = True) -> DataFrame:
+        df, kept[name] = _keep(df, name, eager)
+        return df
+
+    def release(name: str) -> None:
+        _release(kept.pop(name))
+
+    def discard() -> None:
+        for name in list(kept):
+            release(name)
         if run_dir is not None:
             _fs_delete(spark, run_dir)
-        comp = _union_find((r["u"], r["v"]) for r in rows)
-        out = sorted(comp.items())
-        return spark.createDataFrame(out, "id long, comp long")
 
-    sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
-    n_edges = 2 * n_edges
+    try:
+        # materialize the DIRECTED edge list first: the pair producer
+        # (LSH signatures + verify) is the expensive upstream, and both
+        # the symmetrized union below and the fast-path collect would
+        # otherwise re-run it once per branch
+        e = keep(e, "edges_directed")
+        n_edges = e.count()
 
-    # size the loop's parallelism to the EDGE SET, not the corpus: LSH
-    # pair graphs are orders of magnitude smaller than their corpus, and
-    # a round over a few thousand edges scheduled across 32 shuffle
-    # partitions is pure task overhead. ~100k edges per partition, at
-    # least one — at real scale this leaves parallelism untouched.
-    default_p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    loop_p = max(1, min(default_p, n_edges // 100_000 + 1))
+        if small_graph_max and n_edges <= small_graph_max:
+            # driver union-find fast path: the whole graph is two longs
+            # per edge; below the bound, O(log d) Spark rounds are pure
+            # job latency. Distributed loop still covered by
+            # forced-threshold tests (small_graph_max=0). Union-find
+            # needs no symmetrized copy — collect the directed list as-is.
+            comp = _union_find((r["u"], r["v"]) for r in e.collect())
+            discard()
+            return spark.createDataFrame(sorted(comp.items()), "id long, comp long")
 
-    if run_dir is not None:
-        # durable arm: the EDGE SET must survive executor loss too — a
-        # localCheckpoint-ed sym has truncated lineage, so losing its
-        # host would strand every later round no matter how durable the
-        # label files are
+        # size the loop's parallelism to the EDGE SET, not the corpus:
+        # LSH pair graphs are orders of magnitude smaller than their
+        # corpus, and a round over a few thousand edges scheduled across
+        # 32 shuffle partitions is pure task overhead. ~100k edges per
+        # partition, at least one — at real scale this leaves
+        # parallelism untouched.
+        default_p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+        loop_p = max(1, min(default_p, 2 * n_edges // 100_000 + 1))
+        sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
         if loop_p < default_p:
             sym = sym.repartition(loop_p, "v")
-        sym = _durable(sym, "edges")
-        _fs_delete(spark, f"{run_dir}/edges_directed")
-        try:
-            lab = _cc_loop_parquet(spark, sym, run_dir, max_iter)
-        except Exception:
-            # nothing useful survives a failed run — remove the orphan
-            # round files instead of stranding them under the shared dir
-            _fs_delete(spark, run_dir)
-            raise
-        _fs_delete(spark, f"{run_dir}/edges")
+        # kept once, already at loop_p; in the durable arm the EDGE SET
+        # survives executor loss too — a localCheckpoint-ed one would
+        # strand every later round however durable the label files are
+        sym = keep(sym, "edges")
+        release("edges_directed")
+
+        lab = sym.select(F.col("u").alias("id")).distinct().withColumn("comp", F.col("id"))
+        lab = keep(lab, "round_0000")
+        prev_total = None
+        for i in range(1, max_iter + 1):
+            # lazy keep materialized by the convergence aggregate: ONE
+            # job per round in memory (machine-guarded in
+            # test_plan_shapes), one write + one aggregate when durable
+            lab = keep(_cc_round(sym, lab), f"round_{i:04d}", eager=False)
+            total = lab.agg(
+                F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")
+            ).collect()[0]["s"]
+            # the previous round is superseded the moment this one is
+            # materialized — free it (without this, every round pins
+            # another corpus-scale label snapshot until session end)
+            release(f"round_{i - 1:04d}")
+            if prev_total is not None and total == prev_total:
+                break
+            prev_total = total
+        else:
+            raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+        release("edges")
         return lab
-
-    before = _persistent_ids(sc)
-    sym = sym.localCheckpoint(eager=True)
-    sym_ids = _persistent_ids(sc) - before
-    _unpersist_ids(sc, e_ids)
-
-    if loop_p < default_p:
-        before = _persistent_ids(sc)
-        sym = sym.repartition(loop_p, "v").localCheckpoint(eager=True)
-        new_ids = _persistent_ids(sc) - before
-        _unpersist_ids(sc, sym_ids)  # superseded by the repartitioned copy
-        sym_ids = new_ids
-
-    before = _persistent_ids(sc)
-    lab = sym.select(F.col("u").alias("id")).distinct().withColumn("comp", F.col("id"))
-    lab = lab.localCheckpoint(eager=True)
-    prev_ids = _persistent_ids(sc) - before
-
-    prev_total = None
-    for _ in range(max_iter):
-        jumped = _cc_round(sym, lab)
-        # lazy checkpoint materialized by the convergence aggregate:
-        # ONE job per round (machine-guarded in test_plan_shapes).
-        before = _persistent_ids(sc)
-        jumped = jumped.localCheckpoint(eager=False)
-        total = jumped.agg(
-            F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
-        new_ids = _persistent_ids(sc) - before
-        # previous round's blocks are superseded the moment the new
-        # checkpoint is materialized — free them (VERDICT r3 task #1:
-        # without this, every round pins another corpus-scale label RDD
-        # until session end)
-        _unpersist_ids(sc, prev_ids)
-        prev_ids = new_ids
-        lab = jumped
-        if prev_total is not None and total == prev_total:
-            break
-        prev_total = total
-    else:
-        _unpersist_ids(sc, sym_ids)
-        _unpersist_ids(sc, prev_ids)  # last round's labels: don't leak on raise
-        raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
-    _unpersist_ids(sc, sym_ids)
-    return lab
-
-
-def _cc_loop_parquet(spark, sym: DataFrame, ckpt_dir: str, max_iter: int) -> DataFrame:
-    """Reliable-checkpoint CC loop: every round's labels land as a
-    parquet file under ``ckpt_dir`` (the caller's per-run unique
-    directory; written-then-read — the write IS the materialization
-    barrier, and with ``sym`` itself parquet-backed by the caller, a
-    task retry after executor loss can always replay the round from
-    files); the previous round's file is deleted once its successor is
-    fully written. The final file backs the returned DataFrame."""
-    jvm = spark._jvm
-    jsc = spark.sparkContext._jsc.sc()
-    hconf = jsc.hadoopConfiguration()
-
-    def _path(p: str):
-        return jvm.org.apache.hadoop.fs.Path(p)
-
-    fs = _path(ckpt_dir).getFileSystem(hconf)
-
-    lab = sym.select(F.col("u").alias("id")).distinct().withColumn("comp", F.col("id"))
-    prev_path = None
-    cur = f"{ckpt_dir}/round_0000"
-    lab.write.mode("overwrite").parquet(cur)
-    lab = spark.read.parquet(cur)
-    prev_total = None
-    for i in range(1, max_iter + 1):
-        jumped = _cc_round(sym, lab)
-        nxt = f"{ckpt_dir}/round_{i:04d}"
-        jumped.write.mode("overwrite").parquet(nxt)
-        if prev_path is not None:
-            fs.delete(_path(prev_path), True)
-        prev_path, cur = cur, nxt
-        lab = spark.read.parquet(cur)
-        total = lab.agg(
-            F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
-        if prev_total is not None and total == prev_total:
-            break
-        prev_total = total
-    else:
-        raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
-    if prev_path is not None:
-        fs.delete(_path(prev_path), True)
-    return lab
+    except Exception:
+        # nothing useful survives a failed run: free every kept frame
+        # and remove the run directory
+        discard()
+        raise
 
 
 def dedup_clusters(

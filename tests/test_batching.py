@@ -1,6 +1,6 @@
 """Row-preserving Arrow kernels do not depend on Arrow batching: the
-text-core, repetition, S2-cell, WKB round-trip and vendored-CRS vertex
-kernels give identical rows with ``arrow.maxRecordsPerBatch`` at 1, 7
+text-core, repetition, S2-cell, WKB round-trip, vendored-CRS vertex
+and Bloom probe kernels give identical rows with ``arrow.maxRecordsPerBatch`` at 1, 7
 and the session default."""
 
 from __future__ import annotations
@@ -13,6 +13,7 @@ from geotables_jl_spark.functions import textstats as TS
 from geotables_jl_spark.functions.crs import transform_geometry_vertexwise
 from geotables_jl_spark.geom import s2
 from geotables_jl_spark.geom.model import st_polygon_lit
+from geotables_jl_spark.operators.bloom import build_bloom, with_bloom_contains
 from geotables_jl_spark.sources.geoparquet import geometry_to_wkb, wkb_to_geometry
 
 from tests.test_repetition import ADVERSARIAL as REP_TEXTS
@@ -83,3 +84,19 @@ def test_vendored_crs_vertex_kernel_batch_invariant(spark):
         return Osgb36Transformer.forward
 
     _assert_invariant(spark, lambda: transform_geometry_vertexwise(g, forward))
+
+
+def test_bloom_probe_batch_invariant(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    corpus = spark.range(400).select(F.concat(F.lit("https://c.example/"), F.col("id")).alias("url"))
+    arrivals = (
+        corpus.limit(50)
+        .union(spark.range(300).select(F.concat(F.lit("https://n.example/"), F.col("id")).alias("url")))
+        .union(spark.createDataFrame([(None,)], "url string"))
+        .repartition(3)
+    )
+    mem = build_bloom(corpus, "url", fpp=0.05)
+    sharded = build_bloom(corpus, "url", fpp=0.05, n_shards=4, out_dir=str(tmp_path / "b4"))
+    for bf in (mem, sharded):
+        _assert_invariant(spark, lambda: with_bloom_contains(arrivals, bf, "url"))

@@ -172,20 +172,16 @@ def test_bloom_probe_composes_with_structured_streaming(spark, corpus, tmp_path)
 
 
 # ---------------------------------------------------------------------------
-# sharded bloom
+# sharded bloom (build_bloom(n_shards=, out_dir=))
 # ---------------------------------------------------------------------------
 
 
 def test_sharded_build_matches_per_shard_python_oracle(spark, corpus, tmp_path):
-    from geotables_jl_spark.operators.bloom import (
-        _SHARD_SEED,
-        _load_shard_words,
-        build_bloom_sharded,
-    )
+    from geotables_jl_spark.operators.bloom import _SHARD_SEED, _load_shard_words
 
     d = str(tmp_path / "blooms")
-    man = build_bloom_sharded(corpus, "url", d, n_shards=4, fpp=0.01)
-    assert man["n_shards"] == 4
+    bf = build_bloom(corpus, "url", fpp=0.01, n_shards=4, out_dir=d)
+    assert bf.n_shards == 4 and bf.words is None
 
     rows = corpus.distinct().select(
         F.pmod(F.xxhash64("url", F.lit(_SHARD_SEED)), F.lit(4)).alias("s"),
@@ -194,23 +190,19 @@ def test_sharded_build_matches_per_shard_python_oracle(spark, corpus, tmp_path):
     ).collect()
     for s in range(4):
         pairs = [(r["h1"], r["h2"]) for r in rows if r["s"] == s]
-        want = _py_bloom(pairs, man["m_bits"], man["k"])
-        got = _load_shard_words(d, s, man["m_bits"] // 64)
+        want = _py_bloom(pairs, bf.m_bits, bf.k)
+        got = _load_shard_words(d, s, bf.m_bits // 64)
         assert [int(w) for w in got.tolist()] == want
 
 
 def test_sharded_probe_contract_and_flags(spark, corpus, tmp_path):
-    from geotables_jl_spark.operators.bloom import (
-        bloom_anti_join_sharded,
-        build_bloom_sharded,
-        with_bloom_contains_sharded,
-    )
-
     d = str(tmp_path / "blooms")
-    build_bloom_sharded(corpus, "url", d, n_shards=4, fpp=0.01)
+    build_bloom(corpus, "url", fpp=0.01, n_shards=4, out_dir=d)
+    # a later process reopens the filter from its directory alone
+    bf = BloomFilter.from_dir(d)
 
     # every corpus key flags True (no false negatives, across all shards)
-    flagged = with_bloom_contains_sharded(corpus, d, "url").collect()
+    flagged = with_bloom_contains(corpus, bf, "url").collect()
     assert all(r["in_corpus"] is True for r in flagged)
 
     # anti-join: corpus keys never emitted; ≥95% of fresh keys survive;
@@ -221,7 +213,7 @@ def test_sharded_probe_contract_and_flags(spark, corpus, tmp_path):
     arrivals = corpus.limit(80).union(fresh).union(
         spark.createDataFrame([(None,)], "url string")
     )
-    out = [r["url"] for r in bloom_anti_join_sharded(arrivals, d, "url").collect()]
+    out = [r["url"] for r in bloom_anti_join(arrivals, bf, "url").collect()]
     assert None in out
     named = [u for u in out if u is not None]
     assert all(u.startswith("https://shardnew.example/") for u in named)
@@ -229,29 +221,47 @@ def test_sharded_probe_contract_and_flags(spark, corpus, tmp_path):
 
 
 def test_sharded_probe_plan_has_one_exchange(spark, corpus, tmp_path):
-    from geotables_jl_spark.operators.bloom import (
-        bloom_anti_join_sharded,
-        build_bloom_sharded,
-    )
-
     d = str(tmp_path / "blooms")
-    build_bloom_sharded(corpus, "url", d, n_shards=4, fpp=0.01)
+    bf = build_bloom(corpus, "url", fpp=0.01, n_shards=4, out_dir=d)
     fresh = spark.range(50).select(F.concat(F.lit("u"), F.col("id")).alias("url"))
     plan = (
-        bloom_anti_join_sharded(fresh, d, "url")
+        bloom_anti_join(fresh, bf, "url")
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert plan.count("Exchange") == 1  # the shard routing, nothing else
 
 
 def test_sharded_guard_raises_on_undersized_shards(spark, corpus, tmp_path):
-    from geotables_jl_spark.operators.bloom import build_bloom_sharded
-
-    with pytest.raises(ValueError, match="max_bytes_per_shard"):
-        build_bloom_sharded(
-            corpus, "url", str(tmp_path / "x"), n_shards=2,
-            expected_n=10**12, fpp=0.01,
+    with pytest.raises(ValueError, match="max_bytes"):
+        build_bloom(
+            corpus, "url", expected_n=10**12, fpp=0.01,
+            n_shards=2, out_dir=str(tmp_path / "x"),
         )
+    # the driver never holds a sharded filter
+    with pytest.raises(ValueError, match="out_dir"):
+        build_bloom(corpus, "url", expected_n=100, n_shards=2)
+
+
+def test_one_shard_on_disk_filter_matches_in_memory(spark, corpus, tmp_path):
+    """n_shards=1 with an out_dir differs from the in-memory filter only
+    in its sink: the same words land in shard 0, and probes agree."""
+    from geotables_jl_spark.operators.bloom import _load_shard_words
+
+    mem = build_bloom(corpus, "url", fpp=0.01)
+    disk = build_bloom(corpus, "url", fpp=0.01, n_shards=1, out_dir=str(tmp_path / "b1"))
+    assert (disk.m_bits, disk.k, disk.words) == (mem.m_bits, mem.k, None)
+    got = _load_shard_words(disk.out_dir, 0, disk.m_bits // 64)
+    assert got.tolist() == mem.words.tolist()
+
+    arrivals = corpus.limit(60).union(
+        spark.range(300).select(F.concat(F.lit("https://one.example/"), F.col("id")).alias("url"))
+    ).union(spark.createDataFrame([(None,)], "url string"))
+    flags = [
+        sorted(with_bloom_contains(arrivals, bf, "url").collect(), key=repr)
+        for bf in (mem, disk)
+    ]
+    assert flags[0] == flags[1]
+    assert len(flags[0]) == 361
 
 
 def test_shard_cache_is_lru_bounded(monkeypatch):
@@ -283,43 +293,33 @@ def test_sharded_rebuild_same_dir_invalidates_worker_cache(spark, tmp_path):
     cache, so probes after the rebuild must see the NEW keys — zero
     false negatives — even though long-lived reused Python workers still
     hold the first build's word arrays (ADVICE r4 medium)."""
-    from geotables_jl_spark.operators.bloom import (
-        build_bloom_sharded,
-        with_bloom_contains_sharded,
-    )
-
     d = str(tmp_path / "blooms")
     gen_a = spark.range(150).select(F.concat(F.lit("https://a.example/"), F.col("id")).alias("url"))
     gen_b = spark.range(150).select(F.concat(F.lit("https://b.example/"), F.col("id")).alias("url"))
 
-    man_a = build_bloom_sharded(gen_a, "url", d, n_shards=4, fpp=0.01)
+    bf_a = build_bloom(gen_a, "url", fpp=0.01, n_shards=4, out_dir=d)
     # warm every worker's cache with build A's shards
-    assert all(r["in_corpus"] for r in with_bloom_contains_sharded(gen_a, d, "url").collect())
+    assert all(r["in_corpus"] for r in with_bloom_contains(gen_a, bf_a, "url").collect())
 
-    man_b = build_bloom_sharded(gen_b, "url", d, n_shards=4, fpp=0.01)
-    assert man_a["build_token"] != man_b["build_token"]
+    bf_b = build_bloom(gen_b, "url", fpp=0.01, n_shards=4, out_dir=d)
+    assert bf_a.build_token != bf_b.build_token
     # the no-false-negative contract on the REBUILT corpus: every B key
     # flags True (a stale cache would flag nearly all of them False)
-    assert all(r["in_corpus"] for r in with_bloom_contains_sharded(gen_b, d, "url").collect())
+    assert all(r["in_corpus"] for r in with_bloom_contains(gen_b, bf_b, "url").collect())
 
 
 def test_probe_raises_on_helper_column_collision(spark, corpus, tmp_path):
-    from geotables_jl_spark.operators.bloom import (
-        build_bloom,
-        build_bloom_sharded,
-        with_bloom_contains,
-        with_bloom_contains_sharded,
-    )
-
-    d = str(tmp_path / "blooms")
-    build_bloom_sharded(corpus, "url", d, n_shards=2, fpp=0.01)
-    poisoned = corpus.withColumn("__h1", F.lit(7))
-    with pytest.raises(ValueError, match="collide"):
-        with_bloom_contains_sharded(poisoned, d, "url")
-    has_out = corpus.withColumn("in_corpus", F.lit(True))
-    with pytest.raises(ValueError, match="collide"):
-        with_bloom_contains_sharded(has_out, d, "url")
-
+    """The probe adds no helper columns, so an input ``__h1`` column
+    passes through unchanged; only an existing ``out_col`` is refused,
+    for both filter kinds."""
+    sharded = build_bloom(corpus, "url", fpp=0.01, n_shards=2, out_dir=str(tmp_path / "blooms"))
     bf = build_bloom(corpus, "url", fpp=0.01)
-    with pytest.raises(ValueError, match="already exists"):
-        with_bloom_contains(has_out, bf, "url")
+    poisoned = corpus.withColumn("__h1", F.lit(7))
+    has_out = corpus.withColumn("in_corpus", F.lit(True))
+    for f in (sharded, bf):
+        out = with_bloom_contains(poisoned, f, "url")
+        assert out.columns == ["url", "__h1", "in_corpus"]
+        rows = out.collect()
+        assert all(r["__h1"] == 7 and r["in_corpus"] is True for r in rows)
+        with pytest.raises(ValueError, match="already exists"):
+            with_bloom_contains(has_out, f, "url")
