@@ -3,9 +3,9 @@
 ``entry(spark)`` runs the flagship north-star query (geotagged web pages
 → tile geojoin) at sf0.001. ``queries()`` exposes one entry per
 implemented operator family (SURVEY.md §2 + training-data-pipeline ops);
-``oracle_sql()`` gives the DuckDB-equivalent ANSI SQL for each (omitted
-only for genuinely non-SQL-expressible ops: SimHash and LSH-approximate
-ANN, whose hash families live JVM-side).
+``oracle_sql()`` gives the DuckDB-equivalent ANSI SQL for every one of
+them, hash families included (SimHash, LSH ANN), so each query is gated
+bit-exact.
 
 Parity conventions (so value-hashes match bit-for-bit):
 - coordinates are derived from integer keys with exact integer modular

@@ -9,7 +9,10 @@ the certificate bound and the escalation (3× cell at fixed r, or 3×
 chord at the S2 level for it). Everything else is shared: the sorted
 (key, position) CSR (``CellIndex``) and its worker memo, one gather and
 covered pass, the tie-exact top-k, the brute-force tail and the
-certify→escalate→brute driver ``knn_exact``.
+certify→escalate→brute driver ``knn_exact``. Every row gets exactly
+min(k, n2) neighbours, so the result is two (n, min(k, n2)) matrices:
+each covered chunk writes its rows' top-k straight into them, and the
+escalation patches its rows in place.
 
 Which side carries the cover: the plane indexes each directory point
 once, under its own cell, and a query gathers its (2r+1)² ring as 2r+1
@@ -350,41 +353,27 @@ def _topk_tie_exact(d: np.ndarray, kk: int, p: np.ndarray | None = None):
     return part, dp
 
 
-def _ragged_arange(lens: np.ndarray) -> np.ndarray:
-    ends = np.cumsum(lens)
-    return np.arange(int(ends[-1]) if len(ends) else 0, dtype=np.int64) - np.repeat(ends - lens, lens)
-
-
-def _result(lens, parts):
-    """(offsets, pos, dist) in row order from per-row ``lens`` and
-    (rows, row lens, pos, dist) parts holding those rows' values."""
-    off = np.zeros(len(lens) + 1, np.int64)
-    off[1:] = np.cumsum(lens)
-    pos, dist = np.empty(int(off[-1]), np.int64), np.empty(int(off[-1]))
-    for rows, ln, p, d in parts:
-        at = np.repeat(off[rows], ln) + _ragged_arange(ln)
-        pos[at], dist[at] = p, d
-    return off, pos, dist
-
-
 def _covered(q, index: PointIndex, spec: Metric, k: int, budget: int):
     """One covered pass of the query rows ``q`` (a coordinate tuple):
-    ((offsets, pos, dist) in row order, rows left uncertified).
+    (pos, dist, rows left uncertified), ``pos`` and ``dist`` each an
+    (n, min(k, n2)) matrix in row order. An uncertified row's values are
+    unspecified: the caller replaces them.
 
     Rows run in count-sorted chunks padded to the chunk max, so the
     working set stays bounded (cache-resident under concurrency) and a
     hot cell cannot blow the matrix budget. A chunk gathers its rows'
     key ranges into one padded matrix of directory positions, in range
-    order, so ties break on the position values."""
+    order, so ties break on the position values, and writes its top-k
+    straight into its rows of ``pos`` and ``dist``."""
     n, n2 = len(q[0]), len(index.rid)
+    kk = min(k, n2)
     ci = _cell_index(index, spec)
     starts, runs = ci.ranges(spec, q)
     counts = runs.sum(axis=1)
     order = np.argsort(counts, kind="stable")
     cs = np.maximum(counts[order], 1)
-    lens = np.zeros(n, np.int64)
-    kth = np.full(n, np.nan)
-    parts = []
+    pos, dist = np.empty((n, kk), np.int64), np.empty((n, kk))
+    cert = np.zeros(n, bool)
     i = 0
     while i < n:
         # count-sorted ⇒ rows·max = (j-i)·cs[j-1] is nondecreasing in j:
@@ -400,61 +389,36 @@ def _covered(q, index: PointIndex, spec: Metric, k: int, budget: int):
         i = lo
         cnts = counts[rows]
         m = int(cnts[-1])
-        if m == 0:
-            continue  # count-sorted: an all-empty chunk
+        if m < kk:
+            continue  # count-sorted: no row here has kk candidates to certify
         # entry j of run (row, c) sits at starts + j; the runs of a row
         # fill its matrix row left to right
         rl = runs[rows].reshape(-1)
         at = np.repeat(starts[rows].reshape(-1) - (np.cumsum(rl) - rl), rl) + np.arange(int(rl.sum()))
-        pad = np.arange(m, dtype=np.int64)[None, :]
-        mask = pad < cnts[:, None]
+        mask = np.arange(m, dtype=np.int64)[None, :] < cnts[:, None]
         pidx = np.zeros((len(rows), m), np.int32)
         pidx[mask] = ci.pos[at]
         d = spec.dist([c[rows][:, None] for c in q], [c[pidx] for c in index.coords])
         d[~mask] = np.inf
         pidx[~mask] = n2  # padding sorts after every real position
-        kk = min(k, m)
         top, dk = _topk_tie_exact(d, kk, pidx)
-        ln = np.minimum(cnts, k)
-        keep = pad[:, :kk] < ln[:, None]
-        lens[rows] = ln
-        kth[rows] = np.where(cnts > 0, dk[np.arange(len(rows)), np.maximum(ln, 1) - 1], np.nan)
-        parts.append((rows, ln, np.take_along_axis(pidx, top, axis=1)[keep], dk[keep]))
-    with np.errstate(invalid="ignore"):
-        cert = ((counts >= k) & (kth <= spec.bound)) | (counts >= n2)
-    return _result(lens, parts), np.flatnonzero(~cert)
+        pos[rows], dist[rows] = np.take_along_axis(pidx, top, axis=1), dk
+        cert[rows] = ((cnts >= k) & (dk[:, -1] <= spec.bound)) | (cnts >= n2)
+    return pos, dist, np.flatnonzero(~cert)
 
 
 def _brute(q, index: PointIndex, spec: Metric, k: int, budget: int):
     """Exact top-k of the query rows ``q`` against every directory point:
-    (offsets, pos, dist) in row order. Columns are positions, so ties
-    resolve as in the covered pass."""
+    (pos, dist), each (nb, min(k, n2)) in row order. Columns are
+    positions, so ties resolve as in the covered pass."""
     n2, nb = len(index.rid), len(q[0])
     kk = min(k, n2)
     step = max(1, budget // max(n2, 1))
-    pos, dist = [], []
+    pos, dist = np.empty((nb, kk), np.int64), np.empty((nb, kk))
     for i in range(0, nb, step):
         d = spec.dist([c[i : i + step, None] for c in q], [c[None, :] for c in index.coords])
-        top, dk = _topk_tie_exact(d, kk)
-        pos.append(top.reshape(-1))
-        dist.append(dk.reshape(-1))
-    off = np.arange(nb + 1, dtype=np.int64) * kk
-    return off, np.concatenate(pos) if pos else np.empty(0, np.int64), np.concatenate(dist) if dist else np.empty(0)
-
-
-def _replace(res, rows: np.ndarray, sub):
-    """``res`` with the values of ``rows`` replaced by ``sub``, a result
-    over exactly those rows in that order."""
-    off, pos, dist = res
-    s_off, s_pos, s_dist = sub
-    lens = np.diff(off)
-    kept = np.ones(len(lens), bool)
-    kept[rows] = False
-    kept = np.flatnonzero(kept)
-    at = np.repeat(off[kept], lens[kept]) + _ragged_arange(lens[kept])
-    new_lens = lens.copy()
-    new_lens[rows] = np.diff(s_off)
-    return _result(new_lens, [(kept, lens[kept], pos[at], dist[at]), (rows, np.diff(s_off), s_pos, s_dist)])
+        pos[i : i + step], dist[i : i + step] = _topk_tie_exact(d, kk)
+    return pos, dist
 
 
 def knn_exact(q, index: PointIndex, spec: Metric, k: int, budget: int = 262_144):
@@ -467,25 +431,25 @@ def knn_exact(q, index: PointIndex, spec: Metric, k: int, budget: int = 262_144)
     driver rounds, no shuffle: the whole kNN job is one map.
 
     ``q`` is a tuple of coordinate arrays (``spec.cols``). Returns
-    (offsets, pos, dist) in input row order: row i's neighbours are the
-    directory positions ``pos[offsets[i]:offsets[i+1]]`` (rids via
-    ``index.rid.take``) by ascending (dist, rid); every row gets
-    min(k, n2) of them."""
+    (pos, dist), each an (n, min(k, n2)) matrix in input row order: row
+    i's neighbours are the directory positions ``pos[i]`` (rids via
+    ``index.rid.take``) by ascending (dist, rid)."""
     n, n2 = len(q[0]), len(index.rid)
     if n == 0 or n2 == 0:
-        return np.zeros(n + 1, np.int64), np.empty(0, np.int64), np.empty(0)
-    res, bad = _covered(q, index, spec, k, budget)
-    if not len(bad):
-        return res
-    sub = tuple(c[bad] for c in q)
-    nxt = spec.escalate()
-    if not nxt.covers_all and (len(bad) >= nxt.build_rows or nxt.key in _MEMO["by_key"]):
-        fix, still = _covered(sub, index, nxt, k, budget)
-        if len(still):
-            fix = _replace(fix, still, _brute(tuple(c[still] for c in sub), index, nxt, k, budget))
-    else:
-        fix = _brute(sub, index, spec, k, budget)
-    return _replace(res, bad, fix)
+        kk = min(k, n2)
+        return np.empty((n, kk), np.int64), np.empty((n, kk))
+    pos, dist, bad = _covered(q, index, spec, k, budget)
+    if len(bad):
+        sub = tuple(c[bad] for c in q)
+        nxt = spec.escalate()
+        if not nxt.covers_all and (len(bad) >= nxt.build_rows or nxt.key in _MEMO["by_key"]):
+            p, d, still = _covered(sub, index, nxt, k, budget)
+            if len(still):
+                p[still], d[still] = _brute(tuple(c[still] for c in sub), index, nxt, k, budget)
+        else:
+            p, d = _brute(sub, index, spec, k, budget)
+        pos[bad], dist[bad] = p, d
+    return pos, dist
 
 
 def score_batch_exact(
@@ -503,5 +467,6 @@ def score_batch_exact(
     order and cells come from (lx, ly), so ``lid`` and ``lcell`` are not
     read; they keep the signature the benchmark's kernel-rate layer
     calls."""
-    off, pos, dist = knn_exact((lx, ly), index, Planar(index.cell_size, radius), k, chunk_budget)
-    return off, index.rid.take(pa.array(pos)).to_numpy(), dist
+    pos, dist = knn_exact((lx, ly), index, Planar(index.cell_size, radius), k, chunk_budget)
+    off = np.arange(len(lx) + 1, dtype=np.int64) * pos.shape[1]
+    return off, index.rid.take(pa.array(pos.reshape(-1))).to_numpy(), dist.reshape(-1)

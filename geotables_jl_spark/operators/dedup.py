@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from geotables_jl_spark.functions.textstats import fingerprint_fast, shingles_fast
+from geotables_jl_spark.operators.simsearch import dot, norm
 
 
 # ---------------------------------------------------------------------------
@@ -570,18 +571,6 @@ def simhash_pairs(
 # ---------------------------------------------------------------------------
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")))
-
-
 #: corpus size above which the exact all-pairs arm is refused by
 #: default: the blocked matmul is O(n²/B) with B-fold input replication
 #: — correct at fixture scale, a quadratic job at crawl scale
@@ -627,7 +616,7 @@ def embedding_neardup_pairs(
     ``build_bloom``'s ``expected_n``).
     """
     base = df.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")).withColumn(
-        "__n", _norm(F.col("__v"))
+        "__n", norm(F.col("__v"))
     )
     if use_lsh is None:
         n = expected_rows if expected_rows is not None else df.count()
@@ -677,7 +666,7 @@ def embedding_neardup_pairs(
     )
     return (
         cand.withColumn(
-            "cosine", _dot(F.col("__va"), F.col("__vb")) / (F.col("__nna") * F.col("__nnb"))
+            "cosine", dot(F.col("__va"), F.col("__vb")) / (F.col("__nna") * F.col("__nnb"))
         )
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))

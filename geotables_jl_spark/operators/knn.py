@@ -9,9 +9,11 @@ The directory's row count picks one of two arms:
   broadcast; each Arrow batch ships (lid, coordinates) in and (lid,
   rids, dists) out, and ``knn_exact`` runs the whole cell-ring
   expansion in-batch (covered pass, certification, one 3× escalation,
-  brute force for the rows still uncertified). The JVM fans the lists
-  out with a codegen posexplode. No shuffle and no driver rounds, so
-  the job scales with executors like a scan.
+  brute force for the rows still uncertified). Every row gets exactly
+  min(k, n_right) neighbours, so a batch's result is two fixed-width
+  (rows, min(k, n_right)) matrices and its list offsets a plain stride.
+  The JVM fans the lists out with a codegen posexplode. No shuffle and
+  no driver rounds, so the job scales with executors like a scan.
 - **rounds arm** (larger directory, or ``on=`` keys): certify-or-escalate
   DataFrame rounds. A round explodes the smaller of the directory and
   the remaining query rows to the spec's index cells (one Arrow map),
@@ -148,13 +150,13 @@ def _kernel_arm(left: DataFrame, right: DataFrame, spec: Metric, k: int) -> Data
         idx = bc.value
         for rb in batches:
             q = tuple(rb.column(i).to_numpy(zero_copy_only=False) for i in range(1, rb.num_columns))
-            off, pos, dist = knn_exact(q, idx, spec, k)
-            off = pa.array(off.astype(np.int32))
+            pos, dist = knn_exact(q, idx, spec, k)
+            off = pa.array(np.arange(rb.num_rows + 1, dtype=np.int32) * pos.shape[1])
             yield pa.RecordBatch.from_arrays(
                 [
                     rb.column(0),
-                    pa.ListArray.from_arrays(off, idx.rid.take(pa.array(pos))),
-                    pa.ListArray.from_arrays(off, pa.array(dist)),
+                    pa.ListArray.from_arrays(off, idx.rid.take(pa.array(pos.reshape(-1)))),
+                    pa.ListArray.from_arrays(off, pa.array(dist.reshape(-1))),
                 ],
                 names=["__lid", "__rids", "__dists"],
             )

@@ -8,15 +8,16 @@
   bucket join with multi-probe (hamming-1 probes), exact rerank within
   candidates. Sub-linear candidate sets at 100 TB; recall tunable via
   planes/probes.
-- ``ann_ivf_topk``: IVF-style — k-means-free variant using coarse cells
-  from the top principal hyperplanes; provided as partition-pruned
-  search over a bucketed corpus table.
+- ``ann_ivf_topk``: IVF-style — k-means-free variant whose coarse cells
+  are the corpus vectors with the smallest ids; provided as
+  partition-pruned search over a bucketed corpus table.
 
-Small inputs use `zip_with`/`aggregate` column expressions; corpus-side
-work above ``_KERNEL_MIN_ROWS`` (hashing, IVF assignment, candidate
-rerank) runs as Arrow kernels whose dim-by-dim accumulation is
-bit-identical to the SQL fold — same results, compiled row-vectorized
-math instead of interpreted higher-order functions.
+Corpus-side work (hashing, IVF assignment, candidate rerank) runs as
+Arrow kernels whose dim-by-dim accumulation is bit-identical to the SQL
+fold: compiled row-vectorized math instead of interpreted higher-order
+functions, already faster than the folds at 500 corpus rows. The small
+query side (its sign bucket, its IVF cells) stays a JVM ``aggregate``
+fold of the same shape.
 """
 
 from __future__ import annotations
@@ -129,28 +130,7 @@ def cosine_topk(
 
     c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv"))
     local = c.mapInPandas(_part, schema="query_id long, neighbor_id long, cosine double")
-    local = local.filter(F.col("cosine") != F.lit(float("-inf")))
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", F.round("cosine", 6).alias("cosine"))
-    )
-
-
-# below this many corpus rows the interpreted JVM folds finish faster
-# than the Python-worker round trip they would replace; above it the
-# Arrow kernels win (measured 2× already at 2k rows × 64 dims with a
-# warm pool, and the gap widens linearly with rows)
-_KERNEL_MIN_ROWS = 2_000
-
-
-def _at_least_rows(df: DataFrame, n: int) -> bool:
-    """Bounded planning probe: does ``df`` have ≥ n rows? ``limit(n)``
-    early-exits the scan after n rows, so this stays cheap even when the
-    corpus is a derived/joined plan (a bare ``count()`` there is a full
-    job — ADVICE r2). On a raw parquet scan it is metadata-fast anyway."""
-    return df.limit(n).count() >= n
+    return _rank(local.filter(F.col("cosine") != F.lit(float("-inf"))), k)
 
 
 def _flat_matrix(rb, name_idx: dict, col: str):
@@ -178,11 +158,21 @@ def _seqdot(A, B):
     return out
 
 
+def _seqdots(V, M):
+    """(n, m) dots of every row of ``V`` (n, d) with every row of ``M``
+    (m, d), each accumulated dim-by-dim like ``_seqdot``."""
+    import numpy as np
+
+    out = np.zeros((V.shape[0], M.shape[0]))
+    for j in range(V.shape[1]):
+        out += V[:, j][:, None] * M[:, j][None, :]
+    return out
+
+
 def _rerank_cos_arrow(cand: DataFrame) -> DataFrame:
     """Exact cosine for candidate pairs (query_id, neighbor_id, __qv,
     __cv) in ONE Arrow pass — vectors and norms never reach the window
-    shuffle, and the per-candidate interpreted fold (the hot cost of the
-    JVM path at >10⁴ candidates) becomes compiled row-vectorized math
+    shuffle, and the per-candidate fold is compiled row-vectorized math
     with fold-identical accumulation order."""
     import numpy as np
     import pyarrow as pa
@@ -215,6 +205,26 @@ def _rerank_cos_arrow(cand: DataFrame) -> DataFrame:
     )
 
 
+def _vectors(corpus, id_col, vec_col, queries, query_id_col, query_vec_col):
+    """The ANN sides as (neighbor_id, __cv) and (query_id, __qv). A NULL
+    vector has no neighbours and is no one's: the kernels read fixed
+    -width vectors."""
+    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv"))
+    q = queries.select(F.col(query_id_col).alias("query_id"), F.col(query_vec_col).alias("__qv"))
+    return c.where(F.col("__cv").isNotNull()), q.where(F.col("__qv").isNotNull())
+
+
+def _rank(scored: DataFrame, k: int) -> DataFrame:
+    """Top-k of (query_id, neighbor_id, cosine) per query by cosine desc,
+    ties by neighbor id, as (query_id, rank, neighbor_id, cosine)."""
+    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "rank", "neighbor_id", F.round("cosine", 6).alias("cosine"))
+    )
+
+
 def _sign_bucket(v: Column, planes, nbits: int) -> Column:
     bits = F.lit(0).cast("long")
     for p in range(nbits):
@@ -240,61 +250,47 @@ def ann_lsh_topk(
     seed: int = 42,
     exclude_self: bool = True,
     dim: int | None = None,
-    use_kernel: bool | None = None,
 ) -> DataFrame:
     """Approximate cosine top-k via sign-LSH buckets + multi-probe.
 
-    Corpus is hashed once into 2^planes buckets (a pure column fold —
-    at scale this is the bucketing/partition column of the stored
-    table, so a query probes only its buckets: partition pruning). Each
-    query probes its own bucket plus all hamming-``probes`` neighbors,
-    then candidates are exactly reranked. Output schema matches
+    Corpus is hashed once into 2^planes buckets by one Arrow pass (at
+    scale this is the bucketing/partition column of the stored table,
+    so a query probes only its buckets: partition pruning). Each query
+    probes its own bucket plus all hamming-``probes`` neighbors, then
+    candidates are exactly reranked. Output schema matches
     ``cosine_topk`` (a query with fewer than k candidates returns fewer
     rows — raise probes for recall).
     """
     import numpy as np
+    import pyarrow as pa
 
+    c, q = _vectors(corpus, id_col, vec_col, queries, query_id_col, query_vec_col)
     # dim= lets callers skip the 1-row planning action (same escape hatch
     # as geojoin's stats=)
     if dim is None:
-        dim = len(corpus.select(vec_col).first()[0])
+        dim = len(c.first()["__cv"])
     rng = np.random.default_rng(seed)
     H = rng.standard_normal((planes, dim))
-    if use_kernel is None:
-        use_kernel = _at_least_rows(corpus, _KERNEL_MIN_ROWS)
+    bit = np.int64(1) << np.arange(planes, dtype=np.int64)
 
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv"))
-    if use_kernel:
-        # one Arrow pass hashes the whole corpus: planes-many dim-by-dim
-        # dots (fold-identical accumulation → identical sign bits) — at
-        # 10¹² rows this is the bucketing write job of the stored table
-        import pyarrow as pa
+    hash_schema = T.StructType(
+        [c.schema["neighbor_id"], c.schema["__cv"], T.StructField("__bkt", T.LongType())]
+    )
 
-        hash_schema = T.StructType(
-            [c.schema["neighbor_id"], c.schema["__cv"], T.StructField("__bkt", T.LongType())]
-        )
+    def _hash_iter(batches):
+        # planes-many dim-by-dim dots: the query side's JVM fold, so the
+        # sign bits are identical on both sides
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            names = {n: i for i, n in enumerate(rb.schema.names)}
+            bits = np.where(_seqdots(_flat_matrix(rb, names, "__cv"), H) >= 0, bit, 0).sum(axis=1)
+            yield pa.record_batch(
+                [rb.column(names["neighbor_id"]), rb.column(names["__cv"]), pa.array(bits)],
+                names=["neighbor_id", "__cv", "__bkt"],
+            )
 
-        def _hash_iter(batches):
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                names = {n: i for i, n in enumerate(rb.schema.names)}
-                V = _flat_matrix(rb, names, "__cv")
-                bits = np.zeros(rb.num_rows, dtype=np.int64)
-                for p in range(planes):
-                    d_p = np.zeros(rb.num_rows)
-                    for j in range(V.shape[1]):
-                        d_p += V[:, j] * H[p, j]
-                    bits |= np.where(d_p >= 0, np.int64(1 << p), np.int64(0))
-                yield pa.record_batch(
-                    [rb.column(names["neighbor_id"]), rb.column(names["__cv"]), pa.array(bits)],
-                    names=["neighbor_id", "__cv", "__bkt"],
-                )
-
-        c = c.mapInArrow(_hash_iter, schema=hash_schema)
-    else:
-        c = c.withColumn("__bkt", _sign_bucket(F.col("__cv"), H, planes))
-    q = queries.select(F.col(query_id_col).alias("query_id"), F.col(query_vec_col).alias("__qv"))
+    c = c.mapInArrow(_hash_iter, schema=hash_schema)
     q = q.withColumn("__qbkt", _sign_bucket(F.col("__qv"), H, planes))
     # multi-probe: own bucket + hamming-1 flips (and hamming-2 if probes>=2)
     probe_list = [F.col("__qbkt")]
@@ -313,19 +309,7 @@ def ann_lsh_topk(
     # dedupe multi-probe double-hits BEFORE scoring (cosine is a pure
     # function of the pair, so scoring after the dedupe is identical)
     cand = cand.dropDuplicates(["query_id", "neighbor_id"])
-    if use_kernel:
-        scored = _rerank_cos_arrow(cand)
-    else:
-        scored = cand.withColumn(
-            "cosine",
-            dot(F.col("__cv"), F.col("__qv")) / (norm(F.col("__cv")) * norm(F.col("__qv"))),
-        ).select("query_id", "neighbor_id", "cosine")
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", F.round("cosine", 6).alias("cosine"))
-    )
+    return _rank(_rerank_cos_arrow(cand), k)
 
 
 def ann_ivf_topk(
@@ -339,7 +323,6 @@ def ann_ivf_topk(
     ncentroids: int = 16,
     nprobe: int = 4,
     exclude_self: bool = True,
-    use_kernel: bool | None = None,
 ) -> DataFrame:
     """IVF-style approximate cosine top-k: coarse quantize the corpus
     into ``ncentroids`` cells, probe the ``nprobe`` best cells per
@@ -353,11 +336,11 @@ def ann_ivf_topk(
     a query touches nprobe/ncentroids of the corpus.
 
     Determinism/oracle parity: every dot product is a SEQUENTIAL left
-    fold over the vector — the big corpus assignment runs as an Arrow
-    numpy kernel vectorized over ROWS but accumulated dim-by-dim (bit-
-    identical to ``list_dot_product``; a BLAS matmul would pairwise-sum
-    and drift ulps), and the small query/rerank paths are JVM
-    ``aggregate`` folds of the same shape.
+    fold over the vector — the corpus assignment and the candidate
+    rerank run as Arrow numpy kernels vectorized over ROWS but
+    accumulated dim-by-dim (bit-identical to ``list_dot_product``; a
+    BLAS matmul would pairwise-sum and drift ulps), and the small query
+    side's cell choice is a JVM ``aggregate`` fold of the same shape.
 
     Output: (query_id, rank, neighbor_id, cosine) like ``cosine_topk``.
     """
@@ -365,15 +348,10 @@ def ann_ivf_topk(
 
     import numpy as np
     import pyarrow as pa
-    from pyspark.sql import types as T
 
-    cent_rows = (
-        corpus.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cv"))
-        .orderBy("cid")
-        .limit(ncentroids)
-        .collect()
-    )
-    cents = [(int(r["cid"]), [float(v) for v in r["cv"]]) for r in cent_rows]
+    c, q = _vectors(corpus, id_col, vec_col, queries, query_id_col, query_vec_col)
+    cent_rows = c.orderBy("neighbor_id").limit(ncentroids).collect()
+    cents = [(int(r["neighbor_id"]), [float(v) for v in r["__cv"]]) for r in cent_rows]
 
     def _cos_to_cent(vec: Column, vnorm: Column, cvec: list[float]) -> Column:
         arr = F.array(*[F.lit(v) for v in cvec])
@@ -396,14 +374,8 @@ def ann_ivf_topk(
     cnorms = np.array(
         [_math.sqrt(sum(v * v for v in cv)) for _, cv in cents], dtype=np.float64
     )
-    nid_type = corpus.schema[id_col].dataType
     assign_schema = T.StructType(
-        [
-            T.StructField("neighbor_id", nid_type),
-            T.StructField("__cv", corpus.schema[vec_col].dataType),
-            T.StructField("__cn", T.DoubleType()),
-            T.StructField("__cell", T.LongType()),
-        ]
+        [c.schema["neighbor_id"], c.schema["__cv"], T.StructField("__cell", T.LongType())]
     )
 
     def _assign(batches):
@@ -411,52 +383,17 @@ def ann_ivf_topk(
             if rb.num_rows == 0:
                 continue
             names = {n: i for i, n in enumerate(rb.schema.names)}
-            vecs = rb.column(names["__cv"])
-            flat = np.asarray(vecs.combine_chunks().flatten() if hasattr(vecs, "combine_chunks") else vecs.flatten(), dtype=np.float64)
-            n = rb.num_rows
-            d = cmat.shape[1]
-            V = flat.reshape(n, d)
-            # sequential accumulation over dims (rows vectorized): bit-
-            # identical to the SQL/JVM left fold, unlike a BLAS matmul
-            dots = np.zeros((n, len(cid_arr)))
-            vn2 = np.zeros(n)
-            for j in range(d):
-                vj = V[:, j]
-                dots += vj[:, None] * cmat[:, j][None, :]
-                vn2 += vj * vj
-            vn = np.sqrt(vn2)
-            cos = dots / (vn[:, None] * cnorms[None, :])
+            V = _flat_matrix(rb, names, "__cv")
+            cos = _seqdots(V, cmat) / (np.sqrt(_seqdot(V, V))[:, None] * cnorms[None, :])
             # argmax with ties to the SMALLEST cid: cids are id-sorted so
             # plain argmax (first max) already breaks ties low
             best = np.argmax(cos, axis=1)
-            out = pa.record_batch(
-                [
-                    rb.column(names["neighbor_id"]),
-                    rb.column(names["__cv"]),
-                    pa.array(vn),
-                    pa.array(cid_arr[best]),
-                ],
-                names=["neighbor_id", "__cv", "__cn", "__cell"],
+            yield pa.record_batch(
+                [rb.column(names["neighbor_id"]), rb.column(names["__cv"]), pa.array(cid_arr[best])],
+                names=["neighbor_id", "__cv", "__cell"],
             )
-            yield out
 
-    if use_kernel is None:
-        # Below _KERNEL_MIN_ROWS the Python-worker round trip exceeds
-        # the kernel's win over the interpreted JVM folds; above it the
-        # kernel dominates (2× already at 2k×64 with a warm pool). The
-        # probe is limit-bounded so a derived corpus plan doesn't pay a
-        # full count at planning time.
-        use_kernel = _at_least_rows(corpus, _KERNEL_MIN_ROWS)
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv"))
-    if use_kernel:
-        c = c.mapInArrow(_assign, schema=assign_schema)
-    else:
-        c = c.withColumn("__cn", norm(F.col("__cv")))
-        c = c.withColumn(
-            "__cell", F.element_at(_best_cells(F.col("__cv"), F.col("__cn"), 1), 1)["cid"]
-        )
-
-    q = queries.select(F.col(query_id_col).alias("query_id"), F.col(query_vec_col).alias("__qv"))
+    c = c.mapInArrow(_assign, schema=assign_schema)
     q = q.withColumn("__qn", norm(F.col("__qv")))
     q = q.withColumn(
         "__cell", F.explode(F.transform(_best_cells(F.col("__qv"), F.col("__qn"), nprobe), lambda s: s["cid"]))
@@ -465,15 +402,4 @@ def ann_ivf_topk(
     cand = q.join(c, on="__cell")
     if exclude_self:
         cand = cand.filter(F.col("neighbor_id") != F.col("query_id"))
-    if use_kernel:
-        cand = _rerank_cos_arrow(cand)
-    else:
-        cand = cand.withColumn(
-            "cosine", dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn"))
-        )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", F.round("cosine", 6).alias("cosine"))
-    )
+    return _rank(_rerank_cos_arrow(cand), k)

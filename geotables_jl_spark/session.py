@@ -37,6 +37,18 @@ def column_kernel(return_type):
     return decorate
 
 
+def _driver_memory() -> str:
+    """Half of physical memory, at most 48g: the driver heap may grow to
+    its ``-Xmx``, and a heap larger than the host's RAM dies mid-job with
+    "mmap failed" instead of collecting. ``SPARK_GRAFT_DRIVER_MEM``
+    overrides it."""
+    try:
+        half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2 >> 20
+    except (AttributeError, ValueError):  # no sysconf or no such name here
+        return "48g"
+    return f"{min(half_mb, 48 << 10)}m"
+
+
 def get_spark(
     app_name: str = "geotables_jl_spark",
     cpus: int | None = None,
@@ -78,7 +90,7 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "33554432"),
         )
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # off: every F.*/Column call would also capture its Python call

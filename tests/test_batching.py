@@ -1,7 +1,8 @@
-"""Row-preserving Arrow kernels do not depend on Arrow batching: the
-text-core, repetition, S2-cell, WKB round-trip, vendored-CRS vertex
-and Bloom probe kernels give identical rows with ``arrow.maxRecordsPerBatch`` at 1, 7
-and the session default."""
+"""Arrow kernels do not depend on Arrow batching: the text-core,
+repetition, S2-cell, WKB round-trip, vendored-CRS vertex and Bloom
+probe kernels, and the kNN kernel arm on both metrics, give identical
+rows with ``arrow.maxRecordsPerBatch`` at 1, 7 and the session
+default."""
 
 from __future__ import annotations
 
@@ -14,6 +15,7 @@ from geotables_jl_spark.functions.crs import transform_geometry_vertexwise
 from geotables_jl_spark.geom import s2
 from geotables_jl_spark.geom.model import st_polygon_lit
 from geotables_jl_spark.operators.bloom import build_bloom, with_bloom_contains
+from geotables_jl_spark.operators.geojoin import knn_join
 from geotables_jl_spark.sources.geoparquet import geometry_to_wkb, wkb_to_geometry
 
 from tests.test_repetition import ADVERSARIAL as REP_TEXTS
@@ -100,3 +102,29 @@ def test_bloom_probe_batch_invariant(spark, tmp_path):
     sharded = build_bloom(corpus, "url", fpp=0.05, n_shards=4, out_dir=str(tmp_path / "b4"))
     for bf in (mem, sharded):
         _assert_invariant(spark, lambda: with_bloom_contains(arrivals, bf, "url"))
+
+
+def test_knn_kernel_arm_batch_invariant(spark, knn_arms):
+    """A clustered directory with duplicated points (distance ties) and
+    queries partly far from it: a batch of one row brute-forces its
+    escalated row, a whole batch escalates them together, and the rows
+    are the same either way."""
+    rng = np.random.default_rng(8)
+    rlat, rlon = rng.normal(40, 2, 300), rng.normal(10, 2, 300)
+    rlat[:50], rlon[:50] = rlat[50:100], rlon[50:100]
+    right = pd.DataFrame({"row_id": range(300), "lat": rlat, "lon": rlon})
+    left = pd.DataFrame({
+        "row_id": range(1000, 1060),
+        "lat": np.r_[rng.normal(40, 2, 40), rng.uniform(-80, 80, 20)],
+        "lon": np.r_[rng.normal(10, 2, 40), rng.uniform(-170, 170, 20)],
+    })
+    gl = georef(spark.createDataFrame(left).repartition(3), coords=["lat", "lon"])
+    gr = georef(spark.createDataFrame(right), coords=["lat", "lon"])
+    for metric in ("planar", "sphere"):
+        for arm, (one, seven, default) in knn_arms(
+            lambda: _per_batch_size(spark, lambda: knn_join(gl, gr, k=6, metric=metric))
+        ):
+            assert arm == "kernel"
+            assert len(default) == 60 * 6, metric
+            assert one == default and seven == default, metric
+            break  # the rounds arm runs no kNN kernel

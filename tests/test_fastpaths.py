@@ -229,8 +229,9 @@ def test_sample_uniform_deterministic_across_parallelism(spark):
 def test_ann_kernel_paths_bit_identical_to_jvm(spark):
     """The Arrow kernels (corpus sign-hash, IVF assignment, candidate
     rerank) accumulate dim-by-dim — the same addition sequence as the
-    SQL fold — so forcing use_kernel on/off must produce IDENTICAL rows
-    (ids, ranks, and float cosines alike)."""
+    SQL fold — so they return exactly the rows (ids, ranks, and float
+    cosines alike) of the retired JVM ``zip_with``/``aggregate`` corpus
+    arm, recorded below from that arm on this data."""
     from geotables_jl_spark.operators import simsearch as SS
     from pyspark.sql import functions as F
 
@@ -247,10 +248,57 @@ def test_ann_kernel_paths_bit_identical_to_jvm(spark):
     def rows_of(df):
         return sorted((r["query_id"], r["rank"], r["neighbor_id"], r["cosine"]) for r in df.collect())
 
-    lsh_jvm = rows_of(SS.ann_lsh_topk(vecs, queries, k=4, planes=6, probes=2, use_kernel=False))
-    lsh_krn = rows_of(SS.ann_lsh_topk(vecs, queries, k=4, planes=6, probes=2, use_kernel=True))
-    assert lsh_jvm == lsh_krn and len(lsh_jvm) > 0
+    lsh_jvm = [
+        (0, 1, 160, 0.992664), (0, 2, 152, 0.88612), (0, 3, 55, 0.871987), (0, 4, 215, 0.856434),
+        (1, 1, 174, 0.867941), (1, 2, 237, 0.864336), (1, 3, 292, 0.861324), (1, 4, 77, 0.860669),
+        (2, 1, 99, 0.886594), (2, 2, 293, 0.880376), (2, 3, 78, 0.879708), (2, 4, 175, 0.878904),
+        (3, 1, 163, 0.994527), (3, 2, 87, 0.846943), (3, 3, 231, 0.844451), (3, 4, 239, 0.842257),
+        (4, 1, 101, 0.885978), (4, 2, 198, 0.881986), (4, 3, 219, 0.881213), (4, 4, 295, 0.87966),
+        (5, 1, 165, 0.995138), (5, 2, 144, 0.864463), (5, 3, 296, 0.860995), (5, 4, 89, 0.860433),
+    ]
+    ivf_jvm = [
+        (0, 1, 160, 0.992664), (0, 2, 152, 0.88612), (0, 3, 55, 0.871987), (0, 4, 215, 0.856434),
+        (1, 1, 174, 0.867941), (1, 2, 237, 0.864336), (1, 3, 292, 0.861324), (1, 4, 77, 0.860669),
+        (2, 1, 99, 0.886594), (2, 2, 196, 0.882667), (2, 3, 272, 0.881255), (2, 4, 293, 0.880376),
+        (3, 1, 163, 0.994527), (3, 2, 87, 0.846943), (3, 3, 231, 0.844451), (3, 4, 239, 0.842257),
+        (4, 1, 101, 0.885978), (4, 2, 198, 0.881986), (4, 3, 219, 0.881213), (4, 4, 295, 0.87966),
+        (5, 1, 165, 0.995138), (5, 2, 144, 0.864463), (5, 3, 296, 0.860995), (5, 4, 89, 0.860433),
+    ]
+    assert rows_of(SS.ann_lsh_topk(vecs, queries, k=4, planes=6, probes=2)) == lsh_jvm
+    assert rows_of(SS.ann_ivf_topk(vecs, queries, k=4, ncentroids=8, nprobe=3)) == ivf_jvm
 
-    ivf_jvm = rows_of(SS.ann_ivf_topk(vecs, queries, k=4, ncentroids=8, nprobe=3, use_kernel=False))
-    ivf_krn = rows_of(SS.ann_ivf_topk(vecs, queries, k=4, ncentroids=8, nprobe=3, use_kernel=True))
-    assert ivf_jvm == ivf_krn and len(ivf_jvm) > 0
+
+def test_driver_memory_default_fits_the_host():
+    """Unset ``SPARK_GRAFT_DRIVER_MEM`` asks for half of physical memory,
+    at most 48g: a larger heap than the host holds dies mid-job with
+    "mmap failed"."""
+    import os
+
+    from geotables_jl_spark.session import _driver_memory
+
+    mem = _driver_memory()
+    assert mem.endswith("m")
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    assert 0 < int(mem[:-1]) <= min(phys_mb // 2, 48 << 10)
+
+
+def test_ann_null_vectors_take_no_part(spark):
+    """A NULL corpus or query vector has no neighbours and is no one's:
+    both ANN operators return the rows they return without those rows."""
+    from geotables_jl_spark.operators import simsearch as SS
+
+    rows = [(i, [float((i * 7 + j) % 5) - 2 for j in range(4)]) for i in range(1, 31)]
+    clean = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    vecs = spark.createDataFrame(rows + [(0, None), (99, None)], "vec_id long, embedding array<double>")
+
+    def queries(df):
+        return df.filter(F.col("vec_id") < 4).select(
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+        )
+
+    for ann in (
+        lambda c: SS.ann_lsh_topk(c, queries(c), k=3, planes=4),
+        lambda c: SS.ann_ivf_topk(c, queries(c), k=3, ncentroids=4),
+    ):
+        want = sorted(map(tuple, ann(clean).collect()))
+        assert want and sorted(map(tuple, ann(vecs).collect())) == want

@@ -171,7 +171,7 @@ def test_gather_ties_across_ring_cells_break_by_rid():
     for k in (1, 3, 5, 6, 9, 12):
         _check(lx, ly, rid, rx, ry, 1.2, 2, k)
         idx = RightIndex(rid.copy(), rx.copy(), ry.copy(), 1.2)
-        _, bad = K._covered((lx, ly), idx, K.Planar(1.2, 2), k, 262_144)
+        *_, bad = K._covered((lx, ly), idx, K.Planar(1.2, 2), k, 262_144)
         assert len(bad) == 0, k
 
 
@@ -220,9 +220,7 @@ def test_far_from_origin_stays_exact():
 
 def _batched(q, idx, spec, k, size):
     parts = [K.knn_exact(tuple(c[i : i + size] for c in q), idx, spec, k) for i in range(0, len(q[0]), size)]
-    lens = np.concatenate([np.diff(o) for o, _, _ in parts])
-    off = np.concatenate([[0], np.cumsum(lens)])
-    return off, np.concatenate([p for _, p, _ in parts]), np.concatenate([d for _, _, d in parts])
+    return np.concatenate([p for p, _ in parts]), np.concatenate([d for _, d in parts])
 
 
 def _assert_batch_invariant(q, idx, spec, k):
@@ -238,7 +236,7 @@ def _assert_batch_invariant(q, idx, spec, k):
 
 
 def test_knn_exact_batch_invariant_planar():
-    """Batches of 1, 7 and all rows give identical (offsets, pos, dist),
+    """Batches of 1, 7 and all rows give identical (pos, dist),
     including a batch that escalates (clustered directory, scattered
     queries: dozens of rows fail the first certificate)."""
     rng = np.random.default_rng(9)
@@ -247,7 +245,7 @@ def test_knn_exact_batch_invariant_planar():
     ly = np.concatenate([rng.normal(0, 1, 60), rng.uniform(-30, 30, 40)])
     idx = K.PointIndex(rng.permutation(2000).astype(np.int64), (rx, ry))
     spec = K.Planar(0.15, 2)
-    _, bad = K._covered((lx, ly), idx, spec, 8, 262_144)
+    *_, bad = K._covered((lx, ly), idx, spec, 8, 262_144)
     assert len(bad) >= spec.build_rows  # the whole batch escalates
     _assert_batch_invariant((lx, ly), idx, spec, 8)
 
@@ -260,6 +258,43 @@ def test_knn_exact_batch_invariant_sphere():
     w /= np.linalg.norm(w, axis=0)
     idx = K.PointIndex(rng.permutation(1500).astype(np.int64), tuple(v))
     spec = K.Sphere(0.01)
-    _, bad = K._covered(tuple(w), idx, spec, 5, 262_144)
+    *_, bad = K._covered(tuple(w), idx, spec, 5, 262_144)
     assert len(bad) >= spec.build_rows  # the whole batch escalates
     _assert_batch_invariant(tuple(w), idx, spec, 5)
+
+
+# -- one fixed-width result -----------------------------------------------------
+
+
+def test_knn_exact_small_directory_is_n_by_n2():
+    """n2 < k: every row gets all n2 directory points, so the result is
+    (n, n2) for both metrics, each row matching brute force."""
+    rng = np.random.default_rng(13)
+    rx, ry = rng.uniform(0, 10, 4), rng.uniform(0, 10, 4)
+    lx, ly = rng.uniform(-20, 30, 25), rng.uniform(-20, 30, 25)
+    rid = np.array([9, 2, 5, 7], dtype=np.int64)
+    idx = K.PointIndex(rid, (rx, ry))
+    pos, dist = K.knn_exact((lx, ly), idx, K.Planar(0.5, 1), 10)
+    assert pos.shape == dist.shape == (25, 4)
+    ridv = idx.rid.take(pos.reshape(-1)).to_numpy().reshape(pos.shape)
+    ref = _brute_ref(lx, ly, rid, rx, ry, 10)
+    for i in range(25):
+        assert list(zip(ridv[i].tolist(), dist[i].tolist())) == ref[i], i
+    v = rng.standard_normal((3, 3))
+    v /= np.linalg.norm(v, axis=0)
+    w = rng.standard_normal((3, 11))
+    w /= np.linalg.norm(w, axis=0)
+    pos, dist = K.knn_exact(tuple(w), K.PointIndex(np.arange(3), tuple(v)), K.Sphere(0.1), 5)
+    assert pos.shape == dist.shape == (11, 3)
+    assert (np.sort(pos, axis=1) == np.arange(3)).all()
+
+
+def test_knn_exact_empty_directory_is_n_by_0():
+    empty = K.PointIndex(np.empty(0, np.int64), (np.empty(0), np.empty(0)))
+    lx, ly = np.zeros(6), np.arange(6.0)
+    pos, dist = K.knn_exact((lx, ly), empty, K.Planar(1.0, 2), 5)
+    assert pos.shape == dist.shape == (6, 0)
+    assert pos.dtype == np.int64 and dist.dtype == np.float64
+    one = K.PointIndex(np.array([3], np.int64), (np.array([0.5]), np.array([0.5])))
+    pos, dist = K.knn_exact((np.empty(0), np.empty(0)), one, K.Planar(1.0, 2), 5)
+    assert pos.shape == dist.shape == (0, 1)

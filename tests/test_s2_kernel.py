@@ -33,11 +33,11 @@ def _norm(x, y, z):
 
 def _check_kernel(lx, ly, lz, rid, rx, ry, rz, k, chord0):
     idx = PointIndex(rid, (rx, ry, rz))
-    off, pos, d2v = knn_exact((lx, ly, lz), idx, Sphere(chord0), k)
-    ridv = idx.rid.take(pos).to_numpy()
+    pos, d2v = knn_exact((lx, ly, lz), idx, Sphere(chord0), k)
+    ridv = idx.rid.take(pos.reshape(-1)).to_numpy().reshape(pos.shape)
     exp = _brute(lx, ly, lz, rid, rx, ry, rz, k)
     for i in range(len(lx)):
-        got = list(zip(d2v[off[i]:off[i + 1]], ridv[off[i]:off[i + 1]]))
+        got = list(zip(d2v[i], ridv[i]))
         want = exp[i]
         assert len(got) == len(want), f"row {i}: {len(got)} vs {len(want)}"
         for (gd, gr), (wd, wr) in zip(got, want):
