@@ -962,9 +962,10 @@ def q_s2_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     the one-map-stage kernel arm of the one kNN engine
     (``operators/knn.py`` with ``geom/knn_kernel.knn_exact``), so the
     gate replays it bit-for-bit against a window-function SQL oracle:
-    in-kernel certify-or-escalate, tie order (chord2, rid). The rounds
-    arm (a directory over the ``KNN_BROADCAST_ROWS`` budget) keeps brute-force
-    pytest coverage on both metrics (the ``knn_arms`` test fixture).
+    in-kernel certify-or-escalate, tie order (chord2, rid). The tile arm
+    (a directory over the ``KNN_BROADCAST_ROWS`` budget: the same kernel
+    per cogrouped S2 tile) keeps brute-force pytest coverage on both
+    metrics (the ``knn_arms`` test fixture).
     ``n_right`` comes from the parquet footer count (metadata-only job)
     — the stats-injection escape hatch, not a table scan."""
     from geotables_jl_spark.operators.geojoin_s2 import s2_knn_join

@@ -217,45 +217,3 @@ def segments_cross(ring_a: np.ndarray, ring_b: np.ndarray) -> bool:
         | on_segment(B1x, B1y, B2x, B2y, A2x, A2y, d4)
     )
     return bool(t.any())
-
-
-def polygon_intersects_polygon(ring_a: np.ndarray, ring_b: np.ndarray) -> bool:
-    """Simple-polygon intersection test: vertex containment either way, or
-    edge crossing. Correct for simple (non-self-intersecting) polygons."""
-    if points_in_ring(ring_b[0::2], ring_b[1::2], ring_a).any():
-        return True
-    if points_in_ring(ring_a[0::2], ring_a[1::2], ring_b).any():
-        return True
-    return segments_cross(ring_a, ring_b)
-
-
-def polygon_within_polygon(ring_a: np.ndarray, ring_b: np.ndarray) -> bool:
-    """ring_a ⊆ ring_b for simple polygons: all vertices of A inside B and
-    no proper edge crossings taking A outside B.
-
-    For convex-cell-in-simple-polygon (the grid⊆poly case of
-    ``test/operations.jl:51-58``) all-vertices-inside + no proper crossing
-    is exact."""
-    if not points_in_ring(ring_a[0::2], ring_a[1::2], ring_b).all():
-        return False
-    # a proper edge crossing means part of A is outside B
-    ax1, ay1 = ring_a[0::2], ring_a[1::2]
-    ax2, ay2 = np.roll(ax1, -1), np.roll(ay1, -1)
-    bx1, by1 = ring_b[0::2], ring_b[1::2]
-    bx2, by2 = np.roll(bx1, -1), np.roll(by1, -1)
-    A1x, A1y = ax1[:, None], ay1[:, None]
-    A2x, A2y = ax2[:, None], ay2[:, None]
-    B1x, B1y = bx1[None, :], by1[None, :]
-    B2x, B2y = bx2[None, :], by2[None, :]
-    d1 = (A2x - A1x) * (B1y - A1y) - (A2y - A1y) * (B1x - A1x)
-    d2 = (A2x - A1x) * (B2y - A1y) - (A2y - A1y) * (B2x - A1x)
-    d3 = (B2x - B1x) * (A1y - B1y) - (B2y - B1y) * (A1x - B1x)
-    d4 = (B2x - B1x) * (A2y - B1y) - (B2y - B1y) * (A2x - B1x)
-    proper = ((d1 > EPS) & (d2 < -EPS) | (d1 < -EPS) & (d2 > EPS)) & (
-        (d3 > EPS) & (d4 < -EPS) | (d3 < -EPS) & (d4 > EPS)
-    )
-    return not bool(proper.any())
-
-
-def point_distance(lx: np.ndarray, ly: np.ndarray, rx: np.ndarray, ry: np.ndarray) -> np.ndarray:
-    return np.hypot(lx - rx, ly - ry)

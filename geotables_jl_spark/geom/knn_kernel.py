@@ -1,5 +1,7 @@
 """One exact kNN kernel for the plane and the sphere (Arrow batches +
-numpy): the worker side of both arms in ``operators/knn.py``.
+numpy): the worker side of both arms in ``operators/knn.py`` — the
+kernel arm runs it per Arrow batch against a broadcast directory, the
+tile arm per cogrouped tile against the tile's halo.
 
 A *metric spec* (``Planar``, ``Sphere``) holds everything that differs
 between the two searches: the coordinates, the (position, key) entries a
@@ -42,9 +44,9 @@ orders like its rid. A gathered row concatenates several key ranges, so
 its columns are in key order, not rid order: the top-k breaks distance
 ties on the gathered position *values* (the brute-force tail's columns
 are the positions themselves), which is the (dist, rid) order of the
-rounds arm and the DuckDB oracles. ``Metric.dist`` is the same IEEE ops
-in the same order as its JVM form, so every engine agrees bit for bit,
-whatever the batching.
+DuckDB oracles. ``Metric.dist`` is the same IEEE ops in the same order
+as its JVM form, so every engine agrees bit for bit, whatever the
+batching.
 """
 
 from __future__ import annotations
@@ -83,17 +85,18 @@ class Metric:
     much as brute-forcing this many query rows against it), and the
     methods below. ``index`` and ``probe`` are the kernel's two sides:
     the (position, key) entries a directory stores and the key ranges a
-    query row gathers. ``cells`` and ``entries`` are the rounds arm's."""
+    query row gathers; ``cells`` is a point's own cell, which the tile
+    arm of ``operators/knn.py`` keys its query rows by."""
 
-    def dist(self, q, p, sqrt=np.sqrt):
+    def dist(self, q, p):
         """Distance between query coordinates ``q`` and point coordinates
-        ``p``: numpy arrays, or Spark Columns with ``sqrt=F.sqrt``. The
-        ops and their order are the same on both engines."""
+        ``p``: numpy arrays, or, for the rootless sphere, Spark Columns.
+        The ops and their order are the same on both engines."""
         s = None
         for a, b in zip(q, p):
             d = a - b
             s = d * d if s is None else s + d * d
-        return sqrt(s) if self.root else s
+        return np.sqrt(s) if self.root else s
 
 
 class Planar(Metric):
@@ -101,8 +104,7 @@ class Planar(Metric):
     within ``radius·cell`` of a query lies in the (2r+1)² cell ring around
     the query's cell. The kernel stores each directory point once, under
     its own cell, and a query gathers its ring as 2r+1 column runs of an
-    order-preserving key; the rounds arm explodes one side to the ring
-    (``entries``) instead. Escalation triples the cell at the same
+    order-preserving key. Escalation triples the cell at the same
     radius: the guarantee triples and the ring stays (2r+1)² cells.
     ``extent`` (the larger bounding-box side of both inputs) decides when
     a ring covers everything; the kernel, which never needs that, leaves
@@ -131,16 +133,6 @@ class Planar(Metric):
         return pack_cells_np(
             np.floor(x / self.cell).astype(np.int64), np.floor(y / self.cell).astype(np.int64)
         )
-
-    def entries(self, x, y):
-        """(point, cell) over each point's (2r+1)² block, point-major."""
-        r, w = self.radius, 2 * self.radius + 1
-        offs = np.arange(-r, r + 1, dtype=np.int64)
-        cx = np.floor(x / self.cell).astype(np.int64)[:, None] + offs
-        cy = np.floor(y / self.cell).astype(np.int64)[:, None] + offs
-        tx = np.repeat(cx.reshape(-1), w)
-        ty = np.tile(cy, (1, w)).reshape(-1)
-        return np.repeat(np.arange(len(x), dtype=np.int64), w * w), pack_cells_np(tx, ty)
 
     def _ints(self, v):
         # clipped as floats: astype has no defined result out of range
@@ -212,12 +204,9 @@ class Sphere(Metric):
     def cells(self, x, y, z):
         return s2.s2_cell_from_xyz_np(x, y, z, self.level)
 
-    def entries(self, x, y, z):
-        return s2.s2_cap_cells_np(x, y, z, self.chord, self.level)
-
     def index(self, x, y, z):
         """The cap cover's (positions, cells), no frame."""
-        return (*self.entries(x, y, z), None)
+        return (*s2.s2_cap_cells_np(x, y, z, self.chord, self.level), None)
 
     def probe(self, frame, x, y, z):
         """One range per row: its own cell."""

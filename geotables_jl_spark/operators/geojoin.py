@@ -546,9 +546,13 @@ def knn_pairs(
     the ``on`` equalities. Points with a NULL, NaN or infinite coordinate
     take no part. The ``Planar`` spec is sized from density stats so the
     first pass certifies ~99.9% of rows (see ``operators/knn.nearest``
-    for the two arms); the right payload ``extra`` joins back by rid."""
+    for the two arms); the right payload ``extra`` joins back by rid.
+    ``k`` must be ≥ 1."""
     from geotables_jl_spark.geom.knn_kernel import Planar
     from geotables_jl_spark.operators import knn
+
+    if k < 1:
+        raise ValueError(f"k must be at least 1, got {k}")
 
     on = list(on or [])
     extra = list(extra or [])
@@ -585,7 +589,7 @@ def knn_pairs(
     out = knn.nearest(
         df1.select(F.col(ROW_ID), *side), df2.select(F.col(ROW_ID), *side), spec, k,
         n_right=s2["n"], n_keys=len(on), max_rounds=max_rounds,
-        # the rounds arm ends on the exact count of finite left rows, which
+        # the tile arm ends on the exact count of finite left rows, which
         # only the data pass has: injected and footer counts may include
         # the non-finite rows dropped above
         n_left=s1["n"] if left_counted else None,
@@ -594,7 +598,7 @@ def knn_pairs(
         # the payload joins back ONCE, by rid, after all rounds: it stays
         # out of every sort and shuffle, and unorderable types are fine
         payload = df2.select(F.col(ROW_ID).alias(_RID), *extra)
-        if s2["n"] < knn.KNN_BROADCAST_ROWS:  # rows, as the rounds arm's broadcast
+        if s2["n"] < knn.KNN_BROADCAST_ROWS:  # a JVM broadcast holds rows, not an index
             payload = F.broadcast(payload)
         out = out.join(payload, _RID, "left")
     return out.select(_LID, _RID, "__dist", "__rank", *extra)

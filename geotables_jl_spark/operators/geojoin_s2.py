@@ -6,7 +6,7 @@ cell-indexed broadcast-or-shuffle join:
 1. **filter** — candidate pairs by S2 cell equality: ONE side carries
    its single level-k cell, the OTHER explodes to the rigorous cap cover
    of the search radius (``geom/s2.s2_cap_cells_np``; both one Arrow map,
-   ``operators/knn.cells``). If ``dist(l, r) <= chord`` then each point
+   ``operators/knn.tiled``). If ``dist(l, r) <= chord`` then each point
    lies in the other's cap, so covering EITHER side's caps while the
    other keeps its single cell finds every qualifying pair — and the
    single-cell side meets each cover at most once, so no dedup either
@@ -21,8 +21,9 @@ cell-indexed broadcast-or-shuffle join:
    (no Python).
 
 kNN is the ``Sphere`` spec of the one kNN engine (``operators/knn.py``):
-the same cells, certified cell-ring expansion with 3× chord escalation,
-and the planar kNN's two arms and threshold.
+the numpy kernel ``knn_exact`` over the same cap covers, certified with
+3× chord escalation, on the planar kNN's two arms and threshold — one
+map against a broadcast directory, or cogrouped S2 tiles.
 """
 
 from __future__ import annotations
@@ -34,7 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from geotables_jl_spark.geom.knn_kernel import Sphere
-from geotables_jl_spark.operators.knn import cells, nearest, points
+from geotables_jl_spark.operators.knn import nearest, points, tiled
 
 __all__ = ["s2_point_prep", "s2_dwithin_join", "s2_knn_join"]
 
@@ -101,8 +102,9 @@ def s2_dwithin_join(
     cover at most once)."""
     spec = Sphere(chord, level)
     xyz = ("nx", "ny", "nz")
-    l = cells(points(left.select("lid", *xyz), "l", spec, 0), spec, "l", not broadcast_right)
-    r = cells(points(right.select("rid", *xyz), "r", spec, 0), spec, "r", bool(broadcast_right))
+    cell, cover = (lambda *q: (None, spec.cells(*q))), (lambda *q: spec.index(*q)[:2])
+    l = tiled(points(left.select("lid", *xyz), "l", spec, 0), "l", spec, cell if broadcast_right else cover, "__lcell")
+    r = tiled(points(right.select("rid", *xyz), "r", spec, 0), "r", spec, cover if broadcast_right else cell, "__rcell")
     cond = F.col("__lcell") == F.col("__rcell")
     if salt > 1:
         # replicate the (smaller) right side across salt ids; split the
@@ -128,10 +130,9 @@ def s2_knn_join(
     n_left: int | None = None,
 ) -> DataFrame:
     """Exact k nearest right points per left point by chord distance,
-    ties broken by ascending rid — via S2 cell-ring expansion: cover the
-    current radius, certify rows whose k-th candidate is inside the
-    covered radius, escalate the rest 3×. Returns (lid, rid, chord2,
-    rank), rank 1..k.
+    ties broken by ascending rid — via S2 cap covers: certify rows whose
+    k-th neighbour is inside the covered chord, escalate the rest 3×.
+    Returns (lid, rid, chord2, rank), rank 1..k; ``k`` must be ≥ 1.
 
     ``n_right`` picks the arm and sizes the initial radius
     (uniform-density estimate ``theta0 ~ 2*sqrt(k/n)``); pass it to avoid
@@ -139,10 +140,13 @@ def s2_knn_join(
     contract as the planar kNN's planning aggregates). The ``Sphere``
     spec runs on the one kNN engine (``operators/knn.nearest``): below
     ``KNN_BROADCAST_ROWS`` directory rows the kernel arm (one map stage),
-    else the certify-or-escalate DataFrame rounds. Both rank by exact
-    chord² with (chord2, rid) ties, so they return identical rows, for
-    any orderable lid/rid type. ``max_rounds`` and ``n_left`` (the one
-    up-front left count) only apply to the rounds arm."""
+    else the tile arm (certify-or-escalate rounds, one cogrouped pass of
+    S2 tiles each). Both run ``knn_exact`` with (chord2, rid) ties, so
+    they return identical rows, for any orderable lid/rid type.
+    ``max_rounds`` and ``n_left`` (the one up-front left count) only
+    apply to the tile arm."""
+    if k < 1:
+        raise ValueError(f"k must be at least 1, got {k}")
     if n_right is None:
         n_right = right.count()
     if chord0 is None:

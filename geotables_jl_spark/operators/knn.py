@@ -1,50 +1,51 @@
 """One kNN engine for the plane and the sphere: exact k nearest
 directory points of every query point, ties by ascending rid, under a
 metric spec from ``geom/knn_kernel.py`` (``Planar`` or ``Sphere``).
-The directory's row count picks one of two arms:
+Every search runs the numpy kernel ``knn_exact``; the directory's size
+and the ``on=`` keys pick how the directory reaches it:
 
 - **kernel arm** (a directory whose worker index fits the
   ``KNN_BROADCAST_ROWS`` budget, no ``on=`` keys): ONE narrow map
   stage. The directory rides to workers once as a rid-sorted numpy
-  broadcast; each Arrow batch ships (lid, coordinates) in and (lid,
-  rids, dists) out, and ``knn_exact`` runs the whole cell-ring
-  expansion in-batch (covered pass, certification, one 3× escalation,
-  brute force for the rows still uncertified). Every row gets exactly
-  min(k, n_right) neighbours, so a batch's result is two fixed-width
-  (rows, min(k, n_right)) matrices and its list offsets a plain stride.
-  The JVM fans the lists out with a codegen posexplode. No shuffle and
-  no driver rounds, so the job scales with executors like a scan.
-- **rounds arm** (larger directory, or ``on=`` keys): certify-or-escalate
-  DataFrame rounds. A round explodes the smaller of the directory and
-  the remaining query rows to the spec's index cells (one Arrow map),
-  equi-joins the other side's single cell plus the ``on=`` keys
-  (null-safe, the reference's ``isequal``), and ranks by (dist, rid) in
-  one lid window; a row is certified when its k-th candidate is within
-  the spec's bound. Both covers hold every point within the bound, so
-  either orientation certifies the same rows. A directory under
-  ``KNN_BROADCAST_ROWS`` rows is broadcast. The rest escalate: the
-  search radius triples at a 3× coarser resolution, so each cover stays
-  ~(2r+1)² cells. The last round covers everything, so it is exact.
+  broadcast, and ``knn_exact`` runs per Arrow batch of query rows
+  (covered pass, certification, one 3× escalation, brute force for the
+  rest). No shuffle and no driver rounds: it scales like a scan.
+- **tile arm** (larger directory, or ``on=`` keys): certify-or-escalate
+  rounds, each ONE cogrouped pass. A query row keys to its own tile (a
+  square of side ≥ 2·bound, or an S2 cell no finer than the spec's); a
+  directory point is copied, rid and all, into every tile within the
+  bound of it (≤ 2×2 squares, or its cap cover at the tile level). Per
+  (tile, *keys) group, NULL keys together as in the reference's
+  ``isequal``, ``knn_exact`` runs over the tile's query rows against
+  the tile's directory. A row is certified when its k-th distance is
+  within the bound (every point that close is in its tile's halo) or
+  when one group holds its key's whole directory; the rest escalate at
+  3× the bound, and the last round is one tile, so it is exact. The
+  tile count comes from the directory's worker bytes against the kernel
+  arm's budget, and is at least the session's shuffle partitions.
 
-Both arms first drop query and directory rows with a NULL, NaN or
-infinite coordinate: such a point has no neighbours and is no one's.
-A side known to be empty returns no rows without a kernel or rounds job.
-``n_right`` may be a footer estimate that counts non-finite rows, so a
-directory found empty by the kernel arm's collect, or by the rounds
-arm after a first round that certified nothing, also returns no rows
-without further jobs.
+Both arms emit (lid, rids, dists) list rows through one function, and
+the JVM fans them out with one codegen posexplode. Both first drop
+query and directory rows with a NULL, NaN or infinite coordinate: such
+a point has no neighbours and is no one's. A side known to be empty
+returns no rows without a job; ``n_right`` may be a footer estimate
+that counts non-finite rows, so a directory found empty by the kernel
+arm's collect, or by the tile arm after a first round that certified
+nothing, also returns no rows without further jobs.
 """
 
 from __future__ import annotations
 
+import math
 from functools import reduce
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, Window
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from geotables_jl_spark.geom.knn_kernel import Metric, Sphere
+from geotables_jl_spark.geom.knn_kernel import Metric, Planar, PointIndex, Sphere, knn_exact
 
 #: the kernel arm's budget, in sphere directory rows: a directory takes
 #: the kernel arm while ``n_right · spec.point_bytes`` stays under
@@ -59,7 +60,8 @@ from geotables_jl_spark.geom.knn_kernel import Metric, Sphere
 #: 0.83 GB in each of the 4 workers. Linear in the directory.
 #: The driver is not the binding limit at 10M planar rows: its
 #: ``toArrow`` collect and broadcast peaked at 2.33 GB JVM RSS (1.9 GB
-#: heap) and 0.91 GB Python RSS in that run.
+#: heap) and 0.91 GB Python RSS in that run. The tile arm sizes its
+#: tiles to the same budget.
 KNN_BROADCAST_ROWS = 250_000
 
 
@@ -101,12 +103,12 @@ def nearest(
     orderable id type works. ``n_right`` (the directory's row count)
     picks the arm; ``max_rounds`` and ``n_left`` (the query row count
     after the non-finite drop, when known: it saves a count job) only
-    apply to the rounds arm."""
+    apply to the tile arm."""
     lt, rt = points(left, "l", spec, n_keys), points(right, "r", spec, n_keys)
     if n_right == 0 or n_left == 0:
         return empty(lt, rt)
     if n_keys or not small(n_right, spec):
-        return _rounds_arm(lt, rt, spec, k, n_keys, max_rounds, n_left, n_right)
+        return _tile_arm(lt, rt, spec, k, n_keys, max_rounds, n_left, n_right)
     return _kernel_arm(lt, rt, spec, k)
 
 
@@ -125,125 +127,167 @@ def empty(left: DataFrame, right: DataFrame, extra: list[str] = ()) -> DataFrame
     return left.sparkSession.createDataFrame([], schema)
 
 
-def _kernel_arm(left: DataFrame, right: DataFrame, spec: Metric, k: int) -> DataFrame:
-    """ONE map stage against a broadcast directory (see module docstring)."""
-    import pyarrow as pa
+def _index(tbl: pa.Table, spec: Metric) -> PointIndex:
+    """The directory rows of ``tbl`` (__rid, __rx, …) as a ``PointIndex``."""
+    xs = [tbl.column(f"__r{c}").to_numpy(zero_copy_only=False) for c in spec.cols]
+    return PointIndex(tbl.column("__rid").combine_chunks(), xs)
 
-    from geotables_jl_spark.geom.knn_kernel import PointIndex, knn_exact
 
-    xs = [f"__r{c}" for c in spec.cols]
-    tbl = right.select("__rid", *xs).toArrow()
-    if tbl.num_rows == 0:
-        # n_right may be a footer estimate that counted non-finite rows
-        return empty(left, right)
-    index = PointIndex(tbl.column("__rid").combine_chunks(), [tbl.column(c).to_numpy() for c in xs])
-    bc = left.sparkSession.sparkContext.broadcast(index)
-    schema = T.StructType(
-        [
-            left.schema["__lid"],
-            T.StructField("__rids", T.ArrayType(right.schema["__rid"].dataType)),
-            T.StructField("__dists", T.ArrayType(T.DoubleType())),
-        ]
-    )
+def _emit(tbl, index: PointIndex, spec: Metric, k: int) -> pa.Table:
+    """(__lid, __rids, __dists) of the query rows of ``tbl`` (__lid,
+    __lx, …): each row's neighbours in ``index`` by (dist, rid)."""
+    q = tuple(tbl.column(f"__l{c}").to_numpy(zero_copy_only=False) for c in spec.cols)
+    pos, dist = knn_exact(q, index, spec, k)
+    off = pa.array(np.arange(len(pos) + 1, dtype=np.int32) * pos.shape[1])
+    rids = pa.ListArray.from_arrays(off, index.rid.take(pa.array(pos.reshape(-1))))
+    dists = pa.ListArray.from_arrays(off, pa.array(dist.reshape(-1)))
+    return pa.Table.from_arrays([tbl.column("__lid"), rids, dists], names=["__lid", "__rids", "__dists"])
 
-    def _iter(batches):
-        idx = bc.value
-        for rb in batches:
-            q = tuple(rb.column(i).to_numpy(zero_copy_only=False) for i in range(1, rb.num_columns))
-            pos, dist = knn_exact(q, idx, spec, k)
-            off = pa.array(np.arange(rb.num_rows + 1, dtype=np.int32) * pos.shape[1])
-            yield pa.RecordBatch.from_arrays(
-                [
-                    rb.column(0),
-                    pa.ListArray.from_arrays(off, idx.rid.take(pa.array(pos.reshape(-1)))),
-                    pa.ListArray.from_arrays(off, pa.array(dist.reshape(-1))),
-                ],
-                names=["__lid", "__rids", "__dists"],
-            )
 
-    lists = left.select("__lid", *(f"__l{c}" for c in spec.cols)).mapInArrow(_iter, schema)
+def _schema(left: DataFrame, right: DataFrame) -> T.StructType:
+    """The schema of ``_emit``'s tables."""
+    rids = T.StructField("__rids", T.ArrayType(right.schema["__rid"].dataType))
+    return T.StructType([left.schema["__lid"], rids, T.StructField("__dists", T.ArrayType(T.DoubleType()))])
+
+
+def _explode(lists: DataFrame) -> DataFrame:
+    """``_emit`` rows → (__lid, __rid, __dist, __rank): a codegen posexplode."""
     z = F.col("__z")
     return lists.select("__lid", F.posexplode(F.arrays_zip("__rids", "__dists")).alias("__pos", "__z")).select(
         "__lid", z["__rids"].alias("__rid"), z["__dists"].alias("__dist"), (F.col("__pos") + 1).alias("__rank")
     )
 
 
-def cells(df: DataFrame, spec: Metric, tag: str, explode: bool) -> DataFrame:
-    """One Arrow map adding ``__{tag}cell`` to a ``points`` side: each
-    row's query cell, or with ``explode`` one row per index entry — the
-    spec functions the kernel's probe and index build run."""
-    import pyarrow as pa
+def _kernel_arm(left: DataFrame, right: DataFrame, spec: Metric, k: int) -> DataFrame:
+    """ONE map stage against a broadcast directory (see module docstring)."""
+    tbl = right.select("__rid", *(f"__r{c}" for c in spec.cols)).toArrow()
+    if tbl.num_rows == 0:
+        # n_right may be a footer estimate that counted non-finite rows
+        return empty(left, right)
+    bc = left.sparkSession.sparkContext.broadcast(_index(tbl, spec))
 
+    def _iter(batches):
+        idx = bc.value
+        for rb in batches:
+            yield from _emit(rb, idx, spec, k).to_batches()
+
+    return _explode(left.select("__lid", *(f"__l{c}" for c in spec.cols)).mapInArrow(_iter, _schema(left, right)))
+
+
+def tiled(df: DataFrame, tag: str, spec: Metric, fn, name: str = "__tile") -> DataFrame:
+    """``df`` (a ``points`` side) plus a long ``name`` key from one Arrow
+    map running ``fn`` over its coordinates: ``fn`` gives (None, a key
+    per row), or (rows, keys) to copy row ``rows[i]`` under ``keys[i]``.
+    ``fn`` None keys every row 0."""
+    if fn is None:
+        return df.withColumn(name, F.lit(0).cast("long"))
     xs = [f"__{tag}{c}" for c in spec.cols]
-    out = f"__{tag}cell"
-    schema = T.StructType(df.schema.fields + [T.StructField(out, T.LongType())])
+    schema = T.StructType(df.schema.fields + [T.StructField(name, T.LongType())])
 
     def _iter(batches):
         for rb in batches:
-            q = [rb.column(c).to_numpy(zero_copy_only=False) for c in xs]
-            if explode:
-                rows, cell = spec.entries(*q)
+            rows, key = fn(*(rb.column(c).to_numpy(zero_copy_only=False) for c in xs))
+            if rows is not None:
                 rb = rb.take(pa.array(rows))
-            else:
-                cell = spec.cells(*q)
-            yield rb.append_column(out, pa.array(cell, pa.int64()))
+            yield rb.append_column(name, pa.array(key, pa.int64()))
 
     return df.mapInArrow(_iter, schema)
 
 
-def _round(
-    remaining: DataFrame, right: DataFrame, spec: Metric, k: int, n_keys: int, explode_right: bool, broadcast: bool
-) -> DataFrame:
-    """One rounds-arm pass: per lid, the top-k candidates by (dist, rid)
-    among the spec's index cells, with the ``explode_right`` side
-    exploded. Candidates beyond the bound can never certify a row, so
-    they are dropped before the window (the cover oversamples the search
-    radius several times) — except in a round that covers everything,
-    which certifies by construction."""
-    cond = F.col("__lcell") == F.col("__rcell")
+def _tiling(spec: Metric, tiles: int):
+    """This round's (key, halo) functions for ``tiled``: ``key`` keys a
+    query row to its own tile, ``halo`` copies a directory point into
+    every tile within ``spec.bound`` of it. About ``tiles`` tiles over
+    the data, never finer than the spec's own cells. None when one tile
+    holds the whole directory: the spec covers everything, or one tile
+    was asked for."""
+    if spec.covers_all or tiles == 1:
+        return None
+    if isinstance(spec, Sphere):
+        # 6·4^level cells; the cap cover is rigorous at any level
+        grid = Sphere(spec.chord, min(spec.level, int(math.log(max(tiles / 6.0, 1.0), 4))))
+        return (lambda *q: (None, grid.cells(*q))), (lambda *q: grid.index(*q)[:2])
+    # the bound plus a margin for rounding stays under half a tile, so a
+    # point's halo is the tiles of its square's corners: at most 2×2
+    side = max(2.0 * spec.bound / (1.0 - 4e-6), spec.extent / math.sqrt(tiles))
+    grid, b = Planar(side), spec.bound + 1e-6 * side
+
+    def halo(x, y):
+        keys = np.sort(np.stack([grid.cells(x + dx, y + dy) for dx in (-b, b) for dy in (-b, b)], 1), 1)
+        rows, col = np.nonzero(np.c_[np.ones(len(x), bool), keys[:, 1:] != keys[:, :-1]])
+        return rows, keys[rows, col]
+
+    return (lambda x, y: (None, grid.cells(x, y))), halo
+
+
+def _tile_pass(remaining: DataFrame, right: DataFrame, spec: Metric, k: int, n_keys: int, tiling) -> DataFrame:
+    """One tile-arm round: the ``_emit`` rows of every remaining query
+    row, from ``knn_exact`` per (tile, *keys) group against the
+    directory points of the tile's halo."""
+    key, halo = tiling or (None, None)
+
+    def _run(lq, rd):
+        # cogroup also calls the groups that hold only directory rows
+        return _emit(lq, _index(rd if lq.num_rows else rd.slice(0, 0), spec), spec, k)
+
+    def keyed(df, tag, fn):
+        return tiled(df, tag, spec, fn).groupBy("__tile", *(f"__{tag}k{i}" for i in range(n_keys)))
+
+    groups = keyed(remaining, "l", key).cogroup(keyed(right, "r", halo))
+    return groups.applyInArrow(_run, _schema(remaining, right))
+
+
+def _group_keys(left: DataFrame, right: DataFrame, n_keys: int):
+    """Both sides with each ``on=`` key pair as the cogroup must see it
+    to group like the null-safe equality: in one common type (a cogroup
+    hashes each side's own type, so an int 1 and a long 1 land apart),
+    floats with -0.0 as 0.0 (they hash apart but sort as one)."""
     for i in range(n_keys):
-        cond = cond & F.col(f"__lk{i}").eqNullSafe(F.col(f"__rk{i}"))
-    dist = spec.dist([F.col(f"__l{c}") for c in spec.cols], [F.col(f"__r{c}") for c in spec.cols], F.sqrt)
-    r = cells(right, spec, "r", explode=explode_right)
-    l = cells(remaining, spec, "l", explode=not explode_right)
-    cand = l.join(F.broadcast(r) if broadcast else r, cond).select("__lid", "__rid", dist.alias("__dist"))
-    if not spec.covers_all:
-        cand = cand.where(F.col("__dist") <= F.lit(spec.bound))
-    w = Window.partitionBy("__lid").orderBy(F.col("__dist").asc(), F.col("__rid").asc())
-    return cand.withColumn("__rank", F.row_number().over(w)).where(F.col("__rank") <= k)
+        lk, rk = f"__lk{i}", f"__rk{i}"
+        nulls = [F.lit(None).cast(df.schema[c].dataType) for df, c in ((left, lk), (right, rk))]
+        t = left.sparkSession.range(0).select(F.coalesce(*nulls)).schema[0].dataType
+
+        def norm(c):
+            c = F.col(c).cast(t)
+            return F.when(c == 0, F.lit(0).cast(t)).otherwise(c) if isinstance(t, (T.FloatType, T.DoubleType)) else c
+
+        left, right = left.withColumn(lk, norm(lk)), right.withColumn(rk, norm(rk))
+    return left, right
 
 
-def _rounds_arm(left, right, spec, k, n_keys, max_rounds, n_left, n_right) -> DataFrame:
-    """Certify-or-escalate rounds (see module docstring)."""
+def _tile_arm(left, right, spec, k, n_keys, max_rounds, n_left, n_right) -> DataFrame:
+    """Certify-or-escalate tile rounds (see module docstring)."""
+    left, right = _group_keys(left, right, n_keys)
+    # enough tiles for each tile's index to fit a worker's kernel budget,
+    # and at least one per shuffle partition
+    budget = max(KNN_BROADCAST_ROWS * Sphere.point_bytes, 1)
+    parts = int(left.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    tiles = max(-(-n_right * spec.point_bytes // budget), parts)
     results = []
-    # a JVM broadcast holds rows, not a worker's index: the row budget,
-    # whatever the spec's index bytes
-    broadcast = n_right < KNN_BROADCAST_ROWS
     remaining = left
     n_remaining = left.count() if n_left is None else n_left
-    for _ in range(max_rounds):
-        topk = _round(remaining, right, spec, k, n_keys, n_right <= n_remaining, broadcast)
-        if spec.covers_all:
-            results.append(topk)
+    for i in range(max_rounds + 1):
+        spec = spec.full() if i == max_rounds else spec
+        tiling = _tiling(spec, tiles)
+        lists = _tile_pass(remaining, right, spec, k, n_keys, tiling)
+        if tiling is None:
+            # one group per key holds its whole directory: exact
+            results.append(lists)
             break
-        # one expensive pass per round: materialize its top-k so the
+        # one expensive pass per round: materialize its lists so the
         # certified set and the remainder below are cheap scans of it
-        topk = topk.localCheckpoint(eager=True)
-        # candidates are within the bound, so a k-th one certifies its lid
-        cert = topk.where(F.col("__rank") == k).select("__lid")
-        n_cert = cert.count()
+        lists = lists.localCheckpoint(eager=True)
+        # every point within the bound of a row is in its tile's halo
+        ok = F.coalesce(F.get("__dists", k - 1) <= F.lit(spec.bound), F.lit(False))
+        n_cert = lists.where(ok).count()
         if n_cert == n_remaining:
-            results.append(topk)
+            results.append(lists)
             break
         if not n_cert and not results and right.isEmpty():
             # n_right may be a footer estimate that counted non-finite rows
             return empty(left, right)
-        # cert scales with the query side, so it is never force-broadcast:
-        # topk is lid-partitioned by the window, and AQE broadcasts a small cert
-        results.append(topk.join(cert, "__lid"))
-        remaining = remaining.join(cert, "__lid", "left_anti").localCheckpoint(eager=False)
+        results.append(lists.where(ok))
+        remaining = remaining.join(lists.where(~ok).select("__lid"), "__lid", "left_semi").localCheckpoint(eager=False)
         n_remaining -= n_cert
         spec = spec.escalate()
-    else:
-        results.append(_round(remaining, right, spec.full(), k, n_keys, n_right <= n_remaining, broadcast))
-    return reduce(DataFrame.unionByName, results)
+    return _explode(reduce(DataFrame.unionByName, results))

@@ -131,14 +131,6 @@ def coerce(gtb: GeoTable, col: str, dtype: str) -> GeoTable:
     return gtb._with(gtb.df.withColumn(col, F.col(col).cast(dtype)))
 
 
-def levels_check(gtb: GeoTable, col: str, levels: list) -> GeoTable:
-    """Deprecated filter approximation — kept for callers that want the
-    subset behavior explicitly. The reference-faithful transform is
-    :func:`set_levels`."""
-    ok = F.col(col).isin(levels) | F.col(col).isNull()
-    return gtb._with(gtb.df.filter(ok))
-
-
 def set_levels(gtb: GeoTable, col: str, levels: list, validate: bool = True) -> GeoTable:
     """Levels transform (TableTransforms ``Levels(:col => [...])``):
     revise the categorical level set/order of a column. Spark has no

@@ -127,4 +127,4 @@ def test_knn_kernel_arm_batch_invariant(spark, knn_arms):
             assert arm == "kernel"
             assert len(default) == 60 * 6, metric
             assert one == default and seven == default, metric
-            break  # the rounds arm runs no kNN kernel
+            break  # the tile arm runs no kNN kernel

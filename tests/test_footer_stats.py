@@ -216,7 +216,7 @@ def test_knn_directory_without_a_finite_row(spark, tmp_path, monkeypatch):
     the pyarrow footers look populated, but no point is finite. On both
     arms the engine finds the directory empty and returns the typed empty
     frame, as the forced data pass does from its count; an all-NaN query
-    side gives no rows either. The rounds arm never gets a footer count
+    side gives no rows either. The tile arm never gets a footer count
     as its exact left count."""
     from geotables_jl_spark.operators import knn
 
@@ -226,15 +226,15 @@ def test_knn_directory_without_a_finite_row(spark, tmp_path, monkeypatch):
     assert cells.footer_envelope_stats(q)["n"] == 3
     gq, gd = GeoTable(df=q, crs="Cartesian"), GeoTable(df=d, crs="Cartesian")
     empties, lefts = [], []
-    real_empty, real_rounds = knn.empty, knn._rounds_arm
+    real_empty, real_rounds = knn.empty, knn._tile_arm
 
     def rounds_spy(*a):
         lefts.append(a[-2])  # n_left
         return real_rounds(*a)
 
     monkeypatch.setattr(knn, "empty", lambda *a: empties.append(1) or real_empty(*a))
-    monkeypatch.setattr(knn, "_rounds_arm", rounds_spy)
-    for threshold in (knn.KNN_BROADCAST_ROWS, 0):  # kernel arm, then rounds arm
+    monkeypatch.setattr(knn, "_tile_arm", rounds_spy)
+    for threshold in (knn.KNN_BROADCAST_ROWS, 0):  # kernel arm, then tile arm
         monkeypatch.setattr(knn, "KNN_BROADCAST_ROWS", threshold)
         empties.clear()
         assert knn_join(gq, gd, k=2).count() == 0

@@ -3,7 +3,7 @@
 brute force exactly — including tie order, salting, and the cell-ring
 escalation path (sparse right side forces multiple rounds). Every
 brute-force kNN check runs on both kNN arms: the small fixtures pick the
-kernel arm, and a zero threshold forces the rounds arm."""
+kernel arm, and a zero threshold forces the tile arm."""
 
 import numpy as np
 import pandas as pd
@@ -137,8 +137,8 @@ def test_knn_sparse_right_escalates(sphere_dfs, knn_arms):
     exp = np.argsort(D, axis=1, kind="stable")[:, :3]
     for arm, got in knn_arms(lambda: s2_knn_join(lp, rp2, 3, n_right=8).toPandas()):
         assert len(got) == 300 * 3, arm
-        if arm == "rounds":  # the 8-row directory explodes, not the 300 queries
-            assert knn_arms.rounds[0] == (True, False)
+        if arm == "tiles":  # the 8-point directory spread over several tiles
+            assert knn_arms.rounds[0] > 1, knn_arms.rounds
         for lid in range(300):
             g = got[got["lid"] == lid].sort_values("rank")["rid"].to_numpy()
             assert (g == exp[lid]).all(), (arm, lid)
@@ -161,8 +161,8 @@ def test_dwithin_expand_right_matches(sphere_dfs):
 
 
 def test_knn_expand_right_matches_bruteforce(sphere_dfs, knn_arms):
-    """String rids (Arrow-taken by the kernel arm, window-ordered by the
-    rounds arm) on both arms: exact vs numpy brute force with
+    """String rids (Arrow-taken by the kernel arm and by each tile of the
+    tile arm) on both arms: exact vs numpy brute force with
     (distance, rid) tie order, including certify/escalate rounds."""
     L, R, lp, rp = sphere_dfs
     rps = rp.withColumn("rid", F.format_string("r%04d", "rid"))  # string order = numeric
@@ -178,7 +178,7 @@ def test_knn_expand_right_matches_bruteforce(sphere_dfs, knn_arms):
 
 
 def test_knn_max_rounds_exhausted_fallback(sphere_dfs, knn_arms):
-    """max_rounds=1 with a tiny chord0 certifies nothing in the rounds
+    """max_rounds=1 with a tiny chord0 certifies nothing in the tile
     arm's loop, so every row takes the final full-sphere pass — which
     must stay exact; the kernel arm escalates in-kernel instead."""
     L, R, lp, rp = sphere_dfs
@@ -311,7 +311,7 @@ def test_knn_join_sphere_metric_antimeridian(spark, knn_arms):
 
 def test_knn_join_sphere_broadcast_parity(spark, knn_arms):
     """knn_join(metric='sphere') returns the same neighbors, distances
-    and columns on the kernel arm and on the rounds arm, and the
+    and columns on the kernel arm and on the tile arm, and the
     neighbors match numpy brute force."""
     import pandas as pd
 
@@ -400,3 +400,37 @@ def test_point_prep_drops_null_nan_inf_rows(spark, knn_arms):
         near = s2_dwithin_join(left, right, 2.0).toPandas()
         assert sorted(set(near["lid"])) == [0, 1]
         assert len(near) == 2 * len(R)
+
+
+def test_knn_clustered_directory_string_ids(spark, knn_arms):
+    """A clustered directory against brute force: three tight clusters
+    near one direction, every position stored twice (exact chord² ties,
+    broken by string rid order, "r10" < "r9"), queries around them, and
+    one query at the antipode, whose neighbours are only found by the
+    last, whole-sphere round."""
+    rng = np.random.default_rng(8)
+    c = np.array([0.3, -0.5, 0.8])
+    centres = c + rng.normal(0, 0.1, (3, 3))
+    R = np.repeat(np.concatenate([m + rng.normal(0, 0.01, (10, 3)) for m in centres]), 2, axis=0)
+    L = np.concatenate([c + rng.normal(0, 0.15, (30, 3)), -c[None, :]])
+    rid = np.array([f"r{i}" for i in range(len(R))])
+    lid = np.array([f"q{i}" for i in range(len(L))])
+    ldf = spark.createDataFrame(pd.DataFrame({"lid": lid, "x": L[:, 0], "y": L[:, 1], "z": L[:, 2]}))
+    rdf = spark.createDataFrame(pd.DataFrame({"rid": rid, "x": R[:, 0], "y": R[:, 1], "z": R[:, 2]}))
+    lp = s2_point_prep(ldf, "lid", xyz=("x", "y", "z"))
+    rp = s2_point_prep(rdf, "rid", xyz=("x", "y", "z"))
+
+    Lu, Ru = _engine_unit(L), _engine_unit(R)
+    d = [Lu[:, None, i] - Ru[None, :, i] for i in range(3)]
+    d2 = d[0] * d[0] + d[1] * d[1] + d[2] * d[2]
+    k = 5  # cuts through the tie pairs
+    for arm, got in knn_arms(lambda: s2_knn_join(lp, rp, k, n_right=len(R)).toPandas()):
+        assert len(got) == len(L) * k, arm
+        for i, q in enumerate(lid):
+            order = np.lexsort((rid, d2[i]))[:k]
+            g = got[got["lid"] == q].sort_values("rank")
+            assert g["rid"].tolist() == rid[order].tolist(), (arm, q)
+            assert (g["chord2"].to_numpy() == d2[i, order]).all(), (arm, q)
+        if arm == "tiles":
+            # several tiles first; the antipode escalates to one tile
+            assert knn_arms.rounds[0] > 1 and knn_arms.rounds[-1] is None, knn_arms.rounds

@@ -92,6 +92,53 @@ def test_s2_knn_kernel_arm_is_one_map_stage(spark):
         assert "Window" not in plan, name
 
 
+def test_knn_tile_arm_is_one_cogroup_per_round(spark, monkeypatch):
+    """A planar ``on=`` kNN and a sphere kNN forced past the directory
+    budget run the tile arm: each round is ONE ``FlatMapCoGroupsInArrow``
+    (one hash exchange per side), with no ``Window`` ranking candidates
+    and no ``BroadcastExchange`` — nothing about the plan depends on
+    which side is larger."""
+    import numpy as np
+
+    from geotables_jl_spark.core.geotable import georef
+    from geotables_jl_spark.operators import knn
+    from geotables_jl_spark.operators.geojoin import knn_pairs
+    from geotables_jl_spark.operators.geojoin_s2 import s2_knn_join, s2_point_prep
+
+    rounds, real = [], knn._tile_pass
+    monkeypatch.setattr(knn, "_tile_pass", lambda *a: rounds.append(real(*a)) or rounds[-1])
+    rng = np.random.default_rng(3)
+
+    def pts(n, tag):
+        v = rng.normal(size=(n, 3))
+        rows = [(i, int(i % 2), *map(float, p)) for i, p in enumerate(v)]
+        return spark.createDataFrame(rows, f"{tag} long, key long, x double, y double, z double")
+
+    q, d = pts(60, "row_id"), pts(40, "row_id")
+    planar = [georef(df.drop("z"), coords=["x", "y"]).df for df in (q, d)]
+    runs = {
+        "planar on=": lambda: knn_pairs(*planar, 3, on=["key"]),
+        "sphere": lambda: s2_knn_join(
+            s2_point_prep(q.withColumnRenamed("row_id", "lid"), "lid", xyz=("x", "y", "z")),
+            s2_point_prep(d.withColumnRenamed("row_id", "rid"), "rid", xyz=("x", "y", "z")),
+            3, n_right=40, chord0=0.05,
+        ),
+    }
+    monkeypatch.setattr(knn, "KNN_BROADCAST_ROWS", 0)
+    for name, run in runs.items():
+        rounds.clear()
+        out = run()
+        assert out.count() == 60 * 3, name
+        assert len(rounds) > 1, name
+        assert "Window" not in _plan(out), name
+        for df in rounds:
+            # executed: the final adaptive plan, without the initial one
+            plan = _plan(df).split("== Initial Plan ==")[0]
+            assert plan.count("FlatMapCoGroupsInArrow") == 1, (name, plan[:3000])
+            assert len(re.findall(r"Exchange hashpartitioning", plan)) == 2, (name, plan[:3000])
+            assert "Window" not in plan and "BroadcastExchange" not in plan, (name, plan[:3000])
+
+
 def test_driver_registry_contract():
     """Registry invariants the gate depends on (no Spark needed):
     every gated query has an oracle, bench twins stay out of the gate,

@@ -1,5 +1,5 @@
 """Exactness tests for the kNN kernel's Sphere spec (geom/knn_kernel.py):
-against a numpy brute-force oracle, against the DataFrame rounds arm,
+against a numpy brute-force oracle, against the cogrouped tile arm,
 and on adversarial shapes — identical positions (chord2==0 ties),
 lattice ties at the k-th boundary, empty-region points that must
 escalate or brute-force, and tiny directories (n2 < k)."""
@@ -92,7 +92,7 @@ def test_kernel_small_directory():
 
 
 def test_kernel_arm_matches_rounds_arm(spark, monkeypatch):
-    """End-to-end: s2_knn_join kernel arm vs DataFrame rounds arm (forced
+    """End-to-end: s2_knn_join kernel arm vs cogrouped tile arm (forced
     by a zero directory threshold) on the driver fixture shapes —
     identical (lid, rid, chord2, rank) sets."""
     n_l, n_r = 80, 400

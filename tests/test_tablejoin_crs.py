@@ -128,8 +128,8 @@ def test_geojoin_knn_on_keys_string_ids(spark, knn_arms):
     # small integer lattice: distance ties at the k-th boundary everywhere
     right = [(f"r{i}", keys[i % 3], float(i * 7 % 5), float(i * 3 % 4)) for i in range(30)]
     right += [("rnan", "a", nan, 0.0), ("rinf", "b", 1.0, -inf), ("rnull", None, None, 0.0)]
-    # more query rows than directory rows: round 1 explodes the directory,
-    # the escalated rounds (qlone's, below) the few remaining query rows
+    # more query rows than directory rows, over several tiles; qlone
+    # (below) escalates to the last round
     left = [(f"q{i}", keys[i % 3], float(i % 5), float(i * 5 % 4)) for i in range(36)]
     left += [("qnan", "a", nan, 1.0), ("qinf", "b", inf, 1.0), ("qnull", None, 2.0, None)]
     left.append(("qlone", "zz", 0.0, 0.0))  # a key no right row has
@@ -152,9 +152,9 @@ def test_geojoin_knn_on_keys_string_ids(spark, knn_arms):
 
     for arm, got in knn_arms(run, kernel=False):
         assert got == exp, arm
-        assert {e for e, _ in knn_arms.rounds} == {True, False}, arm
-        # the 30-row directory is broadcast at the real threshold only
-        assert {b for _, b in knn_arms.rounds} == {arm == "kernel"}, arm
+        # the first round keys the query rows to more than one tile, and
+        # qlone's key has no directory rows, so it reaches a later round
+        assert knn_arms.rounds[0] > 1 and len(knn_arms.rounds) > 1, (arm, knn_arms.rounds)
 
 
 def _jobs(spark, fn):
@@ -195,7 +195,7 @@ def test_knn_empty_side_runs_no_job(spark):
 
 def test_knn_pairs_passes_left_count_to_rounds(spark, monkeypatch):
     """The left count of stats computed from the finite rows reaches the
-    rounds arm, so it runs no count of its own; an injected count, which
+    tile arm, so it runs no count of its own; an injected count, which
     may include non-finite rows, does not."""
     from geotables_jl_spark.operators import knn
     from geotables_jl_spark.operators.geojoin import knn_pairs
@@ -204,13 +204,105 @@ def test_knn_pairs_passes_left_count_to_rounds(spark, monkeypatch):
     l = _points(spark, [(0, 1, 0.0, 0.0), (1, 1, 1.0, 1.0), (2, 1, float("nan"), 0.0)], schema).df
     r = _points(spark, [(5, 1, 0.0, 1.0), (6, 1, 2.0, 0.0)], schema).df
     seen = []
-    real = knn._rounds_arm
+    real = knn._tile_arm
 
     def spy(*a):
         seen.append(a[-2])  # n_left
         return real(*a)
 
-    monkeypatch.setattr(knn, "_rounds_arm", spy)
+    monkeypatch.setattr(knn, "_tile_arm", spy)
     knn_pairs(l, r, 1, on=["key"]).collect()
     knn_pairs(l, r, 1, on=["key"], stats1={"n": 3, "xmin": 0.0, "ymin": 0.0, "xmax": 1.0, "ymax": 1.0}).collect()
     assert seen == [2, None]
+
+
+@pytest.mark.parametrize("k", [0, -1])
+def test_knn_rejects_k_below_one_before_any_job(spark, k):
+    """``k < 1`` raises ValueError at every kNN entry — ``knn_join`` on
+    both metrics and ``geojoin(pred="knn")`` — without a Spark job."""
+    planar = _points(spark, [(0, 0.0, 0.0)], "row_id long, x double, y double")
+    latlon = spark.createDataFrame([(0, 1.0, 2.0)], "row_id long, lat double, lon double")
+    sphere = georef(latlon, coords=["lat", "lon"])
+    runs = {
+        "planar": lambda: knn_join(planar, planar, k),
+        "sphere": lambda: knn_join(sphere, sphere, k, metric="sphere"),
+        "geojoin": lambda: geojoin(planar, planar, pred="knn", k=k),
+    }
+    for name, run in runs.items():
+
+        def raises():
+            with pytest.raises(ValueError, match="k must be at least 1"):
+                run()
+
+        _, jobs = _jobs(spark, raises)
+        assert jobs == 0, name
+
+
+def test_knn_on_keys_group_like_null_safe_equality(spark, knn_arms):
+    """``on=`` keys of different types, and -0.0 against 0.0, match as
+    the null-safe equality does: an int key meets a long key, and a
+    negative zero meets a zero. With partition coalescing off, the tile
+    arm's cogroup spreads its groups over every shuffle partition, where
+    a key hashed by its own type would miss its partner."""
+    cases = (
+        ("int", "long", list(range(12)), list(range(12))),
+        ("float", "double", [0.5, 1.5, -0.0, 0.0], [0.5, 1.5, 0.0, -0.0]),
+    )
+    conf = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(conf, "false")
+    try:
+        for lt, rt, lv, rv in cases:
+            left = _points(spark, [(i, v, float(i), 0.0) for i, v in enumerate(lv)],
+                           f"row_id long, key {lt}, x double, y double")
+            right = _points(spark, [(100 + i, v, float(i), 1.0) for i, v in enumerate(rv)],
+                            f"row_id long, key {rt}, x double, y double")
+            exp = {}
+            for i, v in enumerate(lv):
+                # the nearest right row with an equal key (0.0 == -0.0)
+                exp[i] = min((abs(i - j), 100 + j) for j, w in enumerate(rv) if w == v)[1]
+
+            def run():
+                return {r[0]: r[1] for r in knn_join(left, right, 1, on=["key"]).select("row_id", "neighbor_id").collect()}
+
+            for arm, got in knn_arms(run, kernel=False):
+                assert got == exp, (arm, lt, rt)
+    finally:
+        spark.conf.set(conf, "true")
+
+
+def test_knn_clustered_directory_string_ids(spark, knn_arms):
+    """A clustered directory against brute force: three tight clusters
+    of duplicated positions (exact distance ties, broken by string rid
+    order, "r10" < "r9"), queries in and between them, and one far
+    outlier whose neighbours are only found by the last, one-tile round
+    (after ``max_rounds=2`` escalations, far short of its distance)."""
+    import random
+
+    from geotables_jl_spark.operators.geojoin import knn_pairs
+
+    rng = random.Random(5)
+    right = []
+    for cx, cy in ((0.0, 0.0), (40.0, 0.0), (0.0, 40.0)):
+        for _ in range(12):
+            # positions on a quarter-unit lattice, each stored twice
+            x, y = cx + rng.randint(-8, 8) / 4, cy + rng.randint(-8, 8) / 4
+            right += [(x, y), (x, y)]
+    right = [(f"r{i}", x, y) for i, (x, y) in enumerate(right)]
+    left = [(f"q{i}", rng.uniform(-5, 45), rng.uniform(-5, 45)) for i in range(40)]
+    left.append(("far", 1000.0, 1000.0))
+    gl = _points(spark, left, "row_id string, x double, y double")
+    gr = _points(spark, right, "row_id string, x double, y double")
+    k = 5  # cuts through the tie pairs
+    exp = set()
+    for lid, lx, ly in left:
+        cand = sorted((math.sqrt((lx - rx) * (lx - rx) + (ly - ry) * (ly - ry)), rid) for rid, rx, ry in right)
+        exp |= {(lid, rid, d, rank) for rank, (d, rid) in enumerate(cand[:k], 1)}
+
+    def run():
+        return {tuple(r) for r in knn_pairs(gl.df, gr.df, k, max_rounds=2).collect()}
+
+    for arm, got in knn_arms(run):
+        assert got == exp, arm
+        if arm == "tiles":
+            # several tiles first; the outlier escalates to one tile
+            assert knn_arms.rounds[0] > 1 and knn_arms.rounds[-1] is None, knn_arms.rounds
