@@ -1,6 +1,6 @@
 """Benchmark harness: runs every driver query at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line with per-query wall seconds.
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the
+host's usable CPUs) and prints ONE JSON line with per-query wall seconds.
 
 Each query is materialized through Spark's noop sink (full execution, no
 collect/driver funnel). A small warm-up query absorbs JVM/codegen
@@ -40,12 +40,12 @@ _HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, _HERE)
 
 import __spark_entry__ as E
-from geotables_jl_spark.session import get_spark
+from geotables_jl_spark.session import default_cpus, get_spark
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     # best-of-2 default: this host's available CPU drifts by minutes
     # (noisy neighbors); a single sample can misattribute a slow host
     # window to a query by 10x

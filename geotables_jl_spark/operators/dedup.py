@@ -5,21 +5,26 @@ Five families, each with a distinct scale profile:
 - ``dedup_exact``: hash-groupBy on content (or its rolling-hash
   fingerprint) — one shuffle, map-side combinable.
 - ``ngram_jaccard_pairs``: exact near-dup pairs via an inverted shingle
-  index (explode → equi-join on shingle → pair counts → Jaccard). The
-  classic posting-list self-join; frequent-shingle pruning bounds the
-  quadratic blowup at scale.
+  index (explode → one groupBy(shingle) posting aggregate → each
+  posting's pairs counted → Jaccard). Frequent-shingle pruning, a size
+  filter on that aggregate, bounds the quadratic blowup at scale.
 - ``minhash_lsh_pairs``: MinHash signatures (crc32-based Arrow kernel,
   seeded permutation family — deterministic across runs/parallelism)
   → banded LSH buckets →
   candidate pairs → exact Jaccard verification. The 100 TB path: cost is
-  O(docs × perms) + bucket joins, never all-pairs.
+  O(docs × perms) + bucket groups, never all-pairs.
 - ``simhash_pairs``: 64-bit SimHash per doc (JVM bit math over shingle
-  hashes), chunk-banded candidates (pigeonhole on 4×16-bit chunks),
-  verified by ``bit_count(xor) <= k`` — all JVM, zero Python.
+  hashes), chunk-banded candidates (pigeonhole on 4×16-bit chunks,
+  one (chunk, key) bucket group each), verified by
+  ``bit_count(xor) <= k`` — all JVM after the shingling.
 - ``embedding_neardup_pairs``: cosine ≥ t pairs over an embedding
   column; brute-force block join at small n, sign-LSH bucketed at scale.
 
-All pair outputs are canonicalized ``id_a < id_b`` and deduplicated.
+Every bucketed family builds its candidates the same way: one
+``groupBy(key)`` collects each bucket's members and
+``_explode_bucket_pairs`` emits the bucket's ``id_a < id_b`` pairs —
+never a self-join on the key, so the kernel that computes the key
+runs once. All pair outputs are canonicalized ``id_a < id_b``.
 """
 
 from __future__ import annotations
@@ -98,12 +103,6 @@ def dedup_exact(df: DataFrame, id_col: str, text_col: str, key: str = "text") ->
 # ---------------------------------------------------------------------------
 
 
-def _doc_shingles(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    return df.select(
-        F.col(id_col).alias("__id"), F.explode(shingles_fast(F.col(text_col), n)).alias("__sh")
-    )
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -111,18 +110,18 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.8,
     max_posting: int | None = 1000,
-    prefilter: str | None = None,
-    shingled: DataFrame | None = None,
 ) -> DataFrame:
     """Exact Jaccard-similar pairs via inverted shingle index.
 
-    Plan: explode distinct shingles → drop shingles whose posting list
-    exceeds ``max_posting`` (stopword-like shingles explode one join key
-    into |posting|² pairs — a single 100k-doc shingle is 10^10 pairs —
-    while contributing no discrimination) → self-equi-join on shingle →
-    count shared per pair → join per-doc totals → ``jaccard = shared /
-    (|A| + |B| - shared)`` — exact rational math. Output: (id_a, id_b,
-    jaccard) with id_a < id_b.
+    Plan: one shingle scan → ONE ``groupBy(shingle)`` posting aggregate
+    (sorted id list + posting size) → postings over ``max_posting``
+    dropped by a size filter on that aggregate (stopword-like shingles
+    explode one posting into |posting|² pairs — a single 100k-doc
+    shingle is 10^10 pairs — while contributing no discrimination) →
+    every posting's ``id_a < id_b`` pairs counted per pair as
+    ``shared`` → per-doc totals from the same postings → ``jaccard =
+    shared / (|A| + |B| - shared)`` — exact rational math. Output:
+    (id_a, id_b, jaccard) with id_a < id_b.
 
     RECALL CONTRACT of the default ``max_posting=1000``: a pair is found
     iff it shares ≥1 *kept* shingle; two docs similar ONLY through
@@ -131,48 +130,31 @@ def ngram_jaccard_pairs(
     >max_posting docs repeat the pair's whole shingle set (i.e. the pair
     is part of a mass-duplicate cluster that exact dedup already
     catches). Pass ``max_posting=None`` for literal exactness on small
-    corpora.
-
-    ``prefilter="minhash"``: generate candidates with banded MinHash-LSH
-    first and exact-verify only those — the 100 TB shape (LSH bounds
-    candidates by construction; this function then never builds the full
-    inverted-index self-join).
-
-    ``shingled``: optional pre-computed (typically persisted)
-    :func:`_shingle_sets` frame — without it the corpus is re-shingled
-    once per consumer of the inverted index (the hot-posting scan, both
-    join sides, the per-doc counts); a persisted injection makes that
-    one text scan plus cache reads, the same contract as
-    :func:`minhash_lsh_pairs`.
+    corpora. A dropped posting is still collected once before the size
+    filter sees it: 8 bytes per member in one aggregation buffer.
     """
-    if prefilter == "minhash":
-        # LSH candidates, exact jaccard verified inside minhash_lsh_pairs
-        return minhash_lsh_pairs(
-            df, id_col, text_col, threshold=threshold, shingle_n=n, verify=True,
-            shingled=shingled,
-        ).select("id_a", "id_b", "jaccard")
-    if prefilter is not None:
-        raise ValueError("prefilter must be None or 'minhash'")
-    if shingled is not None:
-        sh = shingled.select("__id", F.explode("__shset").alias("__sh"))
-    else:
-        sh = _doc_shingles(df, id_col, text_col, n)
+    sh = df.select(
+        F.col(id_col).alias("__id"), F.explode(shingles_fast(F.col(text_col), n)).alias("__sh")
+    )
+    # the size counts NULL ids too (collect_list skips them), as the
+    # posting cap always has
+    post = sh.groupBy("__sh").agg(
+        F.count(F.lit(1)).alias("__size"), F.array_sort(F.collect_list("__id")).alias("__ids")
+    )
     if max_posting is not None:
-        hot = sh.groupBy("__sh").count().filter(F.col("count") > max_posting).select("__sh")
-        sh = sh.join(F.broadcast(hot), on="__sh", how="left_anti")
-    counts = sh.groupBy("__id").agg(F.count(F.lit(1)).alias("__n"))
-
-    a = sh.select(F.col("__id").alias("id_a"), "__sh")
-    b = sh.select(F.col("__id").alias("id_b"), "__sh")
+        post = post.filter(F.col("__size") <= max_posting)
+    counts = post.select(F.explode("__ids").alias("__id")).groupBy("__id").agg(
+        F.count(F.lit(1)).alias("__n")
+    )
     shared = (
-        a.join(b, on="__sh")
+        _explode_bucket_pairs(post)
         .filter(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("__shared"))
     )
     na = counts.select(F.col("__id").alias("id_a"), F.col("__n").alias("__na"))
     nb = counts.select(F.col("__id").alias("id_b"), F.col("__n").alias("__nb"))
-    out = (
+    return (
         shared.join(na, on="id_a")
         .join(nb, on="id_b")
         .withColumn(
@@ -183,7 +165,6 @@ def ngram_jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -293,8 +274,13 @@ def minhash_signatures_arrow(
     return shingled.mapInPandas(_kernel, schema=schema)
 
 
-def _explode_bucket_pairs(members: DataFrame) -> DataFrame:
-    """(bucket, __ids sorted array) → all (id_a, id_b) i<j pairs.
+def _explode_bucket_pairs(members: DataFrame, payload: tuple[str, ...] = ()) -> DataFrame:
+    """(__ids sorted array) → every (id_a, id_b) i<j pair of a bucket.
+
+    Without ``payload`` the members are ids. With it they are
+    ``(__id, *payload)`` structs sorted by id, and each payload field
+    ``p`` comes out as ``p_a`` and ``p_b`` beside the ids. Equal ids
+    pair too; callers that need ``id_a < id_b`` filter on it.
 
     LINEAR row buffers: posexplode the member index first, then slice
     each member's tail — every intermediate row holds O(B) elements
@@ -303,19 +289,34 @@ def _explode_bucket_pairs(members: DataFrame) -> DataFrame:
     B²/2 pair-struct array inside ONE row of the aggregation output —
     at the ``max_bucket=4096`` cap that is ~8.4M two-long structs
     (hundreds of MB) in a single buffer. Same pairs, same count."""
-    return (
-        members.select(F.col("__ids"), F.posexplode("__ids").alias("__i", "id_a"))
-        .select(
-            "id_a",
-            F.explode(
-                F.slice(
-                    F.col("__ids"),
-                    F.col("__i") + 2,
-                    F.size("__ids") - F.col("__i") - 1,
-                )
-            ).alias("id_b"),
-        )
+    pairs = members.select(F.col("__ids"), F.posexplode("__ids").alias("__i", "__a")).select(
+        "__a",
+        F.explode(
+            F.slice(F.col("__ids"), F.col("__i") + 2, F.size("__ids") - F.col("__i") - 1)
+        ).alias("__b"),
     )
+    if not payload:
+        return pairs.select(F.col("__a").alias("id_a"), F.col("__b").alias("id_b"))
+    return pairs.select(
+        F.col("__a.__id").alias("id_a"),
+        F.col("__b.__id").alias("id_b"),
+        *[F.col(f"__{s}.{p}").alias(f"{p}_{s}") for p in payload for s in "ab"],
+    )
+
+
+def _bucket_pairs(keyed: DataFrame, key: list[str], payload: tuple[str, ...]) -> DataFrame:
+    """Every ``id_a < id_b`` pair of ``keyed`` rows that share ``key``,
+    with the payload of both: ONE ``groupBy(key)`` collects each
+    bucket's ``(__id, *payload)`` members, so whatever computed the key
+    runs once, not under both sides of a self-join. ``collect_list``
+    plus the strict ``<`` keep the self-join's multiplicities for
+    repeated members, and a NULL id pairs with no one."""
+    members = (
+        keyed.filter(F.col("__id").isNotNull())
+        .groupBy(*key)
+        .agg(F.array_sort(F.collect_list(F.struct("__id", *payload))).alias("__ids"))
+    )
+    return _explode_bucket_pairs(members, payload).filter(F.col("id_a") < F.col("id_b"))
 
 
 def minhash_lsh_pairs(
@@ -531,7 +532,8 @@ def simhash_pairs(
 
     Banding by pigeonhole: split the hash into ``max_hamming + 1``
     chunks; any pair within the distance budget agrees exactly on at
-    least one chunk → equi-join per chunk, verify with bit_count(xor).
+    least one chunk → one (chunk, key) bucket group carrying each
+    member's hash, verify with bit_count(xor).
     Output: (id_a, id_b, hamming).
     """
     nchunks = max_hamming + 1
@@ -548,19 +550,12 @@ def simhash_pairs(
             for c in range(nchunks)
         ]
     )
-    chunks = sig.select(
-        "__id", "__sim", F.explode(chunk_structs).alias("__c")
-    ).select("__id", "__sim", F.col("__c.chunk").alias("__chunk"), F.col("__c.key").alias("__key"))
-    a = chunks.select(F.col("__id").alias("id_a"), F.col("__sim").alias("__sa"), "__chunk", "__key")
-    b = chunks.select(F.col("__id").alias("id_b"), F.col("__sim").alias("__sb"), "__chunk", "__key")
-    cand = (
-        a.join(b, on=["__chunk", "__key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "__sa", "__sb")
-        .distinct()
+    chunks = sig.select("__id", "__sim", F.explode(chunk_structs).alias("__c")).select(
+        "__id", "__sim", F.col("__c.chunk").alias("__chunk"), F.col("__c.key").alias("__key")
     )
+    cand = _bucket_pairs(chunks, ["__chunk", "__key"], ("__sim",)).distinct()
     return (
-        cand.withColumn("hamming", F.bit_count(F.col("__sa").bitwiseXOR(F.col("__sb"))))
+        cand.withColumn("hamming", F.bit_count(F.col("__sim_a").bitwiseXOR(F.col("__sim_b"))))
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
@@ -602,8 +597,9 @@ def embedding_neardup_pairs(
     ≈0.818³² ≈ 0.2%; raise ``bands`` for more recall, ``planes`` for
     fewer candidates). Band keys come from ONE Arrow-batched numpy matmul
     (sign bits packed per band), never per-plane interpreted lambdas;
-    candidates equi-join on (band, key) and are exact-cosine verified,
-    so false positives never survive.
+    candidates come from (band, key) bucket groups carrying each
+    member's vector and norm, and are exact-cosine verified, so false
+    positives never survive.
 
     ``use_lsh=None`` (default) AUTO-SELECTS by corpus size, mirroring
     the kNN engine's ``KNN_BROADCAST_ROWS`` gate (``operators/knn.py``): at or
@@ -624,6 +620,28 @@ def embedding_neardup_pairs(
     if not use_lsh:
         return _blocked_cosine_pairs(base, threshold)
 
+    keyed = base.select(
+        "__id", "__v", "__n",
+        F.posexplode(_sign_band_keys(F.col("__v"), bands, planes, seed)).alias("__band", "__key"),
+    )
+    cand = (
+        _bucket_pairs(keyed, ["__band", "__key"], ("__v", "__n"))
+        # a pair co-bucketing in several bands is still ONE candidate
+        .dropDuplicates(["id_a", "id_b"])
+    )
+    return (
+        cand.withColumn(
+            "cosine", dot(F.col("__v_a"), F.col("__v_b")) / (F.col("__n_a") * F.col("__n_b"))
+        )
+        .filter(F.col("cosine") >= threshold)
+        .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
+    )
+
+
+def _sign_band_keys(v: Column, bands: int, planes: int, seed: int) -> Column:
+    """``bands`` sign-LSH keys per vector (``array<long>``): each key
+    packs the sign bits of ``planes`` seeded hyperplanes, all from ONE
+    Arrow-batched numpy matmul per batch."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
@@ -647,30 +665,7 @@ def embedding_neardup_pairs(
         keys = signs.reshape(len(V), bands_n, planes_n).astype(np.int64) @ weights
         return pd.Series(list(keys))
 
-    keyed = base.select(
-        "__id", "__v", "__n", F.posexplode(_band_keys(F.col("__v"))).alias("__band", "__key")
-    )
-    a = keyed.select(
-        F.col("__id").alias("id_a"), F.col("__v").alias("__va"),
-        F.col("__n").alias("__nna"), "__band", "__key",
-    )
-    b = keyed.select(
-        F.col("__id").alias("id_b"), F.col("__v").alias("__vb"),
-        F.col("__n").alias("__nnb"), "__band", "__key",
-    )
-    cand = (
-        a.join(b, on=["__band", "__key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        # a pair co-bucketing in several bands is still ONE candidate
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    return (
-        cand.withColumn(
-            "cosine", dot(F.col("__va"), F.col("__vb")) / (F.col("__nna") * F.col("__nnb"))
-        )
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
-    )
+    return _band_keys(v)
 
 
 def _blocked_cosine_pairs(base: DataFrame, threshold: float, n_blocks: int = 8) -> DataFrame:

@@ -49,6 +49,11 @@ def _driver_memory() -> str:
     return f"{min(half_mb, 48 << 10)}m"
 
 
+def default_cpus() -> int:
+    """``SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "geotables_jl_spark",
     cpus: int | None = None,
@@ -56,7 +61,7 @@ def get_spark(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = default_cpus()
     # executor Python workers must be able to import this package (the
     # Arrow refinement kernels unpickle references to it). On a real
     # cluster that is `spark-submit --py-files geotables_jl_spark.zip`;

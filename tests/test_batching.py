@@ -1,8 +1,8 @@
 """Arrow kernels do not depend on Arrow batching: the text-core,
-repetition, S2-cell, WKB round-trip, vendored-CRS vertex and Bloom
-probe kernels, and the kNN kernel arm on both metrics, give identical
-rows with ``arrow.maxRecordsPerBatch`` at 1, 7 and the session
-default."""
+repetition, shingle, MinHash signature, embedding band-key, S2-cell,
+WKB round-trip, vendored-CRS vertex and Bloom probe kernels, and the
+kNN kernel arm on both metrics, give identical rows with
+``arrow.maxRecordsPerBatch`` at 1, 7 and the session default."""
 
 from __future__ import annotations
 
@@ -14,6 +14,7 @@ from geotables_jl_spark.functions import textstats as TS
 from geotables_jl_spark.functions.crs import transform_geometry_vertexwise
 from geotables_jl_spark.geom import s2
 from geotables_jl_spark.geom.model import st_polygon_lit
+from geotables_jl_spark.operators import dedup as DD
 from geotables_jl_spark.operators.bloom import build_bloom, with_bloom_contains
 from geotables_jl_spark.operators.geojoin import knn_join
 from geotables_jl_spark.sources.geoparquet import geometry_to_wkb, wkb_to_geometry
@@ -51,6 +52,21 @@ def _docs(spark):
 def test_text_kernels_batch_invariant(spark):
     _assert_invariant(spark, lambda: TS.text_core_arrow(_docs(spark)))
     _assert_invariant(spark, lambda: TS.repetition_stats_arrow(_docs(spark)))
+
+
+def test_near_dup_key_kernels_batch_invariant(spark):
+    """The shingles, the MinHash signature map and the embedding band
+    keys: the per-row keys every near-dup bucket groups on."""
+    from pyspark.sql import functions as F
+
+    docs = _docs(spark).union(spark.createDataFrame([(999, None)], "doc_id long, text string"))
+    _assert_invariant(spark, lambda: docs.select("doc_id", TS.shingles_fast(F.col("text"), 3)))
+    _assert_invariant(spark, lambda: DD.minhash_signatures_arrow(docs, "doc_id", "text", 16, 3))
+    rng = np.random.default_rng(2)
+    vecs = spark.createDataFrame(
+        [(i, rng.standard_normal(12).tolist()) for i in range(30)], "vec_id long, v array<double>"
+    ).repartition(3)
+    _assert_invariant(spark, lambda: vecs.select("vec_id", DD._sign_band_keys(F.col("v"), 8, 6, 42)))
 
 
 def test_s2_cell_batch_invariant(spark):

@@ -90,24 +90,22 @@ def test_minhash_lsh_matches_exact_jaccard(spark, docs):
 
 
 def test_ngram_shingled_injection_equivalence(spark, docs):
-    """A persisted _shingle_sets frame injected into ngram_jaccard_pairs
-    (plain and minhash-prefilter arms) yields identical pairs to the
-    self-shingling form — the one-text-scan sharing contract."""
-    base = sorted(tuple(r) for r in DD.ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.3).collect())
+    """A persisted _shingle_sets frame (the n-gram shingle sets) injected
+    into minhash_lsh_pairs yields identical pairs to the self-shingling
+    form — the one-text-scan sharing contract dedup_clusters relies on —
+    and, on this fixture, the exact n-gram Jaccard pairs."""
+    kw = dict(threshold=0.3)
+    base = sorted(tuple(r) for r in DD.minhash_lsh_pairs(docs, "doc_id", "text", **kw).collect())
     sh = DD._shingle_sets(docs, "doc_id", "text", 3).persist()
     try:
-        inj = sorted(tuple(r) for r in DD.ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.3, shingled=sh).collect())
-        pre = sorted(
-            tuple(r)
-            for r in DD.ngram_jaccard_pairs(
-                docs, "doc_id", "text", threshold=0.3, prefilter="minhash", shingled=sh
-            ).collect()
+        inj = sorted(
+            tuple(r) for r in DD.minhash_lsh_pairs(docs, "doc_id", "text", shingled=sh, **kw).collect()
         )
     finally:
         sh.unpersist()
     assert base == inj
-    # LSH prefilter at 32 bands x 2 rows: recall ~1 on the fixture
-    assert base == pre
+    exact = sorted(tuple(r) for r in DD.ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.3).collect())
+    assert base == exact
 
 
 def test_minhash_signatures_arrow_properties(spark, docs):
@@ -168,6 +166,44 @@ def test_simhash_pairs(spark):
     assert pairs[(0, 1)] == 0  # identical text, identical simhash
     assert (0, 2) in pairs and 0 < pairs[(0, 2)] <= 8  # planted near-dup
     assert all({a, b} <= {0, 1, 2} for a, b in pairs)  # doc 3 stays out
+
+
+def test_near_dup_pairs_null_and_duplicate_ids(spark):
+    """NULL ids pair with no one; a repeated id keeps the multiplicity
+    the old key self-join gave it (its shingles count twice, hence a
+    Jaccard of 2.0 against its twin's partner); NULL and empty text
+    share the '' shingle and the simhash of it. Every row here equals
+    the self-join form's output."""
+    rows = [
+        (0, BASE), (1, BASE), (1, BASE), (None, BASE), (2, BASE.replace("lazy", "sleepy")),
+        (3, None), (4, ""), (5, None), (None, ""),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string").repartition(3)
+    want = [(0, 1, 2.0), (0, 2, 10 / 13), (1, 2, 40 / 29), (3, 4, 1.0), (3, 5, 1.0), (4, 5, 1.0)]
+    for cap, expect in ((1000, want), (None, want), (2, [])):
+        got = DD.ngram_jaccard_pairs(df, "doc_id", "text", threshold=0.5, max_posting=cap)
+        assert sorted(tuple(r) for r in got.collect()) == expect, cap
+
+    long = " ".join([BASE] * 6)
+    srows = [
+        (0, long), (1, long), (None, long), (2, long.replace("lazy", "sleepy")),
+        (2, long.replace("fox", "cat")), (3, None), (4, ""), (5, None),
+        (6, "totally different words entirely about spark and parquet"),
+    ]
+    sdf = spark.createDataFrame(srows, "doc_id long, text string").repartition(3)
+    got = DD.simhash_pairs(sdf, "doc_id", "text", max_hamming=8)
+    assert sorted(tuple(r) for r in got.collect()) == [
+        (0, 1, 0), (0, 2, 3), (1, 2, 3), (3, 4, 0), (3, 5, 0), (4, 5, 0)
+    ]
+
+    rng = np.random.default_rng(7)
+    base = rng.standard_normal((8, 16))
+    vrows = [(i, [float(x) for x in base[i]]) for i in range(8)]
+    vrows.append((8, [float(x) for x in base[0] + 0.01 * rng.standard_normal(16)]))
+    vrows += [vrows[-1], vrows[3], (None, vrows[0][1])]  # two repeated rows, a NULL id
+    vdf = spark.createDataFrame(vrows, "vec_id long, embedding array<float>").repartition(3)
+    got = DD.embedding_neardup_pairs(vdf, "vec_id", "embedding", threshold=0.95, use_lsh=True)
+    assert [tuple(r) for r in got.collect()] == [(0, 8, 0.999901)]
 
 
 @pytest.fixture(scope="module")

@@ -246,3 +246,20 @@ def test_text_stats_evaluates_the_core_struct_once(spark):
     the UDF must still appear once in the plan."""
     plan = _plan(E.queries()["text_stats"](spark, SF))
     assert plan.count("text_core_udf(") == 1, plan[:3000]
+
+
+@pytest.mark.parametrize("name", ["ngram_jaccard", "simhash_fast", "embedding_lsh"])
+def test_near_dup_buckets_group_once(spark, name):
+    """Each near-dup family builds its candidate pairs from ONE
+    groupBy on its bucket key: the final adaptive plan evaluates the
+    key UDF (shingles or band keys) once over one input scan, and no
+    join is keyed on the shingle, chunk or band key."""
+    df = {**E.queries(), **E.bench_extra()}[name](spark, SF)
+    df.collect()
+    plan = _plan(df).split("== Initial Plan ==")[0]
+    assert plan.count("ArrowEvalPython") == 1, plan[:3000]
+    assert plan.count("FileScan parquet") == 1, plan[:3000]
+    for line in plan.splitlines():
+        if "Join [" in line:
+            keys = line[line.index("Join [") :].split("]")[0]
+            assert not re.search(r"__(sh|chunk|key|band)#", keys), line

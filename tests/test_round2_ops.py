@@ -1,7 +1,7 @@
 """Round-2 surface: arbitrary geojoin predicate callable
 (``src/geoops/geojoin.jl:51-52``, ``test/operations.jl:51-72``),
-ngram-jaccard hot-shingle posting cap, minhash prefilter composition,
-and hcat domain validation (``src/api/dataframes.jl:140-144``)."""
+ngram-jaccard hot-shingle posting cap, minhash candidates with exact
+verify, and hcat domain validation (``src/api/dataframes.jl:140-144``)."""
 
 from __future__ import annotations
 
@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from geotables_jl_spark.core.geotable import GeoTable, georef
-from geotables_jl_spark.operators.dedup import ngram_jaccard_pairs
+from geotables_jl_spark.operators.dedup import minhash_lsh_pairs, ngram_jaccard_pairs
 from geotables_jl_spark.operators.geojoin import geojoin
 from geotables_jl_spark.operators.setops import hcat
 from tests.fixtures import gtb_points, gtb_polys
@@ -62,17 +62,15 @@ def test_ngram_jaccard_hot_shingle_cap(spark):
     out2 = ngram_jaccard_pairs(df, "doc_id", "text", threshold=0.01, max_posting=None)
     assert out2.count() == 30 * 29 // 2
 
-    with pytest.raises(ValueError):
-        ngram_jaccard_pairs(df, "doc_id", "text", prefilter="bogus")
-
 
 def test_ngram_jaccard_minhash_prefilter(spark):
-    """prefilter='minhash' composes LSH candidates → exact verify; on a
-    corpus with one true near-dup pair it finds exactly that pair."""
+    """MinHash-LSH candidates with exact-Jaccard verify (the 100 TB
+    shape of n-gram Jaccard); on a corpus with one true near-dup pair it
+    finds exactly that pair."""
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 3
     rows = [(0, base), (1, base + " extra"), (2, "totally different words here now " * 5)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = ngram_jaccard_pairs(df, "doc_id", "text", threshold=0.5, prefilter="minhash")
+    out = minhash_lsh_pairs(df, "doc_id", "text", threshold=0.5, verify=True)
     got = [(r["id_a"], r["id_b"]) for r in out.collect()]
     assert got == [(0, 1)]
 

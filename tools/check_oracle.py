@@ -33,7 +33,7 @@ def main() -> int:
     import __spark_entry__ as E
     from geotables_jl_spark.session import get_spark
 
-    spark = get_spark("oracle-check", cpus=8)
+    spark = get_spark("oracle-check")
 
     con = duckdb.connect()
     for t in TABLES:
