@@ -29,8 +29,6 @@ runs once. All pair outputs are canonicalized ``id_a < id_b``.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
