@@ -5,9 +5,10 @@ Five families, each with a distinct scale profile:
 - ``dedup_exact``: hash-groupBy on content (or its rolling-hash
   fingerprint) — one shuffle, map-side combinable.
 - ``ngram_jaccard_pairs``: exact near-dup pairs via an inverted shingle
-  index (explode → one groupBy(shingle) posting aggregate → each
-  posting's pairs counted → Jaccard). Frequent-shingle pruning, a size
-  filter on that aggregate, bounds the quadratic blowup at scale.
+  index (explode → one groupBy(shingle) posting group → each posting's
+  pairs counted → Jaccard). Frequent-shingle pruning, a window count
+  filtered before the group collects anything, bounds the quadratic
+  blowup at scale.
 - ``minhash_lsh_pairs``: MinHash signatures (crc32-based Arrow kernel,
   seeded permutation family — deterministic across runs/parallelism)
   → banded LSH buckets →
@@ -31,6 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from geotables_jl_spark.functions.textstats import fingerprint_fast, shingles_fast
 from geotables_jl_spark.operators.simsearch import dot, norm
@@ -111,15 +113,18 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """Exact Jaccard-similar pairs via inverted shingle index.
 
-    Plan: one shingle scan → ONE ``groupBy(shingle)`` posting aggregate
-    (sorted id list + posting size) → postings over ``max_posting``
-    dropped by a size filter on that aggregate (stopword-like shingles
-    explode one posting into |posting|² pairs — a single 100k-doc
-    shingle is 10^10 pairs — while contributing no discrimination) →
-    every posting's ``id_a < id_b`` pairs counted per pair as
-    ``shared`` → per-doc totals from the same postings → ``jaccard =
-    shared / (|A| + |B| - shared)`` — exact rational math. Output:
-    (id_a, id_b, jaccard) with id_a < id_b.
+    Plan: one shingle scan → one hash exchange on the shingle → each
+    posting's size as a window count over it → postings over
+    ``max_posting`` dropped by a size filter BEFORE any member list is
+    collected (stopword-like shingles explode one posting into
+    |posting|² pairs — a single 100k-doc shingle is 10^10 pairs — while
+    contributing no discrimination; the count is map-side cheap, a
+    collected id list of 10^8 members would not fit one row) → ONE
+    ``groupBy(shingle)`` posting group over the kept rows, whose
+    ``id_a < id_b`` pairs are counted per pair as ``shared`` → per-doc
+    totals from the same kept rows → ``jaccard = shared / (|A| + |B| -
+    shared)`` — exact rational math. Output: (id_a, id_b, jaccard) with
+    id_a < id_b.
 
     RECALL CONTRACT of the default ``max_posting=1000``: a pair is found
     iff it shares ≥1 *kept* shingle; two docs similar ONLY through
@@ -128,27 +133,23 @@ def ngram_jaccard_pairs(
     >max_posting docs repeat the pair's whole shingle set (i.e. the pair
     is part of a mass-duplicate cluster that exact dedup already
     catches). Pass ``max_posting=None`` for literal exactness on small
-    corpora. A dropped posting is still collected once before the size
-    filter sees it: 8 bytes per member in one aggregation buffer.
+    corpora.
     """
     sh = df.select(
         F.col(id_col).alias("__id"), F.explode(shingles_fast(F.col(text_col), n)).alias("__sh")
     )
-    # the size counts NULL ids too (collect_list skips them), as the
-    # posting cap always has
-    post = sh.groupBy("__sh").agg(
-        F.count(F.lit(1)).alias("__size"), F.array_sort(F.collect_list("__id")).alias("__ids")
-    )
+    # ONE hash exchange on the shingle feeds the posting groups and the
+    # per-doc counts. A posting's size is a window count on it (NULL ids
+    # included), so an over-cap posting is counted but never collected.
     if max_posting is not None:
-        post = post.filter(F.col("__size") <= max_posting)
-    counts = post.select(F.explode("__ids").alias("__id")).groupBy("__id").agg(
-        F.count(F.lit(1)).alias("__n")
-    )
-    shared = (
-        _explode_bucket_pairs(post)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("__shared"))
+        kept = sh.withColumn("__size", F.count(F.lit(1)).over(Window.partitionBy("__sh"))).filter(
+            F.col("__size") <= max_posting
+        )
+    else:
+        kept = sh.repartition("__sh")
+    counts = kept.groupBy("__id").agg(F.count(F.lit(1)).alias("__n"))
+    shared = _bucket_pairs(kept, ["__sh"], ()).groupBy("id_a", "id_b").agg(
+        F.count(F.lit(1)).alias("__shared")
     )
     na = counts.select(F.col("__id").alias("id_a"), F.col("__n").alias("__na"))
     nb = counts.select(F.col("__id").alias("id_b"), F.col("__n").alias("__nb"))
@@ -309,10 +310,11 @@ def _bucket_pairs(keyed: DataFrame, key: list[str], payload: tuple[str, ...]) ->
     runs once, not under both sides of a self-join. ``collect_list``
     plus the strict ``<`` keep the self-join's multiplicities for
     repeated members, and a NULL id pairs with no one."""
+    member = F.struct("__id", *payload) if payload else F.col("__id")
     members = (
         keyed.filter(F.col("__id").isNotNull())
         .groupBy(*key)
-        .agg(F.array_sort(F.collect_list(F.struct("__id", *payload))).alias("__ids"))
+        .agg(F.array_sort(F.collect_list(member)).alias("__ids"))
     )
     return _explode_bucket_pairs(members, payload).filter(F.col("id_a") < F.col("id_b"))
 
@@ -409,8 +411,6 @@ def minhash_lsh_pairs(
     # key and the expensive signature pipeline upstream is computed
     # exactly ONCE (the join-back form re-ran shingle+64-perm hashing
     # for each side).
-    from pyspark.sql.window import Window
-
     w = Window.partitionBy("__bucket")
 
     if pair_mode == "star":
@@ -1058,8 +1058,6 @@ def dedup_clusters(
     # csize via a PARTITIONED window on the (tiny, corpus-disjoint)
     # label frame: one exchange on comp, vs the groupBy + join-back
     # form's two exchanges + join over the same rows
-    from pyspark.sql.window import Window
-
     w = Window.partitionBy("comp")
     return comp.select(
         F.col("id").alias("doc_id"),

@@ -50,8 +50,13 @@ def _driver_memory() -> str:
 
 
 def default_cpus() -> int:
-    """``SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
-    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    """``SPARK_GRAFT_CPUS``, else the CPUs this process may run on (all
+    CPUs where the OS has no affinity call, as on macOS and Windows)."""
+    if os.environ.get("SPARK_GRAFT_CPUS"):
+        return int(os.environ["SPARK_GRAFT_CPUS"])
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
 
 
 def get_spark(

@@ -282,6 +282,22 @@ def test_driver_memory_default_fits_the_host():
     assert 0 < int(mem[:-1]) <= min(phys_mb // 2, 48 << 10)
 
 
+def test_default_cpus_without_affinity_call(monkeypatch):
+    """Unset ``SPARK_GRAFT_CPUS`` takes the usable CPUs, and all CPUs
+    where the OS has no ``sched_getaffinity`` (macOS, Windows)."""
+    import os
+
+    from geotables_jl_spark.session import default_cpus
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_cpus() == 3
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    if hasattr(os, "sched_getaffinity"):
+        assert default_cpus() == len(os.sched_getaffinity(0))
+        monkeypatch.delattr(os, "sched_getaffinity")
+    assert default_cpus() == os.cpu_count()
+
+
 def test_ann_null_vectors_take_no_part(spark):
     """A NULL corpus or query vector has no neighbours and is no one's:
     both ANN operators return the rows they return without those rows."""

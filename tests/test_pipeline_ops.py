@@ -170,19 +170,24 @@ def test_simhash_pairs(spark):
 
 def test_near_dup_pairs_null_and_duplicate_ids(spark):
     """NULL ids pair with no one; a repeated id keeps the multiplicity
-    the old key self-join gave it (its shingles count twice, hence a
-    Jaccard of 2.0 against its twin's partner); NULL and empty text
-    share the '' shingle and the simhash of it. Every row here equals
-    the self-join form's output."""
+    the old key self-join gave it; NULL and empty text share the ''
+    shingle and the simhash of it. Every row here equals the self-join
+    form's output."""
     rows = [
         (0, BASE), (1, BASE), (1, BASE), (None, BASE), (2, BASE.replace("lazy", "sleepy")),
         (3, None), (4, ""), (5, None), (None, ""),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string").repartition(3)
-    want = [(0, 1, 2.0), (0, 2, 10 / 13), (1, 2, 40 / 29), (3, 4, 1.0), (3, 5, 1.0), (4, 5, 1.0)]
+    want = [(0, 2, 10 / 13), (3, 4, 1.0), (3, 5, 1.0), (4, 5, 1.0)]
+    # KNOWN WRONG, not the contract: the repeated id 1 counts its
+    # shingles twice, so its pairs read a Jaccard above 1. These are the
+    # self-join form's rows too; a fix drops them from this list.
+    known_wrong = [(0, 1, 2.0), (1, 2, 40 / 29)]
     for cap, expect in ((1000, want), (None, want), (2, [])):
         got = DD.ngram_jaccard_pairs(df, "doc_id", "text", threshold=0.5, max_posting=cap)
-        assert sorted(tuple(r) for r in got.collect()) == expect, cap
+        got = sorted(tuple(r) for r in got.collect())
+        assert [r for r in got if r[2] <= 1.0] == expect, cap
+        assert [r for r in got if r[2] > 1.0] == (known_wrong if expect else []), cap
 
     long = " ".join([BASE] * 6)
     srows = [

@@ -263,3 +263,24 @@ def test_near_dup_buckets_group_once(spark, name):
         if "Join [" in line:
             keys = line[line.index("Join [") :].split("]")[0]
             assert not re.search(r"__(sh|chunk|key|band)#", keys), line
+
+
+def test_ngram_caps_postings_before_collecting(spark):
+    """An over-cap posting is counted, never collected: every
+    collect_list aggregate of the n-gram query sits above the filter on
+    the window-counted posting size, so a stopword-like shingle in 10^8
+    docs never becomes one 10^8-element id list."""
+    df = E.queries()["ngram_jaccard"](spark, SF)
+    df.collect()
+    lines = _plan(df).split("== Initial Plan ==")[0].splitlines()
+    depth = [len(line) - len(line.lstrip(" :+-")) for line in lines]
+    aggs = [i for i, line in enumerate(lines) if "collect_list(" in line]
+    assert aggs, "\n".join(lines)
+    for i in aggs:
+        below = []
+        for j in range(i + 1, len(lines)):
+            if depth[j] <= depth[i]:
+                break
+            below.append(lines[j].lstrip(" :+-"))
+        assert any(re.search(r"Filter .*__size#\d+L <= \d+", line) for line in below), lines[i]
+        assert any(line.startswith("Window [count(1)") for line in below), lines[i]
